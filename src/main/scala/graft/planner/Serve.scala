@@ -4,8 +4,19 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Base64
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.sources.Sources.PlanCache
 
@@ -32,8 +43,19 @@ import graft.sources.Sources.PlanCache
   * the server holds no per-user state and any view is bookmarkable.
   * Results are computed once per logical plan via [[PlanCache]]'s
   * plan-hash key — the reference's mmh3-keyed pickle cache
-  * (serve.py:38-44) — and every subsequent page read is a parquet
-  * scan with column pruning, not a recomputation.
+  * (serve.py:38-44). A warm page or CSV request does no Spark work:
+  *
+  *   - the URL's `(q, index)` maps to its plan key and columns in a
+  *     memo, so the action path is not replayed and Catalyst does not
+  *     re-analyze it to recompute the key;
+  *   - a page is decoded on the driver from the 1-2 bounded page-cache
+  *     files its rows overlap (Spark's own parquet reader, schema from
+  *     the footer) — no Spark job, no schema inference;
+  *   - a CSV download copies the cached part files to the socket.
+  *
+  * Sockets run with TCP_NODELAY: the JDK server writes the headers and
+  * the body as separate segments, and with Nagle on every response
+  * body waited for the client's delayed ACK (~40 ms).
   */
 final class Serve(
     registry: TaskRegistry,
@@ -169,14 +191,14 @@ final class Serve(
     *
     *   - `<key>.pages` — the frame under the stable total order (all
     *     columns asc), range-partitioned by the sort and split into
-    *     files of <= [[PageFileRows]] rows. Lexicographic file order
-    *     IS the global row order, so page p lives in the one (or two,
-    *     at a boundary) files its row span overlaps — a deep page
-    *     costs one bounded file read, not a `limit(n)` collect
-    *     (the round-4 audit's last scale-killer, Browse.scala's
-    *     previewTop applied to page "last").
+    *     files of <= [[PageFileRows]] rows. Part-file order
+    *     ([[Serve.partFiles]]) IS the global row order, so page p
+    *     lives in the one (or two, at a boundary) files its row span
+    *     overlaps — a deep page costs one bounded file read, not a
+    *     `limit(n)` collect (the round-4 audit's last scale-killer,
+    *     Browse.scala's previewTop applied to page "last").
     *   - `<key>.csv` — the same ordering as distributed headerless
-    *     CSV part files; a download streams them in name order
+    *     CSV part files; a download streams them in part order
     *     straight from disk (RFC-style quote doubling, nulls as
     *     "null" like the old in-memory renderer), never collecting
     *     the frame to the driver (serve_view_df.py:167 does — that is
@@ -250,18 +272,50 @@ final class Serve(
     }
   }
 
-  /** The served frame's plan key and row count, or None while the
-    * async materialization (raw parquet + page/CSV caches + count)
-    * is still running — submitting it if nobody has. The count comes
-    * from the Done status recorded at materialization time, so a page
-    * render runs no per-request counting job (round-4 audit item (b)).
+  /** A served view: the plan key of frame `index` of a URL's action
+    * path, and the frame's column names.
     */
-  private def servedFrame(s: Browse.Session, index: Int): Option[(String, Long)] = {
-    val df = s.pool(index)
+  private case class Frame(key: String, cols: Array[String])
+
+  /** `(q, index)` -> its [[Frame]], recorded as soon as the plan key is
+    * known. `q` fixes the action path, and registry and sources are
+    * fixed per instance, so an entry never goes stale: a warm page, a
+    * CSV download or a 202-poll skips the path replay and the Catalyst
+    * analysis [[PlanCache.planKey]] runs.
+    */
+  private val knownFrames =
+    new java.util.concurrent.ConcurrentHashMap[(String, Int), Frame]()
+
+  /** The served frame of `(q, index)` and its row count, or None while
+    * the async materialization (raw parquet + page/CSV caches + count)
+    * is still running. A remembered frame whose caches are ready or
+    * still building is answered from the status alone; anything else
+    * takes [[replayFrame]].
+    */
+  private def servedFrame(q: String, index: Int): Option[(Frame, Long)] = {
+    val known = knownFrames.get((q, index))
+    val status = if (known == null) None else PlanCache.poll(known.key)
+    status match {
+      case Some(PlanCache.Done(n)) if cachesReady(known.key) => Some((known, n))
+      case Some(PlanCache.Running) => None
+      case _ => replayFrame(q, index)
+    }
+  }
+
+  /** [[servedFrame]] from scratch: replay the URL's path, key the plan
+    * and remember the key, then submit the materialization if nobody
+    * has. The count comes from the Done status recorded at
+    * materialization time, so a page render runs no per-request
+    * counting job (round-4 audit item (b)).
+    */
+  private def replayFrame(q: String, index: Int): Option[(Frame, Long)] = {
+    val df = session(decode(q)).pool(index)
     val spark = df.sparkSession
     val key = PlanCache.planKey(df)
+    val frame = Frame(key, df.columns)
+    knownFrames.put((q, index), frame)
     PlanCache.poll(key) match {
-      case Some(PlanCache.Done(n)) if cachesReady(key) => Some((key, n))
+      case Some(PlanCache.Done(n)) if cachesReady(key) => Some((frame, n))
       case Some(PlanCache.Done(_)) =>
         rebuildLocal(spark, df, key)
         None
@@ -278,54 +332,82 @@ final class Serve(
     }
   }
 
-  private case class PageFile(path: String, rows: Long, start: Long)
+  private lazy val spark = sources.head.sparkSession
+
+  private case class PageFile(path: String, bytes: Long, rows: Long, start: Long)
+
+  /** A key's page files in global row order, and what decodes them on
+    * the driver: Spark's parquet reader, the stable order's row
+    * ordering and the Row encoder.
+    */
+  private case class Pages(files: Vector[PageFile],
+      read: PartitionedFile => Iterator[InternalRow],
+      order: Ordering[InternalRow], encoder: ExpressionEncoder[Row])
 
   private val manifests =
-    new java.util.concurrent.ConcurrentHashMap[String, Vector[PageFile]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Pages]()
 
-  /** Sorted page files with their row counts (parquet footer metadata,
-    * read driver-side once per key — no Spark job) and cumulative
-    * start offsets.
+  /** Sorted page files with their row counts and cumulative start
+    * offsets, and the schema Spark recorded in their footers — read
+    * driver-side once per key, no Spark job, no schema inference.
     */
-  private def manifest(spark: SparkSession, key: String): Vector[PageFile] =
+  private def manifest(key: String): Pages =
     manifests.computeIfAbsent(key, _ => {
       val conf = spark.sparkContext.hadoopConfiguration
-      val parts = Option(new java.io.File(s"$cacheDir/$key.pages").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .map(_.getPath).sorted
-      var cum = 0L
-      parts.toVector.map { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(p), conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val n = try reader.getRecordCount finally reader.close()
-        val pf = PageFile(p, n, cum)
-        cum += n
-        pf
+      val footers = Serve.partFiles(s"$cacheDir/$key.pages", ".parquet").map { f =>
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new Path(f.getPath), conf))
+        try (f, reader.getRecordCount, reader.getFileMetaData
+          .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        finally reader.close()
       }
+      val schema = footers.headOption.fold(new StructType())(f =>
+        DataType.fromJson(f._3).asInstanceOf[StructType])
+      val starts = footers.scanLeft(0L)(_ + _._2)
+      val files = footers.zip(starts).map { case ((f, n, _), start) =>
+        PageFile(f.getPath, f.length, n, start)
+      }
+      // a fresh conf per reader: the reader writes its requested schema
+      // into the conf it is given and broadcasts it, so building on the
+      // shared conf races with concurrent builds for other keys
+      val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, schema, new StructType(), schema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        new Configuration(conf))
+      Pages(files, read,
+        RowOrdering.createNaturalAscendingOrdering(schema.map(_.dataType)),
+        ExpressionEncoder(schema).resolveAndBind())
     })
 
-  /** Rows [page*PageSize, +PageSize) of the sorted cache: only the
-    * 1-2 files overlapping that span are read, each re-sorted (they
-    * are single bounded files) with offset + limit so the driver
-    * collects EXACTLY the page's rows — executors scan at most
-    * [[PageFileRows]] rows per file, the driver never holds more
-    * than a page.
+  /** Rows the page reader has decoded. Pages are read on the driver,
+    * outside Spark's input metrics; this is what a page read cost.
     */
-  private def pageRows(spark: SparkSession, key: String, page: Int): Seq[Row] = {
+  private[planner] val rowsDecoded = new java.util.concurrent.atomic.LongAdder
+
+  /** Rows [page*PageSize, +PageSize) of the sorted cache: only the 1-2
+    * files overlapping that span are decoded, on the driver, each
+    * re-sorted under the stable order (they are single bounded files)
+    * and cut to the page — at most 2 x [[PageFileRows]] rows decoded,
+    * EXACTLY the page's rows kept, no Spark job. Cells come out as
+    * `collect()` would give them.
+    */
+  private[planner] def pageRows(key: String, page: Int): Seq[Row] = {
     val start = page.toLong * Browse.PageSize
     val end = start + Browse.PageSize
-    manifest(spark, key)
+    val pages = manifest(key)
+    val toRow = pages.encoder.createDeserializer()
+    pages.files
       .filter(f => f.start < end && f.start + f.rows > start)
       .flatMap { f =>
-        val lo = (start - f.start).max(0)
-        val hi = (end - f.start).min(f.rows)
-        val df = spark.read.parquet(f.path)
-        df.orderBy(stableOrder(df): _*)
-          .offset(lo.toInt).limit((hi - lo).toInt)
-          .collect()
+        // the reader reuses its row objects
+        val rows = pages.read(PartitionedFile(InternalRow.empty,
+            SparkPath.fromPathString(f.path), 0, f.bytes, fileSize = f.bytes))
+          .map(_.copy()).toArray
+        rowsDecoded.add(rows.length)
+        java.util.Arrays.sort(rows, pages.order)
+        val lo = (start - f.start).max(0).toInt
+        val hi = (end - f.start).min(f.rows).toInt
+        rows.slice(lo, hi).map(toRow)
       }
   }
 
@@ -349,11 +431,10 @@ final class Serve(
       .flatten.getOrElse(ViewMaxColWidth)
 
   private def viewPage(pageRaw: String, index: Int, q: String,
-      colw: Int): (Int, String) = {
-    val s = session(decode(q))
-    servedFrame(s, index) match {
+      colw: Int): (Int, String) =
+    servedFrame(q, index) match {
       case None => (202, waitPage)
-      case Some((key, n)) =>
+      case Some((frame, n)) =>
         val npages = math.max(1, math.ceil(n.toDouble / Browse.PageSize).toInt)
         val page0 = pageRaw.toLowerCase match {
           case "first" => 0
@@ -361,8 +442,8 @@ final class Serve(
           case p => p.toInt
         }
         val page = if (page0 < 0) npages + page0 else math.min(page0, npages - 1)
-        val rows = pageRows(s.pool(index).sparkSession, key, page)
-        val head = s.pool(index).columns
+        val rows = pageRows(frame.key, page)
+        val head = frame.cols
           .map(c => s"<th>${esc(c)}</th>").mkString("<tr>", "", "</tr>")
         val body = rows.map(r =>
           r.toSeq.map(v => s"<td>${renderCell(v, colw)}</td>")
@@ -387,7 +468,6 @@ final class Serve(
              | <a href="/download/csv/$index/$q">download csv</a></p>
              |</body></html>""".stripMargin)
     }
-  }
 
   private def csvCell(s: String): String =
     if (s.exists(c => c == ',' || c == '"' || c == '\n'))
@@ -406,19 +486,14 @@ final class Serve(
     * short 200. Returns false while the materialization is still
     * running.
     */
-  private def streamCsv(ex: HttpExchange, s: Browse.Session,
-      index: Int): Boolean =
-    servedFrame(s, index) match {
+  private def streamCsv(ex: HttpExchange, q: String, index: Int): Boolean =
+    servedFrame(q, index) match {
       case None => false
-      case Some((key, _)) =>
-        val cols = s.pool(index).columns
+      case Some((frame, _)) =>
+        val cols = frame.cols
         // filename = longest column name (serve_view_df.py:171)
         val fname = cols.maxBy(_.length).replaceAll("[^A-Za-z0-9._-]", "_")
-        val parts = Option(new java.io.File(s"$cacheDir/$key.csv").listFiles())
-          .getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".csv"))
-          .sortBy(_.getName)
+        val parts = Serve.partFiles(s"$cacheDir/${frame.key}.csv", ".csv")
         val header = (cols.map(csvCell).mkString(",") + "\n").getBytes(UTF_8)
         val total = header.length.toLong + parts.map(_.length()).sum
         ex.getResponseHeaders.set("Content-Type", "text/csv; charset=utf-8")
@@ -436,7 +511,7 @@ final class Serve(
         true
     }
 
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = Serve.listen(port)
   server.createContext("/", (ex: HttpExchange) => {
     try {
       val segs = ex.getRequestURI.getPath.split("/").filter(_.nonEmpty).toList
@@ -477,15 +552,16 @@ final class Serve(
           val (code, body) = viewPage(page, index.toInt, "", cookieColw(ex))
           respond(ex, code, body)
         case List("download", "csv", index, q) =>
-          if (!streamCsv(ex, session(decode(q)), index.toInt))
+          if (!streamCsv(ex, q, index.toInt))
             respond(ex, 202, waitPage)
         case List("download", "csv", index) =>
-          if (!streamCsv(ex, session(Vector.empty), index.toInt))
+          if (!streamCsv(ex, "", index.toInt))
             respond(ex, 202, waitPage)
         case _ => respond(ex, 404, "<html><body>not found</body></html>")
       }
     } catch {
       case e: Throwable =>
+        Serve.log.error(s"${ex.getRequestMethod} ${ex.getRequestURI} failed", e)
         respond(ex, 500, s"<html><body>${esc(String.valueOf(e.getMessage))}</body></html>")
     }
   })
@@ -498,6 +574,31 @@ final class Serve(
 }
 
 object Serve {
+  // TCP_NODELAY (see the class doc). The JDK server reads this once,
+  // when its config class loads at the first server the JVM creates,
+  // so it is set here, before [[listen]] can run.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[Serve])
+
+  private def listen(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress(port), 0)
+
+  private val PartName = """part-(\d+)-.*-c(\d+)\..*""".r
+
+  /** The `part-*<suffix>` files Spark wrote into `dir`, in write order:
+    * by the (task index, file counter) parsed from
+    * `part-%05d-<uuid>-c%03d.<ext>`. Both numbers outgrow their
+    * padding, so a name sort puts `c1000` before `c999` and
+    * `part-100000` before `part-99999`.
+    */
+  private[planner] def partFiles(dir: String, suffix: String): Vector[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toVector.flatten
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(suffix))
+      .sortBy(_.getName match {
+        case PartName(task, file) => (task.toLong, file.toLong)
+      })
+
   /** `runMain graft.planner.Serve [sfDir] [port]` — serves the
     * documents exploration the same way `graft.Browse` drives stdin.
     */

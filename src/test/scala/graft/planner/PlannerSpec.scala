@@ -129,6 +129,11 @@ class PlannerSearchSpec extends AnyFunSuite {
       Vector(Vector("name")), Vector(Vector("unreachable.goal"))))
     // the reference burned 13.3s planning (BASELINE.md); we must not
     assert(ms < 2000, s"planner took ${ms}ms")
+    val (_, exp) = Planner.findPathAStarCounted(reg,
+      Vector(Vector("name")), Vector(Vector("unreachable.goal")))
+    // the cap leaves a finite space: every state reachable with each
+    // generic task used at most once
+    assert(exp <= 6, s"unreachable goal expanded $exp states")
   }
 
   test("novelty pruning: actions reproducing existing column sets are skipped") {
@@ -169,6 +174,9 @@ class PlannerSearchSpec extends AnyFunSuite {
     val ms = minMs(3)(
       Planner.findPath(reg, Vector(Vector("src")), Vector(Vector(goal))))
     assert(ms < 1000, s"deep plan took ${ms}ms")
+    val (_, exp) = Planner.findPathAStarCounted(reg, Vector(Vector("src")),
+      Vector(Vector(goal)))
+    assert(exp <= 8, s"8-step chain expanded $exp states")
   }
 
   test("A* finds the same-length plans as BFS on every fixture") {
@@ -264,6 +272,7 @@ class PlannerSearchSpec extends AnyFunSuite {
     assert(path.map(_.task.name) == (1 to 10).map(i => s"step$i"))
     val ms = minMs(3)(Planner.findPath(reg100, Vector(Vector("src")), goal))
     assert(ms < 100, s"100-task plan took ${ms}ms")
+    // the load-independent form of the bound: one expansion per step
     // the default stays pinned to exhaustive-BFS plans at this size
     val (bfs, bfsExp) = Planner.findPathBfsCounted(reg100,
       Vector(Vector("src")), goal)
@@ -271,6 +280,7 @@ class PlannerSearchSpec extends AnyFunSuite {
       Vector(Vector("src")), goal)
     assert(astar.map(_.map(_.task.name)) == bfs.map(_.map(_.task.name)))
     assert(aExp <= bfsExp)
+    assert(aExp <= 10, s"100-task plan expanded $aExp states")
   }
 
   test("1000-task registry: same 10-step goal, planning stays under 500ms") {
@@ -295,6 +305,8 @@ class PlannerSearchSpec extends AnyFunSuite {
     assert(path.map(_.task.name) == (1 to 10).map(i => s"step$i"))
     val ms = minMs(3)(Planner.findPath(reg1k, Vector(Vector("src")), goal))
     assert(ms < 500, s"1000-task plan took ${ms}ms")
+    val (_, exp) = Planner.findPathAStarCounted(reg1k, Vector(Vector("src")), goal)
+    assert(exp <= 10, s"1000-task plan expanded $exp states")
   }
 
   test("planner stays in milliseconds on the demo registry") {
@@ -306,6 +318,9 @@ class PlannerSearchSpec extends AnyFunSuite {
       Vector(Vector("doc_id", "text")),
       Vector(Vector("text.tokens.top90"))))
     assert(ms < 1000, s"planner took ${ms}ms")
+    val (_, exp) = Planner.findPathAStarCounted(Library.registry,
+      Vector(Vector("doc_id", "text")), Vector(Vector("text.tokens.top90")))
+    assert(exp <= 3, s"demo-registry plan expanded $exp states")
   }
 
   test("relaxed-depth heuristic walks the chain instead of flooding distractors") {

@@ -3,7 +3,11 @@ package graft.planner
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
+import graft.sources.Sources.PlanCache
 
 /** Drives [[Serve]] over real HTTP the way a browser drives the
   * reference's Flask app (serve.py): explore → follow an action link
@@ -14,21 +18,53 @@ class ServeSpec extends SparkSpec {
 
   private val client = HttpClient.newHttpClient()
 
-  private def get(url: String): HttpResponse[String] =
-    client.send(HttpRequest.newBuilder(URI.create(url)).GET().build(),
-      HttpResponse.BodyHandlers.ofString())
+  private def get(url: String, cookie: String = ""): HttpResponse[String] = {
+    val req = HttpRequest.newBuilder(URI.create(url)).GET()
+    if (cookie.nonEmpty) req.header("Cookie", cookie)
+    client.send(req.build(), HttpResponse.BodyHandlers.ofString())
+  }
 
   /** Poll `url` until the async materialization finishes (202 → 200),
     * like the reference's data_wait.html auto-refresh loop.
     */
-  private def getDone(url: String, attempts: Int = 100): HttpResponse[String] = {
-    var r = get(url)
-    var left = attempts
+  private def getDone(url: String, attempts: Int = 100, pollMs: Long = 200,
+      cookie: String = ""): HttpResponse[String] = {
+    var r = get(url, cookie)
+    var left = attempts * 200 / pollMs
     while (r.statusCode() == 202 && left > 0) {
-      Thread.sleep(200); r = get(url); left -= 1
+      Thread.sleep(pollMs); r = get(url, cookie); left -= 1
     }
     r
   }
+
+  /** `body`'s result and the Spark jobs started while it ran. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val r = body
+      org.apache.spark.GraftListenerDrain.drain(spark.sparkContext, 30000)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  /** A wide column width, so rendered cells are whole values. */
+  private val Wide = "colw=100000"
+
+  /** The table cells of a rendered page, unescaped. */
+  private def cells(html: String): Seq[Seq[String]] =
+    """<tr>((?:<td>.*?</td>)+)</tr>""".r.findAllMatchIn(html).map(m =>
+      """<td>(.*?)</td>""".r.findAllMatchIn(m.group(1)).map(_.group(1)
+        .replace("&lt;", "<").replace("&gt;", ">").replace("&quot;", "\"")
+        .replace("&amp;", "&")).toSeq).toSeq
+
+  private def stableOrder(df: DataFrame) =
+    df.columns.toSeq.map(c => col(s"`$c`").asc)
 
   test("explore -> act -> view -> csv round-trips over HTTP") {
     import spark.implicits._
@@ -126,23 +162,11 @@ class ServeSpec extends SparkSpec {
       assert(cold.statusCode() == 200, cold.body())
       assert(cold.body().contains("sankho123"), cold.body())
 
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val counter = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(counter)
-      val warm =
-        try {
-          val r = get(s"$base/download/csv/0/")
-          org.apache.spark.GraftListenerDrain.drain(spark.sparkContext, 30000)
-          r
-        } finally spark.sparkContext.removeSparkListener(counter)
+      val (warm, jobs) = jobsDuring(get(s"$base/download/csv/0/"))
       assert(warm.statusCode() == 200)
       assert(warm.body() == cold.body())
-      assert(jobs.get() == 0,
-        s"warm CSV download ran ${jobs.get()} Spark jobs; must stream from disk")
+      assert(jobs == 0,
+        s"warm CSV download ran $jobs Spark jobs; must stream from disk")
     } finally srv.stop()
   }
 
@@ -167,6 +191,7 @@ class ServeSpec extends SparkSpec {
         }
       }
       spark.sparkContext.addSparkListener(counter)
+      val decodedBefore = srv.rowsDecoded.sum
       val last =
         try {
           val r = get(s"$base/view/last/0/")
@@ -179,6 +204,11 @@ class ServeSpec extends SparkSpec {
       // anywhere near the 50k frame means the bounded paging regressed
       assert(read.sum < 10000,
         s"last-page render read ${read.sum} records; paging must stay bounded")
+      // the page files are decoded on the driver, outside Spark's input
+      // metrics: the server's own count says how much it read
+      val decoded = srv.rowsDecoded.sum - decodedBefore
+      assert(decoded > 0 && decoded <= 2 * 4096,
+        s"last-page render decoded $decoded rows; paging must stay bounded")
 
       // page 136 covers rows 4080-4110: it STRADDLES the 4096-row
       // file boundary, so both overlapping files must contribute and
@@ -217,5 +247,140 @@ class ServeSpec extends SparkSpec {
       assert(csvB.body().linesIterator.size == 2, csvB.body()) // header + 1 row
       assert(csvB.body().contains("beta"), csvB.body())
     } finally b.stop()
+  }
+
+  test("a warm page render runs zero Spark jobs") {
+    import spark.implicits._
+    val source = Seq((0L, "sankho123 turjo sarkar456")).toDF("index", "name")
+    val cacheDir = java.nio.file.Files
+      .createTempDirectory("graft-serve-page").toString
+    val srv = new Serve(TaskRegistry.of(Library.splitter), Seq(source), cacheDir)
+    try {
+      val base = s"http://localhost:${srv.boundPort}"
+      val cold = getDone(s"$base/view/0/0/")
+      assert(cold.statusCode() == 200, cold.body())
+      val (warm, jobs) = jobsDuring(get(s"$base/view/0/0/"))
+      assert(warm.statusCode() == 200)
+      assert(warm.body() == cold.body())
+      assert(jobs == 0,
+        s"warm page render ran $jobs Spark jobs; must read the page files")
+    } finally srv.stop()
+  }
+
+  test("driver-read pages equal a Spark orderBy/offset/limit read of the cache") {
+    // ties on k make the later columns decide the order; s and arr
+    // carry nulls, arr is an array column
+    val source = spark.range(24000).select(
+      (col("id") % 97).as("k"),
+      when(col("id") % 5 === 0, lit(null))
+        .otherwise(concat(lit("s"), col("id").cast("string"))).as("s"),
+      when(col("id") % 7 === 0, lit(null))
+        .otherwise(array(col("id") % 3, col("id") % 11)).as("arr"),
+      (col("id") / 3.0).as("d"))
+    val cacheDir = java.nio.file.Files
+      .createTempDirectory("graft-serve-read").toString
+    val srv = new Serve(TaskRegistry.of(Library.splitter), Seq(source), cacheDir)
+    try {
+      val base = s"http://localhost:${srv.boundPort}"
+      assert(getDone(s"$base/view/0/0/").statusCode() == 200)
+      val key = PlanCache.planKey(source)
+      val files = Serve.partFiles(s"$cacheDir/$key.pages", ".parquet")
+      val sizes = files.map(f => spark.read.parquet(f.getPath).count())
+      assert(sizes.contains(4096L), s"no full 4096-row page file: $sizes")
+      val cache = spark.read.parquet(s"$cacheDir/$key.pages")
+      val ordered = cache.orderBy(stableOrder(cache): _*)
+      def reference(p: Int): Seq[Row] = ordered
+        .offset(p * Browse.PageSize).limit(Browse.PageSize).collect().toSeq
+      // first, last, and both pages around every file boundary (the
+      // page holding a file's last row and the next file's first)
+      val bounds = sizes.scanLeft(0L)(_ + _).drop(1).dropRight(1)
+      val last = ((24000 - 1) / Browse.PageSize).toInt
+      val pages = (Seq(0, last) ++ bounds.flatMap(b =>
+        Seq(b - 1, b).map(r => (r / Browse.PageSize).toInt))).distinct.sorted
+      assert(pages.exists(p => bounds.exists(b =>
+        p * Browse.PageSize < b && b < (p + 1) * Browse.PageSize)),
+        s"no page straddles a file boundary: $pages over $bounds")
+      val read = pages.map(p => p -> srv.pageRows(key, p))
+      read.foreach { case (p, rows) =>
+        assert(rows == reference(p), s"page $p differs from the Spark read")
+      }
+      val values = read.flatMap(_._2).flatMap(_.toSeq)
+      assert(values.contains(null), "no null cell was compared")
+      assert(values.exists(_.isInstanceOf[scala.collection.Seq[_]]),
+        "no array cell was compared")
+      // and the served HTML renders each cell as collect() renders it
+      pages.foreach { p =>
+        val html = get(s"$base/view/$p/0/", Wide).body()
+        assert(cells(html) == reference(p).map(_.toSeq.map(String.valueOf)),
+          s"page $p renders differently from the Spark read")
+      }
+    } finally srv.stop()
+  }
+
+  test("concurrent first views of distinct plans each serve their own rows") {
+    // every plan builds its page reader at about the same time; each
+    // must decode its own columns
+    import spark.implicits._
+    val source = (0 until 200).map(i =>
+      (i.toLong, s"w$i x${i % 7} y${i * 13 % 101}")).toDF("index", "name")
+    val cacheDir = java.nio.file.Files
+      .createTempDirectory("graft-serve-concurrent").toString
+    val srv = new Serve(TaskRegistry.of(Library.splitter, Library.removeNum),
+      Seq(source), cacheDir)
+    try {
+      val base = s"http://localhost:${srv.boundPort}"
+      val views = Seq("name.split", "name.alpha", "name.split.alpha",
+        "index.split").map { goal =>
+        val q = get(s"$base/goal/$goal").headers().firstValue("Location")
+          .orElseThrow().stripPrefix("/explore/")
+        val pool = Executor.runPath(Seq(source), srv.decode(q))
+        val frame = pool.last
+        val expected = frame.orderBy(stableOrder(frame): _*)
+          .limit(Browse.PageSize).collect().toSeq
+          .map(_.toSeq.map(String.valueOf))
+        (s"$base/view/0/${pool.size - 1}/$q", expected)
+      } :+ ((s"$base/view/0/0/", source.orderBy(stableOrder(source): _*)
+        .limit(Browse.PageSize).collect().toSeq.map(_.toSeq.map(String.valueOf))))
+      assert(views.map(_._1).distinct.size == 5)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(views.size)
+      try {
+        val served = views.map { case (url, _) =>
+          pool.submit(() => {
+            start.await()
+            getDone(url, pollMs = 10, cookie = Wide)
+          })
+        }
+        start.countDown()
+        served.zip(views).foreach { case (f, (url, expected)) =>
+          val r = f.get()
+          assert(r.statusCode() == 200, s"$url: ${r.body()}")
+          assert(cells(r.body()) == expected, s"$url served the wrong rows")
+        }
+      } finally pool.shutdownNow()
+      // warm re-reads, now that every plan's reader exists
+      views.foreach { case (url, expected) =>
+        assert(cells(get(url, Wide).body()) == expected,
+          s"$url served the wrong rows once every plan was read")
+      }
+    } finally srv.stop()
+  }
+
+  test("part files order by task index and file counter, not by name") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-serve-parts")
+    // the uuid part holds "-c0ffee": only the last "-c<digits>." counts
+    val uuid = "0c4e1a9b-7f3d-4c2e-9a1b-c0ffee000001"
+    val ordered = Seq("part-00000-%s-c000", "part-00000-%s-c999",
+      "part-00000-%s-c1000", "part-00001-%s-c000", "part-99999-%s-c000",
+      "part-100000-%s-c000").map(_.format(uuid))
+    for (name <- ordered; ext <- Seq(".snappy.parquet", ".csv"))
+      java.nio.file.Files.createFile(dir.resolve(name + ext))
+    java.nio.file.Files.createFile(dir.resolve("_SUCCESS"))
+    java.nio.file.Files.createFile(
+      dir.resolve(s".part-00000-$uuid-c000.snappy.parquet.crc"))
+    assert(Serve.partFiles(dir.toString, ".parquet").map(_.getName) ==
+      ordered.map(_ + ".snappy.parquet"))
+    assert(Serve.partFiles(dir.toString, ".csv").map(_.getName) ==
+      ordered.map(_ + ".csv"))
   }
 }
