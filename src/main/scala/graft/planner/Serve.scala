@@ -11,12 +11,15 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+  GenericInternalRow, RowOrdering}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 import graft.sources.Sources.PlanCache
 
@@ -43,15 +46,22 @@ import graft.sources.Sources.PlanCache
   * the server holds no per-user state and any view is bookmarkable.
   * Results are computed once per logical plan via [[PlanCache]]'s
   * plan-hash key — the reference's mmh3-keyed pickle cache
-  * (serve.py:38-44). A warm page or CSV request does no Spark work:
+  * (serve.py:38-44). A frame's first view writes the plan exactly
+  * once: sorted under the stable total order (all columns asc)
+  * straight into page files of at most [[PageFileRows]] rows, whose
+  * footers give the row count. Every later request reads those files
+  * and does no Spark work:
   *
   *   - the URL's `(q, index)` maps to its plan key and columns in a
   *     memo, so the action path is not replayed and Catalyst does not
   *     re-analyze it to recompute the key;
-  *   - a page is decoded on the driver from the 1-2 bounded page-cache
-  *     files its rows overlap (Spark's own parquet reader, schema from
-  *     the footer) — no Spark job, no schema inference;
-  *   - a CSV download copies the cached part files to the socket.
+  *   - a page is decoded on the driver from the 1-2 bounded page files
+  *     its rows overlap (Spark's own parquet reader, schema from the
+  *     footer) — no Spark job, no schema inference;
+  *   - a CSV download is generated from the page files when it is
+  *     requested (the reference also renders it from the one
+  *     materialized frame, serve_view_df.py:160-176), one file in
+  *     memory at a time.
   *
   * Sockets run with TCP_NODELAY: the JDK server writes the headers and
   * the body as separate segments, and with Nagle on every response
@@ -186,53 +196,37 @@ final class Serve(
   private def stableOrder(df: DataFrame) =
     df.columns.toSeq.map(c => col(s"`$c`").asc)
 
-  /** Serving caches built beside the raw parquet, inside the same
-    * async job (the [[PlanCache.submit]] `andThen` hook):
-    *
-    *   - `<key>.pages` — the frame under the stable total order (all
-    *     columns asc), range-partitioned by the sort and split into
-    *     files of <= [[PageFileRows]] rows. Part-file order
-    *     ([[Serve.partFiles]]) IS the global row order, so page p
-    *     lives in the one (or two, at a boundary) files its row span
-    *     overlaps — a deep page costs one bounded file read, not a
-    *     `limit(n)` collect (the round-4 audit's last scale-killer,
-    *     Browse.scala's previewTop applied to page "last").
-    *   - `<key>.csv` — the same ordering as distributed headerless
-    *     CSV part files; a download streams them in part order
-    *     straight from disk (RFC-style quote doubling, nulls as
-    *     "null" like the old in-memory renderer), never collecting
-    *     the frame to the driver (serve_view_df.py:167 does — that is
-    *     the one reference behavior deliberately not reproduced).
+  /** Write `df` once, under the stable total order (all columns asc),
+    * into `<key>.pages`: range-partitioned by the sort and split into
+    * files of <= [[PageFileRows]] rows. Part-file order
+    * ([[Serve.partFiles]]) IS the global row order, so page p lives in
+    * the one (or two, at a boundary) files its row span overlaps — a
+    * deep page costs one bounded file read, not a `limit(n)` collect
+    * (the round-4 audit's last scale-killer, Browse.scala's previewTop
+    * applied to page "last"). The same files feed [[streamCsv]].
+    * Returns the row count, summed from the page-file footers: no
+    * count job.
     */
-  private def buildPageCache(cached: DataFrame, key: String): Unit = {
+  private def buildPageCache(df: DataFrame, key: String): Long = {
     // the .pages directory is about to be overwritten with new part
     // files — a manifest computed over the old listing must not
     // survive the rebuild (stale file names 500 until restart)
     manifests.remove(key)
-    val sorted = cached.orderBy(stableOrder(cached): _*)
-    sorted.write.mode("overwrite")
+    df.orderBy(stableOrder(df): _*).write.mode("overwrite")
       .option("maxRecordsPerFile", PageFileRows.toLong)
       .parquet(s"$cacheDir/$key.pages")
-    // CSV rejects nested types the parquet pages keep; stringify every
-    // column for the download (sort order is the typed one above)
-    sorted.select(sorted.columns.toSeq
-        .map(c => col(s"`$c`").cast("string").as(c)): _*)
-      .write.mode("overwrite")
-      .option("header", "false").option("nullValue", "null")
-      .option("escape", "\"")
-      .csv(s"$cacheDir/$key.csv")
+    manifest(key).files.map(_.rows).sum
   }
 
-  /** This instance's serving caches for `key` exist on disk. The
-    * PlanCache status map is JVM-GLOBAL while cacheDir is
-    * per-instance, so a Done recorded by another Serve over the same
-    * plan does NOT mean our pages/CSV exist — trusting it blindly
-    * would serve empty 200s. Done only counts together with this
-    * check; when it fails, [[rebuildLocal]] fills this cacheDir.
+  /** This instance's page files for `key` exist on disk. The PlanCache
+    * status map is JVM-GLOBAL while cacheDir is per-instance, so a
+    * Done recorded by another Serve over the same plan does NOT mean
+    * our pages exist — trusting it blindly would serve empty 200s.
+    * Done only counts together with this check; when it fails,
+    * [[rebuildLocal]] fills this cacheDir.
     */
   private def cachesReady(key: String): Boolean =
-    new java.io.File(s"$cacheDir/$key.pages", "_SUCCESS").exists() &&
-      new java.io.File(s"$cacheDir/$key.csv", "_SUCCESS").exists()
+    new java.io.File(s"$cacheDir/$key.pages", "_SUCCESS").exists()
 
   /** key -> "failed: …" for local page-cache rebuilds; a key is
     * in-flight while mapped to "running".
@@ -240,13 +234,12 @@ final class Serve(
   private val localBuilds =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Build this instance's raw + page/CSV caches for a plan another
-    * instance already materialized (global status Done, local files
-    * absent): same async posture as a fresh submit — the request gets
-    * the wait page while a daemon thread fills the local cacheDir.
+  /** Build this instance's page files for a plan another instance
+    * already materialized (global status Done, local files absent):
+    * same async posture as a fresh submit — the request gets the wait
+    * page while a daemon thread fills the local cacheDir.
     */
-  private def rebuildLocal(spark: SparkSession,
-      df: DataFrame, key: String): Unit = {
+  private def rebuildLocal(df: DataFrame, key: String): Unit = {
     val st = localBuilds.get(key)
     if (st != null && st.startsWith("failed")) {
       // report the failure once, then clear the entry so the NEXT
@@ -259,12 +252,12 @@ final class Serve(
     if (localBuilds.putIfAbsent(key, "running") == null) {
       val t = new Thread(() => {
         try {
-          val cached = PlanCache.materialize(spark, df, cacheDir)
-          buildPageCache(cached, key)
+          buildPageCache(df, key)
           localBuilds.remove(key)
         } catch {
           case e: Throwable =>
-            localBuilds.put(key, s"failed: ${String.valueOf(e.getMessage)}")
+            Serve.log.error(s"page-cache rebuild of $key failed", e)
+            localBuilds.put(key, s"failed: $e")
         }
       }, s"graft-pagecache-$key")
       t.setDaemon(true)
@@ -287,10 +280,9 @@ final class Serve(
     new java.util.concurrent.ConcurrentHashMap[(String, Int), Frame]()
 
   /** The served frame of `(q, index)` and its row count, or None while
-    * the async materialization (raw parquet + page/CSV caches + count)
-    * is still running. A remembered frame whose caches are ready or
-    * still building is answered from the status alone; anything else
-    * takes [[replayFrame]].
+    * the async page-file build is still running. A remembered frame
+    * whose pages are ready or still building is answered from the
+    * status alone; anything else takes [[replayFrame]].
     */
   private def servedFrame(q: String, index: Int): Option[(Frame, Long)] = {
     val known = knownFrames.get((q, index))
@@ -303,31 +295,26 @@ final class Serve(
   }
 
   /** [[servedFrame]] from scratch: replay the URL's path, key the plan
-    * and remember the key, then submit the materialization if nobody
-    * has. The count comes from the Done status recorded at
-    * materialization time, so a page render runs no per-request
-    * counting job (round-4 audit item (b)).
+    * and remember the key, then submit the page-file build if nobody
+    * has. The count comes from the Done status the build recorded, so
+    * a page render runs no per-request counting job (round-4 audit
+    * item (b)).
     */
   private def replayFrame(q: String, index: Int): Option[(Frame, Long)] = {
     val df = session(decode(q)).pool(index)
-    val spark = df.sparkSession
     val key = PlanCache.planKey(df)
     val frame = Frame(key, df.columns)
     knownFrames.put((q, index), frame)
     PlanCache.poll(key) match {
       case Some(PlanCache.Done(n)) if cachesReady(key) => Some((frame, n))
       case Some(PlanCache.Done(_)) =>
-        rebuildLocal(spark, df, key)
+        rebuildLocal(df, key)
         None
       case Some(PlanCache.Failed(e)) =>
         throw new RuntimeException(s"materialization failed: $e")
       case Some(PlanCache.Running) => None
       case None =>
-        // cold raw cache from an earlier run still re-submits (the
-        // materialize inside is a no-op) so the page/CSV caches and
-        // the remembered count get rebuilt exactly once
-        PlanCache.submit(spark, df, cacheDir,
-          cached => buildPageCache(cached, key))
+        PlanCache.submit(spark, key, () => buildPageCache(df, key))
         None
     }
   }
@@ -336,11 +323,11 @@ final class Serve(
 
   private case class PageFile(path: String, bytes: Long, rows: Long, start: Long)
 
-  /** A key's page files in global row order, and what decodes them on
-    * the driver: Spark's parquet reader, the stable order's row
-    * ordering and the Row encoder.
+  /** A key's page files in global row order, their schema, and what
+    * decodes them on the driver: Spark's parquet reader, the stable
+    * order's row ordering and the Row encoder.
     */
-  private case class Pages(files: Vector[PageFile],
+  private case class Pages(files: Vector[PageFile], schema: StructType,
       read: PartitionedFile => Iterator[InternalRow],
       order: Ordering[InternalRow], encoder: ExpressionEncoder[Row])
 
@@ -374,7 +361,7 @@ final class Serve(
         spark, schema, new StructType(), schema, Nil,
         Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
         new Configuration(conf))
-      Pages(files, read,
+      Pages(files, schema, read,
         RowOrdering.createNaturalAscendingOrdering(schema.map(_.dataType)),
         ExpressionEncoder(schema).resolveAndBind())
     })
@@ -383,6 +370,15 @@ final class Serve(
     * outside Spark's input metrics; this is what a page read cost.
     */
   private[planner] val rowsDecoded = new java.util.concurrent.atomic.LongAdder
+
+  /** One page file's rows, decoded on the driver in file order. The
+    * reader reuses its row objects: a row is valid until the next one.
+    */
+  private def readFile(pages: Pages, f: PageFile): Iterator[InternalRow] = {
+    rowsDecoded.add(f.rows)
+    pages.read(PartitionedFile(InternalRow.empty,
+      SparkPath.fromPathString(f.path), 0, f.bytes, fileSize = f.bytes))
+  }
 
   /** Rows [page*PageSize, +PageSize) of the sorted cache: only the 1-2
     * files overlapping that span are decoded, on the driver, each
@@ -399,11 +395,7 @@ final class Serve(
     pages.files
       .filter(f => f.start < end && f.start + f.rows > start)
       .flatMap { f =>
-        // the reader reuses its row objects
-        val rows = pages.read(PartitionedFile(InternalRow.empty,
-            SparkPath.fromPathString(f.path), 0, f.bytes, fileSize = f.bytes))
-          .map(_.copy()).toArray
-        rowsDecoded.add(rows.length)
+        val rows = readFile(pages, f).map(_.copy()).toArray
         java.util.Arrays.sort(rows, pages.order)
         val lo = (start - f.start).max(0).toInt
         val hi = (end - f.start).min(f.rows).toInt
@@ -474,17 +466,20 @@ final class Serve(
       "\"" + s.replace("\"", "\"\"") + "\""
     else s
 
-  /** Stream the CSV cache to the response: a header line, then the
-    * sorted part files copied byte-for-byte in name order, O(buffer)
-    * memory, ZERO Spark jobs on a warm cache — the
-    * distributed-write-then-stream replacement for the old
-    * `collect().mkString` (which was reference-faithful,
-    * serve_view_df.py:167, and a driver OOM at corpus scale). The
-    * response carries an explicit Content-Length (header bytes + the
-    * part sizes snapshotted BEFORE streaming) so an IO error mid-copy
-    * surfaces to the client as a truncated body, not a silently
-    * short 200. Returns false while the materialization is still
-    * running.
+  /** Generate the frame's CSV from its page files and stream it: a
+    * header line, then each page file in part order, its rows in file
+    * order (the sorted write's), decoded on the driver, every column
+    * cast to string by Catalyst's `Cast` (session SQL conf and time
+    * zone) and written by Spark's own CSV generator with the options a
+    * `df.write.csv` download used (`header=false`, `nullValue=null`,
+    * `escape="`) — the same bytes, ZERO Spark jobs, memory bounded by
+    * one page file. Never collects the frame
+    * (serve_view_df.py:167 does — the one reference behavior
+    * deliberately not reproduced). The body is chunked; a failure
+    * after the headers propagates, so the connection drops without
+    * the terminating chunk and the client sees a broken body, never a
+    * complete 200. Returns false while the page files are still being
+    * built.
     */
   private def streamCsv(ex: HttpExchange, q: String, index: Int): Boolean =
     servedFrame(q, index) match {
@@ -493,21 +488,31 @@ final class Serve(
         val cols = frame.cols
         // filename = longest column name (serve_view_df.py:171)
         val fname = cols.maxBy(_.length).replaceAll("[^A-Za-z0-9._-]", "_")
-        val parts = Serve.partFiles(s"$cacheDir/${frame.key}.csv", ".csv")
-        val header = (cols.map(csvCell).mkString(",") + "\n").getBytes(UTF_8)
-        val total = header.length.toLong + parts.map(_.length()).sum
+        val pages = manifest(frame.key)
+        val conf = spark.sessionState.conf
         ex.getResponseHeaders.set("Content-Type", "text/csv; charset=utf-8")
         ex.getResponseHeaders.set("Content-Disposition",
           s"""attachment; filename="$fname.csv"""")
-        ex.sendResponseHeaders(200, total)
-        val out = ex.getResponseBody
-        try {
-          out.write(header)
-          parts.foreach(p => java.nio.file.Files.copy(p.toPath, out))
-        } finally {
-          out.close()
-          ex.close()
+        ex.sendResponseHeaders(200, 0)
+        val out = new java.io.OutputStreamWriter(ex.getResponseBody, UTF_8)
+        out.write(cols.map(csvCell).mkString(",") + "\n")
+        SQLConf.withExistingConf(conf) {
+          val casts = pages.schema.fields.zipWithIndex.map { case (f, i) =>
+            Cast(BoundReference(i, f.dataType, f.nullable), StringType,
+              Some(conf.sessionLocalTimeZone))
+          }
+          val gen = new UnivocityGenerator(
+            StructType(pages.schema.map(_.copy(dataType = StringType))), out,
+            new CSVOptions(Map("header" -> "false", "nullValue" -> "null",
+              "escape" -> "\""), conf.csvColumnPruning, conf.sessionLocalTimeZone))
+          val line = new GenericInternalRow(casts.length)
+          pages.files.foreach(f => readFile(pages, f).foreach { row =>
+            casts.indices.foreach(i => line.update(i, casts(i).eval(row)))
+            gen.write(line)
+          })
+          gen.close()
         }
+        ex.close()
         true
     }
 
@@ -562,6 +567,9 @@ final class Serve(
     } catch {
       case e: Throwable =>
         Serve.log.error(s"${ex.getRequestMethod} ${ex.getRequestURI} failed", e)
+        // a body already under way cannot turn into a 500: rethrown, the
+        // server drops the connection without ending the body
+        if (ex.getResponseCode != -1) throw e
         respond(ex, 500, s"<html><body>${esc(String.valueOf(e.getMessage))}</body></html>")
     }
   })

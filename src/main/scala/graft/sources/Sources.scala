@@ -107,29 +107,29 @@ object Sources {
     private val jobs =
       new java.util.concurrent.ConcurrentHashMap[String, Status]()
 
-    /** Submit df for materialization under its plan key; returns the
-      * key at once. Duplicate submissions of an in-flight or finished
-      * plan are no-ops (idempotent, like the reference's cache check
-      * before enqueueing, serve.py:61-66). `andThen` runs on the
-      * worker thread against the cached frame BEFORE the status turns
-      * Done — the hook serving layers use to build derived caches
-      * (sorted page files, CSV) inside the same async job, so Done
-      * means "every read path is ready", not just the raw parquet.
+    private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+    /** Run `build` for plan `key` on a background thread in its own
+      * Spark job group and return the key at once; the status turns
+      * `Done(rows)` with the row count `build` returns. The caller
+      * decides what the cache is (and already holds the key, so the
+      * plan is not re-analyzed to hash it). Duplicate submissions of an
+      * in-flight or finished key are no-ops (idempotent, like the
+      * reference's cache check before enqueueing, serve.py:61-66). A
+      * failure is logged with its stack trace and recorded as
+      * `Failed("<exception class>: <message>")`.
       */
-    def submit(spark: SparkSession, df: DataFrame, cacheDir: String,
-        andThen: DataFrame => Unit = _ => ()): String = {
-      val key = planKey(df)
-      val fresh = jobs.putIfAbsent(key, Running) == null
-      if (fresh) {
+    def submit(spark: SparkSession, key: String, build: () => Long): String = {
+      if (jobs.putIfAbsent(key, Running) == null) {
         val t = new Thread(() => {
           try {
             spark.sparkContext.setJobGroup(s"graft-cache-$key",
               s"async materialize $key", interruptOnCancel = true)
-            val cached = materialize(spark, df, cacheDir)
-            andThen(cached)
-            jobs.put(key, Done(cached.count()))
+            jobs.put(key, Done(build()))
           } catch {
-            case e: Throwable => jobs.put(key, Failed(String.valueOf(e.getMessage)))
+            case e: Throwable =>
+              log.error(s"materialization of $key failed", e)
+              jobs.put(key, Failed(e.toString))
           } finally spark.sparkContext.clearJobGroup()
         }, s"graft-async-$key")
         t.setDaemon(true)
@@ -137,6 +137,13 @@ object Sources {
       }
       key
     }
+
+    /** Submit df's raw-parquet [[materialize]] under its plan key and
+      * count the cached rows; [[await]] reads the result back.
+      */
+    def submit(spark: SparkSession, df: DataFrame, cacheDir: String): String =
+      submit(spark, planKey(df),
+        () => materialize(spark, df, cacheDir).count())
 
     /** Poll a submitted key: None = unknown key. */
     def poll(key: String): Option[Status] = Option(jobs.get(key))

@@ -383,4 +383,131 @@ class ServeSpec extends SparkSpec {
     assert(Serve.partFiles(dir.toString, ".csv").map(_.getName) ==
       ordered.map(_ + ".csv"))
   }
+
+  /** The `q` of the planned path to `goal`, through the goal route. */
+  private def goalQ(base: String, goal: String): String =
+    get(s"$base/goal/$goal").headers().firstValue("Location")
+      .orElseThrow().stripPrefix("/explore/")
+
+  test("a cold first view writes only the page files and records their row count") {
+    import spark.implicits._
+    // a plan key hashes neither a local relation's rows nor its column
+    // names: a row shape no other test uses keeps this key its own
+    val source = Seq("cold one two", "three four five six").toDF("cold")
+    val cacheDir = java.nio.file.Files
+      .createTempDirectory("graft-serve-cold").toString
+    val srv = new Serve(TaskRegistry.of(Library.splitter), Seq(source), cacheDir)
+    try {
+      val base = s"http://localhost:${srv.boundPort}"
+      val q = goalQ(base, "cold.split")
+      val frame = Executor.runPath(Seq(source), srv.decode(q)).last
+      val key = PlanCache.planKey(frame)
+      val (view, jobs) = jobsDuring(getDone(s"$base/view/0/1/$q", pollMs = 20))
+      assert(view.statusCode() == 200, view.body())
+      assert(jobs <= 4, s"cold first view of a one-step plan ran $jobs Spark jobs")
+      // no raw parquet copy, no CSV cache
+      assert(new java.io.File(cacheDir).list().toSeq == Seq(s"$key.pages"))
+      assert(PlanCache.poll(key).contains(PlanCache.Done(frame.count())))
+      assert(frame.count() == 7)
+    } finally srv.stop()
+  }
+
+  test("a zero-row frame renders an empty page 0 and a header-only CSV") {
+    import spark.implicits._
+    // (Int, String): a row shape of its own, as in the cold-view test
+    val source = Seq.empty[(Int, String)].toDF("index", "nothing")
+    val srv = new Serve(TaskRegistry.of(Library.splitter), Seq(source),
+      java.nio.file.Files.createTempDirectory("graft-serve-empty").toString)
+    try {
+      val base = s"http://localhost:${srv.boundPort}"
+      val q = goalQ(base, "nothing.split")
+      val view = getDone(s"$base/view/0/1/$q")
+      assert(view.statusCode() == 200, view.body())
+      assert(view.body().contains("page 0/0"), view.body())
+      assert(cells(view.body()).isEmpty, view.body())
+      val csv = getDone(s"$base/download/csv/1/$q")
+      assert(csv.statusCode() == 200, csv.body())
+      assert(csv.body() == "nothing.split\n")
+    } finally srv.stop()
+  }
+
+  test("a failed materialization answers 500 naming the exception class and its message") {
+    import spark.implicits._
+    val boom = Task("boom", Vector(Req("x", Vector(Pat("(.+)")))),
+      Vector(Vector("{x}.boom")))(in =>
+      Seq(in.frames("x").select(
+        raise_error(lit("boom")).cast("string").as(in.expects.head.head))))
+    val source = Seq((0L, "fails")).toDF("index", "name")
+    val srv = new Serve(TaskRegistry.of(boom), Seq(source),
+      java.nio.file.Files.createTempDirectory("graft-serve-boom").toString)
+    try {
+      val base = s"http://localhost:${srv.boundPort}"
+      val view = getDone(s"$base/view/0/1/${goalQ(base, "name.boom")}")
+      assert(view.statusCode() == 500, view.body())
+      assert("""[a-z]+(\.[a-z]+)*\.[A-Z]\w*Exception: """.r
+        .findFirstIn(view.body()).isDefined, view.body())
+      assert(view.body().contains("boom"), view.body())
+    } finally srv.stop()
+  }
+
+  test("the CSV download equals Spark's CSV write of the sorted frame, byte for byte") {
+    // more than one 4,096-row page file; array, null, double and string
+    // cells, strings with a comma, a quote, a newline and outer spaces
+    val source = spark.range(9000).select(
+      (col("id") % 13).as("k"),
+      (col("id") / 7.0 - 300).as("d"),
+      element_at(array(lit(null).cast("string"), lit("a,b"),
+          lit("say \"hi\""), lit("line1\nline2"), lit("  padded  "), lit("")),
+        (col("id") % 6 + 1).cast("int")).as("s"),
+      when(col("id") % 7 === 0, lit(null))
+        .otherwise(array(col("id") % 3, when(col("id") % 5 === 0, lit(null))
+          .otherwise(col("id") % 11))).as("arr"))
+    val cacheDir = java.nio.file.Files
+      .createTempDirectory("graft-serve-csvbytes").toString
+    val srv = new Serve(TaskRegistry.of(Library.splitter), Seq(source), cacheDir)
+    try {
+      val base = s"http://localhost:${srv.boundPort}"
+      val csv = getDone(s"$base/download/csv/0/")
+      assert(csv.statusCode() == 200, csv.body())
+      val key = PlanCache.planKey(source)
+      assert(Serve.partFiles(s"$cacheDir/$key.pages", ".parquet").size >= 2)
+      val ref = java.nio.file.Files.createTempDirectory("graft-serve-csvref")
+        .resolve("csv").toString
+      source.orderBy(stableOrder(source): _*)
+        .select(source.columns.toSeq.map(c => col(s"`$c`").cast("string").as(c)): _*)
+        .write.option("header", "false").option("nullValue", "null")
+        .option("escape", "\"").csv(ref)
+      val expected = Serve.partFiles(ref, ".csv")
+        .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+        .mkString
+      val (header, body) = csv.body().splitAt(csv.body().indexOf('\n') + 1)
+      assert(header == "k,d,s,arr\n")
+      assert(body == expected)
+    } finally srv.stop()
+  }
+
+  test("a CSV download that fails mid-stream breaks the body, never a complete 200") {
+    val source = spark.range(10000).select(col("id"),
+      concat(lit("row "), col("id").cast("string")).as("s"))
+    val cacheDir = java.nio.file.Files
+      .createTempDirectory("graft-serve-midstream").toString
+    val srv = new Serve(TaskRegistry.of(Library.splitter), Seq(source), cacheDir)
+    try {
+      val base = s"http://localhost:${srv.boundPort}"
+      assert(getDone(s"$base/view/0/0/").statusCode() == 200)
+      val files = Serve.partFiles(
+        s"$cacheDir/${PlanCache.planKey(source)}.pages", ".parquet")
+      assert(files.size >= 2, files)
+      assert(files.last.delete())
+      scala.util.Try(get(s"$base/download/csv/0/")) match {
+        case scala.util.Failure(_: java.io.IOException) =>
+        case scala.util.Failure(e) => fail(s"unexpected client error: $e")
+        case scala.util.Success(r) =>
+          assert(r.statusCode() != 200,
+            s"complete 200 of ${r.body().length} chars after a read failure")
+      }
+      // the server keeps serving what it can still read
+      assert(get(s"$base/view/0/0/").statusCode() == 200)
+    } finally srv.stop()
+  }
 }
