@@ -42,8 +42,10 @@ object Layout {
     * v3: commits record per-version schemas and change sets
     * (`_schema.json`, `cdc-v{K}`) — caches built before recording
     * existed must rebuild, or the change feed would see gaps.
+    * v4: every snapshot is chunked (`_chunks.json`) — a cache holding
+    * a v3 full-list snapshot would fail to read and must relocate.
     */
-  val Version = 3
+  val Version = 4
 
   /** Interleave steps: spread a 16-bit value so its bits occupy the
     * even positions of a 32-bit word (the classic mask ladder).
@@ -922,12 +924,10 @@ object Layout {
     // replace — an ingest loop restarting after a crash downstream of
     // this commit — no-ops instead of re-marking and re-appending
     if (isReplay(spark, dir, None, txnApp)) return (0L, 0)
-    val (v, carried, legacy, head) =
+    val (v, carried, head) =
       Manifest.ensureVersionedDelta(spark, dir, statCols)
     val newVersion = v + 1
-    val (names, totalRows) =
-      if (legacy.nonEmpty) (legacy.map(_.name), legacy.map(_.rows).sum)
-      else Manifest.namesAndRows(spark, dir, v)
+    val (names, totalRows) = Manifest.namesAndRows(spark, dir, v)
     val old = Manifest.dvMarks(spark, dir, v)
     val rawOpt =
       if (names.isEmpty) None // empty standing table: nothing to mark
@@ -957,46 +957,8 @@ object Layout {
         m.select(col("_mk_f").as("file"), col("_mk_p").as("pos"))
     }
     val claim = Manifest.claimVersion(spark, dir, newVersion)
-    // DELTA-CARRIED vector (round 20): the old shape re-wrote the
-    // ENTIRE cumulative mark set through a Spark job on every replace
-    // commit (union + distinct + Hive-partitioned write) and read the
-    // old store three more times (pre-count, exceptAll, CDC) —
-    // O(cumulative marks) of work per O(batch) commit, and the
-    // dominant per-batch cost of the keep-best ingest loop by batch 3
-    // (measured: two 1.6 s discovery reads of the accumulated store).
-    // New shape, all consumers unchanged:
-    //   1. carry the old vector BYTE-IDENTICAL via filesystem copy —
-    //      the appendInPlace precedent (round 17), no Spark job;
-    //   2. write ONLY the new marks (anti-joined against the old set,
-    //      so the store stays duplicate-free) as a Hive-keyed delta,
-    //      then MOVE its parts into the carried `file=` dirs (pure
-    //      renames — part names are write-unique);
-    //   3. cumulative count = the `_COUNT` sidecar + the delta count
-    //      observed on the delta write — zero count jobs (a
-    //      pre-sidecar store falls back to one count, then carries).
-    val dvNew = new Path(Manifest.dvDir(dir, newVersion))
-    val fsD = dvNew.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a crashed claim's orphan delta must not merge into this commit
-    fsD.delete(dvNew, true)
-    val oldCount =
-      if (!fsD.exists(new Path(Manifest.dvDir(dir, v)))) 0L
-      else Manifest.dvCountOf(spark, dir, v).getOrElse(old.count())
-    Manifest.copyDvDir(spark, dir, v, newVersion)
-    val newMarks = marks.join(old, Seq("file", "pos"), "left_anti")
-    val dvTmp = new Path(s"${Manifest.dvDir(dir, newVersion)}.tmp")
-    fsD.delete(dvTmp, true)
-    newMarks.repartition(col("file")).write.mode("overwrite")
-      .partitionBy("file").parquet(dvTmp.toString)
-    val added = parquetRowsUnder(spark, dvTmp)
-    val marked = oldCount + added
-    // the delta read back off its materialization — the CDC side
-    // below reuses it instead of recomputing the anti-join
-    val deltaMarks =
-      if (added == 0L) old.filter(lit(false))
-      else spark.read.parquet(dvTmp.toString)
-        .select(col("file").cast("string"), col("pos"))
     // stage the batch exactly like appendInPlace
-    val sample = legacy.headOption.orElse(head).toSeq
+    val sample = head.toSeq
     val partCols = partColsFor(spark, dir, sample)
     val (aligned, evolved) =
       alignForWrite(spark, dir, sample, batch, partCols)
@@ -1022,32 +984,19 @@ object Layout {
     val cdcIns = Manifest.currentVersion(spark, dir)
       .flatMap(Manifest.tableSchema(spark, dir, _))
       .map(Manifest.toLogicalKeeping(cdcIns0, _)).getOrElse(cdcIns0)
-    val cdcDel = matchedOpt match {
-      case None => cdcIns.filter(lit(false))
-        .withColumn("_change_type", lit("delete"))
-      case Some(m) => m
-        .join(broadcast(deltaMarks), m("_mk_f") === deltaMarks("file") &&
-          m("_mk_p") === deltaMarks("pos"), "left_semi")
-        .drop("_mk_f", "_mk_p")
-        .withColumn("_change_type", lit("delete"))
+    val marked = commitMarks(spark, dir, v, claim, marks, old, carried,
+        newEntries, totalRows, statCols, evolved, txnApp) { deltaMarks =>
+      val cdcDel = matchedOpt match {
+        case None => cdcIns.filter(lit(false))
+          .withColumn("_change_type", lit("delete"))
+        case Some(m) => m
+          .join(broadcast(deltaMarks), m("_mk_f") === deltaMarks("file") &&
+            m("_mk_p") === deltaMarks("pos"), "left_semi")
+          .drop("_mk_f", "_mk_p")
+          .withColumn("_change_type", lit("delete"))
+      }
+      cdcDel.unionByName(cdcIns, allowMissingColumns = true)
     }
-    Manifest.recordCdc(spark, dir, newVersion,
-      cdcDel.unionByName(cdcIns, allowMissingColumns = true))
-    // land the delta AFTER the CDC read of its tmp materialization,
-    // then stamp; a zero-mark commit installs no (empty) vector
-    Manifest.moveDvDelta(spark, dir, newVersion, dvTmp)
-    if (marked > 0) {
-      Manifest.stampDvFormat(spark, dir, newVersion)
-      Manifest.stampDvCount(spark, dir, newVersion, marked)
-    } else fsD.delete(dvNew, true): Unit
-    Manifest.writeChunked(spark, dir, newVersion, carried,
-      Seq(legacy, newEntries), claim = Some(claim), schema = evolved,
-      txnApp = txnApp)
-    // same auto-flush policy as deleteMergeOnRead
-    val flushRatio = spark.conf.getOption("spark.graft.dv.autoFlushRatio")
-      .map(_.toDouble).getOrElse(0.10)
-    if (flushRatio > 0 && totalRows > 0 && marked > flushRatio * totalRows)
-      flushDeleteVectors(spark, dir, statCols)
     (marked, stagedNames.size)
   }
 
@@ -1083,12 +1032,9 @@ object Layout {
     // entries transfer verbatim — only NAMES (for the scan) and the
     // row total (for the flush policy) ever reach the driver; a
     // chunked base commits O(#chunks) metadata however big the table
-    val (v, carried, legacy, _) =
+    val (v, carried, _) =
       Manifest.ensureVersionedDelta(spark, dir, statCols)
-    val newVersion = v + 1
-    val (names, totalRows) =
-      if (legacy.nonEmpty) (legacy.map(_.name), legacy.map(_.rows).sum)
-      else Manifest.namesAndRows(spark, dir, v)
+    val (names, totalRows) = Manifest.namesAndRows(spark, dir, v)
     val raw = Manifest.readPhysical(spark, dir,
         names.map(n => s"$dir/$n"))
       // materialize position metadata BEFORE any projection, then
@@ -1109,52 +1055,83 @@ object Layout {
     // claim the version BEFORE writing its vector: a lost commit race
     // must not leave an orphan dv-v{K} that the winner's snapshot
     // would appear to own
-    val claim = Manifest.claimVersion(spark, dir, newVersion)
-    // DELTA-CARRIED vector (round 20 — the appendAndDeleteKeys shape,
-    // see there): carry the old store by filesystem copy, write ONLY
-    // the newly-marked (file, pos) delta — which the old shape's full
-    // union-distinct rewrite AND its separate exceptAll CDC derivation
-    // each re-scanned the table for — and keep the cumulative count in
-    // the `_COUNT` sidecar. One table scan serves the delta write; the
-    // CDC side reads the delta's materialization back. The vector
-    // stays KEYED BY DATA FILE (Hive partitionBy) so a scan task loads
-    // exactly its own file's positions — O(own marks) per reader,
-    // never the whole table's vector through the driver.
+    val claim = Manifest.claimVersion(spark, dir, v + 1)
+    // entries transfer VERBATIM: the delete is pure metadata. The
+    // change record holds the NEWLY marked rows (marks already present
+    // in the previous vector were deleted by an earlier commit and
+    // must not restate) — read back by position from the raw scan
+    val marked = commitMarks(spark, dir, v, claim, marks, old, carried,
+        Nil, totalRows, statCols) { deltaMarks =>
+      raw
+        .join(broadcast(deltaMarks), raw("_mk_f") === deltaMarks("file") &&
+          raw("_mk_p") === deltaMarks("pos"), "left_semi")
+        .drop("_mk_f", "_mk_p")
+        .withColumn("_change_type", lit("delete"))
+    }
+    (marked, names.size)
+  }
+
+  /** The vector commit both marking verbs share ([[appendAndDeleteKeys]],
+    * [[deleteMergeOnReadWhere]]): version `v + 1`, under the caller's
+    * `claim`, gets `v`'s vector plus the newly-marked subset of
+    * `marks`, the change rows `cdcOf(delta)` builds, and a snapshot
+    * carrying `carried` plus `added` entries. Returns the cumulative
+    * mark count.
+    *
+    * DELTA-CARRIED vector (round 20): re-writing the ENTIRE cumulative
+    * mark set through a Spark job on every commit (union + distinct +
+    * Hive-partitioned write) and re-reading the old store for the
+    * pre-count, the exceptAll and the CDC side cost O(cumulative marks)
+    * per O(batch) commit — the dominant per-batch cost of the
+    * keep-best ingest loop by batch 3. Instead:
+    *   1. carry the old vector BYTE-IDENTICAL via filesystem copy —
+    *      the appendInPlace precedent (round 17), no Spark job;
+    *   2. write ONLY the new marks (anti-joined against `old`, so the
+    *      store stays duplicate-free) as a Hive-keyed delta, read it
+    *      back for the change record, then MOVE its parts into the
+    *      carried `file=` dirs (pure renames — part names are
+    *      write-unique);
+    *   3. cumulative count = the `_COUNT` sidecar + the delta count
+    *      off the delta's footers — zero count jobs (a pre-sidecar
+    *      store falls back to one count, then carries).
+    * The vector stays KEYED BY DATA FILE (Hive partitionBy) so a scan
+    * task loads exactly its own file's positions — O(own marks) per
+    * reader, never the whole table's vector through the driver.
+    */
+  private def commitMarks(spark: SparkSession, dir: String, v: Int,
+      claim: String, marks: DataFrame, old: DataFrame,
+      carried: Seq[Manifest.ChunkRef], added: Seq[ManifestEntry],
+      totalRows: Long, statCols: Seq[String],
+      schema: Option[StructType] = None,
+      txnApp: Option[(String, Long)] = None)(
+      cdcOf: DataFrame => DataFrame): Long = {
+    val newVersion = v + 1
     val dvNew = new Path(Manifest.dvDir(dir, newVersion))
-    val fsD = dvNew.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsD.delete(dvNew, true) // a crashed claim's orphan must not merge
+    val fs = dvNew.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(dvNew, true) // a crashed claim's orphan must not merge
     val oldCount =
-      if (!fsD.exists(new Path(Manifest.dvDir(dir, v)))) 0L
+      if (!fs.exists(new Path(Manifest.dvDir(dir, v)))) 0L
       else Manifest.dvCountOf(spark, dir, v).getOrElse(old.count())
     Manifest.copyDvDir(spark, dir, v, newVersion)
-    val newMarks = marks.join(old, Seq("file", "pos"), "left_anti")
     val dvTmp = new Path(s"${Manifest.dvDir(dir, newVersion)}.tmp")
-    fsD.delete(dvTmp, true)
-    newMarks.repartition(col("file")).write.mode("overwrite")
+    fs.delete(dvTmp, true)
+    marks.join(old, Seq("file", "pos"), "left_anti")
+      .repartition(col("file")).write.mode("overwrite")
       .partitionBy("file").parquet(dvTmp.toString)
-    val added = parquetRowsUnder(spark, dvTmp)
-    val marked = oldCount + added
+    val delta = parquetRowsUnder(spark, dvTmp)
+    val marked = oldCount + delta
     val deltaMarks =
-      if (added == 0L) old.filter(lit(false))
+      if (delta == 0L) old.filter(lit(false))
       else spark.read.parquet(dvTmp.toString)
         .select(col("file").cast("string"), col("pos"))
-    // change record: the NEWLY marked rows (marks already present in
-    // the previous vector were deleted by an earlier commit and must
-    // not restate) — read back by position from the raw scan
-    val cdcRows = raw
-      .join(broadcast(deltaMarks), raw("_mk_f") === deltaMarks("file") &&
-        raw("_mk_p") === deltaMarks("pos"), "left_semi")
-      .drop("_mk_f", "_mk_p")
-      .withColumn("_change_type", lit("delete"))
-    Manifest.recordCdc(spark, dir, newVersion, cdcRows)
+    Manifest.recordCdc(spark, dir, newVersion, cdcOf(deltaMarks))
+    // land the delta AFTER the CDC read of its tmp materialization,
+    // then stamp; a zero-mark commit installs no (empty) vector
     Manifest.moveDvDelta(spark, dir, newVersion, dvTmp)
-    if (marked > 0) {
-      Manifest.stampDvFormat(spark, dir, newVersion)
-      Manifest.stampDvCount(spark, dir, newVersion, marked)
-    } else fsD.delete(dvNew, true): Unit
-    // entries transfer VERBATIM: the delete is pure metadata
-    Manifest.writeChunked(spark, dir, newVersion, carried, Seq(legacy),
-      claim = Some(claim))
+    if (marked > 0) Manifest.stampDvCount(spark, dir, newVersion, marked)
+    else fs.delete(dvNew, true): Unit
+    Manifest.writeChunked(spark, dir, newVersion, carried, Seq(added),
+      claim = Some(claim), schema = schema, txnApp = txnApp)
     // AUTO-FLUSH policy: past a marks-to-rows ratio the per-read
     // skip/anti-join work outweighs rewriting the marked files, and
     // an unbounded vector is exactly what makes any DV read path
@@ -1166,7 +1143,7 @@ object Layout {
       .map(_.toDouble).getOrElse(0.10)
     if (flushRatio > 0 && totalRows > 0 && marked > flushRatio * totalRows)
       flushDeleteVectors(spark, dir, statCols)
-    (marked, names.size)
+    marked
   }
 
   /** Materialize a table's deletion vectors: rewrite ONLY the files
@@ -1182,14 +1159,9 @@ object Layout {
     val v = Manifest.currentVersion(spark, dir).getOrElse(return 0)
     val fs = new Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(Manifest.dvDir(dir, v)))) {
-      // no vector is only a no-op when no torn migrateDvKeys swap is
-      // pending — flushing "nothing" over that state would bless it
-      Manifest.requireNoTornDvMigration(spark, dir, v)
-      return 0
-    }
+    if (!fs.exists(new Path(Manifest.dvDir(dir, v)))) return 0
     val entries = Manifest.read(spark, dir).get
-    val dv = Manifest.dvMarks(spark, dir, v) // key-format gated
+    val dv = Manifest.dvMarks(spark, dir, v)
     val markedFiles = dv.select("file").distinct()
       .collect().map(_.getString(0)).toSet
     val (hit, kept) = entries.partition(e =>
@@ -1261,13 +1233,12 @@ object Layout {
     if (isReplay(spark, dir, txn, txnApp)) return 0
     // DELTA commit: the base snapshot's chunk list is carried by
     // reference and only the new entries are written — appending to a
-    // million-file table costs O(batch) metadata, not O(table). An
-    // inline (legacy) base hands its entries over once as a migration
-    // chunk; alignment only ever needs one sample entry.
-    val (v, carried, legacy, head) =
+    // million-file table costs O(batch) metadata, not O(table);
+    // alignment only ever needs one sample entry.
+    val (v, carried, head) =
       Manifest.ensureVersionedDelta(spark, dir, statCols)
     val newVersion = v + 1
-    val sample = legacy.headOption.orElse(head).toSeq
+    val sample = head.toSeq
     val partCols = partColsFor(spark, dir, sample)
     val (aligned, evolved) =
       alignForWrite(spark, dir, sample, batch, partCols)
@@ -1288,7 +1259,7 @@ object Layout {
         Some(c)
       }
     Manifest.writeChunked(spark, dir, newVersion, carried,
-      Seq(legacy, newEntries), txn, claim = claim,
+      Seq(newEntries), txn, claim = claim,
       schema = evolved, txnApp = txnApp, meta = meta,
       metaDelta = metaDelta)
     newEntries.size
@@ -1347,7 +1318,7 @@ object Layout {
     }
     // DELTA commit, like appendInPlace: carried chunks by reference,
     // O(epoch batch) metadata per streaming commit
-    val (curV, carried, legacy, _) =
+    val (curV, carried, _) =
       Manifest.ensureVersionedDelta(spark, dir, statCols)
     val newVersion = curV + 1
     // claim BEFORE landing files: two concurrent epoch commits (the
@@ -1376,8 +1347,7 @@ object Layout {
       if (Manifest.hasDeletionVectors(spark, dir))
         Manifest.copyDvDir(spark, dir, newVersion - 1, newVersion)
       Manifest.writeChunked(spark, dir, newVersion, carried,
-        Seq(legacy, newEntries), txn, claim = Some(claim),
-        txnApp = txnApp)
+        Seq(newEntries), txn, claim = Some(claim), txnApp = txnApp)
       newEntries.size
     } catch { case e: Throwable =>
       // Spark does not call abort() after a failed driver commit —
@@ -1769,11 +1739,9 @@ object Layout {
     // delta-aware: only file NAMES reach the driver (the scan needs
     // them regardless); the commit removes affected entries from a
     // chunked base by anti-join and never restates the full list
-    val (curV, carried, legacy, _) =
+    val (curV, carried, _) =
       Manifest.ensureVersionedDelta(spark, dir, statCols)
-    val allNames =
-      if (legacy.nonEmpty) legacy.map(_.name)
-      else Manifest.namesAndRows(spark, dir, curV)._1
+    val allNames = Manifest.namesAndRows(spark, dir, curV)._1
     val paths = allNames.map(n => s"$dir/$n")
     // phase 1: affected files via pushed-predicate scan over the
     // manifest's file list; collect bounded by #files, never rows.
@@ -1817,13 +1785,8 @@ object Layout {
         Manifest.readTable(spark, dir).filter(lit(false))
       else hitRead.filter(coalesce(pred, lit(false))))
         .withColumn("_change_type", lit("delete")))
-    if (legacy.nonEmpty)
-      Manifest.write(spark, dir,
-        (legacy.filterNot(e => affected.contains(e.name)) ++ deltaEntries)
-          .sortBy(_.name), newVersion, claim = Some(claim))
-    else
-      Manifest.writeChunkedDelta(spark, dir, newVersion, carried,
-        affected, Seq(deltaEntries), claim = Some(claim))
+    Manifest.writeChunkedDelta(spark, dir, newVersion, carried,
+      affected, Seq(deltaEntries), claim = Some(claim))
     (hitNames.size, allNames.size)
   }
 
@@ -1997,7 +1960,6 @@ object Layout {
     if (nCarried > 0) {
       carried.repartition(col("file")).write.mode("overwrite")
         .partitionBy("file").parquet(Manifest.dvDir(dir, newVersion))
-      Manifest.stampDvFormat(spark, dir, newVersion)
       Manifest.stampDvCount(spark, dir, newVersion, nCarried)
     }
     carried.unpersist()
@@ -2017,7 +1979,7 @@ object Layout {
     *    same partition segments; recorded stats stay exact);
     *  - live deletion vectors copy into the clone's v1 vector (marks
     *    key on table-root-relative file names, which the copy
-    *    preserves — the format marker rides along in the recursive
+    *    preserves — the `_COUNT` sidecar rides along in the recursive
     *    copy);
     *  - the recorded schema carries, so evolution state survives.
     *

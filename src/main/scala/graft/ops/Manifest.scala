@@ -31,9 +31,16 @@ case class ManifestEntry(name: String, rows: Long, bytes: Long,
   * and a delete/compact commit is a metadata swap, not a tree walk.
   *
   * Layout on disk, under `<table>/_manifest/`:
-  *   - `v<K>/` — a Spark-written JSONL snapshot of [[ManifestEntry]]s,
-  *     plus `_schema.json` (the table schema AS OF that version — the
-  *     add-column evolution record) and Spark's `_SUCCESS` marker
+  *   - `v<K>/` — one snapshot: `_chunks.json` (the ordered list of
+  *     chunk files holding its [[ManifestEntry]]s), `_schema.json`
+  *     (the table schema AS OF that version — the add-column evolution
+  *     record), `_meta.props` (owner-maintained counters, when set)
+  *     and a `_SUCCESS` marker
+  *   - `chunks/` — the immutable JSONL chunk files, shared by
+  *     reference across the snapshots that carry them
+  *   - `dv-v<K>/` — the version's deletion vector, when it has one:
+  *     `file=<key>/` parquet parts of row positions per data file plus
+  *     a `_COUNT` sidecar ([[dvDir]])
   *   - `CURRENT` — a one-line pointer file naming the live version
   *
   * Commit protocol (crash-safe AND race-safe):
@@ -209,18 +216,18 @@ object Manifest {
 
   // ── Chunked snapshots (manifest-list indirection) ──────────────────
   //
-  // An INLINE snapshot (the original format) serializes the complete
-  // entry list into v<K> on every commit — O(#files) metadata write
-  // per commit, which at 100 TB (1e5-1e6 files) makes every append pay
-  // for the whole table. A CHUNKED snapshot instead stores `_chunks.json`
-  // in v<K>: an ordered list of immutable chunk files under
-  // `_manifest/chunks/`, each holding a slice of the entry list. An
-  // append commit then writes ONE new chunk (O(delta) rows) and carries
-  // every previous chunk by reference — flat commit latency regardless
-  // of table size (the Iceberg manifest-list design, reduced to its
-  // essence). Readers see both formats transparently; planning reads
-  // chunks as a distributed DataFrame ([[entriesDF]]), never funneling
-  // the file list through the driver unless a caller asks for Seq.
+  // Every snapshot stores `_chunks.json` in v<K>: an ordered list of
+  // immutable chunk files under `_manifest/chunks/`, each holding a
+  // slice of the entry list. Serializing the complete list into v<K>
+  // would make every commit an O(#files) metadata write — at 100 TB
+  // (1e5-1e6 files) every append would pay for the whole table. With
+  // chunks an append commit writes ONE new chunk (O(delta) rows) and
+  // carries every previous chunk by reference — flat commit latency
+  // regardless of table size (the Iceberg manifest-list design,
+  // reduced to its essence); a full-list commit ([[write]]) lands its
+  // list as fresh chunks. Planning reads chunks as a distributed
+  // DataFrame ([[entriesDF]]), never funneling the file list through
+  // the driver unless a caller asks for Seq.
 
   val ChunksDir = "chunks"
   val ChunksFile = "_chunks.json"
@@ -313,41 +320,25 @@ object Manifest {
       "65536").toLong
 
   /** Driver-side read of a snapshot's full entry list — None when the
-    * snapshot is missing, too large for the gate, or inline-legacy
-    * with oversized files (callers fall back to [[entriesDF]]).
+    * snapshot is missing or too large for the gate (callers fall back
+    * to [[entriesDF]]).
     */
   private def entriesLocal(spark: SparkSession, dir: String,
       version: Int): Option[Seq[ManifestEntry]] = {
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(new Path(s"$dir/$DirName/v$version"))) return None
+    val refs = chunkRefs(spark, dir, version).getOrElse(return None)
     val gate = localReadGate(spark)
+    if (refs.map(_.n).sum > gate) return None
+    val fs = fsOf(spark, dir)
+    val paths = refs.map(r => new Path(s"$dir/$DirName/${r.path}"))
     // byte form of the entry gate (~256 B/entry upper bound): the
-    // default 64k entries ⇒ 16 MB. Both paths honor the CONFIGURED
-    // gate (round-19 advisor): the legacy path used a hard-coded
-    // 16 MB that ignored a lowered localReadEntries, and the chunked
-    // path trusted ref counts that are APPROXIMATE for chunks landed
-    // by the old distributed landChunk (n/parts, min 1) — so a large
-    // snapshot could land on the driver past the operator's limit.
-    val byteGate = gate * 256L
-    val files: Seq[Path] = chunkRefs(spark, dir, version) match {
-      case Some(refs) =>
-        if (refs.map(_.n).sum > gate) return None
-        val paths = refs.map(r => new Path(s"$dir/$DirName/${r.path}"))
-        // approximate-ref backstop: also gate on actual chunk bytes
-        if (paths.map(p => fs.getFileStatus(p).getLen).sum > byteGate)
-          return None
-        paths
-      case None =>
-        // inline legacy snapshot: JSONL part files inside v<K>
-        val parts = fs.listStatus(new Path(s"$dir/$DirName/v$version"))
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".json")
-            && !st.getPath.getName.startsWith("_"))
-        if (parts.isEmpty || parts.map(_.getLen).sum > byteGate)
-          return None
-        parts.map(_.getPath).toSeq
-    }
+    // default 64k entries ⇒ 16 MB. Ref counts are APPROXIMATE for
+    // chunks landed by the distributed landChunk (n/parts, min 1), so
+    // the configured gate also bounds the actual chunk bytes — a large
+    // snapshot never lands on the driver past the operator's limit.
+    if (paths.map(p => fs.getFileStatus(p).getLen).sum > gate * 256L)
+      return None
     val out = Seq.newBuilder[ManifestEntry]
-    files.foreach { p =>
+    paths.foreach { p =>
       readSmallFile(spark, dir, p).foreach(_.split('\n').iterator
         .map(_.trim).filter(_.nonEmpty)
         .foreach(l => out += parseEntryLine(l)))
@@ -355,46 +346,48 @@ object Manifest {
     Some(out.result())
   }
 
-  /** The chunk list of a snapshot — None for inline (legacy) and
-    * missing snapshots.
+  /** The chunk list of a snapshot — None for a missing snapshot. A
+    * `v<K>` directory without `_chunks.json` is not a snapshot this
+    * format can read: it fails loudly rather than reading as an empty
+    * table.
     */
   def chunkRefs(spark: SparkSession, dir: String,
-      version: Int): Option[Seq[ChunkRef]] =
-    readSmallFile(spark, dir,
-      new Path(s"$dir/$DirName/v$version/$ChunksFile")).map {
-      _.split('\n').iterator.map(_.trim).filter(_.nonEmpty).map { l =>
-        // fixed two-field shape, written by writeChunked below — no
-        // general JSON parse needed (paths are our own safe names)
-        val m = """\{"path":"([^"]+)","n":(-?\d+)\}""".r
-        l match {
-          case m(p, n) => ChunkRef(p, n.toLong)
-          case _ => throw new IllegalStateException(
-            s"malformed chunk ref in v$version of $dir: $l")
-        }
-      }.toSeq
+      version: Int): Option[Seq[ChunkRef]] = {
+    val snap = s"$dir/$DirName/v$version"
+    readSmallFile(spark, dir, new Path(s"$snap/$ChunksFile")) match {
+      case Some(text) => Some(text.split('\n').iterator.map(_.trim)
+        .filter(_.nonEmpty).map { l =>
+          // fixed two-field shape, written by writeChunked below — no
+          // general JSON parse needed (paths are our own safe names)
+          val m = """\{"path":"([^"]+)","n":(-?\d+)\}""".r
+          l match {
+            case m(p, n) => ChunkRef(p, n.toLong)
+            case _ => throw new IllegalStateException(
+              s"malformed chunk ref in v$version of $dir: $l")
+          }
+        }.toSeq)
+      case None if fsOf(spark, dir).exists(new Path(snap)) =>
+        throw new IllegalStateException(
+          s"snapshot $snap has no $ChunksFile — not a chunked snapshot, " +
+            "the only format this engine reads")
+      case None => None
     }
+  }
 
   /** The snapshot's entry list as a DataFrame (schema =
-    * [[ManifestEntry]]) — chunked snapshots read their chunk files
-    * distributed; inline snapshots read the snapshot dir. This is the
-    * planning surface: filter/join against it and collect only the
-    * survivors, never the whole list.
+    * [[ManifestEntry]]), read distributed over its chunk files. This
+    * is the planning surface: filter/join against it and collect only
+    * the survivors, never the whole list.
     */
   def entriesDF(spark: SparkSession, dir: String,
-      version: Int): Option[DataFrame] = {
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(new Path(s"$dir/$DirName/v$version"))) None
-    else Some(chunkRefs(spark, dir, version) match {
-      case Some(refs) if refs.isEmpty =>
+      version: Int): Option[DataFrame] =
+    chunkRefs(spark, dir, version).map { refs =>
+      if (refs.isEmpty)
         spark.createDataset(Seq.empty[ManifestEntry])(
           Encoders.product[ManifestEntry]).toDF()
-      case Some(refs) =>
-        spark.read.schema(entrySchema)
-          .json(refs.map(r => s"$dir/$DirName/${r.path}"): _*)
-      case None =>
-        spark.read.schema(entrySchema).json(s"$dir/$DirName/v$version")
-    })
-  }
+      else spark.read.schema(entrySchema)
+        .json(refs.map(r => s"$dir/$DirName/${r.path}"): _*)
+    }
 
   /** Commit `version` as a CHUNKED snapshot: `carried` chunk files are
     * referenced verbatim (never read, never rewritten); each non-empty
@@ -568,45 +561,37 @@ object Manifest {
   /** [[ensureVersioned]] for DELTA commits: pins the version and hands
     * back what an O(delta) append actually needs — the carried chunk
     * refs and ONE sample entry — without materializing the file list.
-    * An inline (legacy) base returns its full entry list once as a
-    * migration payload; the caller commits it as the first carried
-    * chunk and every later append is O(delta).
+    * A directory with no manifest yet gets one ([[create]]) first.
     */
   def ensureVersionedDelta(spark: SparkSession, dir: String,
-      statCols: Seq[String]): (Int, Seq[ChunkRef], Seq[ManifestEntry],
-        Option[ManifestEntry]) =
-    currentVersion(spark, dir) match {
-      case Some(v) => chunkRefs(spark, dir, v) match {
-        case Some(refs) =>
-          // the sample entry (partition layout + schema alignment)
-          // only needs ONE row: the first line of the first chunk,
-          // read on the driver — the old limit(1) collect was a Spark
-          // job on EVERY delta append (round 19)
-          val head = refs.headOption.flatMap { r =>
-            val fs = fsOf(spark, dir)
-            val p = new Path(s"$dir/$DirName/${r.path}")
-            if (!fs.exists(p)) None
-            else {
-              val in = fs.open(p)
-              try {
-                val br = new java.io.BufferedReader(
-                  new java.io.InputStreamReader(in, "UTF-8"))
-                Option(br.readLine()).map(_.trim).filter(_.nonEmpty)
-                  .map(parseEntryLine)
-              } finally in.close()
-            }
-          }
-          (v, refs, Nil, head)
-        case None =>
-          val es = readVersion(spark, dir, v).getOrElse(
-            throw new IllegalStateException(
-              s"CURRENT of $dir points at missing snapshot v$v"))
-          (v, Nil, es, es.headOption)
-      }
-      case None =>
-        val es = create(spark, dir, statCols)
-        (currentVersion(spark, dir).getOrElse(1), Nil, es, es.headOption)
+      statCols: Seq[String]): (Int, Seq[ChunkRef], Option[ManifestEntry]) = {
+    val v = currentVersion(spark, dir).getOrElse {
+      create(spark, dir, statCols)
+      currentVersion(spark, dir).getOrElse(1)
     }
+    val refs = chunkRefs(spark, dir, v).getOrElse(
+      throw new IllegalStateException(
+        s"CURRENT of $dir points at missing snapshot v$v"))
+    // the sample entry (partition layout + schema alignment) only
+    // needs ONE row: the first line of the first chunk, read on the
+    // driver — the old limit(1) collect was a Spark job on EVERY delta
+    // append (round 19)
+    val head = refs.headOption.flatMap { r =>
+      val fs = fsOf(spark, dir)
+      val p = new Path(s"$dir/$DirName/${r.path}")
+      if (!fs.exists(p)) None
+      else {
+        val in = fs.open(p)
+        try {
+          val br = new java.io.BufferedReader(
+            new java.io.InputStreamReader(in, "UTF-8"))
+          Option(br.readLine()).map(_.trim).filter(_.nonEmpty)
+            .map(parseEntryLine)
+        } finally in.close()
+      }
+    }
+    (v, refs, head)
+  }
 
   /** The table schema AS OF `version` — recorded by every commit since
     * schema tracking landed ([[write]] stages `_schema.json` inside
@@ -706,13 +691,14 @@ object Manifest {
     id
   }
 
-  /** Commit `entries` as version `version`: claim lease (unless the
-    * caller passes its own `claim` id), stage the snapshot (with
-    * `schema`, or the previous version's schema carried forward) into
-    * a hidden dir, rename it to `v<K>` — the atomic arbiter that makes
-    * lost updates impossible even across lease takeovers — and flip
-    * the CURRENT pointer last (readers only ever see complete
-    * snapshots).
+  /** Commit the full entry list `entries` as version `version`: the
+    * list lands as fresh chunk(s) of a snapshot that carries nothing
+    * ([[writeChunked]]) — claim lease (unless the caller passes its
+    * own `claim` id), stage the snapshot (with `schema`, or the
+    * previous version's schema carried forward) into a hidden dir,
+    * rename it to `v<K>` — the atomic arbiter that makes lost updates
+    * impossible even across lease takeovers — and flip the CURRENT
+    * pointer last (readers only ever see complete snapshots).
     */
   def write(spark: SparkSession, dir: String, entries: Seq[ManifestEntry],
       version: Int, txn: Option[Long] = None,
@@ -721,28 +707,13 @@ object Manifest {
       leaseMs: Long = DefaultLeaseMs,
       txnApp: Option[(String, Long)] = None,
       meta: Option[Map[String, Long]] = None,
-      metaDelta: () => Option[Map[String, Long]] = () => None): Unit = {
-    val id = claim.getOrElse(claimVersion(spark, dir, version, leaseMs))
-    val stage = s"$dir/$DirName/.stage-v$version-$id"
-    // the entry list is driver-resident: write the snapshot JSONL
-    // directly (round 19 — the createDataset + coalesce(1) write was
-    // one Spark job per inline commit, pure serialization)
-    val fs = fsOf(spark, dir)
-    fs.mkdirs(new Path(stage))
-    val out = fs.create(new Path(s"$stage/entries.json"), true)
-    try out.write(entries.map(e => entryJsonLine(e) + "\n")
-      .mkString.getBytes("UTF-8"))
-    finally out.close()
-    // the Spark writer used to land this implicitly; claimVersion's
-    // already-committed probe reads it
-    fs.create(new Path(s"$stage/_SUCCESS"), true).close()
-    commitStage(spark, dir, version, id, stage, txn, schema, txnApp,
-      meta, metaDelta)
-  }
+      metaDelta: () => Option[Map[String, Long]] = () => None): Unit =
+    writeChunked(spark, dir, version, Nil, Seq(entries), txn, claim,
+      schema, leaseMs, txnApp, meta, metaDelta)
 
-  /** Shared commit tail of [[write]] and [[writeChunked]]: carry the
-    * txn watermarks and schema forward, land `_schema.json` in the
-    * staged snapshot, run the rename arbiter, flip the pointer.
+  /** Commit tail of [[writeChunked]]: carry the txn watermarks and
+    * schema forward, land `_schema.json` in the staged snapshot, run
+    * the rename arbiter, flip the pointer.
     */
   private def commitStage(spark: SparkSession, dir: String, version: Int,
       id: String, stage: String, txn: Option[Long],
@@ -1104,37 +1075,32 @@ object Manifest {
       col(physNameOf(f)).as(f.name, f.metadata)): _*)
 
   /** Deletion-vector directory of a snapshot version: a tiny parquet
-    * set of (file basename, row position) pairs marking rows deleted
+    * set of (file, row position) pairs marking rows deleted
     * MERGE-ON-READ — the write-cheap delete path (Delta DVs / Iceberg
     * position deletes): marking costs O(matches) metadata, no data
-    * file is rewritten, and readers subtract the positions. Basenames
-    * suffice as file keys: every writer in this layer names files with
-    * UUID part-names (plus unique verb prefixes).
+    * file is rewritten, and readers subtract the positions. The marks
+    * are Hive-keyed by data file (`file=<key>/` parts, the key being
+    * the file's TABLE-ROOT-RELATIVE name — [[dvFileKey]]), and a
+    * `_COUNT` sidecar carries the cumulative mark count.
     */
   def dvDir(dir: String, version: Int): String =
     s"$dir/$DirName/dv-v$version"
 
   def hasDeletionVectors(spark: SparkSession, dir: String): Boolean =
-    currentVersion(spark, dir).exists { v =>
-      val has = fsOf(spark, dir).exists(new Path(dvDir(dir, v)))
-      // a missing vector is only "no deletes" when no torn migration
-      // aside copy exists — otherwise an append here would commit a
-      // vector-less snapshot and make the resurrection PERMANENT
-      if (!has) requireNoTornDvMigration(spark, dir, v)
-      has
-    }
+    currentVersion(spark, dir).exists(v =>
+      fsOf(spark, dir).exists(new Path(dvDir(dir, v))))
 
   /** DV file key of a scanned row: the data file's TABLE-ROOT-RELATIVE
     * name — the last `depth + 1` components of the scan's
     * `_metadata.file_path`, where `depth` is the table's
     * partition-directory depth ([[dvDepth]]). The relative name IS the
-    * manifest entry name, unique by construction. Keying by BASENAME
-    * (the pre-round-17 form) is only unique for unpartitioned tables:
-    * Hive layouts repeat basenames across partition directories
+    * manifest entry name, unique by construction. A BASENAME key is
+    * only unique for unpartitioned tables: Hive layouts repeat
+    * basenames across partition directories
     * (`bucket=1/append-v2-t-0.parquet` and `bucket=2/append-v2-t-0
-    * .parquet`), so a basename-keyed vector silently deleted
-    * same-position rows in EVERY sibling partition — the round-17
-    * over-deletion fix, caught by the keep-best/BM25 composition spec.
+    * .parquet`), so a basename-keyed vector would delete same-position
+    * rows in EVERY sibling partition — the round-17 over-deletion fix,
+    * caught by the keep-best/BM25 composition spec.
     */
   def dvFileKey(depth: Int): Column =
     array_join(slice(split(col("_metadata.file_path"), "/"),
@@ -1142,8 +1108,7 @@ object Manifest {
 
   /** Partition-directory depth of a table, from its entry names
     * (uniform across a Hive layout; 0 = unpartitioned, where the key
-    * degenerates to the basename — the old format, so unpartitioned
-    * tables' vectors stay compatible).
+    * is the basename).
     */
   def dvDepth(names: Seq[String]): Int =
     names.headOption.map(_.count(_ == '/')).getOrElse(0)
@@ -1161,30 +1126,6 @@ object Manifest {
       org.apache.hadoop.fs.FileUtil.copy(fs, src,
         fs, new Path(dvDir(dir, to)), false, true,
         spark.sparkContext.hadoopConfiguration): Unit
-  }
-
-  /** Key-format marker every deletion-vector write stamps inside
-    * dv-v{K} (round-17 advisor): the r17 basename→root-relative rekey
-    * changed what the `file` column MEANS, and a pre-r17 vector on a
-    * partitioned table would silently match nothing in the subtract
-    * joins — previously deleted rows resurrecting instead of erroring.
-    * The marker makes the format self-describing: readers fail loudly
-    * on a legacy vector over a partitioned table (pointing at
-    * [[migrateDvKeys]]) instead of resurrecting. The underscore name
-    * is invisible to parquet directory reads, and [[copyDvDir]] /
-    * [[graft.ops.Layout.cloneTable]] carry it verbatim (recursive
-    * copies). Unpartitioned tables need no marker — there the relative
-    * name IS the basename, so both formats coincide.
-    */
-  val DvFormatFile = "_KEYFMT"
-  val DvFormatRel = "rel-v2"
-
-  private[graft] def stampDvFormat(spark: SparkSession, dir: String,
-      version: Int): Unit = {
-    val fs = fsOf(spark, dir)
-    val out = fs.create(
-      new Path(s"${dvDir(dir, version)}/$DvFormatFile"), true)
-    try out.write(s"$DvFormatRel\n".getBytes("UTF-8")) finally out.close()
   }
 
   /** Cumulative mark count of a vector, carried as a `_COUNT` sidecar
@@ -1239,160 +1180,21 @@ object Manifest {
     }
   }
 
-  private def dvFormatOf(spark: SparkSession, dir: String,
-      version: Int): Option[String] =
-    readSmallFile(spark, dir,
-      new Path(s"${dvDir(dir, version)}/$DvFormatFile"))
-
-  /** Fail loudly when `version`'s vector predates root-relative keys
-    * AND the table is partitioned — the silent-resurrection case. The
-    * partitioned check reads ONE entry name, and only on the
-    * marker-missing path (every post-r18 vector carries the marker).
-    */
-  private def requireDvKeyFormat(spark: SparkSession, dir: String,
-      version: Int): Unit =
-    if (!dvFormatOf(spark, dir, version).contains(DvFormatRel)) {
-      val depth = entriesDF(spark, dir, version)
-        .flatMap(_.select("name").limit(1).collect().headOption)
-        .map(_.getString(0).count(_ == '/')).getOrElse(0)
-      if (depth > 0) throw new IllegalStateException(
-        s"deletion vector ${dvDir(dir, version)} has no $DvFormatFile " +
-          "marker: it was written before DV keys became table-root-" +
-          "relative, and on a PARTITIONED table its basename keys " +
-          "would silently match nothing (deleted rows resurrecting). " +
-          "Run graft.ops.Manifest.migrateDvKeys(spark, dir) once in a " +
-          "single-writer maintenance window to rewrite the keys, or " +
-          "Layout.flushDeleteVectors on a pre-r17 engine build.")
-    }
-
   /** The deletion-vector marks of `version` as a (file, pos) DataFrame
     * — empty (not missing) when the version has no vector. `file` is
-    * the table-root-relative data-file name ([[dvFileKey]]); the
-    * key-format gate ([[requireDvKeyFormat]]) runs here, so EVERY
-    * consumer of marks — subtract joins, compaction, replace-commit
-    * carry, CDC diffs — refuses a legacy-keyed vector on a
-    * partitioned table instead of silently resurrecting rows.
+    * the table-root-relative data-file name ([[dvFileKey]]).
     */
   def dvMarks(spark: SparkSession, dir: String, version: Int): DataFrame =
-    if (fsOf(spark, dir).exists(new Path(dvDir(dir, version)))) {
-      requireDvKeyFormat(spark, dir, version)
+    if (fsOf(spark, dir).exists(new Path(dvDir(dir, version))))
       // the store is Hive-keyed by `file` (per-file reader loads), so
       // a discovery read yields (pos, file); pin the canonical
       // (file, pos) order — consumers run POSITIONAL algebra on this
       spark.read.parquet(dvDir(dir, version))
         .select(col("file").cast("string"), col("pos"))
-    } else {
-      requireNoTornDvMigration(spark, dir, version)
+    else
       spark.emptyDataFrame
         .withColumn("file", lit("")).withColumn("pos", lit(0L))
         .filter(lit(false))
-    }
-
-  /** The migration's aside copy of the legacy vector ([[migrateDvKeys]]):
-    * the old dv-v{K} is RENAMED here before the rewritten one renames
-    * into place, so no crash window ever leaves the table with no
-    * vector at all (a missing dv dir reads as "no deletes" — the
-    * silent-resurrection failure the _KEYFMT marker exists to prevent).
-    */
-  private[graft] def dvAsidePath(dir: String, version: Int): Path =
-    new Path(s"$dir/$DirName/.dvmig-old-v$version")
-
-  /** Fail loudly when dv-v{K} is MISSING but the migration's aside copy
-    * exists: a [[migrateDvKeys]] run crashed between renaming the old
-    * vector aside and renaming the rewritten one into place. Treating
-    * that state as "no deletes" would resurrect every deleted row;
-    * re-running migrateDvKeys heals it (restores the aside copy and
-    * redoes the rewrite). One FS existence check, only on the
-    * dv-missing path.
-    */
-  private[graft] def requireNoTornDvMigration(spark: SparkSession,
-      dir: String, version: Int): Unit =
-    if (fsOf(spark, dir).exists(dvAsidePath(dir, version)))
-      throw new IllegalStateException(
-        s"deletion vector ${dvDir(dir, version)} is missing but the " +
-          s"migration aside copy ${dvAsidePath(dir, version)} exists: " +
-          "a migrateDvKeys run crashed mid-swap. Reading this state as " +
-          "'no deletes' would resurrect deleted rows — re-run " +
-          "graft.ops.Manifest.migrateDvKeys(spark, dir) to heal it.")
-
-  /** One-time key migration for a PRE-r17 deletion vector on a
-    * partitioned table: rewrite the current version's marks from
-    * basename keys to table-root-relative keys by resolving each
-    * basename against the snapshot's entry names. A basename matching
-    * MORE than one entry is the unrecoverable case (the old writer's
-    * bug made such marks ambiguous — which sibling was meant is not
-    * recorded): the migration fails loudly rather than guess.
-    * Maintenance verb — single-writer window; the rewrite lands in a
-    * temp dir and swaps in via rename-aside → rename-in → stamp →
-    * delete-aside, so EVERY crash window leaves either the legacy
-    * vector, the aside copy (restored on re-run), or the migrated
-    * vector — never an absent one (round-18 advisor).
-    */
-  def migrateDvKeys(spark: SparkSession, dir: String): Long = {
-    val v = currentVersion(spark, dir).getOrElse(
-      sys.error(s"$dir has no manifest — nothing to migrate"))
-    val fs = fsOf(spark, dir)
-    val dvp = new Path(dvDir(dir, v))
-    val aside = dvAsidePath(dir, v)
-    // heal a torn prior run: the swap crashed after renaming the old
-    // vector aside but before the rewrite landed — restore the legacy
-    // vector and redo the whole migration from it
-    if (!fs.exists(dvp) && fs.exists(aside))
-      require(fs.rename(aside, dvp),
-        s"failed to restore aside vector $aside to $dvp")
-    if (!fs.exists(dvp)) return 0L
-    if (dvFormatOf(spark, dir, v).contains(DvFormatRel)) {
-      // completed swap whose final delete-aside didn't run: reclaim
-      if (fs.exists(aside)) fs.delete(aside, true): Unit
-      return 0L
-    }
-    // a prior run that crashed after rename-in but before stamping
-    // left both dirs: dvp (migrated or legacy, re-migrating either is
-    // idempotent) is authoritative; drop the stale aside so the
-    // rename below has a clear destination
-    if (fs.exists(aside)) fs.delete(aside, true): Unit
-    // distributed rewrite — a vector can be up to the auto-flush ratio
-    // of the TABLE's rows, so the marks never transit the driver; only
-    // the (small) resolution-failure diagnostics collect
-    val entryNames = entriesDF(spark, dir, v).map(
-      _.select(col("name"))
-        .withColumn("base", element_at(split(col("name"), "/"), -1)))
-      .getOrElse(return 0L)
-    val marks = spark.read.parquet(dvDir(dir, v))
-      .select(col("file").cast("string"), col("pos"))
-    val legacy = marks.filter(!col("file").contains("/"))
-      .withColumnRenamed("file", "base")
-    val resolved = legacy.join(broadcast(entryNames), Seq("base"))
-    val bad = resolved.groupBy("base", "pos")
-      .agg(count(lit(1)).as("n")).filter(col("n") > 1)
-      .select("base").distinct().limit(5).collect().map(_.getString(0))
-    if (bad.nonEmpty) sys.error(
-      s"DV keys ${bad.mkString(", ")} of $dir are ambiguous across " +
-        "sibling partition directories — the legacy basename keying " +
-        "did not record which sibling was meant; restore from a " +
-        "pre-r17 engine (flushDeleteVectors there) instead")
-    val unmatched = legacy.join(broadcast(entryNames), Seq("base"),
-      "left_anti").select("base").distinct().limit(5).collect()
-      .map(_.getString(0))
-    if (unmatched.nonEmpty) sys.error(
-      s"DV keys ${unmatched.mkString(", ")} match no entry of $dir " +
-        s"v$v — vector and snapshot are inconsistent")
-    val migrated = marks.filter(col("file").contains("/"))
-      .unionByName(resolved.select(col("name").as("file"), col("pos")))
-      .cache()
-    val n = migrated.count()
-    val tmp = new Path(s"$dir/$DirName/.dvmig-v$v")
-    migrated.repartition(col("file")).write.mode("overwrite")
-      .partitionBy("file").parquet(tmp.toString)
-    migrated.unpersist()
-    require(fs.rename(dvp, aside),
-      s"failed to move legacy vector $dvp aside to $aside")
-    require(fs.rename(tmp, dvp), s"migrated vector failed to land at $dvp")
-    stampDvFormat(spark, dir, v)
-    stampDvCount(spark, dir, v, n)
-    fs.delete(aside, true): Unit
-    n
-  }
 
   /** Subtract `version`'s deletion vector (if any) from a read over
     * this table's files — the broadcast anti-join every read path that
@@ -1404,18 +1206,14 @@ object Manifest {
     version.filter(v =>
         fsOf(spark, dir).exists(new Path(dvDir(dir, v)))) match {
       case Some(v) =>
-        val marks = dvMarks(spark, dir, v) // key-format gated
+        val marks = dvMarks(spark, dir, v)
         base
           .withColumn("_dv_f", dvFileKey(depth))
           .withColumn("_dv_p", col("_metadata.row_index"))
           .join(broadcast(marks), col("_dv_f") === marks("file") &&
             col("_dv_p") === marks("pos"), "left_anti")
           .drop("_dv_f", "_dv_p")
-      case None =>
-        // missing vector: reject the torn-migration state rather than
-        // read it as "no deletes" (rows would silently resurrect)
-        version.foreach(requireNoTornDvMigration(spark, dir, _))
-        base
+      case None => base
     }
 
   /** An empty DataFrame with the table's schema as of `version` —

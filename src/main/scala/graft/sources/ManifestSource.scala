@@ -781,64 +781,42 @@ object ManifestSource {
       dvRoot: String, partVals: Map[String, String],
       conf: SerializableHadoopConf) extends InputPartition
 
-  /** Executor-side load of ONE data file's deletion-vector positions.
-    * Keyed layout (`dv-v{K}/file=<key>/`, what every writer produces;
-    * the key is the TABLE-ROOT-RELATIVE file name — Manifest.dvFileKey,
-    * partition dirs included, Hive-escaped in the directory name):
-    * read just this file's own subdirectory — O(own marks) I/O.
-    * Legacy flat layout (tables written before keying): scan the
-    * root's parquet files filtering on the `file` column. Either way
-    * no mark ever transits the driver.
+  /** Executor-side load of ONE data file's deletion-vector positions
+    * from its own key directory, `dv-v{K}/file=<key>/` (the key is the
+    * TABLE-ROOT-RELATIVE file name — Manifest.dvFileKey, partition dirs
+    * included, Hive-escaped in the directory name): O(own marks) I/O,
+    * and no mark ever transits the driver. A missing key directory
+    * means the file has no marks.
     */
   private[sources] def dvSkip(mp: MfPartition): Set[Long] = {
     if (mp.dvRoot.isEmpty) return Set.empty
     val conf = mp.conf.value
-    val root = new Path(mp.dvRoot)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return Set.empty
     // the table root is dvRoot's grandparent; both strings were built
     // from the same `dir` at planning time, so a plain prefix strip
     // recovers the root-relative name the marks are keyed by
     val tableDir = mp.dvRoot.substring(0,
       mp.dvRoot.lastIndexOf(s"/${graft.ops.Manifest.DirName}/"))
     val base = mp.file.stripPrefix(tableDir + "/")
-    val out = scala.collection.mutable.HashSet[Long]()
-    def drain(p: Path, legacyFilter: Boolean): Unit =
-      fs.listStatus(p).iterator
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .foreach { st =>
-          val r = ParquetReader.builder(new GroupReadSupport(), st.getPath)
-            .withConf(conf).build()
-          try {
-            var g = r.read()
-            while (g != null) {
-              val t = g.getType
-              if (!legacyFilter ||
-                  (t.containsField("file") &&
-                    g.getString(t.getFieldIndex("file"), 0) == base))
-                out += g.getLong(t.getFieldIndex("pos"), 0)
-              g = r.read()
-            }
-          } finally r.close()
-        }
-    // key-format gate (round-17 advisor), executor-side form of
-    // Manifest.requireDvKeyFormat: a marker-less vector whose keys
-    // should be partition-relative (base contains '/') is a PRE-r17
-    // basename-keyed vector — its marks would match nothing here and
-    // deleted rows would silently resurrect; fail the task loudly.
-    val hasMarker = fs.exists(
-      new Path(root, graft.ops.Manifest.DvFormatFile))
-    if (!hasMarker && base.contains('/'))
-      throw new IllegalStateException(
-        s"deletion vector $root has no ${graft.ops.Manifest.DvFormatFile}" +
-          " marker but the table is partitioned: basename-keyed legacy " +
-          "marks cannot be applied — run Manifest.migrateDvKeys first")
     // the Hive directory name escapes the key the same way Spark's
     // partitioned writer did when the vector landed ('/' -> %2F etc.)
-    val keyed = new Path(root, "file=" + org.apache.spark.sql.catalyst
+    val keyed = new Path(mp.dvRoot, "file=" + org.apache.spark.sql.catalyst
       .catalog.ExternalCatalogUtils.escapePathName(base))
-    if (fs.exists(keyed)) drain(keyed, legacyFilter = false)
-    else drain(root, legacyFilter = true)
+    val fs = keyed.getFileSystem(conf)
+    if (!fs.exists(keyed)) return Set.empty
+    val out = scala.collection.mutable.HashSet[Long]()
+    fs.listStatus(keyed).iterator
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .foreach { st =>
+        val r = ParquetReader.builder(new GroupReadSupport(), st.getPath)
+          .withConf(conf).build()
+        try {
+          var g = r.read()
+          while (g != null) {
+            out += g.getLong(g.getType.getFieldIndex("pos"), 0)
+            g = r.read()
+          }
+        } finally r.close()
+      }
     out.toSet
   }
 
@@ -997,9 +975,6 @@ object ManifestSource {
 
   /** The snapshot's DV pointer for partition planning: the dv-v{K}
     * path when it exists, else "" — one FS existence check per scan.
-    * A missing vector is only "no deletes" when no torn migrateDvKeys
-    * aside copy exists ([[graft.ops.Manifest.requireNoTornDvMigration]]);
-    * otherwise planning fails loudly instead of resurrecting rows.
     */
   private[graft] def dvRootOf(spark: SparkSession, dir: String,
       version: Int): String = {
@@ -1007,10 +982,7 @@ object ManifestSource {
     val path = new Path(p)
     if (path.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .exists(path)) p
-    else {
-      graft.ops.Manifest.requireNoTornDvMigration(spark, dir, version)
-      ""
-    }
+    else ""
   }
 
   /** Executor-side parquet row reader (parquet-hadoop's Group model —

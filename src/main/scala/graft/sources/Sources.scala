@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import java.security.MessageDigest
 
@@ -74,10 +75,20 @@ object Sources {
     */
   object PlanCache {
     def planKey(df: DataFrame): String = {
+      val analyzed = df.queryExecution.analyzed
       // canonicalized: expression IDs normalized, so two builds of the
-      // same query share a key
-      val plan = df.queryExecution.analyzed.canonicalized.toString
-      MessageDigest.getInstance("SHA-256").digest(plan.getBytes("UTF-8"))
+      // same query share a key. Its text names neither the output
+      // columns nor a local relation's rows, so two same-shaped
+      // `Seq(...).toDF` frames would share a key (and a cached count):
+      // the schema and those rows join the hashed text.
+      val localRows = analyzed.collectWithSubqueries {
+        case r: LocalRelation => r.data
+          .map(_.toSeq(r.schema).map(String.valueOf).mkString(","))
+          .mkString(";")
+      }
+      val text = (Seq(analyzed.canonicalized.toString,
+        df.schema.catalogString) ++ localRows).mkString("\n")
+      MessageDigest.getInstance("SHA-256").digest(text.getBytes("UTF-8"))
         .take(16).map("%02x".format(_)).mkString
     }
 

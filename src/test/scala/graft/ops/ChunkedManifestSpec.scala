@@ -5,9 +5,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 /** Chunked snapshots (manifest-list indirection): append commits write
-  * O(delta) metadata and carry prior chunks by reference, readers see
-  * inline and chunked snapshots identically, the merge policy bounds
-  * the list, pruning stays distributed, and vacuum distinguishes live
+  * O(delta) metadata and carry prior chunks by reference, a snapshot
+  * without a chunk list fails loudly, the merge policy bounds the
+  * list, pruning stays distributed, and vacuum distinguishes live
   * chunks from crash orphans.
   */
 class ChunkedManifestSpec extends SparkSpec {
@@ -23,15 +23,17 @@ class ChunkedManifestSpec extends SparkSpec {
     val dir = tmp("mig")
     (0L until 100L).map(i => (i, s"t$i")).toDF("id", "txt")
       .repartition(2).write.mode("overwrite").parquet(dir)
-    Manifest.create(spark, dir, Seq("id"))               // v1 inline
-    assert(Manifest.chunkRefs(spark, dir, 1).isEmpty, "v1 stays inline")
+    Manifest.create(spark, dir, Seq("id"))               // v1
+    val refs1 = Manifest.chunkRefs(spark, dir, 1).get
+    assert(refs1.size == 1, s"a full-list commit lands one chunk: $refs1")
 
     Layout.appendInPlace(spark, dir,
       (100L until 150L).map(i => (i, s"t$i")).toDF("id", "txt"),
-      Seq("id"))                                         // v2 chunked
+      Seq("id"))                                         // v2
     val refs2 = Manifest.chunkRefs(spark, dir, 2)
     assert(refs2.nonEmpty, "append commits a chunked snapshot")
-    assert(refs2.get.size == 2, s"migration chunk + delta chunk: $refs2")
+    assert(refs2.get.size == 2 && refs2.get.head == refs1.head,
+      s"v1's chunk carried verbatim + one delta chunk: $refs2")
     assert(Manifest.readTable(spark, dir).count() == 150)
     // the carried chunk was never rewritten on the next append
     Layout.appendInPlace(spark, dir,
@@ -41,13 +43,44 @@ class ChunkedManifestSpec extends SparkSpec {
     assert(refs3.take(2) == refs2.get,
       "prior chunks must carry by reference, not rewrite")
     assert(Manifest.readTable(spark, dir).count() == 160)
-    // time travel: inline v1 and chunked v2 both read exactly
+    // time travel: v1 and v2 both read exactly
     assert(Manifest.readTable(spark, dir, Some(1)).count() == 100)
     assert(Manifest.readTable(spark, dir, Some(2)).count() == 150)
     // the full entry list round-trips with stats intact
     val es = Manifest.read(spark, dir).get
     assert(es.map(_.rows).sum == 160)
     assert(es.forall(_.stats.exists(_.col == "id")))
+  }
+
+  test("a snapshot with no chunk list fails loudly, never reads as empty") {
+    import spark.implicits._
+    val dir = tmp("nochunks")
+    (0L until 10L).map(i => (i, s"n$i")).toDF("id", "txt")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    // hand-written full-list snapshot: the entries inline in v1's own
+    // directory, no `_chunks.json`, and CURRENT pointing at it
+    val f = fs(dir)
+    val snap = new Path(s"$dir/${Manifest.DirName}/v1")
+    f.mkdirs(snap)
+    val out = f.create(new Path(snap, "entries.json"), true)
+    try out.write(Manifest.scanStats(spark, dir, Seq("id"))
+      .map(Manifest.entryJsonLine).mkString("", "\n", "\n")
+      .getBytes("UTF-8")) finally out.close()
+    f.create(new Path(snap, "_SUCCESS"), true).close()
+    val ptr = f.create(new Path(s"$dir/${Manifest.DirName}/CURRENT"), true)
+    try ptr.write("v1\n".getBytes("UTF-8")) finally ptr.close()
+
+    def failsNamingSnapshot(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains(s"${Manifest.DirName}/v1")),
+        s"the failure must name the snapshot dir: ${msgs.mkString(" | ")}")
+    }
+    failsNamingSnapshot(Manifest.read(spark, dir))
+    failsNamingSnapshot(Manifest.readTable(spark, dir).count())
+    failsNamingSnapshot(spark.read.format("graft.sources.ManifestSource")
+      .option("path", dir).load().count())
   }
 
   test("chunk count stays bounded under many commits (merge policy)") {

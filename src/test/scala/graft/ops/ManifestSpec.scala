@@ -1156,159 +1156,4 @@ class ManifestSpec extends SparkSpec {
       spark.conf.unset("spark.graft.dv.autoFlushRatio")
     }
   }
-
-  test("a pre-r17 basename-keyed DV on a partitioned table fails loudly and migrates") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-mf-dvfmt").toString
-    // two partition dirs with DISTINCT file basenames (separate write
-    // jobs mint separate task uuids) — the unambiguous-migration case
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1)
-      .write.parquet(s"$dir/par=a")
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.parquet(s"$dir/par=b")
-    Manifest.write(spark, dir, Manifest.scanStats(spark, dir, Nil), 1)
-
-    val pred = col("doc_id") % 10 === 3
-    spark.conf.set("spark.graft.dv.autoFlushRatio", "0")
-    try {
-      val (marked, _) = Layout.deleteMergeOnRead(spark, dir, pred)
-      assert(marked > 0)
-      val v = Manifest.currentVersion(spark, dir).get
-      val expected = Layout.contentFingerprint(
-        Manifest.readTable(spark, dir)).collect().toSeq
-
-      // simulate the PRE-r17 writer: re-key the vector by basename and
-      // drop the format marker
-      val fs = new Path(dir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val dvp = new Path(Manifest.dvDir(dir, v))
-      val legacy = spark.read.parquet(dvp.toString)
-        .select(element_at(split(col("file"), "/"), -1).as("file"),
-          col("pos"))
-      val tmp = new Path(s"$dir/_manifest/.legacy-dv")
-      legacy.repartition(col("file")).write.mode("overwrite")
-        .partitionBy("file").parquet(tmp.toString)
-      fs.delete(new Path(tmp, "_SUCCESS"), false)
-      fs.delete(dvp, true)
-      assert(fs.rename(tmp, dvp))
-
-      // every read path now fails LOUDLY instead of resurrecting the
-      // deleted rows (the marks would silently match nothing)
-      val e = intercept[IllegalStateException] {
-        Manifest.readTable(spark, dir).count()
-      }
-      assert(e.getMessage.contains("migrateDvKeys"))
-
-      // one-time migration restores exact pre-migration answers
-      assert(Manifest.migrateDvKeys(spark, dir) == marked)
-      assert(Layout.contentFingerprint(Manifest.readTable(spark, dir))
-        .collect().toSeq == expected)
-      assert(Manifest.readTable(spark, dir).filter(pred).count() == 0)
-      // idempotent: a second call is a no-op
-      assert(Manifest.migrateDvKeys(spark, dir) == 0L)
-    } finally spark.conf.unset("spark.graft.dv.autoFlushRatio")
-  }
-
-  test("DV migration refuses AMBIGUOUS basenames (repeated across partition dirs)") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-mf-dvamb").toString
-    // ONE write job across partition dirs: each task reuses its uuid
-    // in every dir it writes, so basenames repeat — exactly the layout
-    // the r17 over-deletion bug fired on
-    docs.coalesce(1).write.mode("overwrite").partitionBy("source")
-      .parquet(dir)
-    Manifest.write(spark, dir, Manifest.scanStats(spark, dir, Nil), 1)
-    val names = Manifest.read(spark, dir).get.map(_.name)
-    assert(names.map(_.split('/').last).distinct.size < names.size,
-      "fixture must actually repeat basenames across partition dirs")
-
-    spark.conf.set("spark.graft.dv.autoFlushRatio", "0")
-    try {
-      val (marked, _) = Layout.deleteMergeOnRead(spark, dir,
-        col("doc_id") % 10 === 3)
-      assert(marked > 0)
-      val v = Manifest.currentVersion(spark, dir).get
-      val fs = new Path(dir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val dvp = new Path(Manifest.dvDir(dir, v))
-      val legacy = spark.read.parquet(dvp.toString)
-        .select(element_at(split(col("file"), "/"), -1).as("file"),
-          col("pos")).distinct()
-      val tmp = new Path(s"$dir/_manifest/.legacy-dv")
-      legacy.repartition(col("file")).write.mode("overwrite")
-        .partitionBy("file").parquet(tmp.toString)
-      fs.delete(new Path(tmp, "_SUCCESS"), false)
-      fs.delete(dvp, true)
-      assert(fs.rename(tmp, dvp))
-
-      val e = intercept[RuntimeException] {
-        Manifest.migrateDvKeys(spark, dir)
-      }
-      assert(e.getMessage.contains("ambiguous"),
-        s"must refuse to guess which sibling was meant: ${e.getMessage}")
-    } finally spark.conf.unset("spark.graft.dv.autoFlushRatio")
-  }
-
-  test("a migrateDvKeys crash mid-swap never reads as 'no deletes'") {
-    // round-18 advisor: the old swap deleted dv-v{K} then renamed the
-    // rewrite in — a crash in between left NO vector, and a missing
-    // vector reads as "no deletes", silently resurrecting every
-    // deleted row. The swap now renames the old vector ASIDE first;
-    // this pins (a) the torn state fails LOUDLY on every read path,
-    // (b) re-running the migration heals it to exact answers.
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-mf-dvtear").toString
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1)
-      .write.parquet(s"$dir/par=a")
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.parquet(s"$dir/par=b")
-    Manifest.write(spark, dir, Manifest.scanStats(spark, dir, Nil), 1)
-    val pred = col("doc_id") % 10 === 3
-    spark.conf.set("spark.graft.dv.autoFlushRatio", "0")
-    try {
-      val (marked, _) = Layout.deleteMergeOnRead(spark, dir, pred)
-      assert(marked > 0)
-      val v = Manifest.currentVersion(spark, dir).get
-      val expected = Layout.contentFingerprint(
-        Manifest.readTable(spark, dir)).collect().toSeq
-      val fs = new Path(dir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val dvp = new Path(Manifest.dvDir(dir, v))
-      // strip the marker so the vector is a legacy one (migration has
-      // work to do), then simulate the EXACT torn window: old vector
-      // renamed aside, rewrite not yet landed
-      fs.delete(new Path(dvp, Manifest.DvFormatFile), false)
-      assert(fs.rename(dvp, Manifest.dvAsidePath(dir, v)))
-
-      // every "no vector -> no deletes" path must now fail loudly
-      val e1 = intercept[IllegalStateException] {
-        Manifest.readTable(spark, dir).count()
-      }
-      assert(e1.getMessage.contains("migrateDvKeys"), e1.getMessage)
-      val e2 = intercept[IllegalStateException] {
-        Manifest.hasDeletionVectors(spark, dir)
-      }
-      assert(e2.getMessage.contains("mid-swap"), e2.getMessage)
-      val e3 = intercept[IllegalStateException] {
-        Layout.flushDeleteVectors(spark, dir)
-      }
-      assert(e3.getMessage.contains("migrateDvKeys"), e3.getMessage)
-      val e4 = intercept[IllegalStateException] {
-        graft.sources.ManifestSource.dvRootOf(spark, dir, v)
-      }
-      assert(e4.getMessage.contains("migrateDvKeys"), e4.getMessage)
-
-      // re-running the migration heals: restores the aside copy and
-      // completes the rewrite; answers are bit-equal to pre-crash
-      assert(Manifest.migrateDvKeys(spark, dir) == marked)
-      assert(!fs.exists(Manifest.dvAsidePath(dir, v)),
-        "completed migration must reclaim the aside copy")
-      assert(Layout.contentFingerprint(Manifest.readTable(spark, dir))
-        .collect().toSeq == expected)
-      assert(Manifest.readTable(spark, dir).filter(pred).count() == 0)
-    } finally spark.conf.unset("spark.graft.dv.autoFlushRatio")
-  }
 }

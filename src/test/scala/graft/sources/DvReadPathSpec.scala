@@ -74,32 +74,42 @@ class DvReadPathSpec extends SparkSpec {
     }
   }
 
-  test("legacy flat vectors (pre-keying tables) still subtract in the reader") {
-    val dir = tmp("legacy")
-    freshTable(dir, parts = 2)
-    Layout.deleteMergeOnRead(spark, dir, col("id") === 5 || col("id") === 6)
-    val v = Manifest.currentVersion(spark, dir).get
-    // rewrite the vector in the OLD flat (file, pos) layout
-    val flat = Manifest.dvMarks(spark, dir, v).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(Manifest.dvDir(dir, v)), true)
-    import spark.implicits._
-    flat.toSeq.toDF("file", "pos").coalesce(1)
-      .write.parquet(Manifest.dvDir(dir, v))
-    val survivors = Manifest.readTable(spark, dir)
-      .select("id").as[Long].collect().toSet
-    assert(!survivors.contains(5L) && !survivors.contains(6L))
-    // and the connector reader's executor-side loader handles it too
-    val dvRoot = ManifestSource.dvRootOf(spark, dir, v)
-    val conf = new SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val schemaJson = Manifest.readTable(spark, dir).schema.json
-    val skips = Manifest.read(spark, dir).get.map { en =>
-      ManifestSource.dvSkip(ManifestSource.MfPartition(
-        s"$dir/${en.name}", schemaJson, dvRoot, Map.empty, conf)).size
-    }
-    assert(skips.sum == 2)
+  test("a partitioned DV whose basenames repeat across partitions stays exact") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val dir = tmp("repeat")
+    // ONE write job across partition dirs: each task reuses its uuid
+    // in every dir it writes, so basenames repeat — the layout on
+    // which basename-keyed marks deleted same-position rows in every
+    // sibling partition (the round-17 over-deletion)
+    docs.coalesce(1).write.mode("overwrite").partitionBy("source")
+      .parquet(dir)
+    Manifest.write(spark, dir, Manifest.scanStats(spark, dir, Nil), 1)
+    val names = Manifest.read(spark, dir).get.map(_.name)
+    assert(names.map(_.split('/').last).distinct.size < names.size,
+      "fixture must actually repeat basenames across partition dirs")
+    val pred = col("doc_id") % 10 === 3
+    val oracle = docs.filter(!pred)
+    spark.conf.set("spark.graft.dv.autoFlushRatio", "0")
+    try {
+      val (marked, _) = Layout.deleteMergeOnRead(spark, dir, pred)
+      assert(marked == docs.count() - oracle.count())
+      val v = Manifest.currentVersion(spark, dir).get
+      val dvRoot = ManifestSource.dvRootOf(spark, dir, v)
+      assert(dvRoot.nonEmpty, "the vector must stay live (no flush)")
+      assert(Layout.contentFingerprint(Manifest.readTable(spark, dir))
+        .collect().toSeq ==
+        Layout.contentFingerprint(oracle).collect().toSeq)
+      // the connector reader's per-file loads subtract exactly as much
+      val conf = new SerializableHadoopConf(
+        spark.sparkContext.hadoopConfiguration)
+      val schemaJson = Manifest.readTable(spark, dir).schema.json
+      val entries = Manifest.read(spark, dir).get
+      val skipped = entries.map { en =>
+        ManifestSource.dvSkip(ManifestSource.MfPartition(
+          s"$dir/${en.name}", schemaJson, dvRoot, Map.empty, conf)).size
+      }.sum
+      assert(entries.map(_.rows).sum - skipped == oracle.count())
+    } finally spark.conf.unset("spark.graft.dv.autoFlushRatio")
   }
 
   test("pushed-filter pruning survives a column rename (stats stay physical)") {

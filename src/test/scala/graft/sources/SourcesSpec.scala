@@ -109,6 +109,29 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.PlanCache.planKey(docs.filter(col("doc_id") > 10)) != k1)
   }
 
+  test("plan cache: same-shaped local frames with other rows or names get their own keys") {
+    import spark.implicits._
+    val cache = Files.createTempDirectory("graft_local").toString
+    val two = Seq((1L, "a"), (2L, "b")).toDF("id", "tag")
+    val three = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "tag")
+    val otherRows = Seq((1L, "x"), (2L, "y")).toDF("id", "tag")
+    val renamed = Seq((1L, "a"), (2L, "b")).toDF("key", "label")
+    val keys = Seq(two, three, otherRows, renamed)
+      .map(Sources.PlanCache.planKey)
+    assert(keys.distinct.size == 4, keys)
+    // the same rows under the same names still share a key
+    assert(Sources.PlanCache.planKey(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "tag")) == keys.head)
+    // each frame's status reports its own row count
+    Seq(two -> 2L, three -> 3L, renamed -> 2L).foreach { case (df, n) =>
+      val key = Sources.PlanCache.submit(spark, df, cache)
+      assert(Sources.PlanCache.await(spark, key, cache).columns.toSeq ==
+        df.columns.toSeq)
+      assert(Sources.PlanCache.poll(key)
+        .contains(Sources.PlanCache.Done(n)), s"$key: expected Done($n)")
+    }
+  }
+
   test("DSv2 synthetic source: deterministic, partitioned, file-less") {
     def read = spark.read.format("graft.sources.SynthDocsSource")
       .option("rows", "10000").option("partitions", "16")
