@@ -69,9 +69,8 @@ object Bm25Index {
     * ratio check and the tombstone broadcast gates read DRIVER-SIDE
     * metadata — zero Spark jobs per maintenance decision. Version-
     * pinned probes read the counters AS OF their version (the file
-    * lives in the snapshot dir, like the schema record). Indexes built
-    * before counter tracking have no `_meta.props`; every gated path
-    * falls back to the measured (job-running) form there.
+    * lives in the snapshot dir, like the schema record). Every index
+    * carries them from its v1 ([[build]], [[init]]; clones copy them).
     */
   private val LiveKey = "live_docs"
   private val DelKey = "pending_dels"
@@ -125,30 +124,28 @@ object Bm25Index {
       DelBroadcastRows.toString).toLong
 
   /** Pending-tombstone count of the pinned-or-current snapshot from
-    * the counter record — None on a pre-tracking index.
+    * the counter record.
     */
   private def pendingDels(spark: SparkSession, dir: String,
-      version: Option[Int]): Option[Long] =
+      version: Option[Int]): Long =
     version.orElse(Manifest.currentVersion(spark, s"$dir/index"))
       .map(Manifest.metaOf(spark, s"$dir/index", _))
-      .flatMap(_.get(DelKey))
+      .getOrElse(Map.empty[String, Long]).getOrElse(DelKey,
+        throw new IllegalStateException(
+          s"$dir/index has no $DelKey counter — not an index this " +
+            "engine built"))
 
   /** The gated tombstone subtraction shared by the probe scan and the
     * flush rewrite: skip the join outright when the counters prove
     * zero tombstones, broadcast under the gate, shuffle past it.
-    * `nDel = None` (pre-tracking index) keeps the legacy broadcast.
     */
   private def minusDels(t: DataFrame, base: DataFrame,
-      nDel: Option[Long]): DataFrame = {
+      nDel: Long): DataFrame = {
     val dels = t.filter(col("kind") === "del").select("doc_id")
-    nDel match {
-      case Some(0L) => base
-      case n =>
-        val spark = t.sparkSession
-        if (n.forall(_ <= delBroadcastGate(spark)))
-          base.join(broadcast(dels), Seq("doc_id"), "left_anti")
-        else base.join(dels, Seq("doc_id"), "left_anti")
-    }
+    if (nDel == 0L) base
+    else if (nDel <= delBroadcastGate(t.sparkSession))
+      base.join(broadcast(dels), Seq("doc_id"), "left_anti")
+    else base.join(dels, Seq("doc_id"), "left_anti")
   }
 
   /** Physical schema; `kind` and `bucket` carry the partition-column
@@ -654,26 +651,16 @@ object Bm25Index {
     *
     * METADATA-ONLY since round 18 (verdict #3): the live/tombstone
     * counts come from the snapshot's counter record ([[counterDelta]])
-    * — the check after every delete costs zero Spark jobs. The
-    * stat-sum + del-count jobs remain only as the fallback for
-    * pre-tracking indexes.
+    * — the check after every delete costs zero Spark jobs.
     */
   private def maybeAutoFlush(spark: SparkSession, dir: String): Unit = {
     val flushRatio = spark.conf
       .getOption("spark.graft.bm25.autoFlushRatio")
       .map(_.toDouble).getOrElse(0.10)
     if (flushRatio > 0) {
-      val meta = Manifest.currentMeta(spark, s"$dir/index")
-      val (live, dels) =
-        if (meta.contains(LiveKey))
-          (meta(LiveKey), meta.getOrElse(DelKey, 0L))
-        else {
-          val t2 = Manifest.readTable(spark, s"$dir/index")
-          (t2.filter(col("kind") === "stat")
-            .agg(coalesce(sum("tf"), lit(0L))).head().getLong(0),
-            t2.filter(col("kind") === "del").count())
-        }
-      if (live > 0 && dels > flushRatio * live)
+      val live = Manifest.currentMeta(spark, s"$dir/index")
+        .getOrElse(LiveKey, 0L)
+      if (live > 0 && pendingDels(spark, dir, None) > flushRatio * live)
         flushDeletes(spark, dir): Unit
     }
   }
@@ -698,14 +685,11 @@ object Bm25Index {
     requireGeometry(spark, dir)
     val table = s"$dir/index"
     val t = Manifest.readTable(spark, table)
-    val dels = t.filter(col("kind") === "del").select("doc_id")
-    // tombstone count from the snapshot counters when tracked (no
-    // job); the rewrite's anti-join is gated on the same number
-    val tracked = pendingDels(spark, dir, None)
-    val nDel = tracked.getOrElse(dels.count())
+    // tombstone count from the snapshot counters (no job); the
+    // rewrite's anti-join is gated on the same number
+    val nDel = pendingDels(spark, dir, None)
     if (nDel == 0L) return 0L
-    val posts = minusDels(t, t.filter(col("kind") === "post"),
-      Some(nDel))
+    val posts = minusDels(t, t.filter(col("kind") === "post"), nDel)
     val dfFold = t.filter(col("kind") === "df")
       .groupBy("token", "bucket").agg(sum("tf").as("tf"))
       .filter(col("tf") > 0)
@@ -726,8 +710,8 @@ object Bm25Index {
     // the commit (torn either way → stamp mismatch → exact fallback);
     // one extra agg pass inside a maintenance verb, and it is what
     // keeps the per-delete already-check off the ret partition
-    val nRetTotal = Manifest.currentMeta(spark, table).get(RetKey)
-      .map(_ + nDel).getOrElse(retired.count())
+    val nRetTotal =
+      Manifest.currentMeta(spark, table).getOrElse(RetKey, 0L) + nDel
     writeRetBloom(spark, dir, retired.select("doc_id"), nRetTotal)
     Layout.overwriteInPlace(spark, table,
       posts.unionByName(dfFold).unionByName(statFold)
@@ -836,7 +820,7 @@ object Bm25Index {
     * not data-sized.
     */
   private def postingsFor(t: DataFrame, terms: Seq[String],
-      buckets: Seq[Int], nDel: Option[Long]): DataFrame =
+      buckets: Seq[Int], nDel: Long): DataFrame =
     minusDels(t,
       t.filter(col("kind") === "post" &&
         col("bucket").isin(buckets: _*) &&

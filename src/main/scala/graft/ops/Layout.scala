@@ -513,6 +513,9 @@ object Layout {
     names.headOption.toSeq.flatMap(_.split('/').dropRight(1)
       .filter(_.contains("=")).map(_.split("=")(0)).toSeq)
 
+  private def parentOf(name: String): String =
+    name.split('/').dropRight(1).mkString("/")
+
   /** Field-metadata key marking a recorded-schema column as a
     * PARTITION column — how a `CREATE TABLE ... PARTITIONED BY`
     * through the SQL catalog declares layout before any file exists.
@@ -619,143 +622,468 @@ object Layout {
     entries
   }
 
-  /** IN-PLACE upsert (MERGE INTO by key, last-writer-wins): rows of
-    * `updates` REPLACE table rows sharing their `keyCol` and brand-new
-    * keys are inserted — the third manifest-native verb next to delete
-    * and compact. The affected-file search runs manifest-pruned (only
-    * files whose recorded key range intersects the batch's are even
-    * scanned — the stats doing WRITE planning, not just read planning),
-    * survivors drop updated keys via a broadcast anti-join, and the
-    * whole batch lands as delta files beside the originals. Cost is
-    * O(affected files + batch), independent of table size; history
-    * time-travels until vacuum.
-    * Returns (affectedFiles, totalFiles).
+  // ── The commit primitive ────────────────────────────────────────────
+  //
+  // Every write verb below computes only WHAT it changes — the files it
+  // adds and removes, what becomes of the deletion vector, its change
+  // record, schema and counter deltas — as a [[Change]], and
+  // [[commit]] alone runs the protocol around it: pin the base, the
+  // replay check, the claim (before any side write), landing staged
+  // dot-files, the vector carry, the change record, the snapshot write
+  // and the auto-flush gate.
+
+  /** The snapshot a commit builds on. Verbs that restate the file list
+    * pin it whole (`entries`); O(delta) verbs pin the chunk list plus
+    * one sample entry and never materialize the list.
     */
-  def upsertInPlace(spark: SparkSession, dir: String, updates: DataFrame,
-      keyCol: String, statCols: Seq[String] = Nil): (Int, Int) = {
-    requireNoDvs(spark, dir)
-    val (curV, entries) = Manifest.ensureVersioned(spark, dir, statCols)
-    val newVersion = curV + 1
-    // file-side scans run under PHYSICAL names (readPhysical); the
-    // batch's logical key joins against the physical one
-    val physKey = physKeyOf(spark, dir, keyCol)
-    // manifest pruning first: the batch's key range bounds which files
-    // can possibly contain a matching key
-    val rng = updates.agg(min(col(keyCol)).cast("long"),
-      max(col(keyCol)).cast("long")).head()
-    val candidates =
-      if (rng.isNullAt(0)) Seq.empty[ManifestEntry]
-      else {
-        val (lo, hi) = (rng.getLong(0), rng.getLong(1))
-        entries.filter(e => e.stats.find(_.col == physKey)
-          .forall(s => s.max >= lo && s.min <= hi))
+  private final class Base(spark: SparkSession, dir: String,
+      val version: Int, val chunks: Seq[Manifest.ChunkRef],
+      val entries: Option[Seq[ManifestEntry]],
+      val head: Option[ManifestEntry]) {
+    /** (sorted file names, total rows): the scan list of the base. */
+    lazy val namesAndRows: (Seq[String], Long) = entries match {
+      case Some(es) => (es.map(_.name), es.map(_.rows).sum)
+      case None => Manifest.namesAndRows(spark, dir, version)
+    }
+    def names: Seq[String] = namesAndRows._1
+    def listed: Seq[ManifestEntry] = entries.get
+  }
+
+  /** What a commit does to the base version's deletion vector. */
+  private sealed trait DvAction
+  /** Carry it, minus the marks of removed files (they die with them). */
+  private case object DvCarry extends DvAction
+  /** Drop it: the commit applied or superseded every mark. */
+  private case object DvDrop extends DvAction
+  /** Carry it and add the not-yet-set (file, pos) pairs of `marks`. */
+  private case class DvMarks(marks: DataFrame) extends DvAction
+
+  /** One commit's content. `added` are table-relative names the verb
+    * staged in place (files the caller passed as dot-files are landed
+    * and added by [[commit]] itself); `removed` leave the snapshot;
+    * `cdc` builds the change record from what the commit wrote.
+    */
+  private case class Change(
+      added: Seq[String] = Nil,
+      removed: Set[String] = Set.empty,
+      dv: DvAction = DvCarry,
+      cdc: Option[Written => DataFrame] = None,
+      schema: Option[StructType] = None,
+      metaDelta: () => Option[Map[String, Long]] = () => None)
+
+  /** What a commit wrote, for its change record: the added files'
+    * entries (zero-row files already dropped) and the marks it newly
+    * set, as (file, pos).
+    */
+  private case class Written(added: Seq[ManifestEntry], marks: DataFrame)
+
+  /** A commit under its claim: the base, the version being written, and
+    * the names the caller's staged dot-files landed as.
+    */
+  private case class Claimed(base: Base, version: Int, landed: Seq[String])
+
+  /** A landed commit: its base, the entries it added, how many it
+    * removed, and the deletion vector's mark count.
+    */
+  private case class Done(base: Base, added: Seq[ManifestEntry],
+      removed: Int, marked: Long)
+
+  /** Commit version base + 1 of `dir`: the one write path every verb
+    * takes. `listed` pins the full entry list (else the chunk list);
+    * `txn`/`txnApp` make the commit exactly-once — a replay is a no-op
+    * (None) that deletes `staged`. The claim is taken before any side
+    * write, so a lost race leaves nothing another writer's version
+    * could appear to own; `staged` dot-files then land as
+    * `<landAs>-v{K}-<claim id>-<i>.parquet` beside their partition's
+    * files (the claim id makes two writers' names distinct even across
+    * a lease takeover), and `change` computes the rest under the claim.
+    * On any failure before the snapshot lands, landed files are removed
+    * and the claim is given back.
+    */
+  private def commit(spark: SparkSession, dir: String,
+      statCols: Seq[String], listed: Boolean = false,
+      txn: Option[Long] = None, txnApp: Option[(String, Long)] = None,
+      staged: Seq[String] = Nil, landAs: String = "append")(
+      change: Claimed => Change): Option[Done] = {
+    val fs = new Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    if (isReplay(spark, dir, txn, txnApp)) {
+      staged.foreach(p => fs.delete(new Path(p), false))
+      return None
+    }
+    val base =
+      if (listed) {
+        val (v, es) = Manifest.ensureVersioned(spark, dir, statCols)
+        new Base(spark, dir, v, Nil, Some(es), es.headOption)
+      } else {
+        val (v, chunks, head) =
+          Manifest.ensureVersionedDelta(spark, dir, statCols)
+        new Base(spark, dir, v, chunks, None, head)
       }
-    val updKeys = updates.select(col(keyCol).as(physKey)).distinct()
-    val affected =
-      if (candidates.isEmpty) Set.empty[String]
-      else Manifest.readPhysical(spark, dir,
-          candidates.map(e => s"$dir/${e.name}"))
+    val k = base.version + 1
+    val claim = Manifest.claimVersion(spark, dir, k)
+    val landed = scala.collection.mutable.ArrayBuffer.empty[Path]
+    val (done, marking) = try {
+      val names = staged.sorted.zipWithIndex.map { case (p, i) =>
+        val sub = parentOf(Manifest.relativize(spark, dir, p))
+        val tgt = (if (sub.isEmpty) "" else s"$sub/") +
+          s"$landAs-v$k-${claim.take(8)}-$i.parquet"
+        require(fs.rename(new Path(p), new Path(s"$dir/$tgt")),
+          s"staged file $p failed to land as $tgt")
+        landed += new Path(s"$dir/$tgt")
+        tgt
+      }
+      val c = change(Claimed(base, k, names))
+      val marking = c.dv.isInstanceOf[DvMarks]
+      val added = statStaged(spark, dir, statCols, names ++ c.added)
+      // the vector: a crashed claim's orphan must not merge into it
+      val dvNew = new Path(Manifest.dvDir(dir, k))
+      fs.delete(dvNew, true)
+      val carried =
+        if (c.dv == DvDrop) None
+        else carryDv(spark, dir, base.version, k, c.removed)
+      // new marks stage beside the carry until the change record has
+      // read them, then move into its `file=` dirs (pure renames)
+      val dvTmp = new Path(s"$dvNew.tmp")
+      val (marked, newMarks) = c.dv match {
+        case DvMarks(marks) =>
+          val old = Manifest.dvMarks(spark, dir, base.version)
+          fs.delete(dvTmp, true)
+          marks.join(old, Seq("file", "pos"), "left_anti")
+            .repartition(col("file")).write.mode("overwrite")
+            .partitionBy("file").parquet(dvTmp.toString)
+          val n = parquetRowsUnder(spark, dvTmp)
+          (Some(carried.getOrElse(0L) + n),
+            if (n == 0L) old.filter(lit(false))
+            else spark.read.parquet(dvTmp.toString)
+              .select(col("file").cast("string"), col("pos")))
+        case _ => (carried, Manifest.noMarks(spark))
+      }
+      c.cdc.foreach(f =>
+        Manifest.recordCdc(spark, dir, k, f(Written(added, newMarks))))
+      if (marking) Manifest.moveDvDelta(spark, dir, k, dvTmp)
+      // a commit that leaves zero marks installs no (empty) vector
+      marked match {
+        case Some(0L) => fs.delete(dvNew, true): Unit
+        case Some(n) if marking => Manifest.stampDvCount(spark, dir, k, n)
+        case _ => ()
+      }
+      // a listed base restates its list as fresh chunks; a chunked one
+      // carries its chunks by reference and writes only the delta
+      val (chunks, entries) = base.entries match {
+        case Some(es) => (Nil, (es.filterNot(e =>
+          c.removed.contains(e.name)) ++ added).sortBy(_.name))
+        case None => (base.chunks, added)
+      }
+      Manifest.writeChunkedDelta(spark, dir, k, chunks, c.removed,
+        Seq(entries), txn, claim, c.schema, txnApp, c.metaDelta)
+      (Done(base, added, c.removed.size, marked.getOrElse(0L)), marking)
+    } catch { case e: Throwable =>
+      // Spark does not call abort() after a failed driver commit —
+      // remove already-landed final-looking files so a lost race
+      // leaves nothing the next listing or vacuum could mistake for
+      // committed data
+      landed.foreach(p => try fs.delete(p, false) catch {
+        case _: java.io.IOException => ()
+      })
+      Manifest.releaseClaim(spark, dir, k, claim)
+      throw e
+    }
+    // AUTO-FLUSH policy: past a marks-to-rows ratio the per-read
+    // skip/anti-join work outweighs rewriting the marked files, and
+    // an unbounded vector is exactly what makes any DV read path
+    // dangerous at scale — flush immediately (its own commit), so
+    // sustained delete workloads keep mark counts bounded without
+    // manual maintenance. 0 disables; OPTIMIZE also consumes marks
+    // inline for files it rewrites.
+    if (marking) {
+      val flushRatio = spark.conf.getOption("spark.graft.dv.autoFlushRatio")
+        .map(_.toDouble).getOrElse(0.10)
+      val rows = base.namesAndRows._2
+      if (flushRatio > 0 && rows > 0 && done.marked > flushRatio * rows)
+        flushDeleteVectors(spark, dir, statCols)
+    }
+    Some(done)
+  }
+
+  /** Carry version `from`'s deletion vector to `to` — a filesystem
+    * copy, no Spark job — minus the `file=` directories of `removed`
+    * data files, matched through Spark's own partition-path unescaping
+    * (the directory names are the escaped file keys). Returns the
+    * carried mark count, the `_COUNT` sidecar less the dropped
+    * directories' footer rows; None when `from` has no vector.
+    *
+    * The vector stays KEYED BY DATA FILE (Hive partitionBy) so a scan
+    * task loads exactly its own file's positions — O(own marks) per
+    * reader, never the whole table's vector through the driver.
+    */
+  private def carryDv(spark: SparkSession, dir: String, from: Int,
+      to: Int, removed: Set[String]): Option[Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val src = new Path(Manifest.dvDir(dir, from))
+    val dst = new Path(Manifest.dvDir(dir, to))
+    val fs = src.getFileSystem(conf)
+    if (!fs.exists(src)) return None
+    val n = Manifest.dvCountOf(spark, dir, from).getOrElse(
+      throw new IllegalStateException(
+        s"deletion vector $src has no ${Manifest.DvCountFile} sidecar"))
+    if (removed.isEmpty) {
+      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, true, conf)
+      return Some(n)
+    }
+    fs.mkdirs(dst)
+    var dropped = 0L
+    fs.listStatus(src).foreach { st =>
+      val name = st.getPath.getName
+      if (name.startsWith("file=") && removed.contains(
+          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .unescapePathName(name.stripPrefix("file="))))
+        dropped += parquetRowsUnder(spark, st.getPath)
+      else org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
+        new Path(dst, name), false, true, conf): Unit
+    }
+    Manifest.stampDvCount(spark, dir, to, n - dropped)
+    Some(n - dropped)
+  }
+
+  /** Exact row count of the parquet part files under `dir`, off their
+    * FOOTERS — driver metadata reads, the [[Manifest.scanStats]]
+    * fast-path pattern (round 20). Counts a just-written mark delta,
+    * or a carried vector's dropped directories, without a count job;
+    * both are O(batch) files by construction.
+    */
+  private def parquetRowsUnder(spark: SparkSession, dir: Path): Long = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) return 0L
+    val conf = spark.sparkContext.hadoopConfiguration
+    var n = 0L
+    val it = fs.listFiles(dir, true)
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
+        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            f.getPath, conf))
+        n += (try rd.getRecordCount finally rd.close())
+      }
+    }
+    n
+  }
+
+  /** Replay decision for an exactly-once commit. App-scoped when the
+    * writer declared (or was defaulted) a txnAppId. On the GLOBAL
+    * single-writer path a batch EQUAL to the watermark is a true
+    * crash re-delivery (foreachBatch only ever re-delivers the last
+    * committed id) and no-ops; a batch BEHIND the watermark belongs
+    * to a DIFFERENT stream — e.g. a fresh checkpoint restarting at
+    * epoch 0 against a table already carrying txn=N — and failing
+    * loudly beats silently dropping its first N+1 batches.
+    */
+  private def isReplay(spark: SparkSession, dir: String,
+      txn: Option[Long], txnApp: Option[(String, Long)]): Boolean =
+    txnApp match {
+      case Some((app, n)) =>
+        Manifest.lastTxnFor(spark, dir, app).exists(_ >= n)
+      case None =>
+        txn.exists { t =>
+          Manifest.lastTxn(spark, dir) match {
+            case Some(last) if t == last => true
+            case Some(last) if t < last =>
+              throw new IllegalStateException(
+                s"batch $t is behind $dir's global txn watermark $last " +
+                  "— a different stream (fresh checkpoint?) appears to " +
+                  "be writing without a txnAppId; scope replays with " +
+                  "txnAppId/appId instead of silently dropping batches")
+            case _ => false
+          }
+        }
+    }
+
+  /** An empty change record: the explicit "this commit changed no
+    * logical row (of this kind)" that spares the feed a diff fallback.
+    */
+  private def noChange(spark: SparkSession, dir: String,
+      kind: String = "insert"): DataFrame =
+    Manifest.readTable(spark, dir).filter(lit(false))
+      .withColumn("_change_type", lit(kind))
+
+  /** A table's two column views under its current recorded schema:
+    * `logical` names (what callers and predicates use) over a frame
+    * read from files, `physical` names (what files carry — a renamed
+    * column keeps its original name) over a frame about to be staged.
+    */
+  private final class View(schema: Option[StructType]) {
+    def logical(df: DataFrame): DataFrame =
+      schema.map(Manifest.toLogicalKeeping(df, _)).getOrElse(df)
+    def physical(df: DataFrame): DataFrame =
+      schema.map(Manifest.toPhysicalKeeping(df, _)).getOrElse(df)
+    def physName(logical: String): String = schema
+      .flatMap(_.fields.find(_.name == logical).map(Manifest.physNameOf))
+      .getOrElse(logical)
+  }
+
+  private def viewOf(spark: SparkSession, dir: String): View =
+    new View(Manifest.currentVersion(spark, dir)
+      .flatMap(Manifest.tableSchema(spark, dir, _)))
+
+  private def read(spark: SparkSession, dir: String,
+      names: Seq[String]): DataFrame =
+    Manifest.readPhysical(spark, dir, names.map(n => s"$dir/$n"))
+
+  /** A physical scan of `names` keyed the way deletion-vector marks
+    * are: `_mk_f` is the row's file key ([[Manifest.dvFileKey]]),
+    * `_mk_p` its position in the file.
+    */
+  private def positioned(spark: SparkSession, dir: String,
+      names: Seq[String]): DataFrame =
+    read(spark, dir, names)
+      .withColumn("_mk_f", Manifest.dvFileKey(Manifest.dvDepth(names)))
+      .withColumn("_mk_p", col("_metadata.row_index"))
+
+  /** The rows of a [[positioned]] frame that `marks` does (`left_semi`)
+    * or does not (`left_anti`) mark — a broadcast join, no shuffle.
+    */
+  private def byMarks(df: DataFrame, marks: DataFrame,
+      how: String): DataFrame =
+    df.join(broadcast(marks), df("_mk_f") === marks("file") &&
+        df("_mk_p") === marks("pos"), how)
+      .drop("_mk_f", "_mk_p")
+
+  /** The files among `names` holding a row that matches `pred` (logical
+    * column names): a pushed-predicate scan, so footer pruning skips
+    * most files unread, and a collect bounded by #files, never rows.
+    * `basePath` keeps partition-directory columns usable in `pred`.
+    */
+  private def filesMatching(spark: SparkSession, dir: String,
+      names: Seq[String], view: View, pred: Column): Seq[String] = {
+    val hit = view.logical(read(spark, dir, names)).filter(pred)
+      .select(input_file_name().as("f")).distinct()
+      .collect().map(r => Manifest.relativize(spark, dir, r.getString(0)))
+      .toSet
+    names.filter(hit.contains)
+  }
+
+  /** The entries holding one of `keys` (one column, `physKey`):
+    * manifest pruning first — only files whose recorded key range
+    * meets `range`'s min/max are scanned (the stats doing WRITE
+    * planning, not just read planning) — then a broadcast semi-join.
+    */
+  private def filesWithKeys(spark: SparkSession, dir: String,
+      entries: Seq[ManifestEntry], range: DataFrame, keys: DataFrame,
+      physKey: String): Seq[ManifestEntry] = {
+    val rng = range.agg(min(col(physKey)).cast("long"),
+      max(col(physKey)).cast("long")).head()
+    val candidates =
+      if (rng.isNullAt(0)) Nil
+      else entries.filter(e => e.stats.find(_.col == physKey)
+        .forall(s => s.max >= rng.getLong(0) && s.min <= rng.getLong(1)))
+    if (candidates.isEmpty) Nil
+    else {
+      val hit = read(spark, dir, candidates.map(_.name))
         // capture the file BEFORE the join — input_file_name() is
         // single-source and the semi join introduces a second one
         .select(col(physKey), input_file_name().as("f"))
-        .join(broadcast(updKeys), Seq(physKey), "left_semi")
+        .join(broadcast(keys), Seq(physKey), "left_semi")
         .select("f").distinct()
         .collect().map(r => Manifest.relativize(spark, dir, r.getString(0)))
         .toSet
-    val (hit, kept) = entries.partition(e => affected.contains(e.name))
-    val prefix = s"upsert-v$newVersion"
-    val partCols = partColsOf(entries)
-    val claim = Manifest.claimVersion(spark, dir, newVersion)
-    val hitRead = if (hit.isEmpty) null
-      else Manifest.readPhysical(spark, dir,
-        hit.map(e => s"$dir/${e.name}"))
-    val survivorNames =
-      if (hit.isEmpty) Seq.empty[String]
-      else stageAndRename(spark, dir,
-        hitRead.join(broadcast(updKeys), Seq(physKey), "left_anti"),
-        partCols, s"$prefix-keep")
-    // align the batch to the table (hard error on MISSING columns,
-    // add-column evolution on extra ones)
-    val (aligned, evolved) =
-      alignForWrite(spark, dir, entries, updates, partCols)
-    val batchNames = stageAndRename(spark, dir, aligned,
-      partCols, s"$prefix-new")
-    val newEntries =
-      statStaged(spark, dir, statCols, survivorNames ++ batchNames)
-    // change record: old images of replaced keys as deletes, the batch
-    // as inserts (MERGE = delete + insert pairs in the feed) — both
-    // already materialized by this commit's own plans
-    val oldImages =
-      (if (hit.isEmpty)
-        Manifest.readTable(spark, dir).filter(lit(false))
-      else hitRead.join(broadcast(updKeys), Seq(physKey), "left_semi"))
-        .withColumn("_change_type", lit("delete"))
-    Manifest.recordCdc(spark, dir, newVersion,
-      oldImages.unionByName(
-        aligned.withColumn("_change_type", lit("insert")),
-        allowMissingColumns = true))
-    Manifest.write(spark, dir, (kept ++ newEntries).sortBy(_.name),
-      newVersion, claim = Some(claim), schema = evolved)
-    (hit.size, entries.size)
+      entries.filter(e => hit.contains(e.name))
+    }
   }
+
+  /** Align `batch` to the table and stage it under `prefix`: (staged
+    * names, the evolved schema if the batch grew it).
+    */
+  private def stageBatch(spark: SparkSession, dir: String, k: Claimed,
+      batch: DataFrame, prefix: String): (Seq[String], Option[StructType]) = {
+    val sample = k.base.head.toSeq
+    val partCols = partColsFor(spark, dir, sample)
+    val (aligned, evolved) =
+      alignForWrite(spark, dir, sample, batch, partCols)
+    (stageAndRename(spark, dir, aligned, partCols, prefix), evolved)
+  }
+
+  /** The table's recorded schema, for the schema-evolution verbs. */
+  private def schemaOf(spark: SparkSession, dir: String,
+      version: Int): StructType =
+    Manifest.tableSchema(spark, dir, version)
+      .getOrElse(Manifest.readTable(spark, dir).schema)
+
+  /** IN-PLACE upsert (MERGE INTO by key, last-writer-wins): rows of
+    * `updates` REPLACE table rows sharing their `keyCol` and brand-new
+    * keys are inserted — the third manifest-native verb next to delete
+    * and compact. The affected-file search runs manifest-pruned
+    * ([[filesWithKeys]]), survivors drop updated keys via a broadcast
+    * anti-join, and the whole batch lands as delta files beside the
+    * originals. Cost is O(affected files + batch), independent of
+    * table size; history time-travels until vacuum.
+    * Returns (affectedFiles, totalFiles).
+    */
+  def upsertInPlace(spark: SparkSession, dir: String, updates: DataFrame,
+      keyCol: String, statCols: Seq[String] = Nil): (Int, Int) =
+    commit(spark, dir, statCols, listed = true) { k =>
+      requireNoDvs(spark, dir)
+      // file-side scans run under PHYSICAL names; the batch's logical
+      // key joins against the physical one
+      val physKey = viewOf(spark, dir).physName(keyCol)
+      val updKeys = updates.select(col(keyCol).as(physKey)).distinct()
+      val hit = filesWithKeys(spark, dir, k.base.listed,
+        updates.select(col(keyCol).as(physKey)), updKeys, physKey)
+      val prefix = s"upsert-v${k.version}"
+      val partCols = partColsOf(k.base.listed)
+      lazy val hitRead = read(spark, dir, hit.map(_.name))
+      val survivors =
+        if (hit.isEmpty) Nil
+        else stageAndRename(spark, dir,
+          hitRead.join(broadcast(updKeys), Seq(physKey), "left_anti"),
+          partCols, s"$prefix-keep")
+      // align the batch to the table (hard error on MISSING columns,
+      // add-column evolution on extra ones)
+      val (aligned, evolved) =
+        alignForWrite(spark, dir, k.base.listed, updates, partCols)
+      val batchNames = stageAndRename(spark, dir, aligned, partCols,
+        s"$prefix-new")
+      // change record: old images of replaced keys as deletes, the
+      // batch as inserts (MERGE = delete + insert pairs in the feed)
+      Change(added = survivors ++ batchNames,
+        removed = hit.map(_.name).toSet, schema = evolved,
+        cdc = Some(_ =>
+          (if (hit.isEmpty) noChange(spark, dir, "delete")
+          else hitRead.join(broadcast(updKeys), Seq(physKey), "left_semi")
+            .withColumn("_change_type", lit("delete")))
+            .unionByName(aligned.withColumn("_change_type", lit("insert")),
+              allowMissingColumns = true)))
+    }.map(d => (d.removed, d.base.names.size)).get
 
   /** Keyed IN-PLACE delete — the delete half of [[upsertInPlace]]:
     * every row whose `keyCol` appears in `keys` is removed, with the
-    * same manifest-pruned affected-file search (only files whose
-    * recorded key range intersects the key set's are scanned),
-    * broadcast anti-join survivors, delta staging, and commit-time
-    * change record. Cost O(affected files + keys); idempotent —
-    * re-deleting absent keys is a metadata-only version bump, which
-    * is what makes a replayed CDC batch safe.
-    * Returns (affectedFiles, totalFiles).
+    * same manifest-pruned affected-file search, broadcast anti-join
+    * survivors, delta staging, and commit-time change record. Cost
+    * O(affected files + keys); idempotent — re-deleting absent keys is
+    * a metadata-only version bump, which is what makes a replayed CDC
+    * batch safe. Returns (affectedFiles, totalFiles).
     */
   def deleteByKeys(spark: SparkSession, dir: String, keys: DataFrame,
-      keyCol: String, statCols: Seq[String] = Nil): (Int, Int) = {
-    requireNoDvs(spark, dir)
-    val (curV, entries) = Manifest.ensureVersioned(spark, dir, statCols)
-    val newVersion = curV + 1
-    val physKey = physKeyOf(spark, dir, keyCol)
-    val delKeys = keys.select(col(keyCol).as(physKey)).distinct()
-    val rng = delKeys.agg(min(col(physKey)).cast("long"),
-      max(col(physKey)).cast("long")).head()
-    val candidates =
-      if (rng.isNullAt(0)) Seq.empty[ManifestEntry]
-      else {
-        val (lo, hi) = (rng.getLong(0), rng.getLong(1))
-        entries.filter(e => e.stats.find(_.col == physKey)
-          .forall(s => s.max >= lo && s.min <= hi))
-      }
-    val affected =
-      if (candidates.isEmpty) Set.empty[String]
-      else Manifest.readPhysical(spark, dir,
-          candidates.map(e => s"$dir/${e.name}"))
-        .select(col(physKey), input_file_name().as("f"))
-        .join(broadcast(delKeys), Seq(physKey), "left_semi")
-        .select("f").distinct()
-        .collect().map(r => Manifest.relativize(spark, dir, r.getString(0)))
-        .toSet
-    val (hit, kept) = entries.partition(e => affected.contains(e.name))
-    val claim = Manifest.claimVersion(spark, dir, newVersion)
-    val hitRead = if (hit.isEmpty) null
-      else Manifest.readPhysical(spark, dir,
-        hit.map(e => s"$dir/${e.name}"))
-    val deltaEntries =
-      if (hit.isEmpty) Seq.empty
-      else {
-        val names = stageAndRename(spark, dir,
-          hitRead.join(broadcast(delKeys), Seq(physKey), "left_anti"),
-          partColsOf(hit), s"delta-v$newVersion")
-        statStaged(spark, dir, statCols, names)
-      }
-    Manifest.recordCdc(spark, dir, newVersion,
-      (if (hit.isEmpty)
-        Manifest.readTable(spark, dir).filter(lit(false))
-      else hitRead.join(broadcast(delKeys), Seq(physKey), "left_semi"))
-        .withColumn("_change_type", lit("delete")))
-    Manifest.write(spark, dir, (kept ++ deltaEntries).sortBy(_.name),
-      newVersion, claim = Some(claim))
-    (hit.size, entries.size)
-  }
+      keyCol: String, statCols: Seq[String] = Nil): (Int, Int) =
+    commit(spark, dir, statCols, listed = true) { k =>
+      requireNoDvs(spark, dir)
+      val physKey = viewOf(spark, dir).physName(keyCol)
+      val delKeys = keys.select(col(keyCol).as(physKey)).distinct()
+      val hit = filesWithKeys(spark, dir, k.base.listed, delKeys, delKeys,
+        physKey)
+      lazy val hitRead = read(spark, dir, hit.map(_.name))
+      Change(
+        added =
+          if (hit.isEmpty) Nil
+          else stageAndRename(spark, dir,
+            hitRead.join(broadcast(delKeys), Seq(physKey), "left_anti"),
+            partColsOf(hit), s"delta-v${k.version}"),
+        removed = hit.map(_.name).toSet,
+        cdc = Some(_ =>
+          if (hit.isEmpty) noChange(spark, dir, "delete")
+          else hitRead.join(broadcast(delKeys), Seq(physKey), "left_semi")
+            .withColumn("_change_type", lit("delete"))))
+    }.map(d => (d.removed, d.base.names.size)).get
 
   /** DROP COLUMN — the all-metadata evolution verb: the new snapshot
     * carries the same file entries verbatim and a schema WITHOUT the
@@ -767,22 +1095,18 @@ object Layout {
     * payload) and on the last remaining column.
     */
   def dropColumn(spark: SparkSession, dir: String, column: String,
-      statCols: Seq[String] = Nil): Unit = {
-    val (curV, entries) = Manifest.ensureVersioned(spark, dir, statCols)
-    val newVersion = curV + 1
-    require(!partColsOf(entries).contains(column),
-      s"$column is a partition column of $dir — repartition instead")
-    val schema = Manifest.currentVersion(spark, dir)
-      .flatMap(Manifest.tableSchema(spark, dir, _))
-      .getOrElse(Manifest.readTable(spark, dir).schema)
-    require(schema.fieldNames.contains(column),
-      s"$column does not exist in $dir " +
-        s"(have ${schema.fieldNames.mkString(", ")})")
-    val dropped = StructType(schema.fields.filterNot(_.name == column))
-    require(dropped.nonEmpty, s"cannot drop the last column of $dir")
-    Manifest.write(spark, dir, entries, newVersion,
-      schema = Some(dropped))
-  }
+      statCols: Seq[String] = Nil): Unit =
+    commit(spark, dir, statCols, listed = true) { k =>
+      require(!partColsOf(k.base.listed).contains(column),
+        s"$column is a partition column of $dir — repartition instead")
+      val schema = schemaOf(spark, dir, k.base.version)
+      require(schema.fieldNames.contains(column),
+        s"$column does not exist in $dir " +
+          s"(have ${schema.fieldNames.mkString(", ")})")
+      val dropped = StructType(schema.fields.filterNot(_.name == column))
+      require(dropped.nonEmpty, s"cannot drop the last column of $dir")
+      Change(schema = Some(dropped))
+    }: Unit
 
   /** RENAME COLUMN — metadata-only, Delta-column-mapping style: every
     * already-written file keeps the column under its ORIGINAL physical
@@ -795,38 +1119,33 @@ object Layout {
     * original physical name. No data file is touched.
     */
   def renameColumn(spark: SparkSession, dir: String, from: String,
-      to: String, statCols: Seq[String] = Nil): Unit = {
-    val (curV, entries) = Manifest.ensureVersioned(spark, dir, statCols)
-    val newVersion = curV + 1
-    require(!partColsOf(entries).contains(from),
-      s"$from is a partition column of $dir — partition names are " +
-        "directory structure, not file payload")
-    val schema = Manifest.currentVersion(spark, dir)
-      .flatMap(Manifest.tableSchema(spark, dir, _))
-      .getOrElse(Manifest.readTable(spark, dir).schema)
-    require(schema.fieldNames.contains(from),
-      s"$from does not exist in $dir " +
-        s"(have ${schema.fieldNames.mkString(", ")})")
-    require(!schema.fieldNames.contains(to),
-      s"$to already exists in $dir")
-    // logical names may not shadow another field's PHYSICAL name:
-    // files and staged writes are keyed physically, and a later
-    // rename/drop against the shadowed field becomes ambiguous
-    schema.fields.find(f => f.name != from && Manifest.physNameOf(f) == to)
-      .foreach(c => throw new IllegalArgumentException(
-        s"cannot rename $from to '$to' in $dir: column '${c.name}' " +
-          s"still writes under physical name '$to' — pick another name"))
-    val renamed = StructType(schema.fields.map { f =>
-      if (f.name != from) f
-      else f.copy(name = to, metadata =
-        new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f.metadata)
-          .putString(Manifest.PhysNameKey, Manifest.physNameOf(f))
-          .build())
-    })
-    Manifest.write(spark, dir, entries, newVersion,
-      schema = Some(renamed))
-  }
+      to: String, statCols: Seq[String] = Nil): Unit =
+    commit(spark, dir, statCols, listed = true) { k =>
+      require(!partColsOf(k.base.listed).contains(from),
+        s"$from is a partition column of $dir — partition names are " +
+          "directory structure, not file payload")
+      val schema = schemaOf(spark, dir, k.base.version)
+      require(schema.fieldNames.contains(from),
+        s"$from does not exist in $dir " +
+          s"(have ${schema.fieldNames.mkString(", ")})")
+      require(!schema.fieldNames.contains(to),
+        s"$to already exists in $dir")
+      // logical names may not shadow another field's PHYSICAL name:
+      // files and staged writes are keyed physically, and a later
+      // rename/drop against the shadowed field becomes ambiguous
+      schema.fields.find(f => f.name != from && Manifest.physNameOf(f) == to)
+        .foreach(c => throw new IllegalArgumentException(
+          s"cannot rename $from to '$to' in $dir: column '${c.name}' " +
+            s"still writes under physical name '$to' — pick another name"))
+      Change(schema = Some(StructType(schema.fields.map { f =>
+        if (f.name != from) f
+        else f.copy(name = to, metadata =
+          new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(f.metadata)
+            .putString(Manifest.PhysNameKey, Manifest.physNameOf(f))
+            .build())
+      })))
+    }: Unit
 
   /** The lossless widenings the vectorized parquet reader upcasts
     * natively (verified by WidenProbeSpec): files written before the
@@ -846,30 +1165,55 @@ object Layout {
     * schema's field changes type, existing files keep their narrower
     * physical encoding and upcast at read, and [[alignForWrite]]'s
     * cast discipline makes every future write stage the wide type.
+    * Idempotent: a column already of type `to` commits nothing.
     */
   def widenColumn(spark: SparkSession, dir: String, column: String,
       to: DataType, statCols: Seq[String] = Nil): Unit = {
-    val (curV, entries) = Manifest.ensureVersioned(spark, dir, statCols)
-    val newVersion = curV + 1
-    require(!partColsOf(entries).contains(column),
-      s"$column is a partition column of $dir — repartition instead")
-    val schema = Manifest.currentVersion(spark, dir)
-      .flatMap(Manifest.tableSchema(spark, dir, _))
-      .getOrElse(Manifest.readTable(spark, dir).schema)
-    val field = schema.fields.find(_.name == column).getOrElse(
-      throw new IllegalArgumentException(
-        s"$column does not exist in $dir " +
-          s"(have ${schema.fieldNames.mkString(", ")})"))
-    if (field.dataType == to) return // idempotent
-    require(WidenOk.contains((field.dataType, to)),
-      s"cannot widen $column from ${field.dataType.simpleString} to " +
-        s"${to.simpleString} — only lossless promotions " +
-        "(integral up-chain, float→double) are metadata-only")
-    val widened = StructType(schema.fields.map(f =>
-      if (f.name == column) f.copy(dataType = to) else f))
-    Manifest.write(spark, dir, entries, newVersion,
-      schema = Some(widened))
+    if (Manifest.currentVersion(spark, dir).exists(v =>
+        schemaOf(spark, dir, v).fields.exists(f =>
+          f.name == column && f.dataType == to))) return
+    commit(spark, dir, statCols, listed = true) { k =>
+      require(!partColsOf(k.base.listed).contains(column),
+        s"$column is a partition column of $dir — repartition instead")
+      val schema = schemaOf(spark, dir, k.base.version)
+      val field = schema.fields.find(_.name == column).getOrElse(
+        throw new IllegalArgumentException(
+          s"$column does not exist in $dir " +
+            s"(have ${schema.fieldNames.mkString(", ")})"))
+      require(field.dataType == to || WidenOk.contains((field.dataType, to)),
+        s"cannot widen $column from ${field.dataType.simpleString} to " +
+          s"${to.simpleString} — only lossless promotions " +
+          "(integral up-chain, float→double) are metadata-only")
+      Change(schema = Some(StructType(schema.fields.map(f =>
+        if (f.name == column) f.copy(dataType = to) else f))))
+    }: Unit
   }
+
+  /** ADD COLUMN as a METADATA-ONLY commit — the mirror of
+    * [[dropColumn]]: the recorded schema gains `field` (stored
+    * nullable, as all recorded fields are), no data file is touched,
+    * and every existing file NULL-backfills the column at read through
+    * the snapshot's schema. Later write batches may supply it (they
+    * align by name). Errors if the column already exists.
+    */
+  def addColumn(spark: SparkSession, dir: String,
+      field: StructField, statCols: Seq[String] = Nil): Unit =
+    commit(spark, dir, statCols, listed = true) { k =>
+      val schema = schemaOf(spark, dir, k.base.version)
+      require(!schema.fieldNames.contains(field.name),
+        s"column ${field.name} already exists in $dir")
+      // same guard as alignForWrite's auto-evolution: a new column named
+      // after an existing field's physical name would record a physical
+      // schema with two identical fields — commit succeeds, every
+      // subsequent read fails analysis
+      schema.fields.find(f => Manifest.physNameOf(f) == field.name)
+        .foreach(c => throw new IllegalArgumentException(
+          s"cannot add column '${field.name}' to $dir: column " +
+            s"'${c.name}' still writes under physical name " +
+            s"'${field.name}' — pick a different name"))
+      Change(schema =
+        Some(StructType(schema.fields :+ field.copy(nullable = true))))
+    }: Unit
 
   /** MERGE-ON-READ delete — the write-cheap path: matching rows are
     * MARKED in a deletion vector ((file, row position) pairs under
@@ -913,238 +1257,69 @@ object Layout {
     * doomed set is frame-valued (broadcast semi-join marking, like
     * [[deleteMergeOnReadKeys]]); the single change record carries the
     * newly-marked deletes plus the staged inserts, so the change feed
-    * sees the commit as the replace it is. Returns
+    * sees the commit as the replace it is. App-scoped exactly-once
+    * like [[appendInPlace]]: a replayed replace no-ops. Returns
     * (rowsMarked, filesAdded).
     */
   def appendAndDeleteKeys(spark: SparkSession, dir: String,
       batch: DataFrame, doomed: DataFrame, keyCol: String,
       statCols: Seq[String] = Nil,
-      txnApp: Option[(String, Long)] = None): (Long, Int) = {
-    // app-scoped exactly-once (the appendInPlace contract): a replayed
-    // replace — an ingest loop restarting after a crash downstream of
-    // this commit — no-ops instead of re-marking and re-appending
-    if (isReplay(spark, dir, None, txnApp)) return (0L, 0)
-    val (v, carried, head) =
-      Manifest.ensureVersionedDelta(spark, dir, statCols)
-    val newVersion = v + 1
-    val (names, totalRows) = Manifest.namesAndRows(spark, dir, v)
-    val old = Manifest.dvMarks(spark, dir, v)
-    val rawOpt =
-      if (names.isEmpty) None // empty standing table: nothing to mark
-      else Some(Manifest.readPhysical(spark, dir,
-          names.map(n => s"$dir/$n"))
-        .withColumn("_mk_f", Manifest.dvFileKey(Manifest.dvDepth(names)))
-        .withColumn("_mk_p", col("_metadata.row_index")))
-    // ONE standing-table scan (round 19): materialize the doomed-
-    // matching rows — O(doomed) rows, all columns + (file, pos) — and
-    // derive BOTH the new DV marks and the change record's delete
-    // rows from the materialization. The old shape scanned the full
-    // table once for the marks and a second time for the CDC delete
-    // rows; at 100 TB the table scan is this commit's dominant cost,
-    // and it was paid twice per replace batch.
-    val matchedOpt = rawOpt.map { raw =>
-      val logical = Manifest.currentVersion(spark, dir)
-        .flatMap(Manifest.tableSchema(spark, dir, _))
-        .map(Manifest.toLogicalKeeping(raw, _)).getOrElse(raw)
-      logical
-        .join(broadcast(doomed.select(col(keyCol)).distinct()),
-          Seq(keyCol), "left_semi")
-        .localCheckpoint(true)
-    }
-    val marks = matchedOpt match {
-      case None => old.filter(lit(false))
-      case Some(m) =>
-        m.select(col("_mk_f").as("file"), col("_mk_p").as("pos"))
-    }
-    val claim = Manifest.claimVersion(spark, dir, newVersion)
-    // stage the batch exactly like appendInPlace
-    val sample = head.toSeq
-    val partCols = partColsFor(spark, dir, sample)
-    val (aligned, evolved) =
-      alignForWrite(spark, dir, sample, batch, partCols)
-    val stagedNames = stageAndRename(spark, dir, aligned, partCols,
-      s"append-v$newVersion")
-    val newEntries = statStaged(spark, dir, statCols, stagedNames)
-    // ONE change record: newly-marked deletes + the staged inserts
-    // (the feed reads recorded sets exclusively when present, so the
-    // inserts must be restated here, unlike a plain append)
-    // read the SURVIVING entries, not all staged names — statStaged
-    // drops zero-row staged files (the round-16 footer fast path)
-    // logical names on BOTH change-record sides: the delete rows come
-    // off the logical `matched` frame, so the insert read projects to
-    // logical too or a renamed-schema table's unionByName would
-    // misalign (recordCdc stores the union back under physical names)
-    val cdcIns0 =
-      if (newEntries.isEmpty)
-        Manifest.readTable(spark, dir).filter(lit(false))
-          .withColumn("_change_type", lit("insert"))
-      else spark.read.option("basePath", dir)
-        .parquet(newEntries.map(e => s"$dir/${e.name}"): _*)
-        .withColumn("_change_type", lit("insert"))
-    val cdcIns = Manifest.currentVersion(spark, dir)
-      .flatMap(Manifest.tableSchema(spark, dir, _))
-      .map(Manifest.toLogicalKeeping(cdcIns0, _)).getOrElse(cdcIns0)
-    val marked = commitMarks(spark, dir, v, claim, marks, old, carried,
-        newEntries, totalRows, statCols, evolved, txnApp) { deltaMarks =>
-      val cdcDel = matchedOpt match {
-        case None => cdcIns.filter(lit(false))
-          .withColumn("_change_type", lit("delete"))
-        case Some(m) => m
-          .join(broadcast(deltaMarks), m("_mk_f") === deltaMarks("file") &&
-            m("_mk_p") === deltaMarks("pos"), "left_semi")
-          .drop("_mk_f", "_mk_p")
-          .withColumn("_change_type", lit("delete"))
-      }
-      cdcDel.unionByName(cdcIns, allowMissingColumns = true)
-    }
-    (marked, stagedNames.size)
-  }
-
-  /** Exact row count of the parquet part files under `dir`, off their
-    * FOOTERS — driver metadata reads, the [[Manifest.scanStats]]
-    * fast-path pattern (round 20). Used to count a just-written mark
-    * DELTA without a count job OR an Observation await (the listener
-    * bus adds latency per commit); the delta is O(batch) files by
-    * construction, so the footer loop is microseconds-per-file driver
-    * work at any table scale.
-    */
-  private def parquetRowsUnder(spark: SparkSession, dir: Path): Long = {
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return 0L
-    val conf = spark.sparkContext.hadoopConfiguration
-    var n = 0L
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            f.getPath, conf))
-        n += (try rd.getRecordCount finally rd.close())
-      }
-    }
-    n
-  }
+      txnApp: Option[(String, Long)] = None): (Long, Int) =
+    commit(spark, dir, statCols, txnApp = txnApp) { k =>
+      val view = viewOf(spark, dir)
+      // ONE standing-table scan (round 19): materialize the doomed-
+      // matching rows — O(doomed) rows, all columns + (file, pos) — and
+      // derive BOTH the new marks and the change record's delete rows
+      // from it; at 100 TB the table scan is this commit's dominant
+      // cost. An empty standing table has nothing to mark.
+      val matched =
+        if (k.base.names.isEmpty) None
+        else Some(view.logical(positioned(spark, dir, k.base.names))
+          .join(broadcast(doomed.select(col(keyCol)).distinct()),
+            Seq(keyCol), "left_semi")
+          .localCheckpoint(true))
+      val (staged, evolved) =
+        stageBatch(spark, dir, k, batch, s"append-v${k.version}")
+      Change(added = staged, schema = evolved,
+        dv = DvMarks(matched.map(_.select(col("_mk_f").as("file"),
+          col("_mk_p").as("pos"))).getOrElse(Manifest.noMarks(spark))),
+        // the feed reads recorded sets exclusively when present, so the
+        // inserts restate here (unlike a plain append) — logical names
+        // on both sides, matching the delete rows
+        cdc = Some { w =>
+          val ins = view.logical(
+            if (w.added.isEmpty) noChange(spark, dir)
+            else spark.read.option("basePath", dir)
+              .parquet(w.added.map(e => s"$dir/${e.name}"): _*)
+              .withColumn("_change_type", lit("insert")))
+          val del = matched match {
+            case None => ins.filter(lit(false))
+            case Some(m) => byMarks(m, w.marks, "left_semi")
+          }
+          del.withColumn("_change_type", lit("delete"))
+            .unionByName(ins, allowMissingColumns = true)
+        })
+    }.map(d => (d.marked, d.added.size)).getOrElse((0L, 0))
 
   private def deleteMergeOnReadWhere(spark: SparkSession, dir: String,
       matching: DataFrame => DataFrame,
-      statCols: Seq[String]): (Long, Int) = {
+      statCols: Seq[String]): (Long, Int) =
     // entries transfer verbatim — only NAMES (for the scan) and the
-    // row total (for the flush policy) ever reach the driver; a
-    // chunked base commits O(#chunks) metadata however big the table
-    val (v, carried, _) =
-      Manifest.ensureVersionedDelta(spark, dir, statCols)
-    val (names, totalRows) = Manifest.namesAndRows(spark, dir, v)
-    val raw = Manifest.readPhysical(spark, dir,
-        names.map(n => s"$dir/$n"))
-      // materialize position metadata BEFORE any projection, then
-      // present logical names so `pred` resolves on a renamed table.
-      // Keyed by the ROOT-RELATIVE name (Manifest.dvFileKey): Hive
-      // partition dirs repeat basenames, and a basename key deletes
-      // same-position rows in sibling partitions (round-17 fix)
-      .withColumn("_mk_f", Manifest.dvFileKey(Manifest.dvDepth(names)))
-      .withColumn("_mk_p", col("_metadata.row_index"))
-    val logical = Manifest.currentVersion(spark, dir)
-      .flatMap(Manifest.tableSchema(spark, dir, _))
-      .map(Manifest.toLogicalKeeping(raw, _)).getOrElse(raw)
-    // re-marking an already-deleted row is harmless (set union), so
-    // the scan can run raw — no need to subtract existing vectors
-    val marks = matching(logical).select(
-      col("_mk_f").as("file"), col("_mk_p").as("pos"))
-    val old = Manifest.dvMarks(spark, dir, v)
-    // claim the version BEFORE writing its vector: a lost commit race
-    // must not leave an orphan dv-v{K} that the winner's snapshot
-    // would appear to own
-    val claim = Manifest.claimVersion(spark, dir, v + 1)
-    // entries transfer VERBATIM: the delete is pure metadata. The
-    // change record holds the NEWLY marked rows (marks already present
-    // in the previous vector were deleted by an earlier commit and
-    // must not restate) — read back by position from the raw scan
-    val marked = commitMarks(spark, dir, v, claim, marks, old, carried,
-        Nil, totalRows, statCols) { deltaMarks =>
-      raw
-        .join(broadcast(deltaMarks), raw("_mk_f") === deltaMarks("file") &&
-          raw("_mk_p") === deltaMarks("pos"), "left_semi")
-        .drop("_mk_f", "_mk_p")
-        .withColumn("_change_type", lit("delete"))
-    }
-    (marked, names.size)
-  }
-
-  /** The vector commit both marking verbs share ([[appendAndDeleteKeys]],
-    * [[deleteMergeOnReadWhere]]): version `v + 1`, under the caller's
-    * `claim`, gets `v`'s vector plus the newly-marked subset of
-    * `marks`, the change rows `cdcOf(delta)` builds, and a snapshot
-    * carrying `carried` plus `added` entries. Returns the cumulative
-    * mark count.
-    *
-    * DELTA-CARRIED vector (round 20): re-writing the ENTIRE cumulative
-    * mark set through a Spark job on every commit (union + distinct +
-    * Hive-partitioned write) and re-reading the old store for the
-    * pre-count, the exceptAll and the CDC side cost O(cumulative marks)
-    * per O(batch) commit — the dominant per-batch cost of the
-    * keep-best ingest loop by batch 3. Instead:
-    *   1. carry the old vector BYTE-IDENTICAL via filesystem copy —
-    *      the appendInPlace precedent (round 17), no Spark job;
-    *   2. write ONLY the new marks (anti-joined against `old`, so the
-    *      store stays duplicate-free) as a Hive-keyed delta, read it
-    *      back for the change record, then MOVE its parts into the
-    *      carried `file=` dirs (pure renames — part names are
-    *      write-unique);
-    *   3. cumulative count = the `_COUNT` sidecar + the delta count
-    *      off the delta's footers — zero count jobs (a pre-sidecar
-    *      store falls back to one count, then carries).
-    * The vector stays KEYED BY DATA FILE (Hive partitionBy) so a scan
-    * task loads exactly its own file's positions — O(own marks) per
-    * reader, never the whole table's vector through the driver.
-    */
-  private def commitMarks(spark: SparkSession, dir: String, v: Int,
-      claim: String, marks: DataFrame, old: DataFrame,
-      carried: Seq[Manifest.ChunkRef], added: Seq[ManifestEntry],
-      totalRows: Long, statCols: Seq[String],
-      schema: Option[StructType] = None,
-      txnApp: Option[(String, Long)] = None)(
-      cdcOf: DataFrame => DataFrame): Long = {
-    val newVersion = v + 1
-    val dvNew = new Path(Manifest.dvDir(dir, newVersion))
-    val fs = dvNew.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(dvNew, true) // a crashed claim's orphan must not merge
-    val oldCount =
-      if (!fs.exists(new Path(Manifest.dvDir(dir, v)))) 0L
-      else Manifest.dvCountOf(spark, dir, v).getOrElse(old.count())
-    Manifest.copyDvDir(spark, dir, v, newVersion)
-    val dvTmp = new Path(s"${Manifest.dvDir(dir, newVersion)}.tmp")
-    fs.delete(dvTmp, true)
-    marks.join(old, Seq("file", "pos"), "left_anti")
-      .repartition(col("file")).write.mode("overwrite")
-      .partitionBy("file").parquet(dvTmp.toString)
-    val delta = parquetRowsUnder(spark, dvTmp)
-    val marked = oldCount + delta
-    val deltaMarks =
-      if (delta == 0L) old.filter(lit(false))
-      else spark.read.parquet(dvTmp.toString)
-        .select(col("file").cast("string"), col("pos"))
-    Manifest.recordCdc(spark, dir, newVersion, cdcOf(deltaMarks))
-    // land the delta AFTER the CDC read of its tmp materialization,
-    // then stamp; a zero-mark commit installs no (empty) vector
-    Manifest.moveDvDelta(spark, dir, newVersion, dvTmp)
-    if (marked > 0) Manifest.stampDvCount(spark, dir, newVersion, marked)
-    else fs.delete(dvNew, true): Unit
-    Manifest.writeChunked(spark, dir, newVersion, carried, Seq(added),
-      claim = Some(claim), schema = schema, txnApp = txnApp)
-    // AUTO-FLUSH policy: past a marks-to-rows ratio the per-read
-    // skip/anti-join work outweighs rewriting the marked files, and
-    // an unbounded vector is exactly what makes any DV read path
-    // dangerous at scale — flush immediately (its own commit), so
-    // sustained delete workloads keep mark counts bounded without
-    // manual maintenance. 0 disables; OPTIMIZE also consumes marks
-    // inline for files it rewrites.
-    val flushRatio = spark.conf.getOption("spark.graft.dv.autoFlushRatio")
-      .map(_.toDouble).getOrElse(0.10)
-    if (flushRatio > 0 && totalRows > 0 && marked > flushRatio * totalRows)
-      flushDeleteVectors(spark, dir, statCols)
-    marked
-  }
+    // row total (for the flush policy) reach the driver
+    commit(spark, dir, statCols) { k =>
+      // position metadata materializes BEFORE any projection, then
+      // logical names let `matching` resolve on a renamed table; re-
+      // marking an already-deleted row is harmless (set union), so the
+      // scan runs raw
+      val raw = positioned(spark, dir, k.base.names)
+      Change(
+        dv = DvMarks(matching(viewOf(spark, dir).logical(raw))
+          .select(col("_mk_f").as("file"), col("_mk_p").as("pos"))),
+        // the NEWLY marked rows only: marks already present were
+        // deleted by an earlier commit and must not restate
+        cdc = Some(w => byMarks(raw, w.marks, "left_semi")
+          .withColumn("_change_type", lit("delete"))))
+    }.map(d => (d.marked, d.base.names.size)).get
 
   /** Materialize a table's deletion vectors: rewrite ONLY the files
     * that carry marks (dropping the marked positions) and commit a
@@ -1156,48 +1331,21 @@ object Layout {
     */
   def flushDeleteVectors(spark: SparkSession, dir: String,
       statCols: Seq[String] = Nil): Int = {
-    val v = Manifest.currentVersion(spark, dir).getOrElse(return 0)
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(Manifest.dvDir(dir, v)))) return 0
-    val entries = Manifest.read(spark, dir).get
-    val dv = Manifest.dvMarks(spark, dir, v)
-    val markedFiles = dv.select("file").distinct()
-      .collect().map(_.getString(0)).toSet
-    val (hit, kept) = entries.partition(e =>
-      markedFiles.contains(e.name))
-    val newVersion = v + 1
-    val survivors = Manifest.readPhysical(spark, dir,
-        hit.map(e => s"$dir/${e.name}"))
-      .withColumn("_dv_f",
-        Manifest.dvFileKey(Manifest.dvDepth(hit.map(_.name))))
-      .withColumn("_dv_p", col("_metadata.row_index"))
-      .join(broadcast(dv), col("_dv_f") === dv("file") &&
-        col("_dv_p") === dv("pos"), "left_anti")
-      .drop("_dv_f", "_dv_p")
-    val names = stageAndRename(spark, dir, survivors, partColsOf(hit),
-      s"flush-v$newVersion")
-    val newEntries = statStaged(spark, dir, statCols, names)
-    // flushing materializes deletes that were already logical at the
-    // marking commit: zero change rows, recorded explicitly
-    Manifest.recordCdc(spark, dir, newVersion,
-      Manifest.readTable(spark, dir).filter(lit(false))
-        .withColumn("_change_type", lit("insert")))
-    // the new snapshot carries NO dv-v{newVersion}: vectors are spent
-    Manifest.write(spark, dir, (kept ++ newEntries).sortBy(_.name),
-      newVersion)
-    hit.size
+    if (!Manifest.hasDeletionVectors(spark, dir)) return 0
+    commit(spark, dir, statCols, listed = true) { k =>
+      val dv = Manifest.dvMarks(spark, dir, k.base.version)
+      val marked = dv.select("file").distinct()
+        .collect().map(_.getString(0)).toSet
+      val hit = k.base.names.filter(marked.contains)
+      Change(
+        added = stageAndRename(spark, dir,
+          byMarks(positioned(spark, dir, hit), dv, "left_anti"),
+          partColsOfNames(hit), s"flush-v${k.version}"),
+        removed = hit.toSet, dv = DvDrop,
+        // the deletes were already logical at the marking commit
+        cdc = Some(_ => noChange(spark, dir)))
+    }.get.removed
   }
-
-  /** A caller-facing (logical) column's PHYSICAL name in this table's
-    * files — identity unless the column was renamed.
-    */
-  private def physKeyOf(spark: SparkSession, dir: String,
-      logical: String): String =
-    Manifest.currentVersion(spark, dir)
-      .flatMap(Manifest.tableSchema(spark, dir, _))
-      .flatMap(_.fields.find(_.name == logical).map(Manifest.physNameOf))
-      .getOrElse(logical)
 
   /** The rewriting verbs read data files RAW (they restate file
     * contents); running one over live deletion vectors would resurrect
@@ -1210,7 +1358,8 @@ object Layout {
 
   /** IN-PLACE append — the insert-only verb: the batch lands as delta
     * files beside the existing ones and every prior entry transfers
-    * verbatim. O(batch) cost, no file of the table is read or touched.
+    * verbatim, carried by chunk reference — appending to a
+    * million-file table costs O(batch) metadata, not O(table).
     *
     * `txn` makes the append EXACTLY-ONCE for streaming: the batch id
     * commits in the same atomic CURRENT write as the snapshot flip, so
@@ -1220,146 +1369,36 @@ object Layout {
     *
     * Live deletion vectors CARRY FORWARD: an append doesn't touch
     * existing files, so the previous version's marks stay exactly
-    * valid — they are copied to the new version's vector under the
-    * commit claim (a DELETE-then-INSERT SQL sequence composes without
-    * a flush in between; only the REWRITING verbs require one).
+    * valid (a DELETE-then-INSERT SQL sequence composes without a flush
+    * in between; only the REWRITING verbs require one).
     * Returns the number of files added (0 for a replay).
     */
   def appendInPlace(spark: SparkSession, dir: String, batch: DataFrame,
       statCols: Seq[String] = Nil, txn: Option[Long] = None,
       txnApp: Option[(String, Long)] = None,
-      meta: Option[Map[String, Long]] = None,
-      metaDelta: () => Option[Map[String, Long]] = () => None): Int = {
-    if (isReplay(spark, dir, txn, txnApp)) return 0
-    // DELTA commit: the base snapshot's chunk list is carried by
-    // reference and only the new entries are written — appending to a
-    // million-file table costs O(batch) metadata, not O(table);
-    // alignment only ever needs one sample entry.
-    val (v, carried, head) =
-      Manifest.ensureVersionedDelta(spark, dir, statCols)
-    val newVersion = v + 1
-    val sample = head.toSeq
-    val partCols = partColsFor(spark, dir, sample)
-    val (aligned, evolved) =
-      alignForWrite(spark, dir, sample, batch, partCols)
-    val names = stageAndRename(spark, dir, aligned,
-      partCols, s"append-v$newVersion")
-    val newEntries = statStaged(spark, dir, statCols, names)
-    val claim =
-      if (!Manifest.hasDeletionVectors(spark, dir)) None
-      else {
-        // claim BEFORE writing dv-v{K+1}: a lost commit race must not
-        // leave an orphan vector the winner's snapshot appears to own
-        val c = Manifest.claimVersion(spark, dir, newVersion)
-        // the carried vector is BYTE-IDENTICAL to the previous one —
-        // a filesystem copy, not a Spark job (round-17: the rewrite
-        // job was ~1-2 s of fixed cost per append on a DV-carrying
-        // table, pure commit machinery)
-        Manifest.copyDvDir(spark, dir, v, newVersion)
-        Some(c)
-      }
-    Manifest.writeChunked(spark, dir, newVersion, carried,
-      Seq(newEntries), txn, claim = claim,
-      schema = evolved, txnApp = txnApp, meta = meta,
-      metaDelta = metaDelta)
-    newEntries.size
-  }
-
-  /** Replay decision for an exactly-once append. App-scoped when the
-    * writer declared (or was defaulted) a txnAppId. On the GLOBAL
-    * single-writer path a batch EQUAL to the watermark is a true
-    * crash re-delivery (foreachBatch only ever re-delivers the last
-    * committed id) and no-ops; a batch BEHIND the watermark belongs
-    * to a DIFFERENT stream — e.g. a fresh checkpoint restarting at
-    * epoch 0 against a table already carrying txn=N — and failing
-    * loudly beats silently dropping its first N+1 batches.
-    */
-  private def isReplay(spark: SparkSession, dir: String,
-      txn: Option[Long], txnApp: Option[(String, Long)]): Boolean =
-    txnApp match {
-      case Some((app, n)) =>
-        Manifest.lastTxnFor(spark, dir, app).exists(_ >= n)
-      case None =>
-        txn.exists { t =>
-          Manifest.lastTxn(spark, dir) match {
-            case Some(last) if t == last => true
-            case Some(last) if t < last =>
-              throw new IllegalStateException(
-                s"batch $t is behind $dir's global txn watermark $last " +
-                  "— a different stream (fresh checkpoint?) appears to " +
-                  "be writing without a txnAppId; scope replays with " +
-                  "txnAppId/appId instead of silently dropping batches")
-            case _ => false
-          }
-        }
-    }
+      metaDelta: () => Option[Map[String, Long]] = () => None): Int =
+    commit(spark, dir, statCols, txn = txn, txnApp = txnApp) { k =>
+      val (names, evolved) =
+        stageBatch(spark, dir, k, batch, s"append-v${k.version}")
+      Change(added = names, schema = evolved, metaDelta = metaDelta)
+    }.map(_.added.size).getOrElse(0)
 
   /** Commit executor-staged parquet dot-files as an APPEND snapshot —
     * the driver half of the connector's STREAMING write
     * (`writeStream.toTable`): tasks stage via the row-level writer,
-    * this renames them in, stats them, carries live deletion vectors,
-    * and commits with the epoch as `txn` — so a replayed epoch
-    * (restart re-delivery) deletes its re-staged files and no-ops,
-    * the same exactly-once guard as [[graft.streaming.ManifestSink]].
-    * Returns files committed (0 for a replay).
+    * this lands them, stats them, carries live deletion vectors, and
+    * commits with the epoch as `txn` — so a replayed epoch (restart
+    * re-delivery) deletes its re-staged files and no-ops, the same
+    * exactly-once guard as [[graft.streaming.ManifestSink]]. A writer
+    * that loses the claim race throws with its dot-files intact, for
+    * its retry. Returns files committed (0 for a replay).
     */
   def commitStagedAppend(spark: SparkSession, dir: String,
       stagedAbs: Seq[String], txn: Option[Long],
       statCols: Seq[String] = Nil,
-      txnApp: Option[(String, Long)] = None): Int = {
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // replay guard: app-scoped watermark when the writer declared (or
-    // the connector defaulted) a txnAppId, else the global
-    // single-writer epoch max
-    if (isReplay(spark, dir, txn, txnApp)) {
-      stagedAbs.foreach(p => fs.delete(new Path(p), false))
-      return 0
-    }
-    // DELTA commit, like appendInPlace: carried chunks by reference,
-    // O(epoch batch) metadata per streaming commit
-    val (curV, carried, _) =
-      Manifest.ensureVersionedDelta(spark, dir, statCols)
-    val newVersion = curV + 1
-    // claim BEFORE landing files: two concurrent epoch commits (the
-    // multi-writer txnAppId scenario) both compute the same K and —
-    // with deterministic target names — the same targets; POSIX
-    // rename silently replaces, so the loser would overwrite the
-    // winner's landed data. Claim-first makes the loser throw here
-    // with its staged dot-files intact (retry/abort cleans them), and
-    // the claim id in the landed names makes collision impossible
-    // even across a lease takeover.
-    val claim = Manifest.claimVersion(spark, dir, newVersion)
-    val tag = claim.take(8)
-    val landed = scala.collection.mutable.ArrayBuffer.empty[Path]
-    try {
-      val names = stagedAbs.sorted.zipWithIndex.map { case (p, i) =>
-        val sub = Manifest.relativize(spark, dir, p)
-          .split('/').dropRight(1).mkString("/")
-        val tgt = (if (sub.isEmpty) "" else s"$sub/") +
-          s"append-v$newVersion-$tag-$i.parquet"
-        require(fs.rename(new Path(p), new Path(s"$dir/$tgt")),
-          s"staged file $p failed to land as $tgt")
-        landed += new Path(s"$dir/$tgt")
-        tgt
-      }
-      val newEntries = statStaged(spark, dir, statCols, names)
-      if (Manifest.hasDeletionVectors(spark, dir))
-        Manifest.copyDvDir(spark, dir, newVersion - 1, newVersion)
-      Manifest.writeChunked(spark, dir, newVersion, carried,
-        Seq(newEntries), txn, claim = Some(claim), txnApp = txnApp)
-      newEntries.size
-    } catch { case e: Throwable =>
-      // Spark does not call abort() after a failed driver commit —
-      // remove already-landed final-looking files so a lost race
-      // leaves nothing the next listing or vacuum could mistake for
-      // committed data
-      landed.foreach(p => try fs.delete(p, false) catch {
-        case _: java.io.IOException => ()
-      })
-      throw e
-    }
-  }
+      txnApp: Option[(String, Long)] = None): Int =
+    commit(spark, dir, statCols, txn = txn, txnApp = txnApp,
+      staged = stagedAbs)(_ => Change()).map(_.added.size).getOrElse(0)
 
   /** DYNAMIC partition overwrite — `df.writeTo(t).overwritePartitions()`:
     * the batch lands as fresh files and every partition directory it
@@ -1368,8 +1407,8 @@ object Layout {
     * metadata swap over staged files). Requires a partitioned table
     * and flushed vectors (the replaced partitions' marks would die
     * with their files). Returns (replacedFiles, addedFiles).
-    */
-  /** `expectedBase` makes the overwrite COMPARE-AND-SWAP (round-17
+    *
+    * `expectedBase` makes the overwrite COMPARE-AND-SWAP (round-17
     * advisor): a caller that computed `batch` from a snapshot read at
     * version V passes Some(V), and the commit fails loudly if the
     * table has advanced past V by the time the claim is taken —
@@ -1377,163 +1416,95 @@ object Layout {
     * landing between the caller's read and this commit would
     * otherwise have its partition contents clobbered by a fold that
     * never saw them). The claim's own basis check then guarantees no
-    * FURTHER commit can interleave: of two writers claiming V+1, one
-    * fails at claim time.
+    * FURTHER commit can interleave.
     */
   def overwritePartitionsInPlace(spark: SparkSession, dir: String,
       batch: DataFrame, statCols: Seq[String] = Nil,
-      expectedBase: Option[Int] = None): (Int, Int) = {
-    requireNoDvs(spark, dir)
-    val (curV, entries) = Manifest.ensureVersioned(spark, dir, statCols)
-    expectedBase.foreach(e => if (e != curV)
-      throw new java.util.ConcurrentModificationException(
-        s"$dir advanced to v$curV past the caller's read at v$e — " +
-          "the staged fold was computed from a stale snapshot; " +
-          "re-read and retry in a single-writer maintenance window"))
-    val newVersion = curV + 1
-    val partCols = partColsFor(spark, dir, entries)
-    require(partCols.nonEmpty,
-      s"$dir is unpartitioned — dynamic partition overwrite needs " +
-        "partition directories; use overwriteInPlace for whole-table")
-    val (aligned, evolved) =
-      alignForWrite(spark, dir, entries, batch, partCols)
-    val claim = Manifest.claimVersion(spark, dir, newVersion)
-    val names = stageAndRename(spark, dir, aligned, partCols,
-      s"dynover-v$newVersion")
-    commitDynamicCore(spark, dir, entries, names, newVersion,
-      claim, statCols, evolved)
-  }
+      expectedBase: Option[Int] = None): (Int, Int) =
+    commit(spark, dir, statCols, listed = true) { k =>
+      requireNoDvs(spark, dir)
+      expectedBase.foreach(e => if (e != k.base.version)
+        throw new java.util.ConcurrentModificationException(
+          s"$dir advanced to v${k.base.version} past the caller's read " +
+            s"at v$e — the staged fold was computed from a stale " +
+            "snapshot; re-read and retry in a single-writer maintenance " +
+            "window"))
+      requirePartitioned(spark, dir, k)
+      val (names, evolved) =
+        stageBatch(spark, dir, k, batch, s"dynover-v${k.version}")
+      replacePartitions(spark, dir, k, names).copy(added = names,
+        schema = evolved)
+    }.map(d => (d.removed, d.added.size)).get
 
   /** Commit executor-staged dot-files as a DYNAMIC partition
     * overwrite — the driver half of the connector's V2 batch write
     * (`df.writeTo(t).overwritePartitions()` has no V1 bridge).
     */
   def commitStagedDynamicOverwrite(spark: SparkSession, dir: String,
-      stagedAbs: Seq[String], statCols: Seq[String] = Nil): (Int, Int) = {
-    requireNoDvs(spark, dir)
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val (curV, entries) = Manifest.ensureVersioned(spark, dir, statCols)
-    val newVersion = curV + 1
-    // same contract as overwritePartitionsInPlace: on an unpartitioned
-    // table every staged file shares dirname "", and "replace touched
-    // partitions" would silently degrade into a full-table overwrite
-    require(partColsFor(spark, dir, entries).nonEmpty,
+      stagedAbs: Seq[String], statCols: Seq[String] = Nil): (Int, Int) =
+    commit(spark, dir, statCols, listed = true, staged = stagedAbs,
+        landAs = "dynover") { k =>
+      requireNoDvs(spark, dir)
+      requirePartitioned(spark, dir, k)
+      replacePartitions(spark, dir, k, k.landed)
+    }.map(d => (d.removed, d.added.size)).get
+
+  /** On an unpartitioned table every staged file shares dirname "",
+    * and "replace touched partitions" would silently degrade into a
+    * full-table overwrite.
+    */
+  private def requirePartitioned(spark: SparkSession, dir: String,
+      k: Claimed): Unit =
+    require(partColsFor(spark, dir, k.base.head.toSeq).nonEmpty,
       s"$dir is unpartitioned — dynamic partition overwrite needs " +
         "partition directories; use overwriteInPlace for whole-table")
-    val claim = Manifest.claimVersion(spark, dir, newVersion)
-    val tag = claim.take(8)
-    val landed = scala.collection.mutable.ArrayBuffer.empty[Path]
-    try {
-      val names = stagedAbs.sorted.zipWithIndex.map { case (p, i) =>
-        val sub = Manifest.relativize(spark, dir, p)
-          .split('/').dropRight(1).mkString("/")
-        val tgt = (if (sub.isEmpty) "" else s"$sub/") +
-          s"dynover-v$newVersion-$tag-$i.parquet"
-        require(fs.rename(new Path(p), new Path(s"$dir/$tgt")),
-          s"staged file $p failed to land as $tgt")
-        landed += new Path(s"$dir/$tgt")
-        tgt
-      }
-      commitDynamicCore(spark, dir, entries, names, newVersion,
-        claim, statCols, None)
-    } catch { case e: Throwable =>
-      landed.foreach(p => try fs.delete(p, false) catch {
-        case _: java.io.IOException => ()
-      })
-      throw e
-    }
-  }
 
-  /** Shared tail of the two dynamic-overwrite entry points: every
-    * partition directory the staged files TOUCH is superseded whole,
-    * untouched partitions carry verbatim; pre/post images recorded.
+  /** The dynamic-overwrite change: every partition directory `names`
+    * TOUCH is superseded whole, untouched partitions carry verbatim;
+    * the replaced rows record as deletes, the new ones as inserts.
     */
-  private def commitDynamicCore(spark: SparkSession, dir: String,
-      entries: Seq[ManifestEntry], names: Seq[String], newVersion: Int,
-      claim: String, statCols: Seq[String],
-      evolved: Option[StructType]): (Int, Int) = {
-    val newEntries = statStaged(spark, dir, statCols, names)
-    val touched = names.map(_.split('/').dropRight(1).mkString("/")).toSet
-    val (hit, kept) = entries.partition(e =>
-      touched.contains(e.name.split('/').dropRight(1).mkString("/")))
-    // change record: replaced partitions' rows out, the batch in
-    val pre =
-      if (hit.isEmpty)
-        Manifest.readTable(spark, dir).filter(lit(false))
-      else Manifest.readPhysical(spark, dir,
-        hit.map(e => s"$dir/${e.name}"))
-    Manifest.recordCdc(spark, dir, newVersion,
-      pre.withColumn("_change_type", lit("delete"))
-        .unionByName(
-          Manifest.readPhysical(spark, dir,
-            newEntries.map(e => s"$dir/${e.name}"))
-            .withColumn("_change_type", lit("insert")),
-          allowMissingColumns = true))
-    Manifest.write(spark, dir, (kept ++ newEntries).sortBy(_.name),
-      newVersion, claim = Some(claim), schema = evolved)
-    (hit.size, newEntries.size)
+  private def replacePartitions(spark: SparkSession, dir: String,
+      k: Claimed, names: Seq[String]): Change = {
+    val touched = names.map(parentOf).toSet
+    val hit = k.base.names.filter(n => touched.contains(parentOf(n)))
+    Change(removed = hit.toSet, cdc = Some(w =>
+      (if (hit.isEmpty) noChange(spark, dir, "delete")
+      else read(spark, dir, hit).withColumn("_change_type", lit("delete")))
+        .unionByName(read(spark, dir, w.added.map(_.name))
+          .withColumn("_change_type", lit("insert")),
+          allowMissingColumns = true)))
   }
 
   /** IN-PLACE overwrite — INSERT OVERWRITE for a manifest-managed
     * table: the batch lands as fresh delta files and the new snapshot
     * references ONLY them, superseding every prior file (and any live
-    * deletion vector — vectors are per-version, and the new version
-    * has none). Prior files stay on disk for time travel until
-    * [[Manifest.vacuum]]; cost is O(batch), nothing is read. The
-    * batch aligns to the table's recorded schema exactly as
-    * [[appendInPlace]] (missing column = hard error, extra column =
-    * add-column evolution), so a replacement cannot silently drop or
-    * re-type a column. Returns the number of files written.
+    * deletion vector — the new version has none). Prior files stay on
+    * disk for time travel until [[Manifest.vacuum]]; cost is O(batch),
+    * nothing is read. The batch aligns to the table's recorded schema
+    * exactly as [[appendInPlace]] (missing column = hard error, extra
+    * column = add-column evolution), so a replacement cannot silently
+    * drop or re-type a column. Returns the number of files written.
     */
   def overwriteInPlace(spark: SparkSession, dir: String, batch: DataFrame,
-      statCols: Seq[String] = Nil, txn: Option[Long] = None,
-      meta: Option[Map[String, Long]] = None,
-      metaDelta: () => Option[Map[String, Long]] = () => None): Int = {
-    if (txn.exists(t => Manifest.lastTxn(spark, dir).exists(_ >= t)))
-      return 0
-    val (curV, entries) = Manifest.ensureVersioned(spark, dir, statCols)
-    val newVersion = curV + 1
-    val partCols = partColsFor(spark, dir, entries)
-    val (aligned, evolved) =
-      alignForWrite(spark, dir, entries, batch, partCols)
-    val names = stageAndRename(spark, dir, aligned,
-      partCols, s"overwrite-v$newVersion")
-    val newEntries = statStaged(spark, dir, statCols, names)
-    Manifest.write(spark, dir, newEntries.sortBy(_.name),
-      newVersion, txn, schema = evolved, meta = meta,
-      metaDelta = metaDelta)
-    newEntries.size
-  }
+      statCols: Seq[String] = Nil,
+      metaDelta: () => Option[Map[String, Long]] = () => None): Int =
+    commit(spark, dir, statCols, listed = true) { k =>
+      val (names, evolved) =
+        stageBatch(spark, dir, k, batch, s"overwrite-v${k.version}")
+      Change(added = names, removed = k.base.names.toSet, dv = DvDrop,
+        schema = evolved, metaDelta = metaDelta)
+    }.get.added.size
 
-  /** ADD COLUMN as a METADATA-ONLY commit — the mirror of
-    * [[dropColumn]]: the recorded schema gains `field` (stored
-    * nullable, as all recorded fields are), no data file is touched,
-    * and every existing file NULL-backfills the column at read through
-    * the snapshot's schema. Later write batches may supply it (they
-    * align by name). Errors if the column already exists.
+  /** Max data-file count in any leaf partition directory of the
+    * CURRENT snapshot — pure manifest metadata (no listing, no file
+    * opens). This is the number an append-heavy standing index's
+    * auto-compaction cadence gates on: past a per-directory file
+    * budget, probe cost goes file-open-bound instead of row-bound.
     */
-  def addColumn(spark: SparkSession, dir: String,
-      field: StructField, statCols: Seq[String] = Nil): Unit = {
-    val (curV, entries) = Manifest.ensureVersioned(spark, dir, statCols)
-    val newVersion = curV + 1
-    val schema = Manifest.currentVersion(spark, dir)
-      .flatMap(Manifest.tableSchema(spark, dir, _))
-      .getOrElse(Manifest.readTable(spark, dir).schema)
-    require(!schema.fieldNames.contains(field.name),
-      s"column ${field.name} already exists in $dir")
-    // same guard as alignForWrite's auto-evolution: a new column named
-    // after an existing field's physical name would record a physical
-    // schema with two identical fields — commit succeeds, every
-    // subsequent read fails analysis
-    schema.fields.find(f => Manifest.physNameOf(f) == field.name)
-      .foreach(c => throw new IllegalArgumentException(
-        s"cannot add column '${field.name}' to $dir: column " +
-          s"'${c.name}' still writes under physical name " +
-          s"'${field.name}' — pick a different name"))
-    Manifest.write(spark, dir, entries, newVersion,
-      schema = Some(StructType(schema.fields :+ field.copy(nullable = true))))
-  }
+  def maxFilesPerDir(spark: SparkSession, dir: String): Int =
+    Manifest.read(spark, dir).map(
+      _.groupBy(e => parentOf(e.name))
+        .values.map(_.size).maxOption.getOrElse(0)).getOrElse(0)
 
   /** IN-PLACE compaction — OPTIMIZE for a manifest-managed table,
     * BIN-PACKED: within each directory only the small-file tail
@@ -1564,17 +1535,6 @@ object Layout {
     * would otherwise pay.
     * Returns (filesBefore, filesAfter).
     */
-  /** Max data-file count in any leaf partition directory of the
-    * CURRENT snapshot — pure manifest metadata (no listing, no file
-    * opens). This is the number an append-heavy standing index's
-    * auto-compaction cadence gates on: past a per-directory file
-    * budget, probe cost goes file-open-bound instead of row-bound.
-    */
-  def maxFilesPerDir(spark: SparkSession, dir: String): Int =
-    Manifest.read(spark, dir).map(
-      _.groupBy(_.name.split('/').dropRight(1).mkString("/"))
-        .values.map(_.size).maxOption.getOrElse(0)).getOrElse(0)
-
   def compactInPlace(spark: SparkSession, dir: String,
       targetBytes: Long = 128L << 20,
       statCols: Seq[String] = Nil,
@@ -1583,142 +1543,125 @@ object Layout {
       s"ZORDER BY needs >= 2 columns, got $zorderBy — a single-column " +
         "cluster is a plain sort, not a curve")
     val zBits = if (zorderBy.isEmpty) 16 else math.min(16, 63 / zorderBy.size)
-    val (curVersion, entries) = Manifest.ensureVersioned(spark, dir, statCols)
-    val newVersion = curVersion + 1
-    val dv = Manifest.dvMarks(spark, dir, curVersion)
-    val markedFiles = dv.select("file").distinct()
-      .collect().map(_.getString(0)).toSet
-    val byDir = entries.groupBy(e =>
-      e.name.split('/').dropRight(1).mkString("/"))
-    def bound(es: Seq[ManifestEntry]): Int =
-      math.max(1, math.ceil(es.map(_.bytes).sum.toDouble / targetBytes).toInt)
-    // BIN-PACK, don't blanket-rewrite: within a directory, files
-    // already at (or above) half the target are right-sized — only
-    // the small-file tail merges, and right-sized files carry their
-    // entries verbatim. A day-one streaming table is all tail; a
-    // mature table pays only for what its last increment fragmented.
-    // Exceptions that force a file into the rewrite set anyway:
-    // ZORDER (stats tightening wants every row re-clustered) and
-    // DV-marked files (their marks are consumed by this commit).
-    def splitGroup(es: Seq[ManifestEntry]) = es.partition { e =>
-      zorderBy.nonEmpty || e.bytes < targetBytes / 2 ||
-        markedFiles.contains(e.name)
-    }
-    // a group rewrites when its rewriteable tail actually shrinks
-    // (>= 2 files merge into fewer) or carries marks to consume
-    val (toMergeFull, untouchedFull) = byDir.partition { case (_, es) =>
-      val (tail, _) = splitGroup(es)
-      (tail.size > bound(tail) && tail.size >= 2) ||
-        zorderBy.nonEmpty ||
-        tail.exists(e => markedFiles.contains(e.name))
-    }
-    val toMerge = toMergeFull.map { case (sub, es) =>
-      sub -> splitGroup(es)._1
-    }
-    val rightSized = toMergeFull.toSeq.flatMap { case (_, es) =>
-      splitGroup(es)._2
-    }
-    val untouched = untouchedFull
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // merge groups read FILES under the recorded physical schema
-    // (minus directory-encoded partition columns): a widened table
-    // mixes physical widths on disk, and bare inference would pin one
-    val partSet = partColsOf(entries).toSet
-    val mergeSchema: Option[StructType] =
-      Manifest.tableSchema(spark, dir, curVersion)
-        .map(s => StructType(Manifest.physicalSchema(s)
-          .fields.filterNot(f => partSet.contains(f.name))))
-    val mergedNames =
-      if (toMerge.isEmpty) Seq.empty[String]
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, toMerge.size))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        try {
-          val jobs = toMerge.toSeq.sortBy(_._1).map { case (sub, es) =>
-            scala.concurrent.Future {
-              // read the FILES (no basePath): contents match the
-              // originals exactly — partition values stay directory-
-              // encoded, so the merged file drops in as a sibling
-              val tmp = s"$dir/.tmp-compact-v$newVersion-${sub.hashCode}"
-              val paths = es.map(e => s"$dir/${e.name}")
-              val raw = mergeSchema
-                .map(spark.read.schema(_).parquet(paths: _*))
-                .getOrElse(spark.read.parquet(paths: _*))
-              // subtract live deletion marks inline (broadcast
-              // anti-join — no shuffle) so this rewrite doubles as
-              // the flush for its group's vectors
-              val base =
-                if (es.exists(e => markedFiles.contains(e.name)))
-                  raw.withColumn("_dv_f",
-                      Manifest.dvFileKey(Manifest.dvDepth(es.map(_.name))))
-                    .withColumn("_dv_p", col("_metadata.row_index"))
-                    .join(broadcast(dv), col("_dv_f") === dv("file") &&
-                      col("_dv_p") === dv("pos"), "left_anti")
-                    .drop("_dv_f", "_dv_p")
-                else raw
-              // plain compaction coalesces (no shuffle); ZORDER BY
-              // pays the one range shuffle that buys multi-dim
-              // min/max tightness on every merged file — Delta's
-              // OPTIMIZE ZORDER, expressed over the same manifest.
-              // Each column normalizes to the zBits grid against its
-              // group max, so the interleave never degenerates on
-              // wide or mismatched domains
-              val merged =
-                if (zorderBy.size >= 2) {
-                  val mx = base.agg(
-                    max(col(zorderBy.head).cast("long")),
-                    zorderBy.tail.map(c =>
-                      max(col(c).cast("long"))): _*).head()
-                  val ck = zkeyN(zorderBy.zipWithIndex.map {
-                    case (c, i) => normalizeBits(col(c),
-                      if (mx.isNullAt(i)) 1L else mx.getLong(i), zBits)
-                  }, zBits)
-                  base.withColumn("_zk", ck)
-                    .repartitionByRange(bound(es), col("_zk"))
-                    .sortWithinPartitions("_zk")
-                    .drop("_zk")
-                } else base.coalesce(bound(es))
-              merged.write.mode("overwrite").parquet(tmp)
-              val prefix = if (sub.isEmpty) "" else s"$sub/"
-              val names = fs.listStatus(new Path(tmp))
-                .filter(f => f.isFile &&
-                  f.getPath.getName.endsWith(".parquet"))
-                .map { f =>
-                  val target =
-                    s"${prefix}compact-v$newVersion-${f.getPath.getName}"
-                  fs.mkdirs(new Path(s"$dir/$target").getParent)
-                  fs.rename(f.getPath, new Path(s"$dir/$target"))
-                  target
-                }.toSeq
-              fs.delete(new Path(tmp), true)
-              names
-            }
-          }
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(jobs),
-            scala.concurrent.duration.Duration(30, "min")).flatten
-        } finally pool.shutdown()
+    commit(spark, dir, statCols, listed = true) { k =>
+      val dv = Manifest.dvMarks(spark, dir, k.base.version)
+      val markedFiles = dv.select("file").distinct()
+        .collect().map(_.getString(0)).toSet
+      def bound(es: Seq[ManifestEntry]): Int =
+        math.max(1, math.ceil(es.map(_.bytes).sum.toDouble / targetBytes).toInt)
+      // BIN-PACK, don't blanket-rewrite: within a directory, files
+      // already at (or above) half the target are right-sized — only
+      // the small-file tail merges, and right-sized files carry their
+      // entries verbatim. A day-one streaming table is all tail; a
+      // mature table pays only for what its last increment fragmented.
+      // Exceptions that force a file into the rewrite set anyway:
+      // ZORDER (stats tightening wants every row re-clustered) and
+      // DV-marked files (their marks are consumed by this commit).
+      def tailOf(es: Seq[ManifestEntry]) = es.filter { e =>
+        zorderBy.nonEmpty || e.bytes < targetBytes / 2 ||
+          markedFiles.contains(e.name)
       }
-    val mergedEntries = statStaged(spark, dir, statCols, mergedNames)
-    // an explicit EMPTY change record: compaction (even one spending
-    // deletion vectors — their rows were already logically deleted at
-    // the marking commit) changes no logical row, and the feed must
-    // know that without diffing
-    Manifest.recordCdc(spark, dir, newVersion,
-      Manifest.readTable(spark, dir).filter(lit(false))
-        .withColumn("_change_type", lit("insert")))
-    // right-sized files of rewriting groups carry their entries
-    // verbatim, exactly like untouched groups — metadata only
-    Manifest.write(spark, dir,
-      (untouched.values.flatten.toSeq ++ rightSized ++ mergedEntries)
-        .sortBy(_.name),
-      newVersion)
-    (entries.size,
-      untouched.values.map(_.size).sum + rightSized.size +
-        mergedEntries.size)
+      // a group rewrites when its rewriteable tail actually shrinks
+      // (>= 2 files merge into fewer) or carries marks to consume
+      val toMerge = k.base.listed.groupBy(e => parentOf(e.name))
+        .map { case (sub, es) => sub -> tailOf(es) }
+        .filter { case (_, tail) =>
+          (tail.size > bound(tail) && tail.size >= 2) ||
+            zorderBy.nonEmpty ||
+            tail.exists(e => markedFiles.contains(e.name))
+        }
+      val fs = new Path(dir).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      // merge groups read FILES under the recorded physical schema
+      // (minus directory-encoded partition columns): a widened table
+      // mixes physical widths on disk, and bare inference would pin one
+      val partSet = partColsOf(k.base.listed).toSet
+      val mergeSchema: Option[StructType] =
+        Manifest.tableSchema(spark, dir, k.base.version)
+          .map(s => StructType(Manifest.physicalSchema(s)
+            .fields.filterNot(f => partSet.contains(f.name))))
+      val mergedNames =
+        if (toMerge.isEmpty) Seq.empty[String]
+        else {
+          val pool = java.util.concurrent.Executors.newFixedThreadPool(
+            math.min(8, toMerge.size))
+          implicit val ec: scala.concurrent.ExecutionContext =
+            scala.concurrent.ExecutionContext.fromExecutor(pool)
+          try {
+            val jobs = toMerge.toSeq.sortBy(_._1).map { case (sub, es) =>
+              scala.concurrent.Future {
+                // read the FILES (no basePath): contents match the
+                // originals exactly — partition values stay directory-
+                // encoded, so the merged file drops in as a sibling
+                val tmp = s"$dir/.tmp-compact-v${k.version}-${sub.hashCode}"
+                val paths = es.map(e => s"$dir/${e.name}")
+                val raw = mergeSchema
+                  .map(spark.read.schema(_).parquet(paths: _*))
+                  .getOrElse(spark.read.parquet(paths: _*))
+                // subtract live deletion marks inline (broadcast
+                // anti-join — no shuffle) so this rewrite doubles as
+                // the flush for its group's vectors
+                val base =
+                  if (es.exists(e => markedFiles.contains(e.name)))
+                    byMarks(raw.withColumn("_mk_f",
+                        Manifest.dvFileKey(Manifest.dvDepth(es.map(_.name))))
+                      .withColumn("_mk_p", col("_metadata.row_index")),
+                      dv, "left_anti")
+                  else raw
+                // plain compaction coalesces (no shuffle); ZORDER BY
+                // pays the one range shuffle that buys multi-dim
+                // min/max tightness on every merged file — Delta's
+                // OPTIMIZE ZORDER, expressed over the same manifest.
+                // Each column normalizes to the zBits grid against its
+                // group max, so the interleave never degenerates on
+                // wide or mismatched domains
+                val merged =
+                  if (zorderBy.size >= 2) {
+                    val mx = base.agg(
+                      max(col(zorderBy.head).cast("long")),
+                      zorderBy.tail.map(c =>
+                        max(col(c).cast("long"))): _*).head()
+                    val ck = zkeyN(zorderBy.zipWithIndex.map {
+                      case (c, i) => normalizeBits(col(c),
+                        if (mx.isNullAt(i)) 1L else mx.getLong(i), zBits)
+                    }, zBits)
+                    base.withColumn("_zk", ck)
+                      .repartitionByRange(bound(es), col("_zk"))
+                      .sortWithinPartitions("_zk")
+                      .drop("_zk")
+                  } else base.coalesce(bound(es))
+                merged.write.mode("overwrite").parquet(tmp)
+                val prefix = if (sub.isEmpty) "" else s"$sub/"
+                val names = fs.listStatus(new Path(tmp))
+                  .filter(f => f.isFile &&
+                    f.getPath.getName.endsWith(".parquet"))
+                  .map { f =>
+                    val target =
+                      s"${prefix}compact-v${k.version}-${f.getPath.getName}"
+                    fs.mkdirs(new Path(s"$dir/$target").getParent)
+                    fs.rename(f.getPath, new Path(s"$dir/$target"))
+                    target
+                  }.toSeq
+                fs.delete(new Path(tmp), true)
+                names
+              }
+            }
+            scala.concurrent.Await.result(
+              scala.concurrent.Future.sequence(jobs),
+              scala.concurrent.duration.Duration(30, "min")).flatten
+          } finally pool.shutdown()
+        }
+      // right-sized files of rewriting groups carry their entries
+      // verbatim, exactly like untouched groups — metadata only
+      Change(added = mergedNames,
+        removed = toMerge.values.flatten.map(_.name).toSet, dv = DvDrop,
+        // compaction (even one spending deletion vectors — their rows
+        // were already logically deleted at the marking commit)
+        // changes no logical row, and the feed must know that without
+        // diffing
+        cdc = Some(_ => noChange(spark, dir)))
+    }.map(d => (d.base.names.size,
+      d.base.names.size - d.removed + d.added.size)).get
   }
 
   /** IN-PLACE copy-on-write delete — the manifest-native form that
@@ -1728,67 +1671,38 @@ object Layout {
     * snapshot = untouched entries verbatim + fresh delta entries,
     * CURRENT pointer flips last). Untouched files are not copied, not
     * moved, not even opened: a 100 TB delete costs exactly the
-    * affected-file rewrite plus one small manifest write. Superseded
-    * files stay on disk, so every prior version remains time-
-    * travel-readable until [[Manifest.vacuum]] reclaims them.
+    * affected-file rewrite plus one small manifest write — the commit
+    * removes affected entries from a chunked base by anti-join and
+    * never restates the full list. Superseded files stay on disk, so
+    * every prior version remains time-travel-readable until
+    * [[Manifest.vacuum]] reclaims them.
     * Returns (affectedFiles, totalFiles).
     */
   def deleteInPlace(spark: SparkSession, dir: String, pred: Column,
-      statCols: Seq[String] = Nil): (Int, Int) = {
-    requireNoDvs(spark, dir)
-    // delta-aware: only file NAMES reach the driver (the scan needs
-    // them regardless); the commit removes affected entries from a
-    // chunked base by anti-join and never restates the full list
-    val (curV, carried, _) =
-      Manifest.ensureVersionedDelta(spark, dir, statCols)
-    val allNames = Manifest.namesAndRows(spark, dir, curV)._1
-    val paths = allNames.map(n => s"$dir/$n")
-    // phase 1: affected files via pushed-predicate scan over the
-    // manifest's file list; collect bounded by #files, never rows.
-    // basePath keeps partition-directory columns usable in `pred`.
-    val curSchema = Manifest.currentVersion(spark, dir)
-      .flatMap(Manifest.tableSchema(spark, dir, _))
-    def logicalView(df: DataFrame): DataFrame =
-      curSchema.map(Manifest.toLogicalKeeping(df, _)).getOrElse(df)
-    def physicalStage(df: DataFrame): DataFrame =
-      curSchema.map(Manifest.toPhysicalKeeping(df, _)).getOrElse(df)
-    val affected = logicalView(Manifest.readPhysical(spark, dir, paths))
-      .filter(pred)
-      .select(input_file_name().as("f")).distinct()
-      .collect().map(r => Manifest.relativize(spark, dir, r.getString(0)))
-      .toSet
-    val hitNames = allNames.filter(affected.contains)
-    val newVersion = curV + 1
-    // claim BEFORE side writes (change record, staged deltas) so a
-    // lost commit race cannot leave another writer's version number
-    // pointing at this writer's artifacts
-    val claim = Manifest.claimVersion(spark, dir, newVersion)
-    val hitRead = if (hitNames.isEmpty) null
-      else logicalView(Manifest.readPhysical(spark, dir,
-        hitNames.map(n => s"$dir/$n")))
-    val deltaEntries =
-      if (hitNames.isEmpty) Seq.empty
-      else {
-        // survivors = rows NOT matching (NULL predicate RETAINS the
+      statCols: Seq[String] = Nil): (Int, Int) =
+    commit(spark, dir, statCols) { k =>
+      requireNoDvs(spark, dir)
+      val view = viewOf(spark, dir)
+      val hit = filesMatching(spark, dir, k.base.names, view, pred)
+      lazy val hitRead = view.logical(read(spark, dir, hit))
+      Change(
+        // survivors = rows NOT matching (a NULL predicate RETAINS the
         // row), rewritten with the table's own partitioning so every
         // data file stays at a consistent depth
-        val names = stageAndRename(spark, dir,
-          physicalStage(hitRead.filter(!coalesce(pred, lit(false)))),
-          partColsOfNames(hitNames), s"delta-v$newVersion")
-        statStaged(spark, dir, statCols, names)
-      }
-    // record the commit's change set (the deleted rows — one extra
-    // O(affected) pass over the same pruned file list): consumption
-    // becomes a file read, never a re-diff
-    Manifest.recordCdc(spark, dir, newVersion,
-      (if (hitNames.isEmpty)
-        Manifest.readTable(spark, dir).filter(lit(false))
-      else hitRead.filter(coalesce(pred, lit(false))))
-        .withColumn("_change_type", lit("delete")))
-    Manifest.writeChunkedDelta(spark, dir, newVersion, carried,
-      affected, Seq(deltaEntries), claim = Some(claim))
-    (hitNames.size, allNames.size)
-  }
+        added =
+          if (hit.isEmpty) Nil
+          else stageAndRename(spark, dir,
+            view.physical(hitRead.filter(!coalesce(pred, lit(false)))),
+            partColsOfNames(hit), s"delta-v${k.version}"),
+        removed = hit.toSet,
+        // the deleted rows — one extra O(affected) pass over the same
+        // pruned file list: consumption becomes a file read, never a
+        // re-diff
+        cdc = Some(_ =>
+          if (hit.isEmpty) noChange(spark, dir, "delete")
+          else hitRead.filter(coalesce(pred, lit(false)))
+            .withColumn("_change_type", lit("delete"))))
+    }.map(d => (d.removed, d.base.names.size)).get
 
   /** IN-PLACE UPDATE — copy-on-write `UPDATE ... SET ... WHERE` for a
     * manifest-managed table, completing the mutation verb set
@@ -1806,64 +1720,41 @@ object Layout {
     * Returns (affectedFiles, totalFiles).
     */
   def updateInPlace(spark: SparkSession, dir: String, pred: Column,
-      set: Map[String, Column], statCols: Seq[String] = Nil): (Int, Int) = {
-    requireNoDvs(spark, dir)
-    val (curV, entries) = Manifest.ensureVersioned(spark, dir, statCols)
-    val paths = entries.map(e => s"$dir/${e.name}")
-    val schema = Manifest.readTable(spark, dir).schema
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    set.keys.foreach(c => require(types.contains(c),
-      s"UPDATE target column $c does not exist in $dir " +
-        s"(have ${types.keys.mkString(", ")})"))
-    val safePred = coalesce(pred, lit(false))
-    val curSchema = Manifest.currentVersion(spark, dir)
-      .flatMap(Manifest.tableSchema(spark, dir, _))
-    def logicalView(df: DataFrame): DataFrame =
-      curSchema.map(Manifest.toLogicalKeeping(df, _)).getOrElse(df)
-    def physicalStage(df: DataFrame): DataFrame =
-      curSchema.map(Manifest.toPhysicalKeeping(df, _)).getOrElse(df)
-    val affected = logicalView(Manifest.readPhysical(spark, dir, paths))
-      .filter(safePred)
-      .select(input_file_name().as("f")).distinct()
-      .collect().map(r => Manifest.relativize(spark, dir, r.getString(0)))
-      .toSet
-    val (hit, kept) = entries.partition(e => affected.contains(e.name))
-    val newVersion = curV + 1
-    val claim = Manifest.claimVersion(spark, dir, newVersion)
-    val hitRead = if (hit.isEmpty) null
-      else logicalView(Manifest.readPhysical(spark, dir,
-        hit.map(e => s"$dir/${e.name}")))
-    def assigned(c: String) = set(c).cast(types(c)).as(c)
-    val deltaEntries =
-      if (hit.isEmpty) Seq.empty
-      else {
-        val cols = hitRead.columns.map { c =>
-          if (set.contains(c))
-            when(safePred, assigned(c)).otherwise(col(c)).as(c)
-          else col(c)
-        }
-        val names = stageAndRename(spark, dir,
-          physicalStage(hitRead.select(cols.toSeq: _*)),
-          partColsOf(hit), s"delta-v$newVersion")
-        statStaged(spark, dir, statCols, names)
-      }
-    val changes =
-      if (hit.isEmpty)
-        Manifest.readTable(spark, dir).filter(lit(false))
-          .withColumn("_change_type", lit("insert"))
-      else {
-        val matched = hitRead.filter(safePred)
-        val postCols = hitRead.columns.map(c =>
-          if (set.contains(c)) assigned(c) else col(c))
-        matched.withColumn("_change_type", lit("delete"))
-          .unionByName(matched.select(postCols.toSeq: _*)
-            .withColumn("_change_type", lit("insert")))
-      }
-    Manifest.recordCdc(spark, dir, newVersion, changes)
-    Manifest.write(spark, dir, (kept ++ deltaEntries).sortBy(_.name),
-      newVersion, claim = Some(claim))
-    (hit.size, entries.size)
-  }
+      set: Map[String, Column], statCols: Seq[String] = Nil): (Int, Int) =
+    commit(spark, dir, statCols, listed = true) { k =>
+      requireNoDvs(spark, dir)
+      val types = Manifest.readTable(spark, dir).schema.fields
+        .map(f => f.name -> f.dataType).toMap
+      set.keys.foreach(c => require(types.contains(c),
+        s"UPDATE target column $c does not exist in $dir " +
+          s"(have ${types.keys.mkString(", ")})"))
+      val safePred = coalesce(pred, lit(false))
+      val view = viewOf(spark, dir)
+      val hit = filesMatching(spark, dir, k.base.names, view, safePred)
+      lazy val hitRead = view.logical(read(spark, dir, hit))
+      def assigned(c: String) = set(c).cast(types(c)).as(c)
+      Change(
+        added =
+          if (hit.isEmpty) Nil
+          else stageAndRename(spark, dir,
+            view.physical(hitRead.select(hitRead.columns.toSeq.map { c =>
+              if (set.contains(c))
+                when(safePred, assigned(c)).otherwise(col(c)).as(c)
+              else col(c)
+            }: _*)),
+            partColsOfNames(hit), s"delta-v${k.version}"),
+        removed = hit.toSet,
+        cdc = Some { _ =>
+          if (hit.isEmpty) noChange(spark, dir)
+          else {
+            val matched = hitRead.filter(safePred)
+            matched.withColumn("_change_type", lit("delete"))
+              .unionByName(matched.select(hitRead.columns.toSeq.map(c =>
+                if (set.contains(c)) assigned(c) else col(c)): _*)
+                .withColumn("_change_type", lit("insert")))
+          }
+        })
+    }.map(d => (d.removed, d.base.names.size)).get
 
   /** GROUP-REPLACEMENT COMMIT — the commit half of the DSv2 row-level
     * operation (SQL `UPDATE` / `MERGE INTO` / copy-on-write `DELETE`
@@ -1876,9 +1767,9 @@ object Layout {
     *  - OCC gate: the table must still be at `expectedVersion` (the
     *    version the scan pinned) — a concurrent commit aborts this one
     *    (staged files removed) rather than silently dropping its rows.
-    *  - Staged files rename to `rlo-v{K}-i.parquet` entries with
-    *    stats-on-write; `replaced` entries leave the snapshot (files
-    *    stay on disk for time travel until vacuum).
+    *  - Staged files land as `rlo-v{K}-...` entries with stats-on-write;
+    *    `replaced` entries leave the snapshot (files stay on disk for
+    *    time travel until vacuum).
     *  - Deletion vectors COMPOSE: marks on replaced files are spent
     *    (their live rows were rewritten from a DV-subtracted scan);
     *    marks on untouched files carry to the new version — so SQL
@@ -1892,81 +1783,32 @@ object Layout {
     */
   def commitReplace(spark: SparkSession, dir: String,
       replaced: Seq[String], stagedAbs: Seq[String],
-      expectedVersion: Int, statCols: Seq[String]): Int = {
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val cur = Manifest.currentVersion(spark, dir).getOrElse(0)
-    if (cur != expectedVersion) {
-      stagedAbs.foreach(p => fs.delete(new Path(p), false))
-      throw new java.util.ConcurrentModificationException(
-        s"table $dir moved from v$expectedVersion to v$cur during the " +
-          "row-level operation — re-run the statement")
-    }
-    val newVersion = cur + 1
-    val claim = Manifest.claimVersion(spark, dir, newVersion)
-    // staged dot-files land beside their partition's originals: the
-    // relative subdirectory (Hive k=v segments, when the table is
-    // partitioned) carries into the committed name, so partition-
-    // equality pruning treats rewritten files like any other
-    val names = stagedAbs.sorted.zipWithIndex.map { case (p, i) =>
-      val sub = Manifest.relativize(spark, dir, p)
-        .split('/').dropRight(1).mkString("/")
-      val tgt = (if (sub.isEmpty) "" else s"$sub/") +
-        s"rlo-v$newVersion-$i.parquet"
-      require(fs.rename(new Path(p), new Path(s"$dir/$tgt")),
-        s"staged file $p failed to land as $tgt")
-      tgt
-    }
-    val newEntries = statStaged(spark, dir, statCols, names)
-    val entries = Manifest.readVersion(spark, dir, cur).getOrElse(Seq.empty)
-    val replacedSet = replaced.toSet
-    val (hit, kept) = entries.partition(e => replacedSet.contains(e.name))
-    val recorded = Manifest.tableSchema(spark, dir, cur)
-    // PHYSICAL reads: renamed columns live in files under their
-    // original names, and a widened table has files of both widths
-    def readNames(ns: Seq[ManifestEntry]): DataFrame =
-      Manifest.readPhysical(spark, dir,
-        ns.map(e => s"$dir/${e.name}"), Some(cur))
-    val dvOld = Manifest.dvMarks(spark, dir, cur)
-    val empty = {
-      val logical = Manifest.readTable(spark, dir).filter(lit(false))
-      recorded.map(Manifest.toPhysicalKeeping(logical, _))
-        .getOrElse(logical)
-    }
-    // pre-images: replaced files' rows minus their DV marks (a row
-    // already deleted by an earlier commit must not restate as a
-    // second delete)
-    val pre =
-      if (hit.isEmpty) empty
-      else readNames(hit)
-        .withColumn("_dv_f",
-          Manifest.dvFileKey(Manifest.dvDepth(hit.map(_.name))))
-        .withColumn("_dv_p", col("_metadata.row_index"))
-        .join(broadcast(dvOld), col("_dv_f") === dvOld("file") &&
-          col("_dv_p") === dvOld("pos"), "left_anti")
-        .drop("_dv_f", "_dv_p")
-    val post = if (newEntries.isEmpty) empty else readNames(newEntries)
-    Manifest.recordCdc(spark, dir, newVersion,
-      pre.withColumn("_change_type", lit("delete"))
-        .unionByName(post.withColumn("_change_type", lit("insert"))))
-    // DV carry: marks on kept files stay valid; marks on replaced
-    // files were consumed by the DV-subtracted scan. Keyed on the
-    // REPLACED set — bounded by the operation's touch count, not the
-    // table's file count
-    val replacedNames = hit.map(_.name)
-    val carried = (if (replacedNames.isEmpty) dvOld
-      else dvOld.where(!col("file").isin(replacedNames: _*))).cache()
-    val nCarried = carried.count()
-    if (nCarried > 0) {
-      carried.repartition(col("file")).write.mode("overwrite")
-        .partitionBy("file").parquet(Manifest.dvDir(dir, newVersion))
-      Manifest.stampDvCount(spark, dir, newVersion, nCarried)
-    }
-    carried.unpersist()
-    Manifest.write(spark, dir, (kept ++ newEntries).sortBy(_.name),
-      newVersion, claim = Some(claim))
-    newEntries.size
-  }
+      expectedVersion: Int, statCols: Seq[String]): Int =
+    commit(spark, dir, statCols, listed = true, staged = stagedAbs,
+        landAs = "rlo") { k =>
+      if (k.base.version != expectedVersion)
+        throw new java.util.ConcurrentModificationException(
+          s"table $dir moved from v$expectedVersion to v${k.base.version} " +
+            "during the row-level operation — re-run the statement")
+      val replacedSet = replaced.toSet
+      val hit = k.base.names.filter(replacedSet.contains)
+      Change(removed = hit.toSet, cdc = Some { w =>
+        val view = viewOf(spark, dir)
+        // pre-images: replaced files' rows minus their marks (a row
+        // already deleted by an earlier commit must not restate as a
+        // second delete)
+        val pre =
+          if (hit.isEmpty) noChange(spark, dir, "delete")
+          else view.logical(byMarks(positioned(spark, dir, hit),
+              Manifest.dvMarks(spark, dir, k.base.version), "left_anti"))
+            .withColumn("_change_type", lit("delete"))
+        val post =
+          if (w.added.isEmpty) noChange(spark, dir)
+          else view.logical(read(spark, dir, w.added.map(_.name)))
+            .withColumn("_change_type", lit("insert"))
+        pre.unionByName(post)
+      })
+    }.get.added.size
 
   /** CLONE — an independent copy of `srcDir`'s CURRENT snapshot at
     * `dstDir`, committed as the clone's v1:

@@ -437,41 +437,38 @@ object Manifest {
     * work is O(removed + #chunks) — a copy-on-write delete against a
     * million-file table commits metadata proportional to the files it
     * actually touched, and no file-path Set ever materializes on the
-    * driver.
+    * driver. Runs under the caller's `claim`.
     */
-  def writeChunkedDelta(spark: SparkSession, dir: String, version: Int,
-      base: Seq[ChunkRef], removeNames: Set[String],
-      added: Seq[Seq[ManifestEntry]],
-      txn: Option[Long] = None,
-      claim: Option[String] = None,
-      schema: Option[StructType] = None,
-      leaseMs: Long = DefaultLeaseMs,
-      txnApp: Option[(String, Long)] = None): Unit = {
-    if (removeNames.isEmpty || base.isEmpty)
-      return writeChunked(spark, dir, version, base, added, txn, claim,
-        schema, leaseMs, txnApp)
-    val id = claim.getOrElse(claimVersion(spark, dir, version, leaseMs))
-    val rm = spark.createDataset(removeNames.toSeq)(
-      Encoders.STRING).toDF("rm")
-    // which chunk files mention a removed entry: distributed scan,
-    // O(removed) rows back
-    val touched = spark.read.schema(entrySchema)
-      .json(base.map(r => s"$dir/$DirName/${r.path}"): _*)
-      .select(col("name"), input_file_name().as("chunk"))
-      .join(broadcast(rm), col("name") === col("rm"))
-      .select("chunk").distinct()
-      .collect().map(r => new Path(r.getString(0)).getName).toSet
-    val (hit, carried) = base.partition(r =>
-      touched.contains(r.path.split('/').last))
-    val survivors =
-      if (hit.isEmpty) Nil
-      else landChunk(spark, dir, s"c-v$version-${id.take(8)}-d",
-        spark.read.schema(entrySchema)
-          .json(hit.map(r => s"$dir/$DirName/${r.path}"): _*)
-          .join(broadcast(rm), col("name") === col("rm"), "left_anti"),
-        math.max(1L, hit.map(_.n).sum - removeNames.size))
-    writeChunked(spark, dir, version, carried ++ survivors, added,
-      txn, Some(id), schema, leaseMs, txnApp)
+  private[ops] def writeChunkedDelta(spark: SparkSession, dir: String,
+      version: Int, base: Seq[ChunkRef], removeNames: Set[String],
+      added: Seq[Seq[ManifestEntry]], txn: Option[Long], claim: String,
+      schema: Option[StructType], txnApp: Option[(String, Long)],
+      metaDelta: () => Option[Map[String, Long]]): Unit = {
+    val carried =
+      if (removeNames.isEmpty || base.isEmpty) base
+      else {
+        val rm = spark.createDataset(removeNames.toSeq)(
+          Encoders.STRING).toDF("rm")
+        // which chunk files mention a removed entry: distributed scan,
+        // O(removed) rows back
+        val touched = spark.read.schema(entrySchema)
+          .json(base.map(r => s"$dir/$DirName/${r.path}"): _*)
+          .select(col("name"), input_file_name().as("chunk"))
+          .join(broadcast(rm), col("name") === col("rm"))
+          .select("chunk").distinct()
+          .collect().map(r => new Path(r.getString(0)).getName).toSet
+        val (hit, kept) = base.partition(r =>
+          touched.contains(r.path.split('/').last))
+        kept ++ (
+          if (hit.isEmpty) Nil
+          else landChunk(spark, dir, s"c-v$version-${claim.take(8)}-d",
+            spark.read.schema(entrySchema)
+              .json(hit.map(r => s"$dir/$DirName/${r.path}"): _*)
+              .join(broadcast(rm), col("name") === col("rm"), "left_anti"),
+            math.max(1L, hit.map(_.n).sum - removeNames.size)))
+      }
+    writeChunked(spark, dir, version, carried, added, txn, Some(claim),
+      schema, txnApp = txnApp, metaDelta = metaDelta)
   }
 
   /** Entries per chunk part — sized so a part stays a few tens of MB
@@ -629,7 +626,7 @@ object Manifest {
         }.toMap)
       .getOrElse(Map.empty)
 
-  /** Current-version counters, empty when absent (legacy tables). */
+  /** Current-version counters, empty when the snapshot records none. */
   def currentMeta(spark: SparkSession, dir: String): Map[String, Long] =
     currentVersion(spark, dir)
       .map(metaOf(spark, dir, _)).getOrElse(Map.empty)
@@ -689,6 +686,20 @@ object Manifest {
       case _ => ()
     }
     id
+  }
+
+  /** Give back the claim `id` on `version` after its commit failed, so
+    * the next writer need not wait out the lease. The token goes only
+    * while it still holds `id`: a writer that took an expired lease
+    * over keeps its own.
+    */
+  private[ops] def releaseClaim(spark: SparkSession, dir: String,
+      version: Int, id: String): Unit = {
+    val token = new Path(s"$dir/$DirName/commit-v$version")
+    try {
+      if (readSmallFile(spark, dir, token).contains(id))
+        fsOf(spark, dir).delete(token, false): Unit
+    } catch { case _: java.io.IOException => () }
   }
 
   /** Commit the full entry list `entries` as version `version`: the
@@ -754,14 +765,13 @@ object Manifest {
     // and feed the zero-tombstone fast paths stale pending_dels).
     // Otherwise carried verbatim. metaDelta is lazily evaluated here —
     // callers may derive deltas from metrics observed during this
-    // commit's own staged-write job. A pre-tracking table (empty base)
-    // records nothing; the gated consumers fall back to measuring.
+    // commit's own staged-write job.
     val effMeta = meta.getOrElse {
       val base = currentMeta(spark, dir)
       metaDelta() match {
-        case Some(d) if base.nonEmpty =>
+        case Some(d) =>
           base ++ d.map { case (k, dv) => k -> (base.getOrElse(k, 0L) + dv) }
-        case _ => base
+        case None => base
       }
     }
     if (effMeta.nonEmpty) {
@@ -803,10 +813,6 @@ object Manifest {
         val out = raw.create(tmpPtr, true)
         try out.write(s"v$version$tag\n".getBytes("UTF-8"))
         finally out.close()
-        // legacy cleanup: a sidecar written by the old checksummed
-        // flip would mismatch every raw-renamed pointer after this
-        val crc = new Path(s"$dir/$DirName/.CURRENT.crc")
-        if (raw.exists(crc)) raw.delete(crc, false)
         if (!raw.rename(tmpPtr, cur)) {
           raw.delete(cur, false) // non-POSIX fallback (never on Linux)
           require(raw.rename(tmpPtr, cur),
@@ -1113,28 +1119,12 @@ object Manifest {
   def dvDepth(names: Seq[String]): Int =
     names.headOption.map(_.count(_ == '/')).getOrElse(0)
 
-  /** Carry a deletion vector VERBATIM to the next version: a plain
-    * recursive filesystem copy of dv-v{from} as dv-v{to} — the marks
-    * are byte-identical, so no Spark job (and its fixed scheduling
-    * cost) is owed for an append that merely preserves them.
-    */
-  def copyDvDir(spark: SparkSession, dir: String, from: Int,
-      to: Int): Unit = {
-    val fs = fsOf(spark, dir)
-    val src = new Path(dvDir(dir, from))
-    if (fs.exists(src))
-      org.apache.hadoop.fs.FileUtil.copy(fs, src,
-        fs, new Path(dvDir(dir, to)), false, true,
-        spark.sparkContext.hadoopConfiguration): Unit
-  }
-
   /** Cumulative mark count of a vector, carried as a `_COUNT` sidecar
     * inside dv-v{K} (round 20): the auto-flush ratio check needs the
     * TOTAL mark count, and without the sidecar every delta-carried
-    * commit would owe a count job over the whole store. Recursive
-    * copies ([[copyDvDir]], clone) carry it verbatim; a missing or
-    * torn sidecar just means the consumer falls back to counting —
-    * never a wrong number.
+    * commit would owe a count job over the whole store. Every vector
+    * this format writes has one; recursive copies (the commit's carry,
+    * clone) take it along.
     */
   private[graft] val DvCountFile = "_COUNT"
 
@@ -1191,10 +1181,13 @@ object Manifest {
       // (file, pos) order — consumers run POSITIONAL algebra on this
       spark.read.parquet(dvDir(dir, version))
         .select(col("file").cast("string"), col("pos"))
-    else
-      spark.emptyDataFrame
-        .withColumn("file", lit("")).withColumn("pos", lit(0L))
-        .filter(lit(false))
+    else noMarks(spark)
+
+  /** An empty (file, pos) mark set — no read behind it. */
+  private[graft] def noMarks(spark: SparkSession): DataFrame =
+    spark.emptyDataFrame
+      .withColumn("file", lit("")).withColumn("pos", lit(0L))
+      .filter(lit(false))
 
   /** Subtract `version`'s deletion vector (if any) from a read over
     * this table's files — the broadcast anti-join every read path that
@@ -1218,23 +1211,14 @@ object Manifest {
 
   /** An empty DataFrame with the table's schema as of `version` —
     * what a read of a legitimately EMPTY snapshot (a committed
-    * delete-all) must return. Falls back through older versions' still-
-    * present files when the snapshot predates schema tracking.
+    * delete-all) must return.
     */
   private def emptyTable(spark: SparkSession, dir: String,
       version: Int): DataFrame = {
-    val sch = tableSchema(spark, dir, version).orElse {
-      // pre-tracking snapshot: recover the schema from the newest
-      // older version that still has a readable file
-      val fs = fsOf(spark, dir)
-      (version - 1 to 1 by -1).iterator.flatMap { v =>
-        readVersion(spark, dir, v).toSeq.flatten.headOption
-          .filter(e => fs.exists(new Path(s"$dir/${e.name}")))
-          .map(e => spark.read.parquet(s"$dir/${e.name}").schema)
-      }.nextOption()
-    }.getOrElse(throw new IllegalStateException(
-      s"table $dir at v$version is empty and no schema was recorded — " +
-        "cannot synthesize an empty read"))
+    val sch = tableSchema(spark, dir, version).getOrElse(
+      throw new IllegalStateException(
+        s"table $dir at v$version is empty and no schema was recorded — " +
+          "cannot synthesize an empty read"))
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sch)
   }
 

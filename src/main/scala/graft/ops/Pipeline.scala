@@ -744,24 +744,24 @@ object Pipeline {
   private[ops] def corpusBuildIncrCtes(minSim: Double): String = {
     // one step: exact survivors e$k, near-kept d$k, rolled-up state
     def step(k: Int, hashes: String, idx: String) =
-      s"""e$k AS (SELECT f.* FROM firsts f
+      s"""e$k AS MATERIALIZED (SELECT f.* FROM firsts f
          |  WHERE f.b = $k AND NOT EXISTS
          |    (SELECT 1 FROM $hashes s WHERE s.h = f.h)),
-         |c$k AS (SELECT DISTINCT s.d AS doc_id
+         |c$k AS MATERIALIZED (SELECT DISTINCT s.d AS doc_id
          |  FROM sym s JOIN e$k ee ON s.d = ee.doc_id
          |             JOIN $idx i ON s.o = i.doc_id),
-         |bb$k AS (SELECT DISTINCT g.id_b AS doc_id
+         |bb$k AS MATERIALIZED (SELECT DISTINCT g.id_b AS doc_id
          |  FROM good g JOIN e$k a ON g.id_a = a.doc_id
          |              JOIN e$k b2 ON g.id_b = b2.doc_id),
-         |d$k AS (SELECT ee.* FROM e$k ee
+         |d$k AS MATERIALIZED (SELECT ee.* FROM e$k ee
          |  WHERE ee.doc_id NOT IN (SELECT doc_id FROM c$k)
          |    AND ee.doc_id NOT IN (SELECT doc_id FROM bb$k)),
-         |hashes$k AS (SELECT h FROM $hashes
+         |hashes$k AS MATERIALIZED (SELECT h FROM $hashes
          |  UNION ALL SELECT h FROM d$k),
-         |idx$k AS (SELECT doc_id FROM $idx
+         |idx$k AS MATERIALIZED (SELECT doc_id FROM $idx
          |  UNION ALL SELECT doc_id FROM d$k)""".stripMargin
-    s"""src AS (SELECT doc_id, text FROM documents),
-       |fix AS (
+    s"""src AS MATERIALIZED (SELECT doc_id, text FROM documents),
+       |fix AS MATERIALIZED (
        |  SELECT doc_id, text FROM src
        |  UNION ALL
        |  SELECT doc_id + $VariantIdOffset,
@@ -771,22 +771,22 @@ object Pipeline {
        |  SELECT doc_id + CASE WHEN doc_id % 2 = 0
        |      THEN $CopyIdOffsetCross ELSE $CopyIdOffsetSame END, text
        |  FROM src),
-       |t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM fix),
+       |t AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS toks FROM fix),
        |${Analysis.gopherMetricsCte},
-       |okq AS (SELECT f.doc_id, (f.doc_id % 3) + 1 AS b,
+       |okq AS MATERIALIZED (SELECT f.doc_id, (f.doc_id % 3) + 1 AS b,
        |    ${H.duckHash60("f.text")} AS h
        |  FROM fix f JOIN m USING (doc_id)
        |  WHERE ${Analysis.gopherStructuralCond}),
-       |firsts AS (SELECT doc_id, b, h FROM (
+       |firsts AS MATERIALIZED (SELECT doc_id, b, h FROM (
        |    SELECT *, row_number() OVER (PARTITION BY b, h
        |      ORDER BY doc_id) AS rn FROM okq) WHERE rn = 1),
-       |corpus AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 3),
+       |corpus AS MATERIALIZED (SELECT doc_id, toks FROM t WHERE len(toks) >= 3),
        |${Dedup.minhashEstCtes},
-       |good AS (SELECT id_a, id_b FROM est WHERE est_sim >= $minSim),
-       |sym AS (SELECT id_a AS d, id_b AS o FROM good
+       |good AS MATERIALIZED (SELECT id_a, id_b FROM est WHERE est_sim >= $minSim),
+       |sym AS MATERIALIZED (SELECT id_a AS d, id_b AS o FROM good
        |        UNION ALL SELECT id_b, id_a FROM good),
-       |hashes0 AS (SELECT NULL::BIGINT AS h WHERE FALSE),
-       |idx0 AS (SELECT NULL::BIGINT AS doc_id WHERE FALSE),
+       |hashes0 AS MATERIALIZED (SELECT NULL::BIGINT AS h WHERE FALSE),
+       |idx0 AS MATERIALIZED (SELECT NULL::BIGINT AS doc_id WHERE FALSE),
        |${step(1, "hashes0", "idx0")},
        |${step(2, "hashes1", "idx1")},
        |${step(3, "hashes2", "idx2")}""".stripMargin

@@ -13,12 +13,6 @@ import org.apache.spark.sql.functions._
   * flush-maintained ret BLOOM sidecar keeps the steady-state check at
   * O(batch) with zero ret-partition I/O while staying BIT-EXACT: no
   * false negatives, and every bloom positive is re-checked exactly.
-  *
-  * Also pins round-18 verdict #4: deriving the live-doc counter delta
-  * from the rows being written (an [[org.apache.spark.sql.Observation]]
-  * over the staged write) instead of a separate `batch.count()` means
-  * a counter-tracked append runs EXACTLY as many jobs as a
-  * pre-tracking one.
   */
 class Bm25ChurnSpec extends SparkSpec {
 
@@ -98,45 +92,5 @@ class Bm25ChurnSpec extends SparkSpec {
       spark.conf.unset(Bm25Index.RetCheckConf)
       spark.conf.unset("spark.graft.bm25.autoFlushRatio")
     }
-  }
-
-  test("a counter-tracked append runs EXACTLY the jobs of a pre-tracking one") {
-    val dirTracked = Files.createTempDirectory("graft-churn-jt").toString
-    val dirLegacy = Files.createTempDirectory("graft-churn-jl").toString
-    val base = docs.filter(col("doc_id") < 100).select("doc_id", "text")
-    Bm25Index.build(base, dirTracked)
-    Bm25Index.build(base, dirLegacy)
-    // simulate a pre-tracking index: drop the counter record from the
-    // current snapshot — currentMeta goes empty, the delta fold
-    // records nothing, gated paths fall back to measuring
-    val v = Manifest.currentVersion(spark, s"$dirLegacy/index").get
-    val metaP = new org.apache.hadoop.fs.Path(
-      s"$dirLegacy/index/${Manifest.DirName}/v$v/${Manifest.MetaFile}")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(metaP, false), "fixture must start counter-tracked")
-
-    def jobsDuring(f: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(): Unit
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { f; org.apache.spark.sql.graftShims.drainListenerBus(spark) }
-      finally spark.sparkContext.removeSparkListener(l)
-      counter.get()
-    }
-    val batch = docs.filter(col("doc_id") >= 100 && col("doc_id") < 150)
-      .select("doc_id", "text")
-    val tracked = jobsDuring { Bm25Index.append(batch, dirTracked) }
-    val legacy = jobsDuring { Bm25Index.append(batch, dirLegacy) }
-    assert(tracked == legacy,
-      s"the dLive delta must ride the staged write (observed), not a " +
-        s"separate count job: tracked=$tracked vs legacy=$legacy")
-    // and the tracked delta is exact
-    assert(Manifest.currentMeta(spark, s"$dirTracked/index")
-      .get("live_docs").contains(150L))
   }
 }

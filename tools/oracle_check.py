@@ -6,8 +6,10 @@ Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify),
 runs the matching oracle SQL from oracle_sql.json in DuckDB over the
 sfDir tables, sorts columns by name, sorts rows, and compares values.
+Each result line carries the oracle's wall time (DuckDB query plus the
+comparison); the summary line adds the sweep's total.
 """
-import sys, os, json, glob
+import sys, os, json, glob, time
 import duckdb
 import pandas as pd
 
@@ -55,7 +57,10 @@ def main():
     if bad_types:
         print(f"\n{bad_types} oracle type probe failure(s) — fix before comparing")
         sys.exit(1)
+    t_sweep = time.monotonic()
     for name, sql in sorted(oracle.items()):
+        t0 = time.monotonic()
+        secs = lambda: f"{time.monotonic() - t0:.2f}s"
         res_dir = f"{out_dir}/{name}"
         files = glob.glob(f"{res_dir}/*.parquet")
         if not files:
@@ -66,15 +71,15 @@ def main():
             got = norm(pd.concat([pd.read_parquet(f) for f in sorted(files)]))
             want = norm(con.execute(sql).fetchdf())
         except Exception as e:
-            print(f"FAIL {name}: {type(e).__name__}: {e}")
+            print(f"FAIL {name} [{secs()}]: {type(e).__name__}: {e}")
             n_fail += 1
             continue
         if list(got.columns) != list(want.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} != {list(want.columns)}")
+            print(f"FAIL {name} [{secs()}]: columns {list(got.columns)} != {list(want.columns)}")
             n_fail += 1
             continue
         if len(got) != len(want):
-            print(f"FAIL {name}: rows {len(got)} != {len(want)}")
+            print(f"FAIL {name} [{secs()}]: rows {len(got)} != {len(want)}")
             n_fail += 1
             continue
         # The driver's value hash is dtype-sensitive between integer and
@@ -83,7 +88,7 @@ def main():
         kind_bad = [c for c in got.columns
                     if {got[c].dtype.kind, want[c].dtype.kind} == {"i", "f"}]
         if kind_bad:
-            print(f"FAIL {name}: int-vs-float dtype kind on {kind_bad} "
+            print(f"FAIL {name} [{secs()}]: int-vs-float dtype kind on {kind_bad} "
                   f"(spark {[str(got[c].dtype) for c in kind_bad]} vs "
                   f"oracle {[str(want[c].dtype) for c in kind_bad]})")
             n_fail += 1
@@ -91,18 +96,19 @@ def main():
         try:
             pd.testing.assert_frame_equal(got, want, check_dtype=False,
                                           check_exact=True)
-            print(f"PASS {name} ({len(got)} rows)")
+            print(f"PASS {name} ({len(got)} rows) [{secs()}]")
             n_pass += 1
         except AssertionError as e:
             msg = str(e).splitlines()
-            print(f"FAIL {name}: value mismatch: " + " | ".join(msg[:3]))
+            print(f"FAIL {name} [{secs()}]: value mismatch: " + " | ".join(msg[:3]))
             # show first differing rows
             neq = (got != want) & ~(got.isna() & want.isna())
             bad = neq.any(axis=1)
             print(got[bad].head(3))
             print(want[bad].head(3))
             n_fail += 1
-    print(f"\n{n_pass} passed, {n_fail} failed")
+    print(f"\nsweep wall time {time.monotonic() - t_sweep:.1f}s")
+    print(f"{n_pass} passed, {n_fail} failed")
     sys.exit(1 if n_fail else 0)
 
 
