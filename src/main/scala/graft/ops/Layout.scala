@@ -471,46 +471,11 @@ object Layout {
     (hit.length, all.length)
   }
 
-  /** Stage `df` into a hidden dot-directory (partitioned like the
-    * table when `partCols` is non-empty), then RENAME every staged
-    * file in beside the originals under `<prefix>-` — the shared
-    * mutation step of the in-place verbs. Renames are metadata ops;
-    * visibility is governed solely by the caller's manifest commit.
-    * Returns the new files' table-relative names.
-    */
-  private def stageAndRename(spark: SparkSession, dir: String,
-      df: DataFrame, partCols: Seq[String], prefix: String): Seq[String] = {
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val tmp = s"$dir/.tmp-$prefix"
-    val w = df.write.mode("overwrite")
-    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(tmp)
-    val names = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(new Path(tmp), true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        val rel = Manifest.relativize(spark, tmp, f.getPath.toString)
-        val segs = rel.split('/')
-        val target =
-          (segs.dropRight(1) :+ s"$prefix-${segs.last}").mkString("/")
-        fs.mkdirs(new Path(s"$dir/$target").getParent)
-        fs.rename(f.getPath, new Path(s"$dir/$target"))
-        names += target
-      }
-    }
-    fs.delete(new Path(tmp), true)
-    names.toSeq
-  }
-
   /** Partition columns of a file set, recovered from the entries' own
     * k=v path segments.
     */
   private def partColsOf(entries: Seq[ManifestEntry]): Seq[String] =
-    partColsOfNames(entries.map(_.name))
-
-  private def partColsOfNames(names: Seq[String]): Seq[String] =
-    names.headOption.toSeq.flatMap(_.split('/').dropRight(1)
+    entries.headOption.toSeq.flatMap(_.name.split('/').dropRight(1)
       .filter(_.contains("=")).map(_.split("=")(0)).toSeq)
 
   private def parentOf(name: String): String =
@@ -606,13 +571,15 @@ object Layout {
     (staged, if (extras.isEmpty) None else Some(aligned.schema))
   }
 
-  /** Stats for freshly staged files, dropping zero-row ones on the
-    * spot: an empty parquet file gets no stats entry (scanStats sees
-    * no rows), would never be referenced by the snapshot, and only
-    * lingers as dead weight for vacuum to misattribute.
+  /** Stats for the connector's staged files once landed, dropping
+    * zero-row ones on the spot: an empty parquet file gets no stats
+    * entry (scanStats sees no rows), would never be referenced by the
+    * snapshot, and only lingers as dead weight for vacuum to
+    * misattribute. (Files the verbs write come with their entries.)
     */
   private def statStaged(spark: SparkSession, dir: String,
       statCols: Seq[String], staged: Seq[String]): Seq[ManifestEntry] = {
+    if (staged.isEmpty) return Nil
     val entries = Manifest.scanStats(spark, dir, statCols, Some(staged))
     val live = entries.map(_.name).toSet
     val fs = new Path(dir).getFileSystem(
@@ -630,22 +597,23 @@ object Layout {
   // [[commit]] alone runs the protocol around it: pin the base, the
   // replay check, the claim (before any side write), landing staged
   // dot-files, the vector carry, the change record, the snapshot write
-  // and the auto-flush gate.
+  // and the auto-flush gate. Verbs write their files through the
+  // claim ([[Claimed.write]]): tasks write them in place under final
+  // names and report their entries, so no commit stages, renames,
+  // lists or re-opens a file it wrote.
 
   /** The snapshot a commit builds on. Verbs that restate the file list
     * pin it whole (`entries`); O(delta) verbs pin the chunk list plus
-    * one sample entry and never materialize the list.
+    * one sample entry and carry the chunks by reference.
     */
   private final class Base(spark: SparkSession, dir: String,
       val version: Int, val chunks: Seq[Manifest.ChunkRef],
       val entries: Option[Seq[ManifestEntry]],
       val head: Option[ManifestEntry]) {
-    /** (sorted file names, total rows): the scan list of the base. */
-    lazy val namesAndRows: (Seq[String], Long) = entries match {
-      case Some(es) => (es.map(_.name), es.map(_.rows).sum)
-      case None => Manifest.namesAndRows(spark, dir, version)
-    }
-    def names: Seq[String] = namesAndRows._1
+    /** Every live file's entry, sorted by name: the scan list. */
+    lazy val files: Seq[ManifestEntry] = entries.getOrElse(
+      Manifest.readVersion(spark, dir, version).getOrElse(Nil))
+    def names: Seq[String] = files.map(_.name)
     def listed: Seq[ManifestEntry] = entries.get
   }
 
@@ -658,13 +626,14 @@ object Layout {
   /** Carry it and add the not-yet-set (file, pos) pairs of `marks`. */
   private case class DvMarks(marks: DataFrame) extends DvAction
 
-  /** One commit's content. `added` are table-relative names the verb
-    * staged in place (files the caller passed as dot-files are landed
-    * and added by [[commit]] itself); `removed` leave the snapshot;
-    * `cdc` builds the change record from what the commit wrote.
+  /** One commit's content. `added` are the entries of the files the
+    * verb wrote ([[Claimed.write]]; files the caller passed as
+    * dot-files are landed and added by [[commit]] itself); `removed`
+    * leave the snapshot; `cdc` builds the change record from what the
+    * commit wrote.
     */
   private case class Change(
-      added: Seq[String] = Nil,
+      added: Seq[ManifestEntry] = Nil,
       removed: Set[String] = Set.empty,
       dv: DvAction = DvCarry,
       cdc: Option[Written => DataFrame] = None,
@@ -680,7 +649,25 @@ object Layout {
   /** A commit under its claim: the base, the version being written, and
     * the names the caller's staged dot-files landed as.
     */
-  private case class Claimed(base: Base, version: Int, landed: Seq[String])
+  private final class Claimed(spark: SparkSession, dir: String,
+      val base: Base, val version: Int, claim: String,
+      statCols: Seq[String], val landed: Seq[String]) {
+    /** Write `df` (physical names, carrying `partCols`) as new files of
+      * the table — `<prefix>-<claim id>-<task>-<attempt>-<n>.parquet`
+      * in their partition directories, or in partition directory
+      * `sub` — and return their entries.
+      */
+    def write(df: DataFrame, partCols: Seq[String], prefix: String,
+        sub: String = ""): Seq[ManifestEntry] =
+      TableFiles.write(spark, dir, if (sub.isEmpty) dir else s"$dir/$sub",
+        df, partCols, s"$prefix-${claim.take(8)}", physStats,
+        partTypes)
+
+    // stat ranges key on PHYSICAL names, like every file's columns
+    private lazy val physStats = Manifest.physicalNames(spark, dir, statCols)
+    private lazy val partTypes = Manifest.tableSchema(spark, dir,
+      base.version).map(Manifest.physicalSchema).getOrElse(new StructType())
+  }
 
   /** A landed commit: its base, the entries it added, how many it
     * removed, and the deletion vector's mark count.
@@ -725,7 +712,7 @@ object Layout {
     val landed = scala.collection.mutable.ArrayBuffer.empty[Path]
     val (done, marking) = try {
       val names = staged.sorted.zipWithIndex.map { case (p, i) =>
-        val sub = parentOf(Manifest.relativize(spark, dir, p))
+        val sub = parentOf(Manifest.relativize(spark, dir, new Path(p)))
         val tgt = (if (sub.isEmpty) "" else s"$sub/") +
           s"$landAs-v$k-${claim.take(8)}-$i.parquet"
         require(fs.rename(new Path(p), new Path(s"$dir/$tgt")),
@@ -733,35 +720,35 @@ object Layout {
         landed += new Path(s"$dir/$tgt")
         tgt
       }
-      val c = change(Claimed(base, k, names))
+      val c = change(new Claimed(spark, dir, base, k, claim, statCols, names))
       val marking = c.dv.isInstanceOf[DvMarks]
-      val added = statStaged(spark, dir, statCols, names ++ c.added)
+      val added = (statStaged(spark, dir, statCols, names) ++ c.added)
+        .sortBy(_.name)
       // the vector: a crashed claim's orphan must not merge into it
       val dvNew = new Path(Manifest.dvDir(dir, k))
       fs.delete(dvNew, true)
       val carried =
         if (c.dv == DvDrop) None
         else carryDv(spark, dir, base.version, k, c.removed)
-      // new marks stage beside the carry until the change record has
-      // read them, then move into its `file=` dirs (pure renames)
+      // new marks are written beside the carry until the change record
+      // has read them, then move into its `file=` dirs (pure renames)
       val dvTmp = new Path(s"$dvNew.tmp")
-      val (marked, newMarks) = c.dv match {
+      val (marked, newMarks, parts) = c.dv match {
         case DvMarks(marks) =>
           val old = Manifest.dvMarks(spark, dir, base.version)
           fs.delete(dvTmp, true)
-          marks.join(old, Seq("file", "pos"), "left_anti")
-            .repartition(col("file")).write.mode("overwrite")
-            .partitionBy("file").parquet(dvTmp.toString)
-          val n = parquetRowsUnder(spark, dvTmp)
-          (Some(carried.getOrElse(0L) + n),
-            if (n == 0L) old.filter(lit(false))
-            else spark.read.parquet(dvTmp.toString)
-              .select(col("file").cast("string"), col("pos")))
-        case _ => (carried, Manifest.noMarks(spark))
+          val parts = TableFiles.write(spark, dvTmp.toString,
+            dvTmp.toString, marks.join(old, Seq("file", "pos"), "left_anti")
+              .repartition(col("file")), Seq("file"),
+            s"dv-v$k-${claim.take(8)}", Nil)
+          (Some(carried.getOrElse(0L) + parts.map(_.rows).sum),
+            Manifest.readDv(spark, dvTmp.toString,
+              parts.map(e => (e.name, e.bytes))), parts.map(_.name))
+        case _ => (carried, Manifest.noMarks(spark), Nil)
       }
       c.cdc.foreach(f =>
         Manifest.recordCdc(spark, dir, k, f(Written(added, newMarks))))
-      if (marking) Manifest.moveDvDelta(spark, dir, k, dvTmp)
+      if (marking) Manifest.moveDvDelta(spark, dir, k, dvTmp, parts)
       // a commit that leaves zero marks installs no (empty) vector
       marked match {
         case Some(0L) => fs.delete(dvNew, true): Unit
@@ -799,7 +786,7 @@ object Layout {
     if (marking) {
       val flushRatio = spark.conf.getOption("spark.graft.dv.autoFlushRatio")
         .map(_.toDouble).getOrElse(0.10)
-      val rows = base.namesAndRows._2
+      val rows = base.files.map(_.rows).sum
       if (flushRatio > 0 && rows > 0 && done.marked > flushRatio * rows)
         flushDeleteVectors(spark, dir, statCols)
     }
@@ -848,9 +835,8 @@ object Layout {
 
   /** Exact row count of the parquet part files under `dir`, off their
     * FOOTERS — driver metadata reads, the [[Manifest.scanStats]]
-    * fast-path pattern (round 20). Counts a just-written mark delta,
-    * or a carried vector's dropped directories, without a count job;
-    * both are O(batch) files by construction.
+    * fast-path pattern. Counts a carried vector's dropped directories
+    * without a count job; they are O(removed files) by construction.
     */
   private def parquetRowsUnder(spark: SparkSession, dir: Path): Long = {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -927,17 +913,18 @@ object Layout {
       .flatMap(Manifest.tableSchema(spark, dir, _)))
 
   private def read(spark: SparkSession, dir: String,
-      names: Seq[String]): DataFrame =
-    Manifest.readPhysical(spark, dir, names.map(n => s"$dir/$n"))
+      files: Seq[ManifestEntry]): DataFrame =
+    Manifest.readFiles(spark, dir, files)
 
-  /** A physical scan of `names` keyed the way deletion-vector marks
+  /** A physical scan of `files` keyed the way deletion-vector marks
     * are: `_mk_f` is the row's file key ([[Manifest.dvFileKey]]),
     * `_mk_p` its position in the file.
     */
   private def positioned(spark: SparkSession, dir: String,
-      names: Seq[String]): DataFrame =
-    read(spark, dir, names)
-      .withColumn("_mk_f", Manifest.dvFileKey(Manifest.dvDepth(names)))
+      files: Seq[ManifestEntry]): DataFrame =
+    read(spark, dir, files)
+      .withColumn("_mk_f",
+        Manifest.dvFileKey(Manifest.dvDepth(files.map(_.name))))
       .withColumn("_mk_p", col("_metadata.row_index"))
 
   /** The rows of a [[positioned]] frame that `marks` does (`left_semi`)
@@ -955,12 +942,14 @@ object Layout {
     * `basePath` keeps partition-directory columns usable in `pred`.
     */
   private def filesMatching(spark: SparkSession, dir: String,
-      names: Seq[String], view: View, pred: Column): Seq[String] = {
-    val hit = view.logical(read(spark, dir, names)).filter(pred)
+      files: Seq[ManifestEntry], view: View,
+      pred: Column): Seq[ManifestEntry] = {
+    val hit = view.logical(read(spark, dir, files)).filter(pred)
       .select(input_file_name().as("f")).distinct()
-      .collect().map(r => Manifest.relativize(spark, dir, r.getString(0)))
+      .collect().map(r =>
+        Manifest.relativize(spark, dir, Manifest.fileOf(r.getString(0))))
       .toSet
-    names.filter(hit.contains)
+    files.filter(e => hit.contains(e.name))
   }
 
   /** The entries holding one of `keys` (one column, `physKey`):
@@ -979,28 +968,30 @@ object Layout {
         .forall(s => s.max >= rng.getLong(0) && s.min <= rng.getLong(1)))
     if (candidates.isEmpty) Nil
     else {
-      val hit = read(spark, dir, candidates.map(_.name))
+      val hit = read(spark, dir, candidates)
         // capture the file BEFORE the join — input_file_name() is
         // single-source and the semi join introduces a second one
         .select(col(physKey), input_file_name().as("f"))
         .join(broadcast(keys), Seq(physKey), "left_semi")
         .select("f").distinct()
-        .collect().map(r => Manifest.relativize(spark, dir, r.getString(0)))
+        .collect().map(r =>
+          Manifest.relativize(spark, dir, Manifest.fileOf(r.getString(0))))
         .toSet
       entries.filter(e => hit.contains(e.name))
     }
   }
 
-  /** Align `batch` to the table and stage it under `prefix`: (staged
-    * names, the evolved schema if the batch grew it).
+  /** Align `batch` to the table and write it under `prefix`: (the new
+    * files' entries, the evolved schema if the batch grew it).
     */
-  private def stageBatch(spark: SparkSession, dir: String, k: Claimed,
-      batch: DataFrame, prefix: String): (Seq[String], Option[StructType]) = {
+  private def writeBatch(spark: SparkSession, dir: String, k: Claimed,
+      batch: DataFrame,
+      prefix: String): (Seq[ManifestEntry], Option[StructType]) = {
     val sample = k.base.head.toSeq
     val partCols = partColsFor(spark, dir, sample)
     val (aligned, evolved) =
       alignForWrite(spark, dir, sample, batch, partCols)
-    (stageAndRename(spark, dir, aligned, partCols, prefix), evolved)
+    (k.write(aligned, partCols, prefix), evolved)
   }
 
   /** The table's recorded schema, for the schema-evolution verbs. */
@@ -1031,18 +1022,17 @@ object Layout {
         updates.select(col(keyCol).as(physKey)), updKeys, physKey)
       val prefix = s"upsert-v${k.version}"
       val partCols = partColsOf(k.base.listed)
-      lazy val hitRead = read(spark, dir, hit.map(_.name))
+      lazy val hitRead = read(spark, dir, hit)
       val survivors =
         if (hit.isEmpty) Nil
-        else stageAndRename(spark, dir,
+        else k.write(
           hitRead.join(broadcast(updKeys), Seq(physKey), "left_anti"),
           partCols, s"$prefix-keep")
       // align the batch to the table (hard error on MISSING columns,
       // add-column evolution on extra ones)
       val (aligned, evolved) =
         alignForWrite(spark, dir, k.base.listed, updates, partCols)
-      val batchNames = stageAndRename(spark, dir, aligned, partCols,
-        s"$prefix-new")
+      val batchNames = k.write(aligned, partCols, s"$prefix-new")
       // change record: old images of replaced keys as deletes, the
       // batch as inserts (MERGE = delete + insert pairs in the feed)
       Change(added = survivors ++ batchNames,
@@ -1071,11 +1061,11 @@ object Layout {
       val delKeys = keys.select(col(keyCol).as(physKey)).distinct()
       val hit = filesWithKeys(spark, dir, k.base.listed, delKeys, delKeys,
         physKey)
-      lazy val hitRead = read(spark, dir, hit.map(_.name))
+      lazy val hitRead = read(spark, dir, hit)
       Change(
         added =
           if (hit.isEmpty) Nil
-          else stageAndRename(spark, dir,
+          else k.write(
             hitRead.join(broadcast(delKeys), Seq(physKey), "left_anti"),
             partColsOf(hit), s"delta-v${k.version}"),
         removed = hit.map(_.name).toSet,
@@ -1274,12 +1264,12 @@ object Layout {
       // cost. An empty standing table has nothing to mark.
       val matched =
         if (k.base.names.isEmpty) None
-        else Some(view.logical(positioned(spark, dir, k.base.names))
+        else Some(view.logical(positioned(spark, dir, k.base.files))
           .join(broadcast(doomed.select(col(keyCol)).distinct()),
             Seq(keyCol), "left_semi")
           .localCheckpoint(true))
       val (staged, evolved) =
-        stageBatch(spark, dir, k, batch, s"append-v${k.version}")
+        writeBatch(spark, dir, k, batch, s"append-v${k.version}")
       Change(added = staged, schema = evolved,
         dv = DvMarks(matched.map(_.select(col("_mk_f").as("file"),
           col("_mk_p").as("pos"))).getOrElse(Manifest.noMarks(spark))),
@@ -1289,8 +1279,9 @@ object Layout {
         cdc = Some { w =>
           val ins = view.logical(
             if (w.added.isEmpty) noChange(spark, dir)
-            else spark.read.option("basePath", dir)
-              .parquet(w.added.map(e => s"$dir/${e.name}"): _*)
+            else Manifest.readFilesAs(spark, dir, w.added,
+                evolved.orElse(Manifest.tableSchema(spark, dir,
+                  k.base.version)))
               .withColumn("_change_type", lit("insert")))
           val del = matched match {
             case None => ins.filter(lit(false))
@@ -1311,7 +1302,7 @@ object Layout {
       // logical names let `matching` resolve on a renamed table; re-
       // marking an already-deleted row is harmless (set union), so the
       // scan runs raw
-      val raw = positioned(spark, dir, k.base.names)
+      val raw = positioned(spark, dir, k.base.files)
       Change(
         dv = DvMarks(matching(viewOf(spark, dir).logical(raw))
           .select(col("_mk_f").as("file"), col("_mk_p").as("pos"))),
@@ -1336,12 +1327,11 @@ object Layout {
       val dv = Manifest.dvMarks(spark, dir, k.base.version)
       val marked = dv.select("file").distinct()
         .collect().map(_.getString(0)).toSet
-      val hit = k.base.names.filter(marked.contains)
+      val hit = k.base.listed.filter(e => marked.contains(e.name))
       Change(
-        added = stageAndRename(spark, dir,
-          byMarks(positioned(spark, dir, hit), dv, "left_anti"),
-          partColsOfNames(hit), s"flush-v${k.version}"),
-        removed = hit.toSet, dv = DvDrop,
+        added = k.write(byMarks(positioned(spark, dir, hit), dv, "left_anti"),
+          partColsOf(hit), s"flush-v${k.version}"),
+        removed = hit.map(_.name).toSet, dv = DvDrop,
         // the deletes were already logical at the marking commit
         cdc = Some(_ => noChange(spark, dir)))
     }.get.removed
@@ -1379,7 +1369,7 @@ object Layout {
       metaDelta: () => Option[Map[String, Long]] = () => None): Int =
     commit(spark, dir, statCols, txn = txn, txnApp = txnApp) { k =>
       val (names, evolved) =
-        stageBatch(spark, dir, k, batch, s"append-v${k.version}")
+        writeBatch(spark, dir, k, batch, s"append-v${k.version}")
       Change(added = names, schema = evolved, metaDelta = metaDelta)
     }.map(_.added.size).getOrElse(0)
 
@@ -1431,9 +1421,9 @@ object Layout {
             "window"))
       requirePartitioned(spark, dir, k)
       val (names, evolved) =
-        stageBatch(spark, dir, k, batch, s"dynover-v${k.version}")
-      replacePartitions(spark, dir, k, names).copy(added = names,
-        schema = evolved)
+        writeBatch(spark, dir, k, batch, s"dynover-v${k.version}")
+      replacePartitions(spark, dir, k, names.map(_.name))
+        .copy(added = names, schema = evolved)
     }.map(d => (d.removed, d.added.size)).get
 
   /** Commit executor-staged dot-files as a DYNAMIC partition
@@ -1466,11 +1456,11 @@ object Layout {
   private def replacePartitions(spark: SparkSession, dir: String,
       k: Claimed, names: Seq[String]): Change = {
     val touched = names.map(parentOf).toSet
-    val hit = k.base.names.filter(n => touched.contains(parentOf(n)))
-    Change(removed = hit.toSet, cdc = Some(w =>
+    val hit = k.base.files.filter(e => touched.contains(parentOf(e.name)))
+    Change(removed = hit.map(_.name).toSet, cdc = Some(w =>
       (if (hit.isEmpty) noChange(spark, dir, "delete")
       else read(spark, dir, hit).withColumn("_change_type", lit("delete")))
-        .unionByName(read(spark, dir, w.added.map(_.name))
+        .unionByName(read(spark, dir, w.added)
           .withColumn("_change_type", lit("insert")),
           allowMissingColumns = true)))
   }
@@ -1490,7 +1480,7 @@ object Layout {
       metaDelta: () => Option[Map[String, Long]] = () => None): Int =
     commit(spark, dir, statCols, listed = true) { k =>
       val (names, evolved) =
-        stageBatch(spark, dir, k, batch, s"overwrite-v${k.version}")
+        writeBatch(spark, dir, k, batch, s"overwrite-v${k.version}")
       Change(added = names, removed = k.base.names.toSet, dv = DvDrop,
         schema = evolved, metaDelta = metaDelta)
     }.get.added.size
@@ -1508,8 +1498,8 @@ object Layout {
 
   /** IN-PLACE compaction — OPTIMIZE for a manifest-managed table,
     * BIN-PACKED: within each directory only the small-file tail
-    * (below half the target size) merges into staged outputs that are
-    * RENAMED in beside the originals (`compact-v{K}-` prefix);
+    * (below half the target size) merges into new files written beside
+    * the originals (`compact-v{K}-` prefix);
     * right-sized files transfer their entries verbatim, so a mature
     * table pays only for what its latest increment fragmented — never
     * a re-copy of data that was already laid out right. Rows never
@@ -1570,18 +1560,13 @@ object Layout {
             zorderBy.nonEmpty ||
             tail.exists(e => markedFiles.contains(e.name))
         }
-      val fs = new Path(dir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      // merge groups read FILES under the recorded physical schema
-      // (minus directory-encoded partition columns): a widened table
-      // mixes physical widths on disk, and bare inference would pin one
-      val partSet = partColsOf(k.base.listed).toSet
-      val mergeSchema: Option[StructType] =
-        Manifest.tableSchema(spark, dir, k.base.version)
-          .map(s => StructType(Manifest.physicalSchema(s)
-            .fields.filterNot(f => partSet.contains(f.name))))
+      // merge groups read their files under the recorded physical
+      // schema (a widened table mixes physical widths on disk, and bare
+      // inference would pin one) and write them back into their own
+      // directory, so partition values stay directory-encoded
+      val partCols = partColsOf(k.base.listed)
       val mergedNames =
-        if (toMerge.isEmpty) Seq.empty[String]
+        if (toMerge.isEmpty) Seq.empty[ManifestEntry]
         else {
           val pool = java.util.concurrent.Executors.newFixedThreadPool(
             math.min(8, toMerge.size))
@@ -1590,24 +1575,13 @@ object Layout {
           try {
             val jobs = toMerge.toSeq.sortBy(_._1).map { case (sub, es) =>
               scala.concurrent.Future {
-                // read the FILES (no basePath): contents match the
-                // originals exactly — partition values stay directory-
-                // encoded, so the merged file drops in as a sibling
-                val tmp = s"$dir/.tmp-compact-v${k.version}-${sub.hashCode}"
-                val paths = es.map(e => s"$dir/${e.name}")
-                val raw = mergeSchema
-                  .map(spark.read.schema(_).parquet(paths: _*))
-                  .getOrElse(spark.read.parquet(paths: _*))
                 // subtract live deletion marks inline (broadcast
                 // anti-join — no shuffle) so this rewrite doubles as
                 // the flush for its group's vectors
-                val base =
+                val base = (
                   if (es.exists(e => markedFiles.contains(e.name)))
-                    byMarks(raw.withColumn("_mk_f",
-                        Manifest.dvFileKey(Manifest.dvDepth(es.map(_.name))))
-                      .withColumn("_mk_p", col("_metadata.row_index")),
-                      dv, "left_anti")
-                  else raw
+                    byMarks(positioned(spark, dir, es), dv, "left_anti")
+                  else read(spark, dir, es)).drop(partCols: _*)
                 // plain compaction coalesces (no shuffle); ZORDER BY
                 // pays the one range shuffle that buys multi-dim
                 // min/max tightness on every merged file — Delta's
@@ -1630,20 +1604,7 @@ object Layout {
                       .sortWithinPartitions("_zk")
                       .drop("_zk")
                   } else base.coalesce(bound(es))
-                merged.write.mode("overwrite").parquet(tmp)
-                val prefix = if (sub.isEmpty) "" else s"$sub/"
-                val names = fs.listStatus(new Path(tmp))
-                  .filter(f => f.isFile &&
-                    f.getPath.getName.endsWith(".parquet"))
-                  .map { f =>
-                    val target =
-                      s"${prefix}compact-v${k.version}-${f.getPath.getName}"
-                    fs.mkdirs(new Path(s"$dir/$target").getParent)
-                    fs.rename(f.getPath, new Path(s"$dir/$target"))
-                    target
-                  }.toSeq
-                fs.delete(new Path(tmp), true)
-                names
+                k.write(merged, Nil, s"compact-v${k.version}", sub)
               }
             }
             scala.concurrent.Await.result(
@@ -1683,7 +1644,7 @@ object Layout {
     commit(spark, dir, statCols) { k =>
       requireNoDvs(spark, dir)
       val view = viewOf(spark, dir)
-      val hit = filesMatching(spark, dir, k.base.names, view, pred)
+      val hit = filesMatching(spark, dir, k.base.files, view, pred)
       lazy val hitRead = view.logical(read(spark, dir, hit))
       Change(
         // survivors = rows NOT matching (a NULL predicate RETAINS the
@@ -1691,10 +1652,10 @@ object Layout {
         // data file stays at a consistent depth
         added =
           if (hit.isEmpty) Nil
-          else stageAndRename(spark, dir,
+          else k.write(
             view.physical(hitRead.filter(!coalesce(pred, lit(false)))),
-            partColsOfNames(hit), s"delta-v${k.version}"),
-        removed = hit.toSet,
+            partColsOf(hit), s"delta-v${k.version}"),
+        removed = hit.map(_.name).toSet,
         // the deleted rows — one extra O(affected) pass over the same
         // pruned file list: consumption becomes a file read, never a
         // re-diff
@@ -1730,20 +1691,20 @@ object Layout {
           s"(have ${types.keys.mkString(", ")})"))
       val safePred = coalesce(pred, lit(false))
       val view = viewOf(spark, dir)
-      val hit = filesMatching(spark, dir, k.base.names, view, safePred)
+      val hit = filesMatching(spark, dir, k.base.files, view, safePred)
       lazy val hitRead = view.logical(read(spark, dir, hit))
       def assigned(c: String) = set(c).cast(types(c)).as(c)
       Change(
         added =
           if (hit.isEmpty) Nil
-          else stageAndRename(spark, dir,
+          else k.write(
             view.physical(hitRead.select(hitRead.columns.toSeq.map { c =>
               if (set.contains(c))
                 when(safePred, assigned(c)).otherwise(col(c)).as(c)
               else col(c)
             }: _*)),
-            partColsOfNames(hit), s"delta-v${k.version}"),
-        removed = hit.toSet,
+            partColsOf(hit), s"delta-v${k.version}"),
+        removed = hit.map(_.name).toSet,
         cdc = Some { _ =>
           if (hit.isEmpty) noChange(spark, dir)
           else {
@@ -1791,8 +1752,8 @@ object Layout {
           s"table $dir moved from v$expectedVersion to v${k.base.version} " +
             "during the row-level operation — re-run the statement")
       val replacedSet = replaced.toSet
-      val hit = k.base.names.filter(replacedSet.contains)
-      Change(removed = hit.toSet, cdc = Some { w =>
+      val hit = k.base.files.filter(e => replacedSet.contains(e.name))
+      Change(removed = hit.map(_.name).toSet, cdc = Some { w =>
         val view = viewOf(spark, dir)
         // pre-images: replaced files' rows minus their marks (a row
         // already deleted by an earlier commit must not restate as a
@@ -1804,7 +1765,7 @@ object Layout {
             .withColumn("_change_type", lit("delete"))
         val post =
           if (w.added.isEmpty) noChange(spark, dir)
-          else view.logical(read(spark, dir, w.added.map(_.name)))
+          else view.logical(read(spark, dir, w.added))
             .withColumn("_change_type", lit("insert"))
         pre.unionByName(post)
       })

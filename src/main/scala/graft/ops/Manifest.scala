@@ -57,6 +57,13 @@ case class ManifestEntry(name: String, rows: Long, bytes: Long,
   * A crash between 3 and 4 leaves the previous version live; readers
   * never observe a partial manifest.
   *
+  * Data files never pass through a staging directory: a write verb's
+  * tasks write them in place under final, claim-stamped names and
+  * report each file's entry (rows, bytes, stat ranges) —
+  * [[TableFiles.write]]; they stay invisible until a snapshot names
+  * them. Reads plan a snapshot's files from its entries
+  * ([[readFiles]]), with no listing and no footer open.
+  *
   * Scale posture: building stats is ONE distributed pass
   * (`groupBy(input_file_name())` — map-side combined, no row leaves
   * its executor pre-agg); the collect is O(#files), the same bound as
@@ -82,15 +89,23 @@ object Manifest {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Normalized filesystem path of `dir` (no scheme), for relativizing
-    * `input_file_name()` URIs against the table root.
+    * data-file paths against the table root.
     */
   private def rootPath(spark: SparkSession, dir: String): String = {
     val fs = fsOf(spark, dir)
     fs.makeQualified(new Path(dir)).toUri.getPath
   }
 
-  private def relName(root: String, fileUri: String): String =
-    new Path(fileUri).toUri.getPath.stripPrefix(root).stripPrefix("/")
+  private def relName(root: String, file: Path): String =
+    file.toUri.getPath.stripPrefix(root).stripPrefix("/")
+
+  /** The file a scan row came from: `input_file_name()` and
+    * `_metadata.file_path` render it URL-encoded — a partition
+    * directory `k=a%3Ab` reads back as `k=a%253Ab` — so it is parsed
+    * as a URI, never as a path string.
+    */
+  private[graft] def fileOf(uri: String): Path =
+    new Path(new java.net.URI(uri))
 
   private def readSmallFile(spark: SparkSession, dir: String,
       p: Path): Option[String] = {
@@ -253,8 +268,8 @@ object Manifest {
   //
   // Every commit used to launch a Spark job just to serialize a
   // driver-resident Seq[ManifestEntry] as a one-file JSONL chunk, and
-  // every metadata read (readVersion / namesAndRows / the append's
-  // sample entry) launched another to parse it back — pure fixed
+  // every metadata read (readVersion / the append's sample entry)
+  // launched another to parse it back — pure fixed
   // per-commit/per-read latency (guide §5: the driver should do no
   // DATA work, but table METADATA of bounded size is exactly driver
   // work). The entries are our own fixed shape, written by this file:
@@ -537,23 +552,6 @@ object Manifest {
     landChunk(spark, dir, s"c-v$version-${id.take(8)}-m",
       df, merge.map(_.n).sum) ++ keep
   }
-
-  /** (sorted relative file names, total rows) of a snapshot without
-    * materializing full entries — the name list is the irreducible
-    * driver payload any Spark scan needs (a FileIndex holds it
-    * anyway); stats and everything else stay distributed.
-    */
-  private[graft] def namesAndRows(spark: SparkSession, dir: String,
-      version: Int): (Seq[String], Long) =
-    entriesLocal(spark, dir, version) match {
-      case Some(es) => (es.map(_.name).sorted, es.map(_.rows).sum)
-      case None => entriesDF(spark, dir, version) match {
-        case None => (Nil, 0L)
-        case Some(df) =>
-          val rs = df.select("name", "rows").collect()
-          (rs.map(_.getString(0)).toSeq.sorted, rs.map(_.getLong(1)).sum)
-      }
-    }
 
   /** [[ensureVersioned]] for DELTA commits: pins the version and hands
     * back what an O(delta) append actually needs — the carried chunk
@@ -841,12 +839,7 @@ object Manifest {
     val root = rootPath(spark, dir)
     // stats scan raw files, so key ranges on PHYSICAL names: a caller
     // naming a renamed column still stats the underlying one
-    val statCols = currentVersion(spark, dir)
-      .flatMap(tableSchema(spark, dir, _)) match {
-      case Some(s) => statColsIn.map(c =>
-        s.fields.find(_.name == c).map(physNameOf).getOrElse(c))
-      case None => statColsIn
-    }
+    val statCols = physicalNames(spark, dir, statColsIn)
     // Commit-latency fast path: with no stat columns the only things
     // an entry needs are (rows, bytes), and for a bounded staged set
     // both come off the parquet FOOTERS, read on the driver — no
@@ -932,7 +925,7 @@ object Manifest {
     src.groupBy(input_file_name().as("f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect().toSeq.map { r =>
-        val name = relName(root, r.getString(0))
+        val name = relName(root, fileOf(r.getString(0)))
         val bytes = fs.getFileStatus(new Path(s"$dir/$name")).getLen
         val sstats = strCols.zipWithIndex.flatMap { case (c, i) =>
           if (r.isNullAt(sBase + 2 * i)) None
@@ -950,6 +943,18 @@ object Manifest {
           if (sstats.isEmpty) None else Some(sstats))
       }.sortBy(_.name)
   }
+
+  /** `cols` (logical names of the current schema) as the PHYSICAL names
+    * files carry them under; names the schema lacks pass through.
+    */
+  private[graft] def physicalNames(spark: SparkSession, dir: String,
+      cols: Seq[String]): Seq[String] =
+    if (cols.isEmpty) cols
+    else currentVersion(spark, dir).flatMap(tableSchema(spark, dir, _)) match {
+      case Some(s) => cols.map(c =>
+        s.fields.find(_.name == c).map(physNameOf).getOrElse(c))
+      case None => cols
+    }
 
   /** Build and commit a fresh manifest (next version, or v1), recording
     * the table's schema with it.
@@ -997,7 +1002,14 @@ object Manifest {
     */
   def prunedPaths(spark: SparkSession, dir: String,
       ranges: Seq[(String, Long, Long)],
-      strRanges: Seq[(String, String, String)] = Nil): Option[Seq[String]] = {
+      strRanges: Seq[(String, String, String)] = Nil): Option[Seq[String]] =
+    prunedEntries(spark, dir, ranges, strRanges)
+      .map(_.map(e => s"$dir/${e.name}"))
+
+  /** The entries behind [[prunedPaths]], sorted by name. */
+  private def prunedEntries(spark: SparkSession, dir: String,
+      ranges: Seq[(String, Long, Long)],
+      strRanges: Seq[(String, String, String)]): Option[Seq[ManifestEntry]] = {
     // stats are keyed on PHYSICAL names — map renamed logical callers
     val toPhys: String => String = currentVersion(spark, dir)
       .flatMap(tableSchema(spark, dir, _)) match {
@@ -1007,7 +1019,7 @@ object Manifest {
     }
     // the intersection runs as a DataFrame filter over the (possibly
     // chunked) entry list — distributed over chunk files, with only
-    // the SURVIVING names collected: planning a selective rectangle
+    // the SURVIVING entries collected: planning a selective rectangle
     // on a million-file table moves O(matches) through the driver.
     // A file with no recorded stat for a column is kept (pruning may
     // only ever SKIP files it can prove non-matching) — expressed as
@@ -1028,8 +1040,8 @@ object Manifest {
         }
         val pred = (numPred ++ strPred)
           .reduceOption(_ && _).getOrElse(lit(true))
-        df.filter(pred).select("name").collect()
-          .map(r => s"$dir/${r.getString(0)}").toSeq.sorted
+        df.filter(pred).as(Encoders.product[ManifestEntry]).collect()
+          .toSeq.sortBy(_.name)
     }
   }
 
@@ -1053,24 +1065,35 @@ object Manifest {
   private[graft] def physicalSchema(s: StructType): StructType =
     StructType(s.fields.map(f => f.copy(name = physNameOf(f))))
 
-  /** Multi-file read of manifest-tracked files under the recorded
-    * PHYSICAL schema when one exists. A table that widened a type has
-    * files of BOTH widths on disk, and plain schema inference pins one
-    * random footer's width then fails reading the rest; the recorded
-    * wide type upcasts every file uniformly. Physical names keep
-    * renamed columns resolving. Untracked dirs fall back to inference.
-    * Output columns are PHYSICAL — callers project to logical when
+  /** Read `files` of the table at `dir` — THE read of a snapshot's
+    * data files, planned from their entries ([[TableFiles.scan]]: no
+    * listing job, no status call per file, no inference job) under the
+    * recorded PHYSICAL schema of `version` (default: current). A table
+    * that widened a type has files of BOTH widths on disk, and plain
+    * schema inference pins one random footer's width then fails
+    * reading the rest; the recorded wide type upcasts every file
+    * uniformly. Physical names keep renamed columns resolving. A table
+    * with no recorded schema keeps the inferring path read. Output
+    * columns are PHYSICAL — callers project to logical when
     * user-facing.
     */
-  private[graft] def readPhysical(spark: SparkSession, dir: String,
-      paths: Seq[String], version: Option[Int] = None): DataFrame = {
-    val rd = spark.read.option("basePath", dir)
-    version.orElse(currentVersion(spark, dir))
-      .flatMap(tableSchema(spark, dir, _)) match {
-      case Some(s) => rd.schema(physicalSchema(s)).parquet(paths: _*)
-      case None => rd.parquet(paths: _*)
+  private[graft] def readFiles(spark: SparkSession, dir: String,
+      files: Seq[ManifestEntry], version: Option[Int] = None): DataFrame =
+    readFilesAs(spark, dir, files, version.orElse(currentVersion(spark, dir))
+      .flatMap(tableSchema(spark, dir, _)))
+
+  /** [[readFiles]] under an explicit logical `schema` — a commit reads
+    * the files it just wrote under the schema it is about to record.
+    */
+  private[graft] def readFilesAs(spark: SparkSession, dir: String,
+      files: Seq[ManifestEntry], schema: Option[StructType]): DataFrame =
+    schema match {
+      case Some(s) => TableFiles.scan(spark, dir,
+        files.map(e => (e.name, e.bytes)), StructType(physicalSchema(s).fields
+          .map(_.copy(nullable = true))))
+      case None => spark.read.option("basePath", dir)
+        .parquet(files.map(e => s"$dir/${e.name}"): _*)
     }
-  }
 
   /** Project a physically-named frame back to logical names (no-op
     * select when the schema has no renames).
@@ -1142,32 +1165,25 @@ object Manifest {
       new Path(s"${dvDir(dir, version)}/$DvCountFile"))
       .flatMap(_.trim.toLongOption)
 
-  /** Move a freshly-written Hive-keyed delta of marks (`file=K/part-*`
-    * under `tmp`) INTO dv-v{version}'s matching partition directories
-    * — pure renames, no Spark job. Part names are write-UUID-unique,
-    * so delta parts never collide with carried ones; a `file=` dir the
-    * carry didn't have is created. The caller holds the commit claim.
+  /** Move a freshly-written Hive-keyed delta of marks — `parts`,
+    * `file=K/<part>` names under `tmp` — INTO dv-v{version}'s matching
+    * partition directories: pure renames, no Spark job, no listing.
+    * Part names carry the commit's claim id, so delta parts never
+    * collide with carried ones; a `file=` dir the carry didn't have is
+    * created. The caller holds the commit claim.
     */
   private[graft] def moveDvDelta(spark: SparkSession, dir: String,
-      version: Int, tmp: Path): Unit = {
+      version: Int, tmp: Path, parts: Seq[String]): Unit = {
     val fs = fsOf(spark, dir)
-    val dst = new Path(dvDir(dir, version))
-    fs.mkdirs(dst)
-    if (fs.exists(tmp)) {
-      fs.listStatus(tmp).foreach { st =>
-        if (st.isDirectory && st.getPath.getName.startsWith("file=")) {
-          val sub = new Path(dst, st.getPath.getName)
-          fs.mkdirs(sub)
-          fs.listStatus(st.getPath).foreach { p =>
-            if (p.isFile && !p.getPath.getName.startsWith("_") &&
-                !p.getPath.getName.startsWith("."))
-              require(fs.rename(p.getPath, new Path(sub, p.getPath.getName)),
-                s"failed to move DV delta part ${p.getPath} into $sub")
-          }
-        }
-      }
-      fs.delete(tmp, true): Unit
+    val dst = dvDir(dir, version)
+    fs.mkdirs(new Path(dst))
+    parts.groupBy(_.split('/').head).foreach { case (sub, ps) =>
+      fs.mkdirs(new Path(s"$dst/$sub"))
+      ps.foreach(p => require(
+        fs.rename(new Path(s"$tmp/$p"), new Path(s"$dst/$p")),
+        s"failed to move DV delta part $p into $dst"))
     }
+    fs.delete(tmp, true): Unit
   }
 
   /** The deletion-vector marks of `version` as a (file, pos) DataFrame
@@ -1175,13 +1191,49 @@ object Manifest {
     * the table-root-relative data-file name ([[dvFileKey]]).
     */
   def dvMarks(spark: SparkSession, dir: String, version: Int): DataFrame =
-    if (fsOf(spark, dir).exists(new Path(dvDir(dir, version))))
-      // the store is Hive-keyed by `file` (per-file reader loads), so
-      // a discovery read yields (pos, file); pin the canonical
-      // (file, pos) order — consumers run POSITIONAL algebra on this
-      spark.read.parquet(dvDir(dir, version))
-        .select(col("file").cast("string"), col("pos"))
-    else noMarks(spark)
+    readDv(spark, dvDir(dir, version), dvParts(spark, dir, version))
+
+  /** The part files of `version`'s vector as (`file=<key>/<part>`,
+    * bytes): ONE driver-side recursive listing of `dv-v{K}` — the
+    * vector's own metadata, which no manifest entry records. Empty
+    * when the version has no vector.
+    */
+  private[ops] def dvParts(spark: SparkSession, dir: String,
+      version: Int): Seq[(String, Long)] = {
+    val fs = fsOf(spark, dir)
+    val root = new Path(dvDir(dir, version))
+    val out = Seq.newBuilder[(String, Long)]
+    try {
+      val it = fs.listFiles(root, true)
+      val rootPath = fs.makeQualified(root).toUri.getPath
+      while (it.hasNext) {
+        val f = it.next()
+        val rel = relName(rootPath, f.getPath)
+        if (rel.startsWith("file=") && rel.endsWith(".parquet") &&
+            !f.getPath.getName.startsWith("."))
+          out += ((rel, f.getLen))
+      }
+    } catch { case _: java.io.FileNotFoundException => () }
+    out.result()
+  }
+
+  /** The schema of a vector's parts: positions, Hive-keyed by file. */
+  private val DvSchema = StructType(Seq(
+    StructField("pos", org.apache.spark.sql.types.LongType),
+    StructField("file", StringType)))
+
+  /** Read vector parts (`file=<key>/<part>`, bytes) under `dvRoot` as
+    * (file, pos) — through [[TableFiles.scan]] under the declared
+    * schema: no listing job, no inference job.
+    */
+  private[ops] def readDv(spark: SparkSession, dvRoot: String,
+      parts: Seq[(String, Long)]): DataFrame =
+    if (parts.isEmpty) noMarks(spark)
+    // the store is Hive-keyed by `file` (per-file reader loads), so
+    // the read yields (pos, file); pin the canonical (file, pos)
+    // order — consumers run POSITIONAL algebra on this
+    else TableFiles.scan(spark, dvRoot, parts, DvSchema)
+      .select(col("file"), col("pos"))
 
   /** An empty (file, pos) mark set — no read behind it. */
   private[graft] def noMarks(spark: SparkSession): DataFrame =
@@ -1195,19 +1247,29 @@ object Manifest {
     * must also apply, or marked rows would silently reappear there.
     */
   private def subtractDv(spark: SparkSession, dir: String, base: DataFrame,
-      version: Option[Int], depth: Int): DataFrame =
-    version.filter(v =>
-        fsOf(spark, dir).exists(new Path(dvDir(dir, v)))) match {
-      case Some(v) =>
-        val marks = dvMarks(spark, dir, v)
-        base
-          .withColumn("_dv_f", dvFileKey(depth))
-          .withColumn("_dv_p", col("_metadata.row_index"))
-          .join(broadcast(marks), col("_dv_f") === marks("file") &&
-            col("_dv_p") === marks("pos"), "left_anti")
-          .drop("_dv_f", "_dv_p")
-      case None => base
-    }
+      version: Option[Int], depth: Int,
+      broadcastRows: Long = MarkBroadcastRows): DataFrame = {
+    val parts = version.toSeq.flatMap(dvParts(spark, dir, _))
+    if (parts.isEmpty) return base
+    val marks = readDv(spark, dvDir(dir, version.get), parts)
+    // the vector's size comes from its `_COUNT` sidecar: broadcast a
+    // set that fits, shuffle one that does not
+    val n = dvCountOf(spark, dir, version.get).getOrElse(Long.MaxValue)
+    val keyed = base
+      .withColumn("_dv_f", dvFileKey(depth))
+      .withColumn("_dv_p", col("_metadata.row_index"))
+    keyed.join(if (n <= broadcastRows) broadcast(marks) else marks,
+        col("_dv_f") === marks("file") && col("_dv_p") === marks("pos"),
+        "left_anti")
+      .drop("_dv_f", "_dv_p")
+  }
+
+  /** Broadcast bound (rows) for a mark or tombstone set joined against
+    * a table scan: an 8-byte key row makes 4M rows a ~32 MB broadcast.
+    * Past it the join shuffles, with the same result. Shared by
+    * [[subtractDv]] and the BM25 tombstone subtraction.
+    */
+  val MarkBroadcastRows = 4000000L
 
   /** An empty DataFrame with the table's schema as of `version` —
     * what a read of a legitimately EMPTY snapshot (a committed
@@ -1239,7 +1301,15 @@ object Manifest {
     * table, exactly as in any manifest-based format.
     */
   def readTable(spark: SparkSession, dir: String,
-      version: Option[Int] = None): DataFrame = {
+      version: Option[Int] = None): DataFrame =
+    readTableGated(spark, dir, version, MarkBroadcastRows)
+
+  /** [[readTable]] with the vector subtraction's broadcast bound
+    * ([[subtractDv]]) as a parameter — specs reach the shuffled branch
+    * through it.
+    */
+  private[ops] def readTableGated(spark: SparkSession, dir: String,
+      version: Option[Int], dvBroadcastRows: Long): DataFrame = {
     val v = version.orElse(currentVersion(spark, dir))
     val entriesOpt: Option[Seq[ManifestEntry]] = version match {
       case Some(vv) => Some(readVersion(spark, dir, vv).getOrElse(
@@ -1251,17 +1321,13 @@ object Manifest {
       case None => spark.read.parquet(dir)
       case Some(entries) if entries.isEmpty => emptyTable(spark, dir, v.get)
       case Some(entries) =>
-        val rd = spark.read.option("basePath", dir)
-        val sch = v.flatMap(tableSchema(spark, dir, _))
         // read under the PHYSICAL form of the recorded schema (renamed
         // columns live in files under their original names), subtract
         // the vector, then project to logical names
-        val base = sch.map(s => rd.schema(physicalSchema(s)))
-          .getOrElse(rd)
-          .parquet(entries.map(e => s"$dir/${e.name}"): _*)
-        val live = subtractDv(spark, dir, base, v,
-          dvDepth(entries.map(_.name)))
-        sch.map(toLogical(live, _)).getOrElse(live)
+        val live = subtractDv(spark, dir, readFiles(spark, dir, entries, v),
+          v, dvDepth(entries.map(_.name)), dvBroadcastRows)
+        v.flatMap(tableSchema(spark, dir, _)).map(toLogical(live, _))
+          .getOrElse(live)
     }
   }
 
@@ -1273,19 +1339,15 @@ object Manifest {
   def readPruned(spark: SparkSession, dir: String,
       ranges: Seq[(String, Long, Long)],
       strRanges: Seq[(String, String, String)] = Nil): DataFrame =
-    prunedPaths(spark, dir, ranges, strRanges) match {
-      case Some(paths) if paths.nonEmpty =>
+    prunedEntries(spark, dir, ranges, strRanges) match {
+      case Some(files) if files.nonEmpty =>
         // same recorded-schema read as readTable: pre-evolution files
         // in the pruned set NULL-backfill instead of misreading
-        val rd = spark.read.option("basePath", dir)
-        val sch = currentVersion(spark, dir)
-          .flatMap(tableSchema(spark, dir, _))
-        val base = sch.map(s => rd.schema(physicalSchema(s)))
-          .getOrElse(rd).parquet(paths: _*)
-        val live = subtractDv(spark, dir, base,
-          currentVersion(spark, dir),
-          dvDepth(paths.map(_.stripPrefix(s"$dir/"))))
-        sch.map(toLogical(live, _)).getOrElse(live)
+        val v = currentVersion(spark, dir)
+        val live = subtractDv(spark, dir, readFiles(spark, dir, files, v),
+          v, dvDepth(files.map(_.name)))
+        v.flatMap(tableSchema(spark, dir, _)).map(toLogical(live, _))
+          .getOrElse(live)
       case Some(_) => read(spark, dir) match {
         case Some(entries) if entries.isEmpty =>
           emptyTable(spark, dir, currentVersion(spark, dir).get)
@@ -1319,14 +1381,11 @@ object Manifest {
     if (added.isEmpty)
       readTable(spark, dir, Some(toVersion)).filter(lit(false))
     else {
-      val rd = spark.read.option("basePath", dir)
-      val sch = tableSchema(spark, dir, toVersion)
-      val base = sch.map(s => rd.schema(physicalSchema(s)))
-        .getOrElse(rd)
-        .parquet(added.map(e => s"$dir/${e.name}"): _*)
-      val live = subtractDv(spark, dir, base, Some(toVersion),
+      val live = subtractDv(spark, dir,
+        readFiles(spark, dir, added, Some(toVersion)), Some(toVersion),
         dvDepth(added.map(_.name)))
-      sch.map(toLogical(live, _)).getOrElse(live)
+      tableSchema(spark, dir, toVersion).map(toLogical(live, _))
+        .getOrElse(live)
     }
   }
 
@@ -1358,21 +1417,18 @@ object Manifest {
     val toNames = to.map(_.name).toSet
     val added = to.filterNot(e => fromNames.contains(e.name))
     val removed = from.filterNot(e => toNames.contains(e.name))
-    val common = from.filter(e => toNames.contains(e.name)).map(_.name)
+    val common = from.filter(e => toNames.contains(e.name))
     // read every side under the TO-version schema so an add-column
     // evolution inside the window NULL-backfills the older side and
     // the multiset subtraction stays well-typed
     val schema = tableSchema(spark, dir, toVersion)
-    def readNames(names: Seq[String]): DataFrame = {
-      if (names.isEmpty) {
+    def readNames(files: Seq[ManifestEntry]): DataFrame = {
+      if (files.isEmpty) {
         val base = readTable(spark, dir, Some(toVersion)).filter(lit(false))
         return base.withColumn("_dv_f", lit("")).withColumn("_dv_p", lit(0L))
       }
-      val rd = spark.read.option("basePath", dir)
-      val withDv = schema.map(s => rd.schema(physicalSchema(s)))
-        .getOrElse(rd)
-        .parquet(names.map(n => s"$dir/$n"): _*)
-        .withColumn("_dv_f", dvFileKey(dvDepth(names)))
+      val withDv = readFiles(spark, dir, files, Some(toVersion))
+        .withColumn("_dv_f", dvFileKey(dvDepth(files.map(_.name))))
         .withColumn("_dv_p", col("_metadata.row_index"))
       // logical projection AFTER the metadata columns materialize
       // (`_metadata` resolves only on the scan's own output)
@@ -1387,9 +1443,9 @@ object Manifest {
     val dvF = dvMarks(spark, dir, fromVersion)
     val dvT = dvMarks(spark, dir, toVersion)
     // live rows of files that exist on only one side
-    val addedRows = minusMarks(readNames(added.map(_.name)), dvT)
+    val addedRows = minusMarks(readNames(added), dvT)
       .drop("_dv_f", "_dv_p")
-    val removedRows = minusMarks(readNames(removed.map(_.name)), dvF)
+    val removedRows = minusMarks(readNames(removed), dvF)
       .drop("_dv_f", "_dv_p")
     // vector DIFF on files present in both snapshots: newly marked
     // positions are deletes; un-marked positions (a vector shrank —
@@ -1399,7 +1455,7 @@ object Manifest {
     // distributed — a 100 TB delete's million-row diff must not
     // funnel through the driver.
     import spark.implicits._
-    val commonBase = common.toDF("file")
+    val commonBase = common.map(_.name).toDF("file")
     def markedRows(marks: DataFrame): DataFrame = {
       val diff = marks.join(broadcast(commonBase), Seq("file"), "left_semi")
       val files = diff.select("file").distinct()
@@ -1408,8 +1464,7 @@ object Manifest {
         val base = readTable(spark, dir, Some(toVersion)).filter(lit(false))
         return base
       }
-      val names = common.filter(files.contains)
-      val base = readNames(names)
+      val base = readNames(common.filter(e => files.contains(e.name)))
       base.join(diff, base("_dv_f") === diff("file") &&
           base("_dv_p") === diff("pos"), "left_semi")
         .drop("_dv_f", "_dv_p")
@@ -1524,19 +1579,28 @@ object Manifest {
         val cur = readVersion(spark, dir, v).getOrElse(
           throw new IllegalArgumentException(
             s"no manifest version $v under $dir"))
-        val isAppendOnly = prev.subsetOf(cur.map(_.name).toSet) &&
-          !fs.exists(new Path(dvDir(dir, v)))
-        if (!isAppendOnly) throw new IllegalStateException(
+        val curNames = cur.map(_.name).toSet
+        val hasDv = fs.exists(new Path(dvDir(dir, v)))
+        val isAppendOnly = prev.subsetOf(curNames) && !hasDv
+        // a version that carries no file of v-1 replaced the table
+        // whole (INSERT OVERWRITE, TRUNCATE): v-1's live rows are its
+        // deletes — derived here, at read time, never recorded
+        val isReplace = prev.nonEmpty && !prev.exists(curNames.contains)
+        if (!isAppendOnly && !isReplace) throw new IllegalStateException(
           s"version v$v of $dir rewrote files but recorded no change " +
             "set (pre-recording commit) — use readCdc for this window")
         val added = cur.filterNot(e => prev.contains(e.name))
-        if (added.isEmpty)
-          withVersion(readTable(spark, dir, Some(v)).filter(lit(false))
-            .withColumn("_change_type", lit("insert")))
-        else
-          withVersion(spark.read.option("basePath", dir)
-            .parquet(added.map(e => s"$dir/${e.name}"): _*)
-            .withColumn("_change_type", lit("insert")))
+        val inserts =
+          if (added.isEmpty) readTable(spark, dir, Some(v)).filter(lit(false))
+          else if (hasDv) readChanges(spark, dir, v - 1, v)
+          else readFiles(spark, dir, added, Some(v))
+        val deletes =
+          if (isAppendOnly) Nil
+          else Seq(readTable(spark, dir, Some(v - 1))
+            .withColumn("_change_type", lit("delete")))
+        withVersion((deletes :+ inserts
+          .withColumn("_change_type", lit("insert")))
+          .reduce(_.unionByName(_, allowMissingColumns = true)))
       }
     }
     perVersion.reduce((a, b) =>
@@ -1602,11 +1666,12 @@ object Manifest {
     history(spark, dir).filter(_.timestampMs <= tsMillis)
       .lastOption.map(_.version)
 
-  /** Table-root-relative name of a data-file URI (the inverse of the
-    * `$dir/$name` path construction used everywhere above).
+  /** Table-root-relative name of a data file (the inverse of the
+    * `$dir/$name` path construction used everywhere above); a scan's
+    * file URI goes through [[fileOf]] first.
     */
-  def relativize(spark: SparkSession, dir: String, fileUri: String): String =
-    relName(rootPath(spark, dir), fileUri)
+  def relativize(spark: SparkSession, dir: String, file: Path): String =
+    relName(rootPath(spark, dir), file)
 
   /** Delete every data file not referenced by the last `keepVersions`
     * snapshots — the storage-reclaim step that retires time travel to
@@ -1636,7 +1701,7 @@ object Manifest {
     val doomed = scala.collection.mutable.ArrayBuffer.empty[Path]
     while (it.hasNext) {
       val f = it.next()
-      val rel = relName(root, f.getPath.toString)
+      val rel = relName(root, f.getPath)
       if (f.getPath.getName.endsWith(".parquet") &&
           !rel.startsWith(DirName + "/") && !live.contains(rel))
         doomed += f.getPath

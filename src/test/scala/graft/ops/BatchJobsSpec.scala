@@ -1,0 +1,79 @@
+package graft.ops
+
+import java.nio.file.Files
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+
+/** The Spark jobs a keep-best ingest batch runs, pinned: the batch over
+  * standing LSH + BM25 tables cloned from fixture masters runs exactly
+  * [[BatchJobsSpec.BatchJobs]] jobs, none of them a file-listing job —
+  * every read plans from manifest entries, every write reports its
+  * entries — and reading a table that carries a deletion vector plans
+  * with no job at all. A change that adds a job to the batch moves
+  * this number on purpose or not at all.
+  */
+class BatchJobsSpec extends SparkSpec {
+  import BatchJobsSpec._
+
+  /** Descriptions of the jobs `f` runs, in start order. */
+  private def jobsOf(f: => Unit): Seq[String] = {
+    val seen = mutable.ArrayBuffer.empty[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.synchronized {
+          seen += Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse(e.stageInfos.headOption.map(_.name).getOrElse(""))
+        }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerDrain.drain(sc, 10000L)
+    sc.addSparkListener(l)
+    try f finally {
+      org.apache.spark.GraftListenerDrain.drain(sc, 10000L)
+      sc.removeSparkListener(l)
+    }
+    seen.synchronized(seen.toSeq)
+  }
+
+  test("a keep-best batch runs a pinned number of jobs, none of them a listing") {
+    val docs = T(spark, sf, "documents")
+    val corpus = Dedup.corpusWithVariants(docs)
+    val batch = corpus.filter((col("doc_id") % 60).isin(Orbit: _*))
+    val base = corpus.filter(!(col("doc_id") % 60).isin(Orbit: _*))
+    def asText(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("doc_id"), array_join(col("toks"), " ").as("text"))
+    val work = Files.createTempDirectory("graft-batchjobs").toString
+    val id = Some("batchjobs-spec")
+    Dedup.lshIndexBuild(base, s"$work/master/lsh", id)
+    Bm25Index.build(asText(base), s"$work/master/bm25", id)
+    Dedup.lshIndexFresh(base, s"$work/master/lsh", s"$work/t/lsh", id)
+    Bm25Index.fresh(asText(base), s"$work/master/bm25", s"$work/t/bm25", id)
+    val jobs = jobsOf(Pipeline.kbApplyBatch(batch, s"$work/t", 1L, 0.5,
+      "batchjobs-spec"))
+    assert(!jobs.exists(_.startsWith("Listing leaf files")),
+      jobs.mkString("\n"))
+    assert(jobs.size == BatchJobs, jobs.mkString("\n"))
+    // the batch left a vector on the LSH table: reading it plans with
+    // no job (no listing, no schema inference)
+    val bands = s"$work/t/lsh/bands"
+    assert(Manifest.hasDeletionVectors(spark, bands))
+    assert(jobsOf(Manifest.readTable(spark, bands).queryExecution
+      .executedPlan: Unit).isEmpty)
+  }
+}
+
+object BatchJobsSpec {
+  /** Residues mod 60 of the batch: new originals (a+20) with their
+    * in-batch variants (a), and originals meeting their variants in the
+    * base — every decision kind occurs.
+    */
+  val Orbit = Seq(7, 27)
+
+  val BatchJobs = 51
+}

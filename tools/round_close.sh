@@ -61,17 +61,27 @@ parent=$(mktemp -d)
 git archive "$base" | tar -x -C "$parent"
 res=$(mktemp -d)
 mkdir -p "$res/parent" "$res/change"
+run_parent() {
+  (cd "$parent" && rm -rf perfbench/out &&
+    python3 perfbench/run.py --workload "$1" --seed "$2" \
+      --seconds "$secs" --trace 0 > /dev/null &&
+    cp perfbench/out/*-t0.json "$res/parent/")
+}
+run_change() {
+  rm -f perfbench/out/"$1-s$2-t0.json"
+  python3 perfbench/run.py --workload "$1" --seed "$2" \
+    --seconds "$secs" --trace 0 > /dev/null
+  cp perfbench/out/"$1-s$2-t0.json" "$res/change/"
+}
 for w in $workloads; do
   for s in $(seq 1 "$seeds"); do
-    # alternate sides so box drift hits both equally
-    (cd "$parent" && rm -rf perfbench/out &&
-      python3 perfbench/run.py --workload "$w" --seed "$s" \
-        --seconds "$secs" --trace 0 > /dev/null &&
-      cp perfbench/out/*-t0.json "$res/parent/")
-    rm -f perfbench/out/"$w-s$s-t0.json"
-    python3 perfbench/run.py --workload "$w" --seed "$s" \
-      --seconds "$secs" --trace 0 > /dev/null
-    cp perfbench/out/"$w-s$s-t0.json" "$res/change/"
+    # alternate which side runs first by seed parity, so box drift
+    # within a pair favours neither side
+    if [ $((s % 2)) -eq 1 ]; then
+      run_parent "$w" "$s"; run_change "$w" "$s"
+    else
+      run_change "$w" "$s"; run_parent "$w" "$s"
+    fi
   done
 done
 verdicts=$(python3 perfbench/compare.py "$res/parent" "$res/change")
