@@ -1,21 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // One timed run per query proved ±3-5x noisy across rounds; run each
     // query `reps` times and report the per-query MEDIAN (plus min) so
     // cross-round deltas reflect the plan, not the box.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // absorb JVM/codegen/session warm-up outside any query's timing
     spark.range(1000000).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).count()
@@ -38,9 +29,18 @@ object Bench {
     // a ~750 s artifact could still mis-adjudicate late-query
     // regressions as plan regressions. bench_diff skew-gates on both.
     val canary = canaryRun()
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a query that throws times -1.0; its first cause lands in the
+    // JSON line's "error_causes" and its stack trace on stderr
+    val causes = scala.collection.mutable.LinkedHashMap[String, String]()
+    def time(name: String): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
+      try SparkEntry.queries(name)(spark, sfDir).count()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed:")
+        e.printStackTrace()
+        causes.getOrElseUpdate(name, e.toString)
+        return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
     // Cross-query hygiene: one JVM runs 200+ queries back-to-back, and
@@ -69,7 +69,7 @@ object Bench {
     }
     var sinceGc = 0
     var sinceClear = 0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
       // a finished query's localCheckpoint RDDs sit in
       // getPersistentRDDs until the cleaner notices — drop them NOW
       // (async, block-manager only) so iterative queries' round
@@ -86,7 +86,7 @@ object Bench {
         sinceGc = 0
         System.gc()
       }
-      val ts = (1 to reps).map(_ => time(fn)).sorted
+      val ts = (1 to reps).map(_ => time(name)).sorted
       val median = ts(ts.size / 2)
       // full spread (min/median/max) so sub-second regression flags
       // self-adjudicate from one artifact instead of a rerun
@@ -103,6 +103,8 @@ object Bench {
     // (or silently absorbs) a failure
     val errors = results.filter(_._2 < 0).map(_._1)
     val errsJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val causesJson = causes.map { case (k, v) =>
+      s"${Verify.jsonString(k)}:${Verify.jsonString(v)}" }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val canaryEnd = canaryRun()
     // the heap size travels WITH the numbers: the 48g-vs-96g
@@ -149,8 +151,7 @@ object Bench {
           .foreach(_.unpersist(blocking = false))
         spark.catalog.clearCache()
         System.gc(); System.gc()
-        val ts = (1 to reps).map(_ =>
-          time(SparkEntry.queries(name))).filter(_ >= 0)
+        val ts = (1 to reps).map(_ => time(name)).filter(_ >= 0)
         (name, if (ts.isEmpty) -1.0 else ts.min)
     }
     val reprobe =
@@ -158,7 +159,7 @@ object Bench {
       else s""","reprobe_k":$reprobeK,"reprobe_s":""" + reprobes
         .map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"canary_s":$canary,"canary_end_s":$canaryEnd,"heap_gb":$heapGb,"gc_every":$gcEvery,"n_errors":${errors.size},"errors":$errsJson,"queries":$qs,"queries_min":$mins,"queries_max":$maxs$isolated$reprobe,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"canary_s":$canary,"canary_end_s":$canaryEnd,"heap_gb":$heapGb,"gc_every":$gcEvery,"n_errors":${errors.size},"errors":$errsJson,"error_causes":$causesJson,"queries":$qs,"queries_min":$mins,"queries_max":$maxs$isolated$reprobe,"sf":"$sfDir"}"""
     println(line)
     // The stdout line gets truncated by log tooling past ~50 queries; persist the
     // full per-query breakdown so cross-round comparisons cover every query.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Time a handful of named `SparkEntry.queries` in one session —
   * the per-query companion to [[Bench]] for chasing a single flag
   * without a full 215-query run.
@@ -13,16 +11,8 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BenchOne <query> [query ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     spark.range(1000000).selectExpr("sum(id)").collect()
     val explain = sys.env.contains("SPARK_GRAFT_BENCH_EXPLAIN")
     val collected = scala.collection.mutable.LinkedHashMap[String, Double]()

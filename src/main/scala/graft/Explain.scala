@@ -1,12 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     for (name <- args) {

@@ -18,15 +18,7 @@ import org.apache.spark.sql.SparkSession
 object Fuzz {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents")
     tables.foreach { t =>

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Shuffle/spill meter: runs queries with a SparkListener attached and
   * reports the bytes that actually moved — the numbers behind
@@ -47,15 +46,7 @@ object Meter {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Headline
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // warm the session so JVM/codegen startup doesn't pollute query 1
     spark.range(1000000).selectExpr("sum(id)").collect()
     for (name <- names) {

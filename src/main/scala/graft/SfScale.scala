@@ -54,15 +54,7 @@ object SfScale {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("target/sf1")
     val mult = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val t0 = System.nanoTime()
     val counts = generate(spark, src, dst, mult)
     val secs = (System.nanoTime() - t0) / 1e9

@@ -1335,8 +1335,8 @@ object SparkEntry {
     // probe's corpus-always-wins. Fresh MUTABLE index per run (the
     // apply form mutates it, so the oracle-checked path exercises the
     // delete/append machinery too) — obtained by CLONING a build-once
-    // master (round-17: graft.CloneVsRebuild measured the byte-copy
-    // clone faster than re-banding at every SF — 0.5 s flat vs
+    // master (round-17, PLANS.md "Clone vs re-band": the byte-copy
+    // clone measured faster than re-banding at every SF — 0.5 s flat vs
     // 1.8→13.5 s growing; Dedup.lshIndexFresh auto-selects and
     // rebuilds only an absent/torn master).
     q("ns_dedup_keep_best_incr", Dedup.dedupKeepBestIncrOracle(0.5)) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Table-format smoke: build a manifest-managed table at N x the
@@ -29,15 +29,7 @@ object TableSmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     val chunkCommits = args.lift(2).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val docs = ops.T(spark, sfDir, "documents")
     val copies = spark.range(mult).select(col("id").as("copy"))
@@ -111,7 +103,7 @@ object TableSmoke {
       val q = spark.readStream.format("graft.sources.ManifestSource")
         .option("path", srcC).load()
         .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        .foreachBatch { (df: DataFrame, _: Long) =>
           n += df.count(); ()
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -490,7 +490,7 @@ object Bm25Index {
     * `batch` and `doomedIds` must be disjoint (a replacement batch
     * doc carries its own fresh id). Returns newly tombstoned count.
     */
-  def deleteAndAppend(doomedIds: DataFrame, batch: DataFrame,
+  private[ops] def deleteAndAppend(doomedIds: DataFrame, batch: DataFrame,
       dir: String, txnApp: Option[(String, Long)] = None): Long = {
     val spark = batch.sparkSession
     requireGeometry(spark, dir)

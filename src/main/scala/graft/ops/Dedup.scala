@@ -1363,7 +1363,7 @@ object Dedup {
     * ([[dedupBatchVsIndexKeepBestApply]]) work on a clone while the
     * master stays read-only — file copy, never a re-banding pass.
     */
-  def lshIndexClone(spark: SparkSession, srcDir: String,
+  private[ops] def lshIndexClone(spark: SparkSession, srcDir: String,
       dstDir: String): Unit = {
     requireGeometry(spark, srcDir)
     Layout.cloneTable(spark, s"$srcDir/bands", s"$dstDir/bands"): Unit
@@ -1375,8 +1375,8 @@ object Dedup {
   /** A fresh MUTABLE index over `corpus` at `dir`, via a build-once
     * read-only master at `masterDir` (round-16 verdict #5 — the
     * re-band vs clone crossover, now MEASURED instead of asserted):
-    * `graft.CloneVsRebuild` times both paths, and the byte-copy clone
-    * beats re-banding at EVERY measured scale — sf0.01 0.44 s vs
+    * PLANS.md ("Clone vs re-band") records both paths timed: the
+    * byte-copy clone beats re-banding at EVERY measured scale — sf0.01 0.44 s vs
     * 1.87 s, sf0.1 0.48 vs 1.84, sf1 0.57 vs 2.74, sf10 0.56 vs 13.5
     * (PLANS.md round 17). There is no crossover to gate on: the clone
     * is file-parallel I/O over ~one file per bucket while the rebuild
@@ -1844,7 +1844,7 @@ object Dedup {
     * the replacements to its OTHER standing indexes (the BM25
     * un-index path, round-17 verdict #2) without re-probing.
     */
-  private[ops] def dedupBatchVsIndexKeepBestApplyCore(batch: DataFrame,
+  private def dedupBatchVsIndexKeepBestApplyCore(batch: DataFrame,
       dir: String, minSim: Double): (DataFrame, DataFrame) = {
     val (dec, doomed, sigs) =
       dedupBatchVsIndexKeepBestDecide(batch, dir, minSim)

@@ -629,9 +629,33 @@ object Manifest {
     currentVersion(spark, dir)
       .map(metaOf(spark, dir, _)).getOrElse(Map.empty)
 
+  /** Create `p` holding `content` unless it exists; false when it
+    * does. Of two racing creators exactly one gets true. The local
+    * filesystem's `create(overwrite = false)` checks for the file, then
+    * opens it truncating, so both racers "create" it (seen about once
+    * in two tries between two threads); there it is one exclusive
+    * `CREATE_NEW` open instead.
+    */
+  private[ops] def createExclusive(fs: org.apache.hadoop.fs.FileSystem,
+      p: Path, content: String): Boolean =
+    try {
+      fs match {
+        case _: org.apache.hadoop.fs.LocalFileSystem |
+            _: org.apache.hadoop.fs.RawLocalFileSystem =>
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(fs.makeQualified(p).toUri),
+            content.getBytes("UTF-8"),
+            java.nio.file.StandardOpenOption.CREATE_NEW): Unit
+        case _ =>
+          val out = fs.create(p, false)
+          try out.write(content.getBytes("UTF-8")) finally out.close()
+      }
+      true
+    } catch { case _: java.io.IOException => false }
+
   /** Claim the lease token for committing `version`; returns the claim
-    * id. First-writer-wins: `fs.create(path, overwrite = false)`
-    * succeeds exactly once per token, so of two racing committers that
+    * id. First-writer-wins: [[createExclusive]] succeeds exactly once
+    * per token, so of two racing committers that
     * both computed the same next version, one proceeds and the other
     * gets a ConcurrentModificationException to retry from a fresh read
     * (the optimistic-concurrency protocol of every manifest-based
@@ -647,13 +671,7 @@ object Manifest {
     val token = new Path(s"$dir/$DirName/commit-v$version")
     fs.mkdirs(token.getParent)
     val id = java.util.UUID.randomUUID().toString
-    def tryCreate(): Boolean =
-      try {
-        val out = fs.create(token, false)
-        try out.write(id.getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    if (!tryCreate()) {
+    if (!createExclusive(fs, token, id)) {
       val done = fs.exists(new Path(s"$dir/$DirName/v$version/_SUCCESS")) ||
         currentVersion(spark, dir).exists(_ >= version)
       if (done) throw new java.util.ConcurrentModificationException(
@@ -665,8 +683,9 @@ object Manifest {
         s"version v$version of $dir is being committed by a live writer " +
           s"(claim age ${age}ms < lease ${leaseMs}ms) — retry later")
       fs.delete(token, false)
-      if (!tryCreate()) throw new java.util.ConcurrentModificationException(
-        s"lost the takeover race for version v$version of $dir — retry")
+      if (!createExclusive(fs, token, id))
+        throw new java.util.ConcurrentModificationException(
+          s"lost the takeover race for version v$version of $dir — retry")
     }
     // BASIS CHECK: on a table WITH history, the claim is only valid
     // if it still sits at version-1. A commit that landed between the
@@ -1130,10 +1149,18 @@ object Manifest {
     * .parquet`), so a basename-keyed vector would delete same-position
     * rows in EVERY sibling partition — the round-17 over-deletion fix,
     * caught by the keep-best/BM25 composition spec.
+    *
+    * `_metadata.file_path` is a URI, so the sliced name is decoded as
+    * a URI path, as [[fileOf]] does: a Hive-escaped directory `k=c%3Ad`
+    * scans as `k=c%253Ad` and `k=a b` as `k=a%20b`. A literal `+`
+    * stays `+` in a URI path, so it is quoted before `url_decode`
+    * (form decoding, which reads `+` as a space).
     */
   def dvFileKey(depth: Int): Column =
-    array_join(slice(split(col("_metadata.file_path"), "/"),
-      -(depth + 1), depth + 1), "/")
+    url_decode(replace(
+      array_join(slice(split(col("_metadata.file_path"), "/"),
+        -(depth + 1), depth + 1), "/"),
+      lit("+"), lit("%2B")))
 
   /** Partition-directory depth of a table, from its entry names
     * (uniform across a Hive layout; 0 = unpartitioned, where the key

@@ -896,13 +896,7 @@ object Pipeline {
     val owner = java.util.UUID.randomUUID().toString
     val leaseMs = spark.conf.getOption(IngestLeaseMsConf)
       .map(_.toLong).getOrElse(Manifest.DefaultLeaseMs)
-    def tryCreate(): Boolean =
-      try {
-        val out = fs.create(p, false)
-        try out.write(owner.getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    if (!tryCreate()) {
+    if (!Manifest.createExclusive(fs, p, owner)) {
       val age = System.currentTimeMillis() -
         fs.getFileStatus(p).getModificationTime
       if (age < leaseMs) throw new java.util.ConcurrentModificationException(
@@ -912,8 +906,9 @@ object Pipeline {
           "the other writer, or if it crashed hard wait out the lease " +
           s"(override $IngestLeaseMsConf)")
       fs.delete(p, false)
-      if (!tryCreate()) throw new java.util.ConcurrentModificationException(
-        s"lost the ingest-lease takeover race on $dir — retry")
+      if (!Manifest.createExclusive(fs, p, owner))
+        throw new java.util.ConcurrentModificationException(
+          s"lost the ingest-lease takeover race on $dir — retry")
     }
     try body finally {
       // release only if still ours — a takeover may have superseded us

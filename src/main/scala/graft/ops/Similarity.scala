@@ -571,7 +571,7 @@ object Similarity {
   /** Adaptive centroid stride: the smallest power-of-two s with
     * n <= s², floored at [[CentroidStride]] — i.e. cells grow as
     * ~sqrt(n), the standard IVF sizing. Round-11 measurement
-    * (IvfProfile, 200k vectors): the FIXED stride 40 put 5,000 cells
+    * (SURVEY.md, 200k vectors): the FIXED stride 40 put 5,000 cells
     * on the quantizer, and the build paid 16 s training (train x C
     * cross join), ~20 s n x C assignment, and a 40 s 5,000-directory
     * partitioned write — 56 s end to end, all three terms linear in
@@ -584,7 +584,7 @@ object Similarity {
     * DuckDB twin, resolved over the same corpus the quantizer trains
     * on.
     */
-  def ivfStrideFor(n: Long): Long =
+  private[ops] def ivfStrideFor(n: Long): Long =
     if (n <= 1024) CentroidStride
     else (6 to 14).find(k => n <= (1L << (2 * k))).map(1L << _)
       .getOrElse(1L << 15)

@@ -158,15 +158,3 @@ object Tok {
   val duckSplit: String =
     "unnest(string_split_regex(lower(text), '\\W+'))"
 }
-
-/** Diagnostic shim for [[graft.KbProfile]]: phase-timed access to the
-  * package-private keep-best apply core.
-  */
-object KbProbe {
-  def applyCore(batch: org.apache.spark.sql.DataFrame, dir: String,
-      minSim: Double, lap: String => Unit)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    lap("  (pre)")
-    Dedup.dedupBatchVsIndexKeepBestApplyCore(batch, dir, minSim)
-  }
-}

@@ -133,25 +133,22 @@ object Browse {
     frames ++ (s"next steps:" +: acts)
   }
 
-  /** stdin/stdout driver: `runMain graft.Browse [sfDir]` starts from
-    * the documents table (or test2's literal frame with no args).
+  /** The frame both explorer mains ([[main]], [[Serve.main]]) start
+    * from: `sfDir`'s documents table, or test2's literal frame.
     */
+  private[planner] def mainSource(spark: SparkSession,
+      sfDir: Option[String]): DataFrame = sfDir match {
+    case Some(dir) => graft.ops.T(spark, dir, "documents")
+      .select(col("doc_id"), col("text"))
+    case None =>
+      import spark.implicits._
+      Seq((0L, "sankho123 turjo sarkar456")).toDF("index", "name")
+  }
+
+  /** stdin/stdout driver: `runMain graft.planner.Browse [sfDir]`. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    val source = args.headOption match {
-      case Some(dir) => graft.ops.T(spark, dir, "documents")
-        .select(col("doc_id"), col("text"))
-      case None => Seq((0L, "sankho123 turjo sarkar456")).toDF("index", "name")
-    }
+    val spark = graft.GraftSession.local()
+    val source = mainSource(spark, args.headOption)
     var s = open(Library.registry, Seq(source))
     listing(s).foreach(println)
     print("> "); Console.out.flush()

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -608,24 +608,11 @@ object Serve {
       })
 
   /** `runMain graft.planner.Serve [sfDir] [port]` — serves the
-    * documents exploration the same way `graft.Browse` drives stdin.
+    * documents exploration the same way [[Browse]] drives stdin.
     */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    val source = args.headOption match {
-      case Some(dir) => graft.ops.T(spark, dir, "documents")
-        .select(col("doc_id"), col("text"))
-      case None => Seq((0L, "sankho123 turjo sarkar456")).toDF("index", "name")
-    }
+    val spark = graft.GraftSession.local()
+    val source = Browse.mainSource(spark, args.headOption)
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
     val cacheDir = java.nio.file.Files
       .createTempDirectory("graft-serve-cache").toString

@@ -12,6 +12,7 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType,
   PrimitiveType}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.connector.catalog.{MetadataColumn,
   SupportsDelete, SupportsMetadataColumns, SupportsRead,
   SupportsRowLevelOperations, SupportsWrite, Table, TableCapability,
@@ -387,19 +388,14 @@ object ManifestSource {
               val conf = new SerializableHadoopConf(
                 spark.sparkContext.hadoopConfiguration)
               entries.map { en =>
-                val partVals = en.name.split('/').dropRight(1)
-                  .filter(_.contains("="))
-                  .map { seg =>
-                    val Array(k, v) = seg.split("=", 2)
-                    k -> v
-                  }.toMap
                 // `_file` rides the constant-injection channel: it is
                 // only materialized when the required schema asks for
                 // the metadata column (runtime group filtering,
                 // provenance selects)
                 MfPartition(s"$dir/${en.name}", required.json, dvRoot,
-                  partVals + (RowLevelOps.FileColumn ->
-                    s"$dir/${en.name}"), conf): InputPartition
+                  ManifestSource.partValsOf(en.name) +
+                    (RowLevelOps.FileColumn -> s"$dir/${en.name}"),
+                  conf): InputPartition
               }.toArray
             }
             override def createReaderFactory(): PartitionReaderFactory =
@@ -534,6 +530,17 @@ object ManifestSource {
     case _ => None
   }
 
+  /** The partition values of a table-relative file name: its `k=v`
+    * directory segments, unescaped as Spark's partitioned writer
+    * escaped them (`src=c%3Ad` is `src` = `c:d`).
+    */
+  private[sources] def partValsOf(name: String): Map[String, String] =
+    name.split('/').dropRight(1).filter(_.contains("=")).map { seg =>
+      val Array(k, v) = seg.split("=", 2)
+      ExternalCatalogUtils.unescapePathName(k) ->
+        ExternalCatalogUtils.unescapePathName(v)
+    }.toMap
+
   /** Can `entry` contain rows matching every pushed filter? Mirrors
     * [[Manifest.prunedPaths]]: a file with no recorded stats for a
     * column is KEPT — pruning only ever skips provably-empty files.
@@ -545,9 +552,7 @@ object ManifestSource {
       renames: Map[String, String] = Map.empty): Boolean = {
     // partition-directory values from the entry's own path: equality
     // and IN on a partition column prune without stats at all
-    val partVals: Map[String, String] = entry.name.split('/')
-      .dropRight(1).filter(_.contains("="))
-      .map { seg => val Array(k, v) = seg.split("=", 2); k -> v }.toMap
+    val partVals = partValsOf(entry.name)
     filters.forall { f =>
     def num(col0: String)(keep: (Long, Long) => Boolean): Boolean = {
       val col = renames.getOrElse(col0, col0)
@@ -703,14 +708,8 @@ object ManifestSource {
         // Hive-partitioned trees: the k=v path segments carry the
         // partition columns — reconstructed per file on the driver,
         // injected as constants by the reader
-        val partVals = en.name.split('/').dropRight(1)
-          .filter(_.contains("="))
-          .map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            k -> v
-          }.toMap
         MfPartition(s"$dir/${en.name}", schema.json, dvRoot,
-          partVals, conf): InputPartition
+          ManifestSource.partValsOf(en.name), conf): InputPartition
       }.toArray
     }
 
@@ -750,14 +749,9 @@ object ManifestSource {
             s"version v$v of $dir rewrote files but recorded no " +
               "change set — rebuilt with a pre-recording writer?")
           cur.filterNot(en => prev.contains(en.name)).map { en =>
-            val partVals = en.name.split('/').dropRight(1)
-              .filter(_.contains("="))
-              .map { seg =>
-                val Array(k, vv) = seg.split("=", 2)
-                k -> vv
-              }.toMap
             MfPartition(s"$dir/${en.name}", schema.json, "",
-              partVals ++ inject + ("_change_type" -> "insert"),
+              ManifestSource.partValsOf(en.name) ++ inject +
+                ("_change_type" -> "insert"),
               conf): InputPartition
           }
         }
@@ -799,8 +793,8 @@ object ManifestSource {
     val base = mp.file.stripPrefix(tableDir + "/")
     // the Hive directory name escapes the key the same way Spark's
     // partitioned writer did when the vector landed ('/' -> %2F etc.)
-    val keyed = new Path(mp.dvRoot, "file=" + org.apache.spark.sql.catalyst
-      .catalog.ExternalCatalogUtils.escapePathName(base))
+    val keyed = new Path(mp.dvRoot,
+      "file=" + ExternalCatalogUtils.escapePathName(base))
     val fs = keyed.getFileSystem(conf)
     if (!fs.exists(keyed)) return Set.empty
     val out = scala.collection.mutable.HashSet[Long]()

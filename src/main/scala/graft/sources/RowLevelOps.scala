@@ -12,6 +12,7 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.stringType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.connector.expressions.{Expressions,
   Literal => V2Literal, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
@@ -231,14 +232,9 @@ object RowLevelOps {
         // partition-directory values inject as constants, exactly
         // like the batch scan — a partitioned file does not store
         // its partition columns
-        val partVals = en.name.split('/').dropRight(1)
-          .filter(_.contains("="))
-          .map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            k -> v
-          }.toMap
         ManifestSource.MfPartition(file, required.json, dvRoot,
-          partVals + (FileColumn -> file), conf): InputPartition
+          ManifestSource.partValsOf(en.name) + (FileColumn -> file),
+          conf): InputPartition
       }.toArray
     }
 
@@ -365,10 +361,8 @@ object RowLevelOps {
         String)]
 
     /** The Hive directory for a row's partition values ("" when
-      * unpartitioned). Values must be directly path-encodable — the
-      * scan side ([[ManifestSource]]) reads k=v segments verbatim, so
-      * a value that would need Hive escaping is rejected rather than
-      * silently mangled.
+      * unpartitioned), escaped as Spark's partitioned writer escapes
+      * it — the scan side ([[ManifestSource.partValsOf]]) unescapes.
       */
     private def partDirOf(row: InternalRow): String =
       partCols.indices.map { k =>
@@ -389,10 +383,7 @@ object RowLevelOps {
             s"row-level write: unsupported partition column type $dt " +
               s"for ${f.name}")
         }
-        require(v.matches("[A-Za-z0-9._+:-]+"),
-          s"partition value '$v' for ${f.name} needs Hive path " +
-            "escaping — unsupported in row-level SQL")
-        s"${f.name}=$v"
+        ExternalCatalogUtils.getPartitionPathString(f.name, v)
       }.mkString("/")
 
     override def write(row: InternalRow): Unit = {

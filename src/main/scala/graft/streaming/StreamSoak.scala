@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Layout, Manifest}
@@ -37,18 +36,10 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("target/sf1")
     val outJson = args.lift(1).getOrElse("SOAK_r13.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")
     import spark.implicits._
 
     val t0 = System.nanoTime()

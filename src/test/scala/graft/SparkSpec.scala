@@ -3,15 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (one per suite, lazy). */
+/** Shared local session for specs (one per suite, lazy). Four cores
+  * whatever the box, so spec job counts and plan shapes do not move.
+  */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   val sf = "/root/testdata/sf0.001"
 }

@@ -12,7 +12,9 @@ import graft.SparkSpec
   * holds, keeps no mark of a file that left the snapshot, and reads
   * back exactly the expected rows: appends (programmatic and staged),
   * the two marking verbs, a SQL `UPDATE` over live marks on an
-  * unpartitioned and a partitioned table, and CLONE.
+  * unpartitioned and a partitioned table, and CLONE. Marks on
+  * partition directories whose names escape or percent-encode name
+  * their manifest entries, so every reader and the flush agree.
   */
 class DvCarrySpec extends SparkSpec {
 
@@ -119,6 +121,12 @@ class DvCarrySpec extends SparkSpec {
   private def sqlIds(table: String): Set[Long] =
     spark.sql(s"SELECT id FROM $table").collect().map(_.getLong(0)).toSet
 
+  /** Partition values whose directory names Hive-escape (`:`, `%`) or
+    * whose file URIs percent-encode (` `) or keep a literal `+`.
+    */
+  private val srcValues = Seq("plain", "c:d", "a b", "50%", "a+b")
+  private val srcSql = srcValues.map(v => s"'$v'").mkString(", ")
+
   test("SQL UPDATE over live marks keeps exactly the untouched files' marks") {
     withNoAutoFlush {
       wh
@@ -148,21 +156,48 @@ class DvCarrySpec extends SparkSpec {
       wh
       spark.sql("""CREATE TABLE gdvc.db.p (id BIGINT, src STRING, v STRING)
                   |PARTITIONED BY (src)""".stripMargin)
-      spark.sql("""INSERT INTO gdvc.db.p
-                  |SELECT id, concat('s', id % 3), concat('a', id)
+      spark.sql(s"""INSERT INTO gdvc.db.p
+                  |SELECT id, element_at(array($srcSql), CAST(id % 5 AS INT) + 1),
+                  |  concat('a', id)
                   |FROM range(0, 300)""".stripMargin)
-      spark.sql("DELETE FROM gdvc.db.p WHERE id % 10 = 0")
+      spark.sql("DELETE FROM gdvc.db.p WHERE id % 7 = 0")
       val dir = s"$wh/db/p"
-      assert(vector(dir) == 30)
-      // every file of src=s0 rewrites; its 10 marks go with them (the
+      assert(vector(dir) == 43)
+      // every file of src=c:d rewrites; its 8 marks go with them (the
       // vector's `file=` directories hold escaped partition paths)
-      spark.sql("UPDATE gdvc.db.p SET v = 'upd' WHERE src = 's0'")
-      assert(vector(dir) == 20)
-      val want = (0L until 300L).filterNot(_ % 10 == 0).toSet
+      spark.sql("UPDATE gdvc.db.p SET v = 'upd' WHERE src = 'c:d'")
+      assert(vector(dir) == 35)
+      val want = (0L until 300L).filterNot(_ % 7 == 0).toSet
       assert(sqlIds("gdvc.db.p") == want)
       assert(spark.sql("SELECT count(*) FROM gdvc.db.p WHERE v = 'upd'")
-        .head().getLong(0) == want.count(_ % 3 == 0))
+        .head().getLong(0) == want.count(_ % 5 == 1))
       spark.sql("DROP TABLE gdvc.db.p")
+    }
+  }
+
+  test("marks on escaped partition paths name their manifest entries") {
+    withNoAutoFlush {
+      val dir = Files.createTempDirectory("graft-dvcarry-esc").toString
+      rows(0, 100)
+        .withColumn("src", element_at(typedLit(srcValues),
+          (col("id") % 5).cast("int") + 1))
+        .write.mode("overwrite").partitionBy("src").parquet(dir)
+      Manifest.create(spark, dir, Seq("id"))
+      val pred = col("id") % 7 === 0
+      def idSrc(df: DataFrame): Set[(Long, String)] =
+        df.select("id", "src").collect()
+          .map(r => (r.getLong(0), r.getString(1))).toSet
+      val want = idSrc(Manifest.readTable(spark, dir).filter(!pred))
+      def connectorRead() = spark.read
+        .format("graft.sources.ManifestSource").option("path", dir).load()
+      Layout.deleteMergeOnRead(spark, dir, pred, Seq("id"))
+      assert(vector(dir) == 15)
+      assert(idSrc(Manifest.readTable(spark, dir)) == want)
+      assert(idSrc(connectorRead()) == want)
+      assert(Layout.flushDeleteVectors(spark, dir, Seq("id")) > 0)
+      assert(!Manifest.hasDeletionVectors(spark, dir))
+      assert(idSrc(Manifest.readTable(spark, dir)) == want)
+      assert(idSrc(connectorRead()) == want)
     }
   }
 

@@ -394,6 +394,21 @@ class ManifestSpec extends SparkSpec {
     }
   }
 
+  test("of two claimers racing for one version, exactly one gets it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-mf-claim").toString
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try (1 to 50).foreach { v =>
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val claim: java.util.concurrent.Callable[Boolean] = () => {
+        start.await()
+        try { Manifest.claimVersion(spark, dir, v); true }
+        catch { case _: java.util.ConcurrentModificationException => false }
+      }
+      val won = Seq(pool.submit(claim), pool.submit(claim)).count(_.get)
+      assert(won == 1, s"$won claimers won v$v")
+    } finally pool.shutdown()
+  }
+
   test("a usurped slow writer cannot double-commit: the rename is the arbiter") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val dir = java.nio.file.Files.createTempDirectory("graft-mf-arb").toString

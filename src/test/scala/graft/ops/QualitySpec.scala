@@ -113,7 +113,7 @@ class QualitySpec extends SparkSpec {
     assert(Similarity.ivfStrideFor(1024) == 40)
     assert(Similarity.ivfStrideFor(1025) == 64)
     assert(Similarity.ivfStrideFor(4096) == 64)
-    assert(Similarity.ivfStrideFor(200000) == 512) // the IvfProfile corpus
+    assert(Similarity.ivfStrideFor(200000) == 512) // SURVEY.md's 200k-vector corpus
     assert(Similarity.ivfStrideFor(1L << 28) == (1L << 14))
     // pqStrideFor: codebook held at <= 256 codes/subspace past the
     // 4096-vector fixture line (fixed stride 25 reached 8,000 codes at

@@ -41,7 +41,16 @@ grep -E "Tests: |All tests|TEST FAILED|\*\*\* FAILED" "$log" || true
 
 echo "== 2/3 oracle sweep (sf0.01) =="
 out=$(mktemp -d)
-sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out" > /dev/null 2>&1
+vlog=$(mktemp)
+set +e
+sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out" > "$vlog" 2>&1
+rc=$?
+set -e
+# a query that throws shows its cause here; the oracle check below
+# would report it only as a mismatch
+grep "\[verify\] .* failed: " "$vlog" || true
+rm -f "$vlog"
+[ "$rc" -eq 0 ] || { echo "graft.Verify failed (exit $rc)"; exit 1; }
 # DuckDB spills into .tmp/ under the working directory: keep it out of
 # the repository and remove it afterwards
 spill=$(mktemp -d)
