@@ -1288,7 +1288,7 @@ object SparkEntry {
     q("ns_dedup_incremental", Dedup.dedupIncrOracle(0.5)) {
       (s, dir) =>
         // the tag carries the LSH geometry, a fixture-split version,
-        // AND a corpus content fingerprint: a Bands/IndexBuckets/
+        // AND a corpus content fingerprint: a Bands/
         // signature-width change must invalidate persisted indexes
         // (stale band keys), so must a batch/base split change (the
         // index holds incrBase, whose membership the split defines),
@@ -1299,7 +1299,7 @@ object SparkEntry {
         // the dir mtime missed in-place part rewrites)
         val (csum, cmtime) = docsFingerprint(dir)
         val idx = layoutDir("lshidx-b" + Dedup.Bands +
-          "x" + Dedup.IndexBuckets + "s" + Dedup.MinhashAB.size +
+          "s" + Dedup.MinhashAB.size +
           "-split2-c" + csum + "m" + cmtime, dir)
         // the manifest pointer is the build-complete marker: the
         // commit writes it LAST, so a crashed build never half-reads
@@ -1343,7 +1343,7 @@ object SparkEntry {
       (s, dir) =>
         val (csum, cmtime) = docsFingerprint(dir)
         val master = layoutDir("kbmaster-b" + Dedup.Bands +
-          "x" + Dedup.IndexBuckets + "s" + Dedup.MinhashAB.size +
+          "s" + Dedup.MinhashAB.size +
           "-c" + csum + "m" + cmtime + "-" + IncrDeriv, dir)
         val idx = java.nio.file.Files
           .createTempDirectory("graft-keepbest-incr")
@@ -1377,7 +1377,7 @@ object SparkEntry {
       (s, dir) =>
         val (csum, cmtime) = docsFingerprint(dir)
         val d = layoutDir("corpusbm25-b" + Dedup.Bands +
-          "x" + Dedup.IndexBuckets + "s" + Dedup.MinhashAB.size +
+          "s" + Dedup.MinhashAB.size +
           "-bb" + Bm25Index.Buckets + "-c" + csum + "m" + cmtime, dir)
         val want = 1 + Pipeline.CorpusIncrBatches
         val done = Bm25Index.version(s, s"$d/bm25").contains(want) &&
@@ -1407,7 +1407,7 @@ object SparkEntry {
         // each rep CLONES them (measured faster than rebuilding at
         // every SF — PLANS.md round 17) into a fresh mutable dir
         val master = layoutDir("kbbm25m-b" + Dedup.Bands +
-          "x" + Dedup.IndexBuckets + "s" + Dedup.MinhashAB.size +
+          "s" + Dedup.MinhashAB.size +
           "-bb" + Bm25Index.Buckets + "-c" + csum + "m" + cmtime +
           "-" + IncrDeriv, dir)
         val d = java.nio.file.Files
@@ -1437,7 +1437,7 @@ object SparkEntry {
       (s, dir) =>
         val (csum, cmtime) = docsFingerprint(dir)
         val master = layoutDir("kbbm25m-b" + Dedup.Bands +
-          "x" + Dedup.IndexBuckets + "s" + Dedup.MinhashAB.size +
+          "s" + Dedup.MinhashAB.size +
           "-bb" + Bm25Index.Buckets + "-c" + csum + "m" + cmtime +
           "-" + IncrDeriv, dir)
         val d = java.nio.file.Files

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Persisted BM25 retrieval index (round-16 verdict #3).
   *
@@ -18,31 +17,39 @@ import org.apache.spark.storage.StorageLevel
   * summed partials. A probe then costs O(postings-of-query-terms +
   * vocabulary), never a corpus re-tokenize.
   *
-  * ONE manifest-committed table (`dir/index`) holds three row kinds,
-  * separated by the leading Hive partition column so each probe
-  * phase prunes to exactly its files:
+  * ONE manifest-committed table (`dir/index`) holds its row kinds
+  * under the Hive partition column `kind`, so each probe phase reads
+  * only its own kind's files; inside each file rows are sorted by
+  * `bucket = pmod(xxhash64(token), Buckets)`, the table's cluster key
+  * ([[Layout.ClusterMetaKey]]), whose range every manifest entry
+  * records:
   *
   *   - `kind=post`: (token, doc_id, tf, dl) — the postings, with the
   *     document length DENORMALIZED into each posting row so scoring
-  *     never joins a doc-length table; Hive-partitioned by
-  *     `bucket = pmod(xxhash64(token), Buckets)` so a probe for a
-  *     term set reads only the buckets those terms hash to.
-  *   - `kind=df`: (token, df-partial) — one row per (batch, token);
-  *     the corpus df is the per-token SUM. Bucketed like postings.
-  *   - `kind=stat`: one row per batch carrying (n_docs-partial,
+  *     never joins a doc-length table; a probe for a term set reads
+  *     only the files whose bucket range meets the buckets those
+  *     terms hash to.
+  *   - `kind=df`: (token, df-partial) — one row per (commit, token);
+  *     the corpus df is the per-token SUM.
+  *   - `kind=stat`: one row per commit carrying (n_docs-partial,
   *     sum_dl-partial); n_docs counts ALL batch docs (a zero-token
   *     doc still belongs to the collection avgdl averages over —
   *     same contract as [[Analysis.bm25Frames]]).
+  *   - `kind=del` / `kind=ret`: pending and retired tombstones
+  *     ([[delete]], [[flushDeletes]]).
+  *
+  * A commit adds at most one file per kind: the clustered write
+  * coalesces a batch's rows into one sorted file per directory.
   *
   * A single table means a single manifest: every append is ONE
   * atomic snapshot commit covering postings + df + stats together
   * (no cross-table torn state), probes pin one version for
   * consistent reads under concurrent maintenance, compaction is
   * [[Layout.compactInPlace]]'s metadata swap, and vacuum reclaims
-  * superseded files. A geometry sidecar (bucket count + tokenizer)
-  * hard-gates every read/write, as the LSH index learned in round
-  * 15: probing under a different bucket geometry silently reads the
-  * wrong partitions.
+  * superseded files. A geometry sidecar (bucket count, tokenizer,
+  * layout) hard-gates every read/write, as the LSH index learned in
+  * round 15: probing under a different bucket geometry silently reads
+  * the wrong files.
   *
   * Exactness vs the full-recompute oracle: tf/df/dl/n_docs/sum_dl
   * are exact long sums in any batch split, avgdl is one double
@@ -53,15 +60,15 @@ import org.apache.spark.storage.StorageLevel
   */
 object Bm25Index {
 
-  /** Hash-bucket count for the postings layout. 64 keeps the
-    * fixture-scale file count sane; at 100 TB the bucket count would
-    * be sized so one bucket's postings fit a task (the geometry
-    * sidecar makes the parameter a hard compatibility gate, not a
-    * tunable).
+  /** Hash-bucket count of the cluster key. Buckets are a sort and
+    * pruning key, not directories, so the count costs no files; at
+    * 100 TB it would be sized so a bucket's postings fit a task (the
+    * geometry sidecar makes the parameter a hard compatibility gate,
+    * not a tunable).
     */
   val Buckets = 64
 
-  def indexGeometry: String = s"buckets=$Buckets tok=space v1"
+  def indexGeometry: String = s"buckets=$Buckets tok=space cluster v2"
 
   /** Snapshot-counter keys ([[Manifest.metaOf]], round-17 verdict #3):
     * exact live-doc and pending-tombstone counts folded into every
@@ -83,7 +90,7 @@ object Bm25Index {
     */
   private val RetKey = "retired_docs"
 
-  /** How [[deleteRows]] runs its already-retired check, whose exact
+  /** How [[newTombstones]] runs its already-retired check, whose exact
     * form is an anti-join against a `kind=ret` set that grows with
     * TOTAL deletes ever issued — in a keep-best replace workload,
     * eventually larger than the live index (round-18 verdict #3).
@@ -149,24 +156,18 @@ object Bm25Index {
     else base.join(dels, Seq("doc_id"), "left_anti")
   }
 
-  /** Physical schema; `kind` and `bucket` carry the partition-column
-    * marker so an append against an empty index still writes the
-    * Hive layout (same pattern as [[Dedup.lshIndexBuild]]).
+  /** Physical schema; `kind` carries the partition-column marker and
+    * `bucket` the cluster-key marker, so an append against an empty
+    * index still writes the layout (same pattern as
+    * [[Dedup.lshIndexBuild]]).
     */
   val IndexSchema: String =
     "token STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, " +
       "kind STRING, bucket INT"
 
-  private def indexStruct: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.{MetadataBuilder, StructType}
-    val s = StructType.fromDDL(IndexSchema)
-    StructType(s.fields.map { f =>
-      if (f.name == "kind" || f.name == "bucket")
-        f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
-          .putBoolean(Layout.PartitionMetaKey, true).build())
-      else f
-    })
-  }
+  private def indexStruct: org.apache.spark.sql.types.StructType =
+    Layout.markColumns(IndexSchema, "kind" -> Layout.PartitionMetaKey,
+      "bucket" -> Layout.ClusterMetaKey)
 
   private def bucketOf(token: org.apache.spark.sql.Column) =
     pmod(xxhash64(token), lit(Buckets.toLong)).cast("int")
@@ -179,78 +180,66 @@ object Bm25Index {
         s"'$indexGeometry' — rebuild the index, do not mix geometries")
   }
 
-  /** One batch's index rows — postings + df partials + the stat row —
-    * handed to `f` as a single frame. The tf table (the one tokenize
-    * pass) is persisted for the duration because all three kinds fold
-    * it, and unpersisted before returning (round-16 verdict #5: no
-    * cached blocks leak to the caller).
+  /** One batch's postings, and its df and stat contributions for
+    * [[folded]]. The postings are ONE exchange that derives tf AND dl
+    * with map-side partials and no skew (round 20): dl — the doc's
+    * token count — is the SIZE of the split array, computable per
+    * input row before the explode, so it rides the aggregation as a
+    * group key (functionally dependent on doc_id); the exchange hashes
+    * (doc_id, token, dl), so a single giant document spreads across
+    * partitions, and carries exactly the distinct (doc_id, token)
+    * pairs. The contributions need no pass over the postings: each
+    * doc's DISTINCT tokens count +1 toward their df, and the doc
+    * itself +1 doc and +dl toward the stat row (n_docs counts ALL
+    * batch docs; a null text adds a doc of no tokens).
     */
-  private def withIndexRows[T](docs: DataFrame)(f: DataFrame => T): T = {
-    // ONE exchange derives tf AND dl, with MAP-SIDE PARTIALS and no
-    // skew (round 20, closing the round-19 advisor's flag on the
-    // raw-token shuffle): dl — the doc's token count — is the SIZE of
-    // the split array, computable per input row BEFORE the explode,
-    // so it rides the aggregation as a group key (functionally
-    // dependent on doc_id) instead of needing a doc-length window
-    // over a doc_id-clustered exchange. Consequences, all of which
-    // the old repartition(doc_id) shape lacked:
-    //   - the exchange hashes (doc_id, token, dl) — a single giant
-    //     document spreads across partitions instead of landing on
-    //     one (the advisor's skew scenario);
-    //   - every doc's tokens sit in ONE input row, so the partial
-    //     (map-side) aggregate fully reduces each task's tokens and
-    //     the exchange carries exactly the distinct (doc_id, token)
-    //     pairs — on Zipfian text (tf >> 1 for stopwords) strictly
-    //     FEWER bytes than the raw token stream it replaces;
-    //   - the window sort disappears.
-    // Values are the identical exact longs (dl = Σ tf per doc = the
-    // split size; null-text docs explode to nothing, as before).
-    val tfdl = docs
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+  private def batchParts(docs: DataFrame): (DataFrame, DataFrame) = {
+    val toks = docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+    val post = toks
       .select(col("doc_id"), size(col("toks")).as("dl"),
         explode(col("toks")).as("token"))
       .groupBy("doc_id", "token", "dl").agg(count(lit(1)).as("tf"))
-      .select("doc_id", "token", "tf", "dl")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val post = tfdl
-        .select(col("token"), col("doc_id"), col("tf"), col("dl"),
-          lit("post").as("kind"), bucketOf(col("token")).as("bucket"))
-      val dfPart = tfdl.groupBy("token").agg(count(lit(1)).as("tf"))
-        .select(col("token"), lit(-1L).as("doc_id"), col("tf"),
-          lit(0L).as("dl"), lit("df").as("kind"),
-          bucketOf(col("token")).as("bucket"))
-      // sum_dl = Σ per-doc dl = Σ tf over ALL tf rows (each doc's tf
-      // values sum to its dl) — one map-side-combinable agg over the
-      // cached tf table, replacing the old per-doc DISTINCT + sum
-      // (an extra exchange). n_docs still counts ALL batch docs.
-      val stat = docs.agg(count(lit(1)).as("n"))
-        .crossJoin(tfdl.agg(coalesce(sum("tf"), lit(0L)).as("s")))
-        .select(lit("").as("token"), lit(-1L).as("doc_id"),
-          col("n").as("tf"), col("s").as("dl"),
-          lit("stat").as("kind"), lit(0).as("bucket"))
-      // one partition per (kind, bucket) combo -> ~one file each,
-      // same reasoning as the LSH index's per-bucket collapse
-      f(post.unionByName(dfPart).unionByName(stat)
-        .repartition(col("kind"), col("bucket")))
-    } finally { tfdl.unpersist(); () }
+      .select(col("token"), col("doc_id"), col("tf"), col("dl"),
+        lit("post").as("kind"), bucketOf(col("token")).as("bucket"))
+    val df = toks.select(lit("df").as("kind"),
+      explode(array_distinct(col("toks"))).as("token"), lit(1L).as("n"),
+      lit(0L).as("d"))
+    val stat = toks.select(lit("stat").as("kind"), lit("").as("token"),
+      lit(1L).as("n"), coalesce(size(col("toks")).cast("long"), lit(0L))
+        .as("d"))
+    (post, df.unionByName(stat))
   }
 
+  /** The df and stat rows of one commit: its contributions
+    * (`kind`, `token`, `n`, `d`) summed per (kind, token) in ONE
+    * exchange — the corpus df and stat are exact long sums of these
+    * partials in any split, so a replace's negative contributions fold
+    * into the batch's positive ones, and a df partial that nets to
+    * zero is dropped.
+    */
+  private def folded(contribs: DataFrame): DataFrame =
+    contribs.groupBy("kind", "token")
+      .agg(sum("n").as("tf"), sum("d").as("dl"))
+      .filter(col("kind") === "stat" || col("tf") =!= 0L)
+      .select(col("token"), lit(-1L).as("doc_id"), col("tf"), col("dl"),
+        col("kind"), when(col("kind") === "df", bucketOf(col("token")))
+          .otherwise(lit(0)).as("bucket"))
+
   /** Build the index over a standing corpus: O(corpus) once — one
-    * tokenize pass, one hash-partitioned write — then a v1 manifest
-    * snapshot so every later append/compact is a versioned commit and
-    * probes read the committed file list. An empty corpus commits an
-    * empty entry list under the declared schema (bootstrap ingest:
-    * the first append still writes partitioned).
+    * tokenize pass, one range-partitioned write whose files cover
+    * disjoint bucket ranges within each kind — then a v1 manifest
+    * snapshot of the writer's entries, so every later append/compact
+    * is a versioned commit and probes read the committed file list.
+    * An empty corpus commits an empty entry list under the declared
+    * schema (bootstrap ingest: the first append still clusters).
     */
   def build(corpus: DataFrame, dir: String,
       corpusId: Option[String] = None): Unit = {
     val spark = corpus.sparkSession
     val table = s"$dir/index"
-    withIndexRows(corpus) { rows =>
-      rows.write.mode("overwrite").partitionBy("kind", "bucket")
-        .parquet(table)
-    }
+    val (post, contribs) = batchParts(corpus)
+    val entries = Layout.writeClustered(spark, table,
+      post.unionByName(folded(contribs)), Seq("kind"), "bucket")
     Dedup.writeSidecar(spark, s"$dir/geometry", indexGeometry)
     // record the built-over corpus for [[fresh]]'s stale-master guard:
     // the caller-supplied snapshot identity (zero-job), else the
@@ -263,14 +252,6 @@ object Bm25Index {
         (f, f.split(":")(0).toLong)
     }
     Dedup.writeSidecar(spark, s"$dir/corpusfp", fp)
-    val p = new org.apache.hadoop.fs.Path(table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    var hasFiles = false
-    while (!hasFiles && it.hasNext)
-      hasFiles = it.next().getPath.getName.endsWith(".parquet")
-    val entries =
-      if (hasFiles) Manifest.scanStats(spark, table, Nil) else Seq.empty
     Manifest.write(spark, table, entries, 1, schema = Some(indexStruct),
       meta = Some(Map(LiveKey -> nDocs, DelKey -> 0L, RetKey -> 0L)))
   }
@@ -304,11 +285,10 @@ object Bm25Index {
     if (txnApp.exists { case (a, n) =>
         Manifest.lastTxnFor(spark, s"$dir/index", a).exists(_ >= n) })
       return
-    withIndexRows(batch) { rows =>
-      val (observed, obs) = observeLive(rows)
-      Layout.appendInPlace(spark, s"$dir/index", observed, txnApp = txnApp,
-        metaDelta = counterDelta(observedLive(obs), 0L)): Unit
-    }
+    val (post, contribs) = batchParts(batch)
+    val (observed, obs) = observeCounts(post.unionByName(folded(contribs)))
+    Layout.appendInPlace(spark, s"$dir/index", observed, txnApp = txnApp,
+      metaDelta = counterDelta(observedCount(obs, "d_live"), 0L)): Unit
     // same auto-compaction cadence as the LSH index's appends
     // ([[Dedup.AutoCompactFilesPerDir]]): past the per-directory file
     // budget the append folds the table itself, a metadata-swap commit
@@ -394,42 +374,44 @@ object Bm25Index {
       dRet: Long = 0L): () => Option[Map[String, Long]] =
     () => Some(Map(LiveKey -> dLive, DelKey -> dDel, RetKey -> dRet))
 
-  /** Observe the batch's live-doc delta ON THE ROWS BEING WRITTEN —
+  /** Observe the commit's counter deltas ON THE ROWS BEING WRITTEN —
     * the `kind=stat` partial's `tf` column is exactly the batch's
-    * n_docs (minus the displaced docs' negative correction on the
-    * replace path), so the staged-write job itself yields the delta
-    * and the append costs no separate `batch.count()` job (round-18
-    * verdict #4).
+    * n_docs minus the displaced docs on the replace path (`d_live`),
+    * and the `kind=del` rows are the newly tombstoned ids (`n_del`) —
+    * so the staged-write job itself yields both deltas and the commit
+    * costs no separate count job (round-18 verdict #4).
     */
-  private def observeLive(rows: DataFrame)
+  private def observeCounts(rows: DataFrame)
       : (DataFrame, org.apache.spark.sql.Observation) = {
     val obs = new org.apache.spark.sql.Observation(
-      s"bm25-dlive-${java.util.UUID.randomUUID()}")
+      s"bm25-counts-${java.util.UUID.randomUUID()}")
     (rows.observe(obs,
       coalesce(sum(when(col("kind") === "stat", col("tf"))), lit(0L))
-        .as("d_live")), obs)
+        .as("d_live"),
+      count(when(col("kind") === "del", lit(1))).as("n_del")), obs)
   }
 
-  /** Bounded wait on the observed metric — the staged write has
+  /** Bounded wait on an observed metric — the staged write has
     * already run by the time the commit evaluates its delta, so the
     * row is normally present immediately; if the metric never fires
     * (a broken lineage would drop the CollectMetrics node) fail
     * LOUDLY rather than block the commit forever or record a wrong
     * counter.
     */
-  private def observedLive(obs: org.apache.spark.sql.Observation): Long =
+  private def observedCount(obs: org.apache.spark.sql.Observation,
+      name: String): Long =
     try {
       val row = scala.concurrent.Await.result(obs.future,
         scala.concurrent.duration.Duration(30, "s"))
-      row.getAs[Any]("d_live") match {
+      row.getAs[Any](name) match {
         case n: Number => n.longValue()
         case _ => throw new IllegalStateException(
-          "BM25 append: the d_live observation yielded no number")
+          s"BM25 commit: the $name observation yielded no number")
       }
     } catch {
       case _: java.util.concurrent.TimeoutException =>
         throw new IllegalStateException(
-          "BM25 append: the d_live observation never fired for the " +
+          s"BM25 commit: the $name observation never fired for the " +
             "staged write — counter delta unavailable")
     }
 
@@ -471,15 +453,18 @@ object Bm25Index {
   def delete(doomedIds: DataFrame, dir: String): Long = {
     val spark = doomedIds.sparkSession
     requireGeometry(spark, dir)
-    deleteRows(spark, dir, doomedIds) match {
-      case None => 0L
-      case Some((rows, n)) =>
-        Layout.appendInPlace(spark, s"$dir/index",
-          rows.repartition(col("kind"), col("bucket")),
-          metaDelta = counterDelta(-n, n)): Unit
-        maybeAutoFlush(spark, dir)
-        n
-    }
+    val t = Manifest.readTable(spark, s"$dir/index")
+    // a double delete commits nothing, so the count comes first
+    val doomed = Dedup.iterCheckpoint(newTombstones(spark, dir, t,
+      doomedIds))
+    val n = doomed.count()
+    if (n == 0L) return 0L
+    val (tombs, contribs) = deleteParts(t, doomed)
+    Layout.appendInPlace(spark, s"$dir/index",
+      tombs.unionByName(folded(contribs)),
+      metaDelta = counterDelta(-n, n)): Unit
+    maybeAutoFlush(spark, dir)
+    n
   }
 
   /** [[delete]] + [[append]] as ONE atomic commit — the per-batch
@@ -488,10 +473,10 @@ object Bm25Index {
     * postings/df/stat rows land in a single snapshot, halving the
     * loop's commit count with the same no-torn-scores guarantee.
     * `batch` and `doomedIds` must be disjoint (a replacement batch
-    * doc carries its own fresh id). Returns newly tombstoned count.
+    * doc carries its own fresh id).
     */
   private[ops] def deleteAndAppend(doomedIds: DataFrame, batch: DataFrame,
-      dir: String, txnApp: Option[(String, Long)] = None): Long = {
+      dir: String, txnApp: Option[(String, Long)] = None): Unit = {
     val spark = batch.sparkSession
     requireGeometry(spark, dir)
     // app-scoped exactly-once: a replayed replace (ingest-loop restart
@@ -499,24 +484,22 @@ object Bm25Index {
     // delete-derivation jobs run, not just at the commit
     if (txnApp.exists { case (a, n) =>
         Manifest.lastTxnFor(spark, s"$dir/index", a).exists(_ >= n) })
-      return 0L
-    val del = deleteRows(spark, dir, doomedIds)
-    val n = del.map(_._2).getOrElse(0L)
-    withIndexRows(batch) { rows =>
-      val all = del.map(_._1.unionByName(rows)).getOrElse(rows)
-      // the union's stat partials sum to batch_n - n, i.e. dLive —
-      // observed during the staged write, no separate count job
-      val (observed, obs) = observeLive(all)
-      Layout.appendInPlace(spark, s"$dir/index",
-        observed.repartition(col("kind"), col("bucket")),
-        txnApp = txnApp,
-        metaDelta = counterDelta(observedLive(obs), n)): Unit
-    }
+      return
+    val t = Manifest.readTable(spark, s"$dir/index")
+    val (tombs, delContribs) =
+      deleteParts(t, newTombstones(spark, dir, t, doomedIds))
+    val (post, contribs) = batchParts(batch)
+    // one write: the folded stat partial sums to batch_n - n (dLive)
+    // and the tombstone rows count n — both observed during it
+    val (observed, obs) = observeCounts(post.unionByName(tombs)
+      .unionByName(folded(contribs.unionByName(delContribs))))
+    Layout.appendInPlace(spark, s"$dir/index", observed, txnApp = txnApp,
+      metaDelta = counterDelta(observedCount(obs, "d_live"),
+        observedCount(obs, "n_del"))): Unit
     maybeAutoFlush(spark, dir)
     val thresh = Dedup.autoCompactThreshold(spark)
     if (thresh > 0 && Layout.maxFilesPerDir(spark, s"$dir/index") > thresh)
       compact(spark, dir): Unit
-    n
   }
 
   /** The ret bloom sidecar pair: `retbloom.bin` (the serialized
@@ -559,9 +542,10 @@ object Bm25Index {
     try { in.readFully(buf); Some(buf) } finally in.close()
   }
 
-  /** The tombstone + correction rows of a delete against the CURRENT
-    * snapshot — None when every doomed id is already tombstoned (a
-    * double-delete). Shared by [[delete]] and [[deleteAndAppend]].
+  /** The ids of `doomedIds` a delete against snapshot read `t` newly
+    * tombstones — lazy, never counted here: the caller's write counts
+    * them ([[observeCounts]]). Shared by [[delete]] and
+    * [[deleteAndAppend]].
     *
     * "Already deleted" spans BOTH pending tombstones (kind=del, flush-
     * bounded — always an exact anti-join) and RETIRED ones (kind=ret,
@@ -572,27 +556,28 @@ object Bm25Index {
     * double-delete holds across flush boundaries. The ret check runs
     * per [[RetCheckConf]]: under `bloom` the steady-state delete costs
     * O(batch) with ZERO ret-partition I/O, instead of an anti-join
-    * whose far side grows with total churn.
+    * whose far side grows with total churn. A snapshot whose counters
+    * record no pending and no retired tombstone skips the anti-join.
     */
-  private def deleteRows(spark: SparkSession, dir: String,
-      doomedIds: DataFrame): Option[(DataFrame, Long)] = {
-    val t = Manifest.readTable(spark, s"$dir/index")
+  private def newTombstones(spark: SparkSession, dir: String, t: DataFrame,
+      doomedIds: DataFrame): DataFrame = {
     val doomed0 = doomedIds
       .select(col("doc_id").cast("bigint").as("doc_id")).distinct()
     val rets = t.filter(col("kind") === "ret").select("doc_id")
     val mode = spark.conf.get(RetCheckConf, "bloom")
     require(Seq("bloom", "exact", "off").contains(mode),
       s"$RetCheckConf must be bloom|exact|off, got '$mode'")
+    val meta = Manifest.currentMeta(spark, s"$dir/index")
+    val anyRet = meta.getOrElse(RetKey, 1L) > 0L
     val notRetired = mode match {
-      case "off" => doomed0
-      case "bloom" =>
+      case "bloom" if anyRet =>
         loadRetBloom(spark, dir) match {
           case Some(bin) =>
             // pin the doomed ids FIRST (round-19 advisor): the nMaybe
-            // count below and the final doomed checkpoint are two
-            // separate evaluations of this frame, so a caller passing
-            // a NONDETERMINISTIC doomedIds could have ids unseen by
-            // the count skip the exact ret re-check — re-deleting a
+            // count below and the caller's write are two separate
+            // evaluations of this frame, so a caller passing a
+            // NONDETERMINISTIC doomedIds could have ids unseen by the
+            // count skip the exact ret re-check — re-deleting a
             // retired doc and permanently skewing n_docs/avgdl. One
             // O(batch) ids-only materialization buys determinism for
             // the public delete/deleteAndAppend API; the bloom column
@@ -616,33 +601,38 @@ object Bm25Index {
         }
       case _ => doomed0
     }
-    val dels = t.filter(col("kind") === "del").select("doc_id")
     // exclusion set: pending tombstones, plus the retired record when
     // the bloom path did not already clear it exactly
-    val bloomCleared = mode == "bloom" && (notRetired ne doomed0)
-    val excl =
-      if (mode == "off" || bloomCleared) dels
-      else dels.unionByName(rets)
-    val doomed = Dedup.iterCheckpoint(
-      notRetired.join(excl, Seq("doc_id"), "left_anti"))
-    val n = doomed.count()
-    if (n == 0L) return None
+    val dels = t.filter(col("kind") === "del").select("doc_id")
+    val withRets = anyRet && mode != "off" && (notRetired eq doomed0)
+    val excl = (if (meta.getOrElse(DelKey, 1L) > 0L) Seq(dels) else Nil) ++
+      (if (withRets) Seq(rets) else Nil)
+    excl.reduceOption(_ unionByName _)
+      .fold(notRetired)(e => notRetired.join(e, Seq("doc_id"), "left_anti"))
+  }
+
+  /** A delete's rows against snapshot read `t`: one `kind=del`
+    * tombstone per newly doomed id, and the df/stat contributions
+    * that un-count the doomed docs for [[folded]] — computed from the
+    * index's OWN postings (the standing record of their statistics),
+    * so the caller needs only ids: each posting counts -1 toward its
+    * token's df and -tf toward sum_dl (a doc's tf values sum to its
+    * dl), each doomed id -1 toward n_docs.
+    */
+  private def deleteParts(t: DataFrame,
+      doomed: DataFrame): (DataFrame, DataFrame) = {
     val victims = t.filter(col("kind") === "post")
       .join(broadcast(doomed), Seq("doc_id"), "left_semi")
-    val dfCorr = victims.groupBy("token", "bucket")
-      .agg((-count(lit(1))).as("tf"))
-      .select(col("token"), lit(-1L).as("doc_id"), col("tf"),
-        lit(0L).as("dl"), lit("df").as("kind"), col("bucket"))
-    // dl is denormalized per posting row — one distinct per doc
-    val statCorr = victims.select("doc_id", "dl").distinct()
-      .agg(coalesce(sum("dl"), lit(0L)).as("s"))
-      .select(lit("").as("token"), lit(-1L).as("doc_id"),
-        lit(-n).as("tf"), (-col("s")).as("dl"),
-        lit("stat").as("kind"), lit(0).as("bucket"))
     val tombs = doomed.select(lit("").as("token"), col("doc_id"),
-      lit(0L).as("tf"), lit(0L).as("dl"),
-      lit("del").as("kind"), lit(0).as("bucket"))
-    Some((tombs.unionByName(dfCorr).unionByName(statCorr), n))
+      lit(0L).as("tf"), lit(0L).as("dl"), lit("del").as("kind"),
+      lit(0).as("bucket"))
+    val contribs = victims.select(lit("df").as("kind"), col("token"),
+        lit(-1L).as("n"), lit(0L).as("d"))
+      .unionByName(victims.select(lit("stat").as("kind"), lit("").as("token"),
+        lit(0L).as("n"), (-col("tf")).as("d")))
+      .unionByName(doomed.select(lit("stat").as("kind"), lit("").as("token"),
+        lit(-1L).as("n"), lit(0L).as("d")))
+    (tombs, contribs)
   }
 
   /** The DV auto-flush policy, BM25 form: past
@@ -675,7 +665,7 @@ object Bm25Index {
     * boundaries (round-17 advisor: without it, re-deleting a flushed
     * id decremented n_docs for a doc with no postings). The ret
     * partition is maintenance-side only — never read by a probe, only
-    * by [[deleteRows]]'s already-deleted check — and grows bounded by
+    * by [[newTombstones]]' already-deleted check — and grows bounded by
     * TOTAL deletes ever issued, not corpus size.
     * O(index) rewrite, one atomic overwrite commit (crash leaves the
     * previous snapshot readable) — the maintenance-window half of
@@ -715,17 +705,15 @@ object Bm25Index {
       Manifest.currentMeta(spark, table).getOrElse(RetKey, 0L) + nDel
     writeRetBloom(spark, dir, retired.select("doc_id"), nRetTotal)
     Layout.overwriteInPlace(spark, table,
-      posts.unionByName(dfFold).unionByName(statFold)
-        .unionByName(retired)
-        .repartition(col("kind"), col("bucket")),
+      posts.unionByName(dfFold).unionByName(statFold).unionByName(retired),
       metaDelta = counterDelta(0L, -nDel, dRet = nDel))
     nDel
   }
 
-  /** Fold the per-append small files back to ~one per (kind, bucket):
-    * a pure metadata swap over the index's manifest — no no-index
-    * window, crash leaves the previous snapshot readable. Returns
-    * (filesBefore, filesAfter).
+  /** Merge the per-commit small files of each kind into files
+    * range-partitioned on `bucket`: a pure metadata swap over the
+    * index's manifest — no no-index window, crash leaves the previous
+    * snapshot readable. Returns (filesBefore, filesAfter).
     */
   def compact(spark: SparkSession, dir: String,
       targetBytes: Long = 128L << 20): (Int, Int) = {
@@ -781,9 +769,7 @@ object Bm25Index {
     // where a commit could still slip in and have its partials
     // clobbered while its postings survived.
     Layout.overwritePartitionsInPlace(spark, table,
-      dfFold.unionByName(statFold)
-        .repartition(col("kind"), col("bucket")),
-      expectedBase = Some(v))
+      dfFold.unionByName(statFold), expectedBase = Some(v))
   }
 
   private def readIndex(spark: SparkSession, dir: String,
@@ -811,22 +797,32 @@ object Bm25Index {
     (dfAgg, stats)
   }
 
-  /** The probe's postings scan for a driver-sized term list: prune to
-    * the buckets the terms hash to (partition filter — the scan lists
-    * only those directories of the snapshot's files), then push the
-    * term IN-filter into the parquet read. Tombstoned docs
-    * ([[delete]]) subtract with a broadcast anti-join — the del set
-    * is flush-bounded by the auto-flush ratio, never corpus-sized.
-    * The collect feeding this is `nTerms` rows — a query parameter,
-    * not data-sized.
+  /** The probe's postings scan for a driver-sized term list: only the
+    * `kind=post` files whose recorded bucket range meets a bucket the
+    * terms hash to ([[postingsFiles]]), with the bucket and term
+    * IN-filters pushed into the parquet read (files are sorted by
+    * bucket, so row groups prune too). Tombstoned docs ([[delete]])
+    * subtract with a broadcast anti-join — the del set is
+    * flush-bounded by the auto-flush ratio, never corpus-sized. The
+    * collect feeding this is `nTerms` rows — a query parameter, not
+    * data-sized.
     */
-  private def postingsFor(t: DataFrame, terms: Seq[String],
-      buckets: Seq[Int], nDel: Long): DataFrame =
+  private def postingsFor(t: DataFrame, posts: DataFrame,
+      terms: Seq[String], buckets: Seq[Int], nDel: Long): DataFrame =
     minusDels(t,
-      t.filter(col("kind") === "post" &&
+      posts.filter(col("kind") === "post" &&
         col("bucket").isin(buckets: _*) &&
         col("token").isin(terms: _*)),
       nDel)
+
+  /** The `kind=post` files of the pinned-or-current snapshot whose
+    * recorded bucket range meets one of `buckets`.
+    */
+  private[ops] def postingsFiles(spark: SparkSession, dir: String,
+      version: Option[Int], buckets: Seq[Int]): DataFrame =
+    Manifest.readTableGated(spark, s"$dir/index", version,
+      Manifest.MarkBroadcastRows, e => e.name.startsWith("kind=post/") &&
+        Manifest.entryMeets("bucket", buckets.map(_.toLong).sorted.toArray)(e))
 
   /** [[Analysis.bm25TopDocs]] served from the index: same output,
     * same oracle ([[Analysis.bm25TopDocsOracle]]), but the corpus is
@@ -844,8 +840,8 @@ object Bm25Index {
     val buckets = rows.map(_.getAs[Int]("bucket")).distinct.toSeq
     import spark.implicits._
     val qterms = terms.toDF("token", "df")
-    val scored = postingsFor(t, terms.map(_._1), buckets,
-        pendingDels(spark, dir, version))
+    val scored = postingsFor(t, postingsFiles(spark, dir, version, buckets),
+        terms.map(_._1), buckets, pendingDels(spark, dir, version))
       .join(broadcast(qterms), "token")
       .crossJoin(broadcast(stats))
       .select(col("token"), col("doc_id"),
@@ -876,8 +872,8 @@ object Bm25Index {
     val buckets = rows.map(_.getAs[Int]("bucket")).distinct.toSeq
     import spark.implicits._
     val qmap = qmapLocal.toDF("query_id", "token", "df")
-    val perTerm = postingsFor(t, qmapLocal.map(_._2), buckets,
-        pendingDels(spark, dir, version))
+    val perTerm = postingsFor(t, postingsFiles(spark, dir, version, buckets),
+        qmapLocal.map(_._2), buckets, pendingDels(spark, dir, version))
       .join(broadcast(qmap), "token")
       .crossJoin(broadcast(stats))
       .select(col("query_id"), col("doc_id"),

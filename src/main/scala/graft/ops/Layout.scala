@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, MetadataBuilder, StructField,
+  StructType}
 
 /** Data-layout management: multi-dimensional clustering (Z-order) and
   * small-file compaction. Neither changes query RESULTS — both change
@@ -44,8 +45,11 @@ object Layout {
     * existed must rebuild, or the change feed would see gaps.
     * v4: every snapshot is chunked (`_chunks.json`) — a cache holding
     * a v3 full-list snapshot would fail to read and must relocate.
+    * v5: the standing LSH and BM25 indexes are clustered, not
+    * Hive-bucketed ([[ClusterMetaKey]]) — a cache holding a v4
+    * `bucket=` layout would fail the index geometry check.
     */
-  val Version = 4
+  val Version = 5
 
   /** Interleave steps: spread a 16-bit value so its bits occupy the
     * even positions of a 32-bit word (the classic mask ladder).
@@ -487,6 +491,58 @@ object Layout {
     */
   val PartitionMetaKey = "graft.partition"
 
+  /** Field-metadata key marking a recorded-schema column as the
+    * table's CLUSTER key: every commit records the column's min/max in
+    * each new file's entry, a batch write hash-partitions on it and
+    * sorts each file by it (so a small batch lands as one file per
+    * partition directory), and compaction range-partitions merged
+    * files on it. Readers prune files by the recorded ranges, not by
+    * directory — the layout of the standing indexes, whose keys are
+    * hashes that a Hive partition column would scatter over one
+    * directory per bucket.
+    */
+  val ClusterMetaKey = "graft.cluster"
+
+  /** `ddl` as a StructType whose `marks` columns carry their boolean
+    * field-metadata marker ([[PartitionMetaKey]] or [[ClusterMetaKey]]):
+    * the schema a derived table records at its v1, so an EMPTY table
+    * still declares its layout to the first append.
+    */
+  private[graft] def markColumns(ddl: String,
+      marks: (String, String)*): StructType =
+    StructType(StructType.fromDDL(ddl).fields.map { f =>
+      marks.collectFirst { case (c, key) if c == f.name => key }
+        .fold(f)(key => f.copy(metadata = new MetadataBuilder()
+          .withMetadata(f.metadata).putBoolean(key, true).build()))
+    })
+
+  /** Write the first files of a clustered table at `dir`, replacing
+    * whatever it held: `df` range-partitioned on the partition columns
+    * and `cluster`, and sorted by them, so each file covers a disjoint
+    * key range. Returns the entries (with `cluster`'s range) for the
+    * caller's v1 commit.
+    */
+  private[ops] def writeClustered(spark: SparkSession, dir: String,
+      df: DataFrame, partCols: Seq[String],
+      cluster: String): Seq[ManifestEntry] = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val keys = (partCols :+ cluster).map(col)
+    TableFiles.write(spark, dir, dir,
+      df.repartitionByRange(keys: _*).sortWithinPartitions(keys: _*),
+      partCols, "build", Seq(cluster))
+  }
+
+  /** The cluster column of `dir`'s current schema, by its physical
+    * name.
+    */
+  private def clusterColOf(spark: SparkSession,
+      dir: String): Option[String] =
+    Manifest.currentVersion(spark, dir)
+      .flatMap(Manifest.tableSchema(spark, dir, _))
+      .flatMap(_.fields.find(_.metadata.contains(ClusterMetaKey)))
+      .map(Manifest.physNameOf)
+
   /** Partition columns for a write: recovered from existing file paths
     * when the table has files, else from the recorded schema's
     * partition metadata (an EMPTY declared-partitioned table must
@@ -644,14 +700,17 @@ object Layout {
     * entries (zero-row files already dropped) and the marks it newly
     * set, as (file, pos).
     */
-  private case class Written(added: Seq[ManifestEntry], marks: DataFrame)
+  private case class Written(added: Seq[ManifestEntry], marks: DataFrame,
+      markRows: Long)
 
-  /** A commit under its claim: the base, the version being written, and
-    * the names the caller's staged dot-files landed as.
+  /** A commit under its claim: the base, the version being written, the
+    * names the caller's staged dot-files landed as, and the table's
+    * cluster column.
     */
   private final class Claimed(spark: SparkSession, dir: String,
       val base: Base, val version: Int, claim: String,
-      statCols: Seq[String], val landed: Seq[String]) {
+      statCols: Seq[String], val landed: Seq[String],
+      val cluster: Option[String]) {
     /** Write `df` (physical names, carrying `partCols`) as new files of
       * the table — `<prefix>-<claim id>-<task>-<attempt>-<n>.parquet`
       * in their partition directories, or in partition directory
@@ -688,7 +747,7 @@ object Layout {
     * and the claim is given back.
     */
   private def commit(spark: SparkSession, dir: String,
-      statCols: Seq[String], listed: Boolean = false,
+      statCols0: Seq[String], listed: Boolean = false,
       txn: Option[Long] = None, txnApp: Option[(String, Long)] = None,
       staged: Seq[String] = Nil, landAs: String = "append")(
       change: Claimed => Change): Option[Done] = {
@@ -698,6 +757,9 @@ object Layout {
       staged.foreach(p => fs.delete(new Path(p), false))
       return None
     }
+    // a clustered table's new files always carry their key range
+    val cluster = clusterColOf(spark, dir)
+    val statCols = (statCols0 ++ cluster).distinct
     val base =
       if (listed) {
         val (v, es) = Manifest.ensureVersioned(spark, dir, statCols)
@@ -720,7 +782,8 @@ object Layout {
         landed += new Path(s"$dir/$tgt")
         tgt
       }
-      val c = change(new Claimed(spark, dir, base, k, claim, statCols, names))
+      val c = change(new Claimed(spark, dir, base, k, claim, statCols, names,
+        cluster))
       val marking = c.dv.isInstanceOf[DvMarks]
       val added = (statStaged(spark, dir, statCols, names) ++ c.added)
         .sortBy(_.name)
@@ -733,7 +796,7 @@ object Layout {
       // new marks are written beside the carry until the change record
       // has read them, then move into its `file=` dirs (pure renames)
       val dvTmp = new Path(s"$dvNew.tmp")
-      val (marked, newMarks, parts) = c.dv match {
+      val (marked, newMarks, parts, newRows) = c.dv match {
         case DvMarks(marks) =>
           val old = Manifest.dvMarks(spark, dir, base.version)
           fs.delete(dvTmp, true)
@@ -741,13 +804,14 @@ object Layout {
             dvTmp.toString, marks.join(old, Seq("file", "pos"), "left_anti")
               .repartition(col("file")), Seq("file"),
             s"dv-v$k-${claim.take(8)}", Nil)
-          (Some(carried.getOrElse(0L) + parts.map(_.rows).sum),
+          val rows = parts.map(_.rows).sum
+          (Some(carried.getOrElse(0L) + rows),
             Manifest.readDv(spark, dvTmp.toString,
-              parts.map(e => (e.name, e.bytes))), parts.map(_.name))
-        case _ => (carried, Manifest.noMarks(spark), Nil)
+              parts.map(e => (e.name, e.bytes))), parts.map(_.name), rows)
+        case _ => (carried, Manifest.noMarks(spark), Nil, 0L)
       }
-      c.cdc.foreach(f =>
-        Manifest.recordCdc(spark, dir, k, f(Written(added, newMarks))))
+      c.cdc.foreach(f => Manifest.recordCdc(spark, dir, k,
+        f(Written(added, newMarks, newRows))))
       if (marking) Manifest.moveDvDelta(spark, dir, k, dvTmp, parts)
       // a commit that leaves zero marks installs no (empty) vector
       marked match {
@@ -920,7 +984,7 @@ object Layout {
     * are: `_mk_f` is the row's file key ([[Manifest.dvFileKey]]),
     * `_mk_p` its position in the file.
     */
-  private def positioned(spark: SparkSession, dir: String,
+  private[ops] def positioned(spark: SparkSession, dir: String,
       files: Seq[ManifestEntry]): DataFrame =
     read(spark, dir, files)
       .withColumn("_mk_f",
@@ -928,13 +992,26 @@ object Layout {
       .withColumn("_mk_p", col("_metadata.row_index"))
 
   /** The rows of a [[positioned]] frame that `marks` does (`left_semi`)
-    * or does not (`left_anti`) mark — a broadcast join, no shuffle.
+    * or does not (`left_anti`) mark. `rows` is the mark count the
+    * caller already holds (the new marks' entry rows, or a vector's
+    * `_COUNT`): up to [[Manifest.MarkBroadcastRows]] the marks
+    * broadcast and the scan never shuffles; past it the join shuffles,
+    * same rows.
     */
-  private def byMarks(df: DataFrame, marks: DataFrame,
-      how: String): DataFrame =
-    df.join(broadcast(marks), df("_mk_f") === marks("file") &&
-        df("_mk_p") === marks("pos"), how)
+  private[ops] def byMarks(df: DataFrame, marks: DataFrame, how: String,
+      rows: Long): DataFrame = {
+    val m = if (rows <= Manifest.MarkBroadcastRows) broadcast(marks)
+      else marks
+    df.join(m, df("_mk_f") === m("file") && df("_mk_p") === m("pos"), how)
       .drop("_mk_f", "_mk_p")
+  }
+
+  /** The mark count of `version`'s vector, from its `_COUNT` sidecar
+    * (unknown reads as unbounded, so the join shuffles).
+    */
+  private def markCount(spark: SparkSession, dir: String,
+      version: Int): Long =
+    Manifest.dvCountOf(spark, dir, version).getOrElse(Long.MaxValue)
 
   /** The files among `names` holding a row that matches `pred` (logical
     * column names): a pushed-predicate scan, so footer pruning skips
@@ -991,7 +1068,15 @@ object Layout {
     val partCols = partColsFor(spark, dir, sample)
     val (aligned, evolved) =
       alignForWrite(spark, dir, sample, batch, partCols)
-    (k.write(aligned, partCols, prefix), evolved)
+    // a clustered table's batch write shape: hash-partitioned on the
+    // partition and cluster columns, which adaptive execution coalesces
+    // into one task for a small batch — one file per partition
+    // directory — and sorted by them within each file
+    val shaped = k.cluster.fold(aligned) { c =>
+      val keys = (partCols :+ c).map(col)
+      aligned.repartition(keys: _*).sortWithinPartitions(keys: _*)
+    }
+    (k.write(shaped, partCols, prefix), evolved)
   }
 
   /** The table's recorded schema, for the schema-evolution verbs. */
@@ -1285,7 +1370,7 @@ object Layout {
               .withColumn("_change_type", lit("insert")))
           val del = matched match {
             case None => ins.filter(lit(false))
-            case Some(m) => byMarks(m, w.marks, "left_semi")
+            case Some(m) => byMarks(m, w.marks, "left_semi", w.markRows)
           }
           del.withColumn("_change_type", lit("delete"))
             .unionByName(ins, allowMissingColumns = true)
@@ -1308,7 +1393,7 @@ object Layout {
           .select(col("_mk_f").as("file"), col("_mk_p").as("pos"))),
         // the NEWLY marked rows only: marks already present were
         // deleted by an earlier commit and must not restate
-        cdc = Some(w => byMarks(raw, w.marks, "left_semi")
+        cdc = Some(w => byMarks(raw, w.marks, "left_semi", w.markRows)
           .withColumn("_change_type", lit("delete"))))
     }.map(d => (d.marked, d.base.names.size)).get
 
@@ -1329,7 +1414,8 @@ object Layout {
         .collect().map(_.getString(0)).toSet
       val hit = k.base.listed.filter(e => marked.contains(e.name))
       Change(
-        added = k.write(byMarks(positioned(spark, dir, hit), dv, "left_anti"),
+        added = k.write(byMarks(positioned(spark, dir, hit), dv, "left_anti",
+          markCount(spark, dir, k.base.version)),
           partColsOf(hit), s"flush-v${k.version}"),
         removed = hit.map(_.name).toSet, dv = DvDrop,
         // the deletes were already logical at the marking commit
@@ -1518,6 +1604,10 @@ object Layout {
     * pure shifts against its group max (shift, never modulo — modulo
     * destroys curve locality), so wide columns neither overflow the
     * 63-bit key nor wrap.
+    * A clustered table ([[ClusterMetaKey]]) range-partitions each
+    * rewritten group on its cluster column and sorts every merged
+    * file by it, so merged files cover disjoint key ranges that the
+    * manifest records and probes prune by.
     * LIVE DELETION VECTORS ARE APPLIED INLINE: compact = flush + merge
     * in one rewrite — every group containing a marked file rewrites
     * with the marks subtracted, and the new snapshot carries no
@@ -1580,7 +1670,8 @@ object Layout {
                 // the flush for its group's vectors
                 val base = (
                   if (es.exists(e => markedFiles.contains(e.name)))
-                    byMarks(positioned(spark, dir, es), dv, "left_anti")
+                    byMarks(positioned(spark, dir, es), dv, "left_anti",
+                      markCount(spark, dir, k.base.version))
                   else read(spark, dir, es)).drop(partCols: _*)
                 // plain compaction coalesces (no shuffle); ZORDER BY
                 // pays the one range shuffle that buys multi-dim
@@ -1603,7 +1694,9 @@ object Layout {
                       .repartitionByRange(bound(es), col("_zk"))
                       .sortWithinPartitions("_zk")
                       .drop("_zk")
-                  } else base.coalesce(bound(es))
+                  } else k.cluster.fold(base.coalesce(bound(es)))(c =>
+                    base.repartitionByRange(bound(es), col(c))
+                      .sortWithinPartitions(c))
                 k.write(merged, Nil, s"compact-v${k.version}", sub)
               }
             }
@@ -1761,7 +1854,8 @@ object Layout {
         val pre =
           if (hit.isEmpty) noChange(spark, dir, "delete")
           else view.logical(byMarks(positioned(spark, dir, hit),
-              Manifest.dvMarks(spark, dir, k.base.version), "left_anti"))
+              Manifest.dvMarks(spark, dir, k.base.version), "left_anti",
+              markCount(spark, dir, k.base.version)))
             .withColumn("_change_type", lit("delete"))
         val post =
           if (w.added.isEmpty) noChange(spark, dir)

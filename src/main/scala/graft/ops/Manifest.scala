@@ -1025,6 +1025,19 @@ object Manifest {
     prunedEntries(spark, dir, ranges, strRanges)
       .map(_.map(e => s"$dir/${e.name}"))
 
+  /** Whether `e`'s recorded range of `col` (a physical name) holds one
+    * of `keys`, sorted ascending — file pruning for a probe by a
+    * driver-side key set. An entry with no recorded range for `col` is
+    * kept: pruning may only skip files it can prove hold none of the
+    * keys.
+    */
+  def entryMeets(col: String, keys: Array[Long])(e: ManifestEntry): Boolean =
+    e.stats.find(_.col == col).forall { r =>
+      val i = java.util.Arrays.binarySearch(keys, r.min)
+      val at = if (i >= 0) i else -i - 1
+      at < keys.length && keys(at) <= r.max
+    }
+
   /** The entries behind [[prunedPaths]], sorted by name. */
   private def prunedEntries(spark: SparkSession, dir: String,
       ranges: Seq[(String, Long, Long)],
@@ -1333,10 +1346,13 @@ object Manifest {
 
   /** [[readTable]] with the vector subtraction's broadcast bound
     * ([[subtractDv]]) as a parameter — specs reach the shuffled branch
-    * through it.
+    * through it — and an entry filter: only the files `keep` accepts
+    * are scanned (a caller pruning by recorded ranges), the vector
+    * still subtracted from them.
     */
   private[ops] def readTableGated(spark: SparkSession, dir: String,
-      version: Option[Int], dvBroadcastRows: Long): DataFrame = {
+      version: Option[Int], dvBroadcastRows: Long,
+      keep: ManifestEntry => Boolean = _ => true): DataFrame = {
     val v = version.orElse(currentVersion(spark, dir))
     val entriesOpt: Option[Seq[ManifestEntry]] = version match {
       case Some(vv) => Some(readVersion(spark, dir, vv).getOrElse(
@@ -1344,7 +1360,7 @@ object Manifest {
           s"no manifest version $vv under $dir")))
       case None => read(spark, dir)
     }
-    entriesOpt match {
+    entriesOpt.map(_.filter(keep)) match {
       case None => spark.read.parquet(dir)
       case Some(entries) if entries.isEmpty => emptyTable(spark, dir, v.get)
       case Some(entries) =>

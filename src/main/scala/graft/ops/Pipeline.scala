@@ -485,7 +485,7 @@ object Pipeline {
     * hash already standing (the probe broadcasts the BATCH hash set
     * into the standing scan, so the standing table is read map-only
     * and never shuffled); (3) [[Dedup.dedupBatchVsIndex]] against the
-    * standing index (gated broadcast probe + DPP, batch-internal
+    * standing index (gated broadcast probe + file pruning, batch-internal
     * keep-first included); (4) append the kept docs' hashes and band
     * rows — each a versioned manifest commit. Output: one audit row
     * per batch with the per-stage survivor counts.
@@ -537,6 +537,11 @@ object Pipeline {
   private[graft] val CiCrashConf = "spark.graft.corpusIncr.crashAfter"
 
   private def ciIntentDir(dir: String, k: Int) = s"$dir/txn/batch=$k"
+
+  /** The ingest intent's declared schema: reading it under its schema
+    * plans with no inference job.
+    */
+  private val CiIntentSchema = "doc_id BIGINT, text STRING, h BIGINT"
 
   def corpusBuildIncr(docs: DataFrame, dir: String,
       minSim: Double = 0.5, withBm25: Boolean = false): DataFrame = {
@@ -607,27 +612,6 @@ object Pipeline {
     (k, counts(0), counts(1), counts(2), counts(3))
   }
 
-  /** The observed long of a metric that rode another action, with a
-    * loud-but-correct fallback: a degenerate plan can drop or empty
-    * the metrics row (optimizer-collapsed subtree), and those rare
-    * shapes pay the explicit count instead of stalling or erroring.
-    */
-  private def observedLong(obs: org.apache.spark.sql.Observation)(
-      fallback: => Long): Long = {
-    val observed =
-      try {
-        val row = scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(10, "s"))
-        (if (row.size > 0) row.get(0) else null) match {
-          case n: Number => Some(n.longValue())
-          case _ => None
-        }
-      } catch {
-        case _: java.util.concurrent.TimeoutException => None
-      }
-    observed.getOrElse(fallback)
-  }
-
   private def ciStepBody(docs: DataFrame, dir: String, k: Int,
       minSim: Double, withBm25: Boolean,
       hDone: Boolean, lshDone: Boolean, bmDone: Boolean): Unit = {
@@ -663,7 +647,7 @@ object Pipeline {
           .select(col("doc_id"), col("text"),
             H.hash60(col("text")).as("h")))
       val nQuality = qc.count()
-      val nIn = observedLong(obsIn)(batch.count())
+      val nIn = Dedup.observedLong(obsIn)(batch.count())
       // (2) exact: within-batch keep-first, then standing-set drop
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("h").orderBy("doc_id")
@@ -694,7 +678,7 @@ object Pipeline {
     }
     // (4) the standing state mirrors the kept corpus exactly — each
     // half from the durable intent, stamped, skippable
-    val intent = spark.read.parquet(ciIntentDir(dir, k))
+    val intent = spark.read.schema(CiIntentSchema).parquet(ciIntentDir(dir, k))
     if (!hDone) {
       Layout.appendInPlace(spark, hdir, intent.select("h"),
         txnApp = Some((CiTxnApp, k.toLong))): Unit
@@ -847,7 +831,7 @@ object Pipeline {
     * over exactly the docs the keep-best recursion kept (the oracle
     * unrolls all three batches in SQL, replacements included).
     *
-    * Scale posture: inherits the probe's gated broadcast + DPP and
+    * Scale posture: inherits the probe's gated broadcast + file pruning and
     * the delete's one-postings-pass maintenance cost; the loop is
     * driver-coordinated, never driver-sized. `dir` must be fresh.
     */
@@ -867,6 +851,17 @@ object Pipeline {
   private[graft] val KbCrashConf = "spark.graft.kb.crashAfterLshCommit"
 
   private def kbIntentDir(dir: String, b: Long) = s"$dir/txn/batch=$b"
+
+  /** The keep-best intent, read under its declared schema (no
+    * inference job): `role` is `doom` (a displaced standing id, empty
+    * text) or `keep` (a winner, its text, and the signature and
+    * quality its LSH band rows derive from).
+    */
+  private def kbIntent(spark: org.apache.spark.sql.SparkSession,
+      dir: String, b: Long): DataFrame =
+    spark.read.schema("doc_id BIGINT, text STRING, role STRING, " +
+        "sig ARRAY<BIGINT>, quality DOUBLE")
+      .parquet(kbIntentDir(dir, b))
 
   /** Lease window for [[withIngestLease]] — override with
     * `spark.graft.ingest.leaseMs`.
@@ -1011,8 +1006,9 @@ object Pipeline {
     *   1. decide — probe the LSH index; deterministic for a fixed
     *      index state ([[Dedup.dedupBatchVsIndexKeepBestDecide]]);
     *   2. write the INTENT — doomed standing ids + the winners' text
-    *      — durably under `dir/txn/batch=b` BEFORE either commit (the
-    *      write-ahead record both halves apply from);
+    *      and signatures — durably under `dir/txn/batch=b` BEFORE
+    *      either commit (the write-ahead record both halves apply
+    *      from);
     *   3. commit the LSH half, stamped `txn:<KbTxnApp>=b`;
     *   4. commit the BM25 half FROM THE INTENT, same stamp.
     *
@@ -1071,21 +1067,33 @@ object Pipeline {
       minSim: Double, app: String, lshDone: Boolean): Unit = {
     val spark = batch.sparkSession
     if (!lshDone) {
-      val (dec, doomed, sigs) = Dedup.dedupBatchVsIndexKeepBestDecide(
-        batch, s"$dir/lsh", minSim)
-      val keep = dec
-        .filter(col("decision").isin("kept", "replaced_corpus"))
-        .select("doc_id")
-      // (2) the write-ahead intent: displaced ids + winners' text
-      doomed.withColumnRenamed("corpus_id", "doc_id")
-        .select(col("doc_id"), lit("").as("text"), lit("doom").as("role"))
-        .unionByName(batch.join(keep, "doc_id")
-          .select(col("doc_id"),
-            array_join(col("toks"), " ").as("text"),
-            lit("keep").as("role")))
+      val dec = Dedup.dedupBatchVsIndexKeepBestDecide(batch, s"$dir/lsh",
+        minSim)
+      // (2) the write-ahead intent: displaced ids + winners' text and
+      // signatures — the ONE materialization of the probe and the
+      // decisions, every row from one pass over them: a winner's keep
+      // row, and the doom rows of the corpus docs a replacement
+      // displaces (repeats allowed — both halves dedup the ids)
+      val winner = col("decision").isin("kept", "replaced_corpus")
+      val displaced = coalesce(
+        when(col("decision") === "replaced_corpus", col("matched")),
+        typedLit(Seq.empty[Long]))
+      dec.select(explode(concat(
+          filter(array(struct(col("doc_id"),
+            array_join(col("toks"), " ").as("text"), lit("keep").as("role"),
+            col("sig"), col("quality"))), _ => winner),
+          transform(displaced, id => struct(id.as("doc_id"),
+            lit("").as("text"), lit("doom").as("role"),
+            lit(null).cast("array<bigint>").as("sig"),
+            lit(null).cast("double").as("quality"))))).as("r"))
+        .select("r.*")
         .write.mode("overwrite").parquet(kbIntentDir(dir, b))
-      // (3) LSH half
-      Dedup.dedupBatchVsIndexKeepBestCommit(dec, doomed, sigs,
+      // (3) LSH half, from the intent
+      val intent = kbIntent(spark, dir, b)
+      Dedup.dedupBatchVsIndexKeepBestCommit(
+        intent.filter(col("role") === "keep")
+          .select("doc_id", "sig", "quality"),
+        intent.filter(col("role") === "doom").select("doc_id"),
         s"$dir/lsh", Some((app, b)))
       if (spark.conf.getOption(KbCrashConf).contains(b.toString))
         throw new IllegalStateException(
@@ -1093,11 +1101,11 @@ object Pipeline {
     }
     // (4) BM25 half, from the durable intent — identical on the happy
     // path and the roll-forward path
-    val intent = spark.read.parquet(kbIntentDir(dir, b))
+    val intent = kbIntent(spark, dir, b)
     Bm25Index.deleteAndAppend(
       intent.filter(col("role") === "doom").select("doc_id"),
       intent.filter(col("role") === "keep").select("doc_id", "text"),
-      s"$dir/bm25", txnApp = Some((app, b))): Unit
+      s"$dir/bm25", txnApp = Some((app, b)))
   }
 
   /** DuckDB oracle for [[corpusKeepBestBm25]]: the three keep-best

@@ -15,7 +15,9 @@ import graft.SparkSpec
   * every read plans from manifest entries, every write reports its
   * entries — and reading a table that carries a deletion vector plans
   * with no job at all. A change that adds a job to the batch moves
-  * this number on purpose or not at all.
+  * this number on purpose or not at all. The clustered standing
+  * tables take one data file per commit: one LSH file, and at most
+  * one BM25 file per `kind`.
   */
 class BatchJobsSpec extends SparkSpec {
   import BatchJobsSpec._
@@ -54,16 +56,24 @@ class BatchJobsSpec extends SparkSpec {
     Bm25Index.build(asText(base), s"$work/master/bm25", id)
     Dedup.lshIndexFresh(base, s"$work/master/lsh", s"$work/t/lsh", id)
     Bm25Index.fresh(asText(base), s"$work/master/bm25", s"$work/t/bm25", id)
+    val lsh = s"$work/t/lsh/bands"
+    val bm25 = s"$work/t/bm25/index"
+    def names(t: String) = Manifest.read(spark, t).get.map(_.name).toSet
+    val (lshBefore, bm25Before) = (names(lsh), names(bm25))
     val jobs = jobsOf(Pipeline.kbApplyBatch(batch, s"$work/t", 1L, 0.5,
       "batchjobs-spec"))
     assert(!jobs.exists(_.startsWith("Listing leaf files")),
       jobs.mkString("\n"))
     assert(jobs.size == BatchJobs, jobs.mkString("\n"))
+    assert((names(lsh) -- lshBefore).size == 1)
+    val bm25Added = (names(bm25) -- bm25Before).toSeq
+    assert(bm25Added.nonEmpty &&
+      bm25Added.groupBy(_.takeWhile(_ != '/')).values.forall(_.size == 1),
+      bm25Added.mkString("\n"))
     // the batch left a vector on the LSH table: reading it plans with
     // no job (no listing, no schema inference)
-    val bands = s"$work/t/lsh/bands"
-    assert(Manifest.hasDeletionVectors(spark, bands))
-    assert(jobsOf(Manifest.readTable(spark, bands).queryExecution
+    assert(Manifest.hasDeletionVectors(spark, lsh))
+    assert(jobsOf(Manifest.readTable(spark, lsh).queryExecution
       .executedPlan: Unit).isEmpty)
   }
 }
@@ -75,5 +85,5 @@ object BatchJobsSpec {
     */
   val Orbit = Seq(7, 27)
 
-  val BatchJobs = 51
+  val BatchJobs = 26
 }

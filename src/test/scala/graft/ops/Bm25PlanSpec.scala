@@ -7,29 +7,55 @@ import org.apache.spark.sql.functions._
 
 /** Plan-shape pin for the persisted BM25 index probe: the scale claim
   * is that a probe reads only (a) the vocab-sized `kind=df` partition
-  * for the term pick and (b) the postings BUCKETS the chosen terms
-  * hash to, with the term IN-filter pushed into the parquet read —
-  * never the whole postings table. Asserted on the executed plan's
-  * scan nodes, not prose.
+  * for the term pick and (b) the postings files whose bucket range
+  * meets a bucket the chosen terms hash to, with the bucket and term
+  * IN-filters pushed into the parquet read — never the whole postings
+  * table. Asserted on the executed plan's scan nodes, not prose.
   */
 class Bm25PlanSpec extends SparkSpec {
 
-  test("probe scans prune kind+bucket partitions and push the token filter") {
+  test("probe scans prune kind partitions and bucket ranges, push the token filter") {
     val docs = T(spark, sf, "documents")
     val dir = Files.createTempDirectory("bm25-plan").toString
-    Bm25Index.build(docs, dir)
-    val ex = Bm25Index.topDocs(spark, dir, 10, 3).queryExecution
+    // a build over 16 uncoalesced range partitions: the postings are
+    // 16 files with disjoint bucket ranges
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try Bm25Index.build(docs, dir)
+    finally {
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+    }
+    val probe = Bm25Index.topDocs(spark, dir, 10, 3)
+    val ex = probe.queryExecution
       .explainString(org.apache.spark.sql.execution.FormattedMode)
 
-    // postings scan: kind=post partition filter AND a bucket IN list
-    // (the probed terms' buckets), with the token filter pushed down
+    // postings scan: kind=post partition filter, and exactly the post
+    // files whose bucket range meets a probed term's bucket, with the
+    // bucket and token IN-filters pushed down
     val postScan = ex.linesIterator
       .filter(_.contains("PartitionFilters")).find(_.contains("= post"))
     assert(postScan.isDefined, s"no kind=post partition filter:\n$ex")
-    assert(postScan.get.contains("bucket") && postScan.get.contains(" IN "),
-      s"postings scan not bucket-pruned: ${postScan.get}")
-    assert(ex.contains("In(token,"),
-      "token IN-filter not pushed to the postings parquet scan")
+    val buckets = probe.select(pmod(xxhash64(col("token")),
+        lit(Bm25Index.Buckets.toLong))).distinct().collect()
+      .map(_.getLong(0)).sorted
+    val posts = Manifest.read(spark, s"$dir/index").get
+      .filter(_.name.startsWith("kind=post/"))
+    val want = posts.filter(Manifest.entryMeets("bucket", buckets))
+      .map(e => new org.apache.hadoop.fs.Path(e.name).getName).toSet
+    assert(want.nonEmpty && want.size < posts.size, want)
+    // the postings read is the one relation holding only post files
+    // (the df/stat/del phases read the whole snapshot, partition-
+    // filtered to their kinds)
+    val scanned = probe.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.inputFiles.toSeq
+    }.filter(_.forall(_.contains("/kind=post/"))).flatten
+      .map(new org.apache.hadoop.fs.Path(_).getName).toSet
+    assert(scanned == want)
+    assert(ex.contains("In(bucket,") && ex.contains("In(token,"),
+      "bucket/token IN-filters not pushed to the postings parquet scan")
     // the stat fold reads only its own partition
     assert(ex.linesIterator.filter(_.contains("PartitionFilters"))
       .exists(_.contains("= stat")), "no kind=stat partition filter")

@@ -2,25 +2,57 @@ package graft.ops
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+
 import graft.SparkSpec
 
 /** Incremental dedup against the persisted LSH band index
   * ([[Dedup.lshIndexBuild]]/[[Dedup.dedupIncr]]): decision parity
   * with the full in-memory pair list, the fixture's guarantee that
-  * both duplicate classes occur, and the dynamic partition pruning
-  * the bucket layout exists for.
+  * both duplicate classes occur, and the file pruning the clustered
+  * layout exists for: a probe scans exactly the index files whose
+  * recorded `kh` range meets one of its keys.
   */
 class IncrDedupSpec extends SparkSpec {
 
-  test("batch decisions match the full pair list and prune buckets") {
+  /** The index files (entry names) a probe's plan scans. */
+  private def scanned(df: DataFrame, dir: String): Set[String] =
+    df.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec => s.relation.location.inputFiles.toSeq
+    }.flatten.filter(_.contains(s"$dir/bands/"))
+      .map(new org.apache.hadoop.fs.Path(_).getName).toSet
+
+  /** The band-key hashes `batch` probes with, sorted: the `kh` values
+    * of an index built over the batch alone.
+    */
+  private def probedKeys(batch: DataFrame): Array[Long] = {
+    val kdir = Files.createTempDirectory("graft-lshidx-keys").toString
+    Dedup.lshIndexBuild(batch, kdir)
+    Dedup.readIndexBands(spark, kdir).select("kh").collect()
+      .map(_.getLong(0)).distinct.sorted
+  }
+
+  /** The entries of the index at `dir` whose `kh` range meets `keys`. */
+  private def meeting(dir: String, keys: Array[Long]): Set[String] =
+    Manifest.read(spark, s"$dir/bands").get
+      .filter(Manifest.entryMeets("kh", keys)).map(_.name).toSet
+
+  test("batch decisions match the full pair list and prune files") {
     val docs = T(spark, sf, "documents")
     val dir = Files.createTempDirectory("graft-lshidx-spec").toString
-    Dedup.lshIndexBuild(Dedup.incrBase(docs), dir)
-
-    // one directory per probe bucket on disk
-    val bucketDirs = new java.io.File(s"$dir/bands").listFiles
-      .filter(_.isDirectory).count(_.getName.startsWith("bucket="))
-    assert(bucketDirs > 1, s"expected >1 bucket directories, got $bucketDirs")
+    // a build over 16 uncoalesced range partitions: the index is 16
+    // files with disjoint kh ranges, so pruning has files to skip
+    val confs = Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "16")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try Dedup.lshIndexBuild(Dedup.incrBase(docs), dir)
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(Manifest.read(spark, s"$dir/bands").get.size == 16)
 
     val res = Dedup.dedupIncr(docs, dir, 0.5).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -53,11 +85,21 @@ class IncrDedupSpec extends SparkSpec {
     }
     assert(res.toSeq == expected)
 
-    // the probe scan carries a dynamicpruning partition filter on the
-    // bucket column, so unprobed bucket directories are never read
-    val plan = Dedup.dedupIncr(docs, dir, 0.5)
-      .queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("dynamicpruning"), plan)
+    // a one-doc batch probes 8 keys: its scan reads exactly the files
+    // whose kh range meets one of them — fewer than all 16 — and
+    // decides as the unpruned (shuffled, past-gate) probe does
+    val one = Dedup.incrBatch(docs).orderBy("doc_id").limit(1)
+    val want = meeting(dir, probedKeys(one))
+    assert(want.nonEmpty && want.size < 16, want)
+    val pruned = Dedup.dedupBatchVsIndex(one, dir, 0.5)
+    assert(scanned(pruned, dir) == want)
+    val pr = pruned.collect().toSeq
+    spark.conf.set("spark.graft.incrBroadcastBatch", "false")
+    try {
+      val full = Dedup.dedupBatchVsIndex(one, dir, 0.5)
+      assert(scanned(full, dir).size == 16)
+      assert(full.collect().toSeq == pr)
+    } finally spark.conf.unset("spark.graft.incrBroadcastBatch")
   }
 
   test("broadcast gate is MEASURED: boundary flips the plan, decisions don't change") {
@@ -75,9 +117,6 @@ class IncrDedupSpec extends SparkSpec {
     // correct and desirable at backfill scale.)
     def bcast(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin")
-    def dpp(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.executedPlan.toString.toLowerCase
-        .contains("dynamicpruning")
     def run(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
 
@@ -92,11 +131,12 @@ class IncrDedupSpec extends SparkSpec {
       // the real situation for any batch big enough to be gated
       spark.conf.set(autoKey, "-1")
       // exactly AT the gate (threshold == measured band rows): the
-      // broadcast fires and arms dynamic partition pruning
+      // broadcast fires, and the scan reads only the files whose kh
+      // range meets a probed key
       spark.conf.set(rowsKey, bandRows.toString)
       val at = Dedup.dedupBatchVsIndex(batch, dir, 0.5)
       assert(bcast(at), "at-gate batch should broadcast into the index scan")
-      assert(dpp(at), "the broadcast probe should arm DPP")
+      assert(scanned(at, dir) == meeting(dir, probedKeys(batch)))
       val atRows = run(at)
 
       // one band row PAST the gate: automatic shuffled fallback (the
@@ -105,6 +145,8 @@ class IncrDedupSpec extends SparkSpec {
       spark.conf.set(rowsKey, (bandRows - 1).toString)
       val past = Dedup.dedupBatchVsIndex(batch, dir, 0.5)
       assert(!bcast(past), "past-gate batch must plan the shuffled join")
+      assert(scanned(past, dir) == meeting(dir, Array.empty[Long]) ++
+        Manifest.read(spark, s"$dir/bands").get.map(_.name))
       assert(run(past) == atRows, "gate changes the plan, never the answer")
 
       // the config override still forces either path regardless of size

@@ -79,10 +79,9 @@ class LshManifestSpec extends SparkSpec {
 
     // simulate a compaction crash AFTER landing rewritten files but
     // BEFORE the manifest commit: a compacted-looking sibling appears
-    // inside a bucket directory. The manifest is the table, so the
+    // beside the index's files. The manifest is the table, so the
     // orphan is invisible — row count, decisions, version unchanged.
-    val bucketDir = new java.io.File(s"$dir/bands").listFiles
-      .filter(_.isDirectory).filter(_.getName.startsWith("bucket=")).head
+    val bucketDir = new java.io.File(s"$dir/bands")
     val donor = bucketDir.listFiles
       .filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.copy(donor.toPath,

@@ -188,4 +188,27 @@ class TableFilesSpec extends SparkSpec {
       .contains("broadcast")
     assert(hinted(bc) && !hinted(shuffled))
   }
+
+  test("mark joins: broadcast and shuffled branches agree") {
+    val dir = tmp("markgate")
+    partitionedTable(dir)
+    spark.conf.set("spark.graft.dv.autoFlushRatio", "0")
+    try Layout.deleteMergeOnRead(spark, dir, col("id") % 4 === 1, Seq("id"))
+    finally spark.conf.unset("spark.graft.dv.autoFlushRatio")
+    val v = Manifest.currentVersion(spark, dir).get
+    val pos = Layout.positioned(spark, dir, Manifest.readVersion(spark, dir, v).get)
+    val marks = Manifest.dvMarks(spark, dir, v)
+    // the caller's mark count picks the join: broadcast up to the bound
+    def joined(how: String, rows: Long) = Layout.byMarks(pos, marks, how, rows)
+    def hinted(df: DataFrame) = df.queryExecution.analyzed.toString
+      .contains("broadcast")
+    val bound = Manifest.MarkBroadcastRows
+    assert(hinted(joined("left_anti", bound)) &&
+      !hinted(joined("left_anti", bound + 1)))
+    for ((how, n) <- Seq("left_anti" -> 180, "left_semi" -> 60)) {
+      val bc = sorted(joined(how, bound))
+      assert(bc == sorted(joined(how, bound + 1)))
+      assert(bc.size == n)
+    }
+  }
 }
