@@ -58,8 +58,8 @@ object Bench {
     // bleeds into every following timed window, taxing the ~200 fast
     // queries ~0.1 s apiece — net total 192.6 -> 212.1 s. The artifact
     // protocol therefore stays at 25 (annotated as gc_every in the
-    // JSON line); per-query hygiene is BenchOne's job, where single
-    // queries are diagnosed without 200 neighbors to tax.
+    // JSON line); PLANS.md ("Mid-artifact spike mechanism isolated")
+    // records the A/B.
     // a malformed value must fail BEFORE any query runs, naming the
     // variable — not as a bare NumberFormatException mid-bench
     val gcEvery = sys.env.get("SPARK_GRAFT_BENCH_GC") match {
@@ -112,54 +112,7 @@ object Bench {
     // iterative queries' mid-artifact wall, so two artifacts are only
     // comparable at matching heap configs
     val heapGb = Runtime.getRuntime.maxMemory / (1L << 30)
-    // per-query isolated-min annotations (round-13 verdict #7): a
-    // BenchOne pass over the top heavies (SPARK_GRAFT_BENCH_ONE_OUT)
-    // produces a {query: isolated_min_sec} map; pointing
-    // SPARK_GRAFT_BENCH_ISOLATED at it embeds it in the artifact, so
-    // in-chain spikes of iterative queries (the documented GC
-    // envelope) are diffable against their isolated truth in the SAME
-    // JSON instead of a rerun.
-    val isolatedRaw = sys.env.get("SPARK_GRAFT_BENCH_ISOLATED")
-      .map(p => new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p)),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      .filter(s => s.startsWith("{") && s.endsWith("}"))
-    val isolated = isolatedRaw
-      .map(s => s""","isolated_min":$s""").getOrElse("")
-    // AUTOMATIC CHAIN-STATE ADJUDICATION (round-18 verdict #5): twice
-    // now (r15 clusters, r18 q21) an in-chain reading far above the
-    // query's own isolated floor needed a MANUAL re-run to adjudicate
-    // "chain-state episode" vs "real regression". Do it here: any
-    // query whose chain median exceeds REPROBE_K x its embedded
-    // isolated_min (and by >1 s absolute, so sub-second noise never
-    // triggers) is re-timed after a full state scrub — all persistent
-    // blocks dropped, cache cleared, two GCs — i.e. under the same
-    // conditions the isolated floor was measured in. The re-probe
-    // lands IN the artifact ("reprobe_s"); tools/scale_check.py reads
-    // it and reports a flagged query whose re-probe is within budget
-    // as an adjudicated chain-state episode instead of a flag.
-    val isolatedMap: Map[String, Double] = isolatedRaw.toSeq.flatMap(s =>
-      "\"([^\"]+)\"\\s*:\\s*([0-9.eE+-]+)".r.findAllMatchIn(s)
-        .map(m => m.group(1) -> m.group(2).toDouble)).toMap
-    val reprobeK = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPROBE_K", "3.0")
-      .toDouble
-    val reprobes = results.collect {
-      case (name, med, _, _) if med >= 0 &&
-          isolatedMap.get(name).exists(iso =>
-            med > reprobeK * iso && med - iso > 1.0) =>
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
-        System.gc(); System.gc()
-        val ts = (1 to reps).map(_ => time(name)).filter(_ >= 0)
-        (name, if (ts.isEmpty) -1.0 else ts.min)
-    }
-    val reprobe =
-      if (reprobes.isEmpty) ""
-      else s""","reprobe_k":$reprobeK,"reprobe_s":""" + reprobes
-        .map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"canary_s":$canary,"canary_end_s":$canaryEnd,"heap_gb":$heapGb,"gc_every":$gcEvery,"n_errors":${errors.size},"errors":$errsJson,"error_causes":$causesJson,"queries":$qs,"queries_min":$mins,"queries_max":$maxs$isolated$reprobe,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"canary_s":$canary,"canary_end_s":$canaryEnd,"heap_gb":$heapGb,"gc_every":$gcEvery,"n_errors":${errors.size},"errors":$errsJson,"error_causes":$causesJson,"queries":$qs,"queries_min":$mins,"queries_max":$maxs,"sf":"$sfDir"}"""
     println(line)
     // The stdout line gets truncated by log tooling past ~50 queries; persist the
     // full per-query breakdown so cross-round comparisons cover every query.

@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   *    (each copy reproduces the fixture's planted-variant pairs).
   *    Duplicating text verbatim would instead plant C(mult,2)-cliques
   *    of exact dups per doc and measure fixture blowup, not the
-  *    operator (same reasoning as ScaleSmoke's synthetic LSH corpus);
+  *    operator (same reasoning as the distinct SynthDocsSource corpus
+  *    ScaleClaimsSpec runs near-dup search over);
   *  - `embeddings.embedding` for copies > 0 gets a per-copy CYCLIC
   *    SHIFT of its dimensions COMPOSED with a per-block SIGN-FLIP
   *    pattern. Both factors are orthogonal (a permutation, and a

@@ -33,13 +33,6 @@ object graftShims {
   def normalizeFloats(e: Expression): Expression =
     catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
-  /** Drain the listener bus (private[spark]) — lets job-count
-    * assertions in specs observe every JobStart their block produced
-    * before reading the counter.
-    */
-  def drainListenerBus(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
-
   /** The runtime-filter bloom pair (`BloomFilterAggregate` /
     * `BloomFilterMightContain`) is NOT in the public function registry
     * — Spark only instantiates it inside InjectRuntimeFilter. The BM25

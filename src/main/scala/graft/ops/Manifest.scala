@@ -411,8 +411,8 @@ object Manifest {
     * million-file table is the new entries plus a 64-line list file,
     * not the file list.
     */
-  def writeChunked(spark: SparkSession, dir: String, version: Int,
-      carried: Seq[ChunkRef], added: Seq[Seq[ManifestEntry]],
+  private[ops] def writeChunked(spark: SparkSession, dir: String,
+      version: Int, carried: Seq[ChunkRef], added: Seq[Seq[ManifestEntry]],
       txn: Option[Long] = None,
       claim: Option[String] = None,
       schema: Option[StructType] = None,

@@ -438,7 +438,7 @@ object Similarity {
     * equi-join on the bucket key (never a cross join), exact cosine
     * filter on candidates. Candidate volume ~n^2*(planes+1)/2^planes:
     * pick planes ~ log2(n) for linear output at corpus scale
-    * (ScaleSmoke measures exactly that setting).
+    * (PLANS.md "Wave 5" records that setting's 10x-corpus run).
     */
   def nearDupPairsV(allV: DataFrame, minSim: Double,
       planes: Int, dim: Int = 64): DataFrame = {
@@ -1018,8 +1018,14 @@ object Similarity {
           .as("ccos"))
     val wProbe = Window.partitionBy("query_id")
       .orderBy(col("ccos").desc, col("cid").asc)
+    // `rn - 1 < nprobe`, not `rn <= nprobe`: Spark inserts a
+    // WindowGroupLimit for the latter into the broadcast side but not
+    // into the pruning subquery's copy of it, the two plans then
+    // differ, and adaptive execution drops the dynamic pruning filter
+    // it cannot serve from the broadcast: every cell would be read
+    // (ScaleClaimsSpec counts the records a probe reads)
     val qprobes = qscored.withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
+      .filter(col("rn") - 1 < nprobe)
       .select(col("query_id"), col("qv"), col("qnrm"),
         col("cid").as("cell"))
     val cand = cells.join(broadcast(qprobes), Seq("cell"))

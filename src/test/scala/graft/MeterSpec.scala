@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
 /** Runtime shuffle-volume invariants: the plan-audit claims in
   * PLANS.md ("this query never shuffles the big side") asserted with a
   * listener on real executions, so a refactor that silently introduces
@@ -11,25 +7,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   */
 class MeterSpec extends SparkSpec {
 
-  private class Tally extends SparkListener {
-    val sw = new LongAdder; val input = new LongAdder
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
-      if (m != null) {
-        sw.add(m.shuffleWriteMetrics.bytesWritten)
-        input.add(m.inputMetrics.bytesRead)
-      }
-    }
-  }
-
+  /** Shuffle bytes written and input bytes read by `run`'s jobs. */
   private def measure(run: => Unit): (Long, Long) = {
-    val t = new Tally
-    spark.sparkContext.addSparkListener(t)
-    try {
-      run
-      org.apache.spark.GraftListenerDrain.drain(spark.sparkContext, 30000)
-    } finally spark.sparkContext.removeSparkListener(t)
-    (t.sw.sum, t.input.sum)
+    val t = metered(run)._2
+    (t.shuffleWriteBytes, t.inputBytes)
   }
 
   test("seq packing is window-only: shuffle carries ids+counts, not text") {

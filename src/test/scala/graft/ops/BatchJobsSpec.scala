@@ -2,9 +2,6 @@ package graft.ops
 
 import java.nio.file.Files
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -23,25 +20,7 @@ class BatchJobsSpec extends SparkSpec {
   import BatchJobsSpec._
 
   /** Descriptions of the jobs `f` runs, in start order. */
-  private def jobsOf(f: => Unit): Seq[String] = {
-    val seen = mutable.ArrayBuffer.empty[String]
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.synchronized {
-          seen += Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse(e.stageInfos.headOption.map(_.name).getOrElse(""))
-        }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.GraftListenerDrain.drain(sc, 10000L)
-    sc.addSparkListener(l)
-    try f finally {
-      org.apache.spark.GraftListenerDrain.drain(sc, 10000L)
-      sc.removeSparkListener(l)
-    }
-    seen.synchronized(seen.toSeq)
-  }
+  private def jobsOf(f: => Unit): Seq[String] = metered(f)._2.jobs
 
   test("a keep-best batch runs a pinned number of jobs, none of them a listing") {
     val docs = T(spark, sf, "documents")

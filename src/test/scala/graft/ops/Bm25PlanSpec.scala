@@ -132,19 +132,7 @@ class Bm25PlanSpec extends SparkSpec {
     Bm25Index.build(docs, dirOff)
     val doomed = docs.filter(col("doc_id") % 50 === 3).select("doc_id")
 
-    def jobsDuring(f: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(): Unit
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { f; org.apache.spark.sql.graftShims.drainListenerBus(spark) }
-      finally spark.sparkContext.removeSparkListener(l)
-      counter.get()
-    }
+    def jobsDuring(f: => Unit): Int = metered(f)._2.jobs.size
 
     // ratio DISABLED: maybeAutoFlush body never runs — the baseline
     spark.conf.set("spark.graft.bm25.autoFlushRatio", "0")

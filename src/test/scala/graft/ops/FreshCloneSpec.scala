@@ -126,19 +126,7 @@ class FreshCloneSpec extends SparkSpec {
     val id = Manifest.snapshotIdentity(spark, tdir)
     assert(id.isDefined && id.get.startsWith("mf:"))
 
-    def jobsDuring(f: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(): Unit
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { f; org.apache.spark.sql.graftShims.drainListenerBus(spark) }
-      finally spark.sparkContext.removeSparkListener(l)
-      counter.get()
-    }
+    def jobsDuring(f: => Unit): Int = metered(f)._2.jobs.size
 
     // first call builds the master (jobs expected), recording the id
     Bm25Index.fresh(corpus, master, Files

@@ -1,9 +1,6 @@
 package graft.ops
 
-import java.util.concurrent.atomic.LongAdder
-
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Data-layout claims measured, not asserted in prose:
@@ -21,25 +18,10 @@ import org.apache.spark.sql.functions._
   */
 class LayoutSpec extends SparkSpec {
 
-  private class ReadTally extends SparkListener {
-    val records = new LongAdder; val shuffle = new LongAdder
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
-      if (m != null) {
-        records.add(m.inputMetrics.recordsRead)
-        shuffle.add(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-  }
-
+  /** Input records read and shuffle bytes written by `run`'s jobs. */
   private def measureRead(run: => Unit): (Long, Long) = {
-    val t = new ReadTally
-    spark.sparkContext.addSparkListener(t)
-    try {
-      run
-      org.apache.spark.GraftListenerDrain.drain(spark.sparkContext, 30000)
-    } finally spark.sparkContext.removeSparkListener(t)
-    (t.records.sum, t.shuffle.sum)
+    val t = metered(run)._2
+    (t.inputRecords, t.shuffleWriteBytes)
   }
 
   test("z-order clustering prunes a 2-d rectangle scan; linear sort does not") {
@@ -411,20 +393,14 @@ class LayoutSpec extends SparkSpec {
     // tiny maxRecordsPerFile forces the small-file debt compaction fixes
     Pipeline.writeShards(docs, shardDir, maxRecordsPerFile = 5)
 
-    val t = new ReadTally
-    spark.sparkContext.addSparkListener(t)
-    val (before, after) =
-      try {
-        val r = Layout.compactShards(spark, shardDir, compDir)
-        org.apache.spark.GraftListenerDrain.drain(spark.sparkContext, 30000)
-        r
-      } finally spark.sparkContext.removeSparkListener(t)
+    val ((before, after), t) =
+      metered(Layout.compactShards(spark, shardDir, compDir))
     // the data merge moves NO rows over the network (coalesce only
     // unions splits); the only shuffle is the manifest build's per-file
     // aggregate — metadata-sized, O(#files x stat cols), never O(rows)
-    assert(t.shuffle.sum < (64 << 10),
+    assert(t.shuffleWriteBytes < (64 << 10),
       s"compaction may shuffle only manifest metadata " +
-        s"(moved ${t.shuffle.sum} bytes)")
+        s"(moved ${t.shuffleWriteBytes} bytes)")
 
     // content parity: fingerprint of compacted tree == raw table
     val rawFp = Layout.contentFingerprint(docs).collect().toSeq

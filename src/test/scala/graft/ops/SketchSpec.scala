@@ -1,9 +1,6 @@
 package graft.ops
 
-import java.util.concurrent.atomic.LongAdder
-
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Count-min sketch invariants, measured on real executions:
@@ -19,23 +16,8 @@ import org.apache.spark.sql.functions._
   */
 class SketchSpec extends SparkSpec {
 
-  private class Tally extends SparkListener {
-    val sw = new LongAdder
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
-      if (m != null) sw.add(m.shuffleWriteMetrics.bytesWritten)
-    }
-  }
-
-  private def shuffleOf(run: => Unit): Long = {
-    val t = new Tally
-    spark.sparkContext.addSparkListener(t)
-    try {
-      run
-      org.apache.spark.GraftListenerDrain.drain(spark.sparkContext, 30000)
-    } finally spark.sparkContext.removeSparkListener(t)
-    t.sw.sum
-  }
+  private def shuffleOf(run: => Unit): Long =
+    metered(run)._2.shuffleWriteBytes
 
   test("sketch-build shuffle is the fixed grid: 8x the corpus, same bytes") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")

@@ -39,18 +39,8 @@ class ServeSpec extends SparkSpec {
 
   /** `body`'s result and the Spark jobs started while it ran. */
   private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      val r = body
-      org.apache.spark.GraftListenerDrain.drain(spark.sparkContext, 30000)
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(counter)
+    val (r, t) = metered(body)
+    (r, t.jobs.size)
   }
 
   /** A wide column width, so rendered cells are whole values. */
@@ -182,28 +172,14 @@ class ServeSpec extends SparkSpec {
       val base = s"http://localhost:${srv.boundPort}"
       assert(getDone(s"$base/view/0/0/").statusCode() == 200)
 
-      val read = new java.util.concurrent.atomic.LongAdder
-      val counter = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = e.stageInfo.taskMetrics
-          if (m != null) read.add(m.inputMetrics.recordsRead)
-        }
-      }
-      spark.sparkContext.addSparkListener(counter)
       val decodedBefore = srv.rowsDecoded.sum
-      val last =
-        try {
-          val r = get(s"$base/view/last/0/")
-          org.apache.spark.GraftListenerDrain.drain(spark.sparkContext, 30000)
-          r
-        } finally spark.sparkContext.removeSparkListener(counter)
+      val (last, t) = metered(get(s"$base/view/last/0/"))
       assert(last.statusCode() == 200, last.body())
       assert(last.body().contains(s"page 1666/1666"), last.body())
       // a page spans at most two 4096-row cache files; reading rows
       // anywhere near the 50k frame means the bounded paging regressed
-      assert(read.sum < 10000,
-        s"last-page render read ${read.sum} records; paging must stay bounded")
+      assert(t.inputRecords < 10000,
+        s"last-page render read ${t.inputRecords} records; paging must stay bounded")
       // the page files are decoded on the driver, outside Spark's input
       // metrics: the server's own count says how much it read
       val decoded = srv.rowsDecoded.sum - decodedBefore

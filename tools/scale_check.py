@@ -63,15 +63,8 @@ def main():
 
     base, big = load(args.base), load(args.big)
     bq, gq = base["queries"], big["queries"]
-    # Bench's automatic chain-state adjudication (round-18 verdict #5):
-    # any in-chain reading far above its own isolated floor was
-    # re-timed in the same artifact after a full state scrub. A query
-    # over the linear budget whose RE-PROBE is within it is an
-    # adjudicated chain-state episode, not a scale flag.
-    reprobe = big.get("reprobe_s", {})
     common = sorted(set(bq) & set(gq))
     rows = []
-    adjudicated = []
     for name in common:
         b, g = bq[name], gq[name]
         if b < 0 or g < 0:
@@ -79,20 +72,12 @@ def main():
             continue
         budget = args.slack * max(args.floor, args.mult * b)
         flag = g > budget
-        if flag and 0 <= reprobe.get(name, -1) <= budget:
-            adjudicated.append((name, g, reprobe[name]))
-            flag = False
         rows.append((g / max(b, 1e-9), name, b, g, flag))
     rows.sort(reverse=True)
     flagged = [r for r in rows if r[4]]
     print(f"{len(common)} common queries; mult={args.mult} "
           f"slack={args.slack} floor={args.floor}s; "
-          f"{len(flagged)} flagged"
-          + (f"; {len(adjudicated)} chain-state (reprobed in budget)"
-             if adjudicated else ""))
-    for name, g, rp in adjudicated:
-        print(f"  adjudicated chain-state: {name} in-chain {g:.3f}s, "
-              f"scrubbed re-probe {rp:.3f}s within budget")
+          f"{len(flagged)} flagged")
     print(f"{'query':34s} {'base':>8s} {'big':>8s} {'ratio':>7s}  flag")
     for ratio, name, b, g, flag in rows[:40]:
         print(f"{name:34s} {b:8.3f} {g:8.3f} {ratio:7.2f}  "
